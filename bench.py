@@ -186,7 +186,7 @@ def bench_indicators_expr(spark, sf_dir):
 
 
 def bench_indicators_rec(spark, sf_dir):
-    """Recurrence batch — one applyInPandas pass computes 6 indicator families."""
+    """Recurrence batch — one applyInArrow pass computes 6 indicator families."""
     b = bars(spark, sf_dir)
     out = with_recurrences(
         b,

@@ -10,9 +10,9 @@ Design principles (see SURVEY.md §4.2, §7):
   ``Window.partitionBy(symbol).orderBy(time)`` — Catalyst optimizes, Tungsten
   codegens, and the plan scales to any number of executors with exactly one
   shuffle per partitioning.
-* **Recurrences run in Arrow-batched pandas kernels.** EMA-family smoothing,
+* **Recurrences run in Arrow-batched numpy kernels.** EMA-family smoothing,
   Wilder RMA, SAR, the MESA/Hilbert state machine, and the backtest fold have
-  no closed SQL form; they run as numpy scans inside ``applyInPandas``, one
+  no closed SQL form; they run as numpy scans inside ``applyInArrow``, one
   partition per symbol (operators/recurrence.py).
 * **Explicit time axis.** The reference treats row order as time
   (src/backtest/sequential.rs:290 positional iteration); at Spark scale order

@@ -26,7 +26,7 @@ chosen to be deterministic and cross-engine reproducible:
   vectorized engine (vectorized.rs:141-144).
 * equity = cash + qty·mark − debt; per-symbol pools never interact.
 
-Spark shape: ONE ``applyInPandas`` fold per symbol (single shuffle on
+Spark shape: ONE ``applyInArrow`` fold per symbol (single shuffle on
 symbol), emitting daily records with trade fields attached to exit bars;
 portfolio metrics are plain aggregations over the daily frame. Scales the
 same way as the vectorized engine: linear in bars, symbols in parallel.
@@ -39,7 +39,7 @@ from dataclasses import dataclass
 from math import floor, isnan
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -50,13 +50,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from polars_quant_spark.operators.arrow_group import f64, flags, sort_rows
+
 TRADING_DAYS = 252
 LOT = 100
-
-#: A/B hook (tests/tools only): force the applyInPandas spec arm even when
-#: the Arrow group path is available — same contract as
-#: operators.segmented._FORCE_PANDAS_ARM.
-_FORCE_PANDAS_ARM = False
 
 
 @dataclass
@@ -501,82 +498,27 @@ def margin_backtest(
     )
     cols = [partition_by, order_by, price, buy, sell]
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_by)
-        out = _fold(
-            pdf[order_by].to_numpy(dtype="float64"),
-            pdf[price].to_numpy(dtype="float64"),
-            # nullable-boolean route, not object-dtype fillna (whose silent
-            # downcast is deprecated — see vectorized.py)
-            pdf[buy].astype("boolean").fillna(False).to_numpy(dtype="bool"),
-            pdf[sell].astype("boolean").fillna(False).to_numpy(dtype="bool"),
-            p,
-        )
-        names = [f.name for f in _SCHEMA_EXTRA]
-        res = pd.DataFrame({partition_by: pdf[partition_by].to_numpy(),
-                            order_by: pdf[order_by].to_numpy()})
-        for name, arr in zip(names, out):
-            res[name] = arr
-        return res
-
     def run_arrow(tbl):
-        # applyInArrow arm (round-14 default on Spark 4, VERDICT r13 #3):
-        # the identical ``_fold`` kernel on the identical numpy inputs —
-        # the group table wraps the transferred batches zero-copy, only
-        # the four fold inputs enter numpy, and the key/order buffers are
-        # re-emitted without ever becoming pandas blocks. Float outputs
-        # use from_pandas=True (NaN→null) to match the pandas
-        # serializer's treatment of the pandas arm's NaN trade fields.
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        tbl = tbl.take(
-            pc.sort_indices(tbl, sort_keys=[(order_by, "ascending")])
+        # the group table wraps the transferred batches; only the four fold
+        # inputs enter numpy, and the key/order columns are re-emitted as
+        # they arrived. Float outputs map NaN → null (the non-exit bars'
+        # trade fields).
+        tbl = sort_rows(tbl, [order_by])
+        out = _fold(
+            f64(tbl, order_by), f64(tbl, price), flags(tbl, buy), flags(tbl, sell), p
         )
-        t_in = (
-            pc.cast(tbl.column(order_by), pa.float64())
-            .combine_chunks()
-            .to_numpy(zero_copy_only=False)
-        )
-        px = (
-            pc.cast(tbl.column(price), pa.float64())
-            .combine_chunks()
-            .to_numpy(zero_copy_only=False)
-        )
-        b = (
-            pc.fill_null(tbl.column(buy), False)
-            .combine_chunks()
-            .to_numpy(zero_copy_only=False)
-            .astype("bool", copy=False)
-        )
-        s = (
-            pc.fill_null(tbl.column(sell), False)
-            .combine_chunks()
-            .to_numpy(zero_copy_only=False)
-            .astype("bool", copy=False)
-        )
-        out = _fold(t_in, px, b, s, p)
-        names = [f.name for f in _SCHEMA_EXTRA]
-        f64 = pa.float64()
         res = {
             partition_by: tbl.column(partition_by),
             order_by: tbl.column(order_by),
         }
-        for name, arr in zip(names, out):
-            if name == "exit_reason":
-                res[name] = pa.array(arr, type=pa.string())
+        for field, arr in zip(_SCHEMA_EXTRA, out):
+            if field.name == "exit_reason":
+                res[field.name] = pa.array(arr, type=pa.string())
             else:
-                res[name] = pa.array(arr, type=f64, from_pandas=True)
+                res[field.name] = pa.array(arr, type=pa.float64(), from_pandas=True)
         return pa.table(res)
 
-    from polars_quant_spark.backtest.vectorized import (
-        _ARROW_GROUP_PATH_AVAILABLE,
-    )
-
-    grouped = df.select(*cols).groupBy(partition_by)
-    if (not _FORCE_PANDAS_ARM) and _ARROW_GROUP_PATH_AVAILABLE(df):
-        return grouped.applyInArrow(run_arrow, schema=schema)
-    return grouped.applyInPandas(run, schema=schema)
+    return df.select(*cols).groupBy(partition_by).applyInArrow(run_arrow, schema=schema)
 
 
 def daily_records(curve: DataFrame) -> DataFrame:

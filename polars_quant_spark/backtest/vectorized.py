@@ -13,8 +13,8 @@ long-only single-asset signal replay —
 * equity = cash + position·price, tracked with running peak and drawdown.
 
 The reference runs one asset per call and (v0.x) a thread pool ≥4 assets
-(README.md:402-407); here the fold is a numpy-backed kernel inside the
-recurrence runner's ``applyInPandas`` — one shuffle on symbol, every symbol
+(README.md:402-407); here the fold is a numpy-backed kernel inside one
+``groupBy(symbol).applyInArrow`` pass — one shuffle on symbol, every symbol
 folds in parallel across executors, linear in bars.
 """
 
@@ -25,10 +25,12 @@ from bisect import bisect_left
 from math import floor, isfinite, isnan
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+from polars_quant_spark.operators.arrow_group import f64, flags, sort_rows
 
 
 @dataclass
@@ -212,8 +214,8 @@ def _fold_state(
        bar (adds, multiplies, divides; max exact; + commutes bitwise),
        so outputs are bitwise equal, not approximately equal.
 
-    Allocation discipline matters as much as op count: inside
-    applyInPandas every call touches fresh pages, and first-touch page
+    Allocation discipline matters as much as op count: inside a
+    grouped kernel every call touches fresh pages, and first-touch page
     faults on 160 MB-class temporaries dominated an earlier draft (22 s
     cold vs 6.9 s warm at 20 M bars). The common no-frozen-bars corpus
     therefore ALIASES mark to ``price`` (zero copies), skips the
@@ -469,56 +471,14 @@ def vectorized_backtest(
     n_wins`` (the trade counters are repeated per row for downstream aggs —
     they're per-symbol scalars).
 
-    Since round 13 this DELEGATES to the ``applyInArrow`` path
-    (``vectorized_backtest_arrow``, bit-equal — pinned by
-    tests/test_backtest.py::test_vectorized_backtest_arrow_bit_equal)
-    when the runtime supports it, falling back to the applyInPandas arm
-    below (kept as the executable spec and the pre-Spark-4 path).
-
-    1024× A/B (102.4 M rows, 5 symbols, DISK-checkpointed signals; two
-    sessions with the arm order alternated to cancel warm-slot bias), on
-    the practical WIDE call shape (bars + emas + signals, 12 cols — what
-    bench_backtest and the bt_* queries pass): pandas 748.2/355.7/259.9/
-    525.8 s (mean 472) vs arrow 430.4/214.1/227.7/206.5 s (mean 270) —
-    **1.76× on the mean, 1.26× best-vs-best**, and the arrow arm is far
-    more STABLE (spread 206–430 vs 260–748): the pandas arm's multi-GB
-    per-group frame builds pressure the heap/page cache (the r12 "8 GB
-    memory ceiling" mechanism) and its own reps swing 2.9×. On a minimal
-    5-col frame the two are at parity (125.4/125.7 vs 124.4 s —
-    transfer-bound, nothing left to save). Width sensitivity is the r12
-    diagnosis confirmed: the pandas arm converts EVERY passthrough column
-    to pandas blocks per group; the Arrow arm never materializes them in
-    Python."""
-    if _ARROW_GROUP_PATH_AVAILABLE(df):
-        return vectorized_backtest_arrow(
-            df, price, buy, sell, params, partition_by, order_by
-        )
-    return vectorized_backtest_pandas(
-        df, price, buy, sell, params, partition_by, order_by
-    )
-
-
-def _ARROW_GROUP_PATH_AVAILABLE(df: DataFrame) -> bool:
-    try:
-        import pyarrow  # noqa: F401
-        import pyarrow.compute  # noqa: F401
-    except ImportError:
-        return False
-    return hasattr(df.groupBy(), "applyInArrow")
-
-
-def vectorized_backtest_pandas(
-    df: DataFrame,
-    price: str = "close",
-    buy: str = "buy",
-    sell: str = "sell",
-    params: BacktestParams | None = None,
-    partition_by: str = "symbol",
-    order_by: str = "t",
-) -> DataFrame:
-    """The applyInPandas arm of ``vectorized_backtest`` — executable spec
-    for the Arrow path and the fallback on runtimes without
-    ``applyInArrow``."""
+    The group arrives as a ``pyarrow.Table`` (``applyInArrow``): the
+    worker extracts ONLY the three fold inputs to numpy (price null → NaN,
+    signal null → False), runs ``_fold``, and appends the six outputs as
+    Arrow arrays wrapping the kernel's numpy buffers. Passthrough columns
+    are never materialized in Python — the 1024x A/B against the old
+    pandas-frame path measured 1.76x on the mean at 12 columns, with the
+    gap growing with frame width. Rows sort stably by ``order_by`` (see
+    ``arrow_group.sort_rows`` for the tie caveat)."""
     p = params or BacktestParams()
     keys = [partition_by] if isinstance(partition_by, str) else list(partition_by)
     order = [order_by] if isinstance(order_by, str) else list(order_by)
@@ -534,97 +494,12 @@ def vectorized_backtest_pandas(
         ]
     )
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order, kind="mergesort").reset_index(drop=True)
-        px = pdf[price].to_numpy(dtype="float64", na_value=np.nan)
-        # nullable-boolean route: plain .fillna(False) on the object column
-        # trips the pandas silent-downcasting FutureWarning
-        b = pdf[buy].astype("boolean").fillna(False).to_numpy(dtype="bool")
-        s = pdf[sell].astype("boolean").fillna(False).to_numpy(dtype="bool")
-        pos, cash, eq, dd, trades, wins = _fold(px, b, s, p)
-        pdf["position"] = pos
-        pdf["cash"] = cash
-        pdf["equity"] = eq
-        pdf["drawdown"] = dd
-        pdf["n_trades"] = trades
-        pdf["n_wins"] = wins
-        return pdf
-
-    return df.groupBy(*keys).applyInPandas(run, schema=schema)
-
-
-def vectorized_backtest_arrow(
-    df: DataFrame,
-    price: str = "close",
-    buy: str = "buy",
-    sell: str = "sell",
-    params: BacktestParams | None = None,
-    partition_by: str = "symbol",
-    order_by: str = "t",
-) -> DataFrame:
-    """``vectorized_backtest`` on the ``applyInArrow`` group path (Spark
-    4.x): same contract, same kernel, same output schema — but the group
-    arrives as a ``pyarrow.Table`` instead of a pandas DataFrame.
-
-    Why (VERDICT r12 #4): at 1024× per-symbol history the pandas arm's
-    wall is ~0 kernel and almost entirely scan + Arrow + the per-group
-    pandas frame BUILD — Spark converts every Arrow batch of every
-    column to a pandas block (copy + consolidation) before ``run`` sees
-    it, and converts the returned frame back. On the Arrow path the
-    group table wraps the transferred batches zero-copy; the worker
-    extracts ONLY the three fold inputs to numpy, runs the identical
-    ``_fold`` kernel (bit-equality is by construction — same arrays,
-    same kernel), and appends the six output columns as Arrow arrays
-    wrapping the kernel's numpy outputs (again zero-copy). Passthrough
-    columns are never materialized in Python at all.
-
-    Tie caveat (same as the pandas arm): rows are sorted by
-    ``order_by`` with a stable sort, so duplicate order keys resolve in
-    arrival order — deterministic per plan, not across shuffles. Both
-    arms share this contract; bars data has unique (symbol, t)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    p = params or BacktestParams()
-    keys = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    order = [order_by] if isinstance(order_by, str) else list(order_by)
-    schema = StructType(
-        df.schema.fields
-        + [
-            StructField("position", DoubleType()),
-            StructField("cash", DoubleType()),
-            StructField("equity", DoubleType()),
-            StructField("drawdown", DoubleType()),
-            StructField("n_trades", LongType()),
-            StructField("n_wins", LongType()),
-        ]
-    )
-
-    def run(tbl: "pa.Table") -> "pa.Table":
-        idx = pc.sort_indices(
-            tbl, sort_keys=[(c, "ascending") for c in order]
-        )
-        tbl = tbl.take(idx)
+    def run(tbl: pa.Table) -> pa.Table:
+        tbl = sort_rows(tbl, order)
         n = tbl.num_rows
-        px = (
-            tbl.column(price)
-            .combine_chunks()
-            .to_numpy(zero_copy_only=False)
-            .astype("float64", copy=False)
+        pos, cash, eq, dd, trades, wins = _fold(
+            f64(tbl, price), flags(tbl, buy), flags(tbl, sell), p
         )
-        b = (
-            pc.fill_null(tbl.column(buy), False)
-            .combine_chunks()
-            .to_numpy(zero_copy_only=False)
-            .astype("bool", copy=False)
-        )
-        s = (
-            pc.fill_null(tbl.column(sell), False)
-            .combine_chunks()
-            .to_numpy(zero_copy_only=False)
-            .astype("bool", copy=False)
-        )
-        pos, cash, eq, dd, trades, wins = _fold(px, b, s, p)
         return tbl.append_column(
             "position", pa.array(pos, type=pa.float64())
         ).append_column(
@@ -643,7 +518,7 @@ def vectorized_backtest_arrow(
 
 
 #: dispatch boundary for ``auto_backtest``: above this many rows in ONE
-#: key's history, the whole-symbol pandas frame (~50 B/row across inputs +
+#: key's history, the whole-symbol group (~50 B/row across inputs +
 #: the four output arrays) enters the multi-GB regime where the round-11
 #: 1024x measurement showed memory pressure turning the fold superlinear
 #: (docs/SCALE.md: 123 M-row symbols ran 249.5 s plain at 8 GB but the
@@ -665,7 +540,7 @@ def auto_backtest(
     segment_rows: int = 8_000_000,
 ) -> DataFrame:
     """Size-dispatching front door for the backtest fold: the plain
-    one-pandas-frame-per-symbol ``vectorized_backtest`` while every
+    one-group-per-symbol ``vectorized_backtest`` while every
     symbol's history fits comfortably in executor memory, the
     memory-bounded ``segmented.backtest_segmented`` when any symbol
     exceeds ``threshold`` rows (the ``auto_chunk_windows`` discipline,
@@ -725,7 +600,7 @@ def auto_backtest(
     # null for it even when oversized, collect_list silently drops that
     # null, and the semi/anti split below routes null-key rows to the
     # plain arm unconditionally — so an oversized null group would ride
-    # the whole-symbol pandas path straight into the OOM regime this
+    # the whole-symbol plain path straight into the OOM regime this
     # dispatcher exists to prevent. max(when(isNull, _n)) is NULL iff no
     # null group exists, else that group's exact size.
     counts = df.groupBy(partition_by).agg(F.count(F.lit(1)).alias("_n"))
@@ -749,7 +624,7 @@ def auto_backtest(
     work = df
     if null_big:
         # The segmented arm's seed/output joins are equi-joins on the key
-        # (segmented._join_back), which never match a NULL — run the null
+        # (segmented._segmented_passes), which never match a NULL — run the null
         # group alone under a synthetic constant key of its own, then
         # restore the null. The filtered frame holds ONLY null-key rows,
         # so the constant cannot merge two real groups.

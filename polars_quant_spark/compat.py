@@ -8,7 +8,7 @@ implicit, so
   ``pyspark.sql.Column`` (use inside select/withColumn);
 * recurrence indicators (EMA family, Wilder smoothing, SAR, Hilbert, …)
   operate on a DataFrame — ``EMA(df, "close", timeperiod=20)`` returns the
-  frame with the output column appended (internally one applyInPandas pass);
+  frame with the output column appended (internally one applyInArrow pass);
 * both backtester classes keep their constructor shapes.
 
 >>> import polars_quant_spark.compat as pq

@@ -257,7 +257,7 @@ def stochrsi(
     fastK = 100·(RSI − LLV(RSI)) / (HHV(RSI) − LLV(RSI)), fastD =
     SMA(fastK, fastd_period). MA type fixed to SMA (matype=0, the reference
     default). DataFrame-level because the RSI leg is a Wilder recurrence
-    (batched applyInPandas, one pass per key) and the stochastic legs
+    (batched applyInArrow, one pass per key) and the stochastic legs
     window over that derived column; the windows all share the per-key
     exchange the recurrence already established."""
     from polars_quant_spark.functions.overlap import sma
@@ -509,7 +509,7 @@ def tsi(
 ) -> DataFrame:
     """True Strength Index: 100 · EMA(long, EMA(short, Δclose)) /
     EMA(long, EMA(short, |Δclose|)) — FOUR chained recurrences in one
-    batched applyInPandas pass. Adds ``out`` (NULL while any chain warms
+    batched applyInArrow pass. Adds ``out`` (NULL while any chain warms
     up or the denominator is 0). NOTE: the first bar per key is DROPPED
     (momentum needs a prior close, and the recurrence warm-up must count
     only defined momenta)."""

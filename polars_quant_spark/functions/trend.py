@@ -70,7 +70,7 @@ def keltner(
 
     Adds ``{prefix}_mid`` / ``{prefix}_upper`` / ``{prefix}_lower``
     (NULL while either recurrence is warming up). Both kernels run in
-    ONE batched ``applyInPandas`` pass — adding the second recurrence
+    ONE batched ``applyInArrow`` pass — adding the second recurrence
     costs numpy time, not a second shuffle."""
     from polars_quant_spark.operators.recurrence import Rec, with_recurrences
 
@@ -214,7 +214,7 @@ def mass_index(
     """Mass index: rolling ``sum_period``-bar sum of
     EMA(range)/EMA(EMA(range)) — the range-expansion (reversal-bulge)
     detector. CHAINED recurrences: the second EMA consumes the first's
-    output column inside the same batched applyInPandas pass. Adds
+    output column inside the same batched applyInArrow pass. Adds
     ``out`` (NULL until the rolling sum window is full). NOTE: rows where
     either EMA is still warming up (or the double EMA is 0) are DROPPED —
     the rolling count must see only defined ratios."""

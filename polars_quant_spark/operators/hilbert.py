@@ -21,7 +21,7 @@ tests/mesa_reference.py and is asserted bit-exact in
 tests/test_mesa_reference_parity.py.
 
 Spark-side: inherently sequential per symbol → these kernels run inside the
-recurrence runner's single applyInPandas pass (KERNELS registry below extends
+recurrence runner's single applyInArrow pass (KERNELS registry below extends
 operators.recurrence.KERNELS on import).
 """
 

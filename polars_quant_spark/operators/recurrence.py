@@ -4,7 +4,7 @@ The reference's EMA family, Wilder smoothing, KAMA, SAR, T3, and the MESA
 state machine are per-symbol *sequential* scans (SURVEY.md §2.5 "recurrences")
 with no closed-form SQL window. Spark-first design (SURVEY.md §4.2 item 1):
 
-* One ``groupBy(symbol).applyInPandas`` pass computes **all** requested
+* One ``groupBy(symbol).applyInArrow`` pass computes **all** requested
   recurrences for a partition in a single Arrow round-trip — the per-indicator
   cost is a numpy scan, the per-pass cost (shuffle + Arrow) is paid once.
 * Scale: the shuffle is one exchange on the symbol key; each group is
@@ -12,7 +12,7 @@ with no closed-form SQL window. Spark-first design (SURVEY.md §4.2 item 1):
   mitigate upstream by bucketing the bar store by symbol. State is O(1) per
   kernel, so group size is bounded by executor memory only through Arrow
   batching (spark.sql.execution.arrow.maxRecordsPerBatch keeps batches sane;
-  applyInPandas materializes a group at a time — for truly huge single
+  applyInArrow materializes a group at a time — for truly huge single
   symbols, segment the scan and stitch seeds — operators/segmented.py).
 
 Null semantics match the reference: kernels skip nulls without consuming
@@ -36,8 +36,11 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.types import DoubleType, StructField, StructType
+
+from polars_quant_spark.operators.arrow_group import f64, sort_rows
 
 # ---------------------------------------------------------------------------
 # numpy scan kernels (null-compacting)
@@ -526,17 +529,9 @@ class Rec:
         return [self.out] if isinstance(self.out, str) else list(self.out)
 
 
-def _recurrence_schema(df: DataFrame, specs: list[Rec]) -> StructType:
-    return StructType(
-        df.schema.fields
-        + [StructField(name, DoubleType()) for s in specs for name in s.out_cols]
-    )
-
-
 def _nan_to_null(out: DataFrame, specs: list[Rec]) -> DataFrame:
     """Warm-up produces NaN in the numpy kernels; the declared semantics
-    (and the DuckDB oracles) use NULL — normalize once, shared by both
-    runner arms."""
+    (and the DuckDB oracles) use NULL — normalize once, in the JVM."""
     from pyspark.sql import functions as F
 
     new_cols = [name for s in specs for name in s.out_cols]
@@ -549,15 +544,6 @@ def _nan_to_null(out: DataFrame, specs: list[Rec]) -> DataFrame:
     )
 
 
-def _arrow_group_path_available(df: DataFrame) -> bool:
-    try:
-        import pyarrow  # noqa: F401
-        import pyarrow.compute  # noqa: F401
-    except ImportError:
-        return False
-    return hasattr(df.groupBy(), "applyInArrow")
-
-
 def with_recurrences(
     df: DataFrame,
     specs: list[Rec],
@@ -568,95 +554,28 @@ def with_recurrences(
     per partition (BASELINE.md internal target: batch all recurrences for a
     symbol into a single kernel invocation).
 
-    Since round 13 this DELEGATES to the ``applyInArrow`` path
-    (``with_recurrences_arrow``, bit-equal — pinned by
-    tests/test_indicators_numpy.py::test_with_recurrences_arrow_bit_equal)
-    when the runtime supports it, falling back to the applyInPandas arm
-    (``with_recurrences_pandas``, the executable spec and pre-Spark-4
-    path). Same rationale as the backtest fold's Arrow default
-    (backtest/vectorized.py): the pandas arm converts EVERY passthrough
-    column of every group to pandas blocks and back; the Arrow arm
-    extracts only the kernel inputs to numpy and appends the outputs as
-    Arrow arrays, never materializing passthrough columns in Python."""
-    if _arrow_group_path_available(df):
-        return with_recurrences_arrow(df, specs, partition_by, order_by)
-    return with_recurrences_pandas(df, specs, partition_by, order_by)
-
-
-def with_recurrences_pandas(
-    df: DataFrame,
-    specs: list[Rec],
-    partition_by: str | list[str] = "symbol",
-    order_by: str | list[str] = "t",
-) -> DataFrame:
-    """The applyInPandas arm of ``with_recurrences`` — executable spec for
-    the Arrow path and the fallback on runtimes without ``applyInArrow``."""
-    keys = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    order = [order_by] if isinstance(order_by, str) else list(order_by)
-    schema = _recurrence_schema(df, specs)
-    spec_data = [(s.out_cols, s.kernel, s.cols, s.params) for s in specs]
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order, kind="mergesort").reset_index(drop=True)
-        for out_cols, kname, cols, params in spec_data:
-            fn, _ = KERNELS[kname]
-            arrays = [pdf[c].to_numpy(dtype="float64", na_value=np.nan) for c in cols]
-            res = fn(*arrays, **params)
-            if isinstance(res, tuple):
-                for name, arr in zip(out_cols, res):
-                    pdf[name] = arr
-            else:
-                pdf[out_cols[0]] = res
-        return pdf
-
-    out = df.groupBy(*keys).applyInPandas(run, schema=schema)
-    return _nan_to_null(out, specs)
-
-
-def with_recurrences_arrow(
-    df: DataFrame,
-    specs: list[Rec],
-    partition_by: str | list[str] = "symbol",
-    order_by: str | list[str] = "t",
-) -> DataFrame:
-    """``with_recurrences`` on the ``applyInArrow`` group path (Spark 4.x):
-    same contract, same kernels, same output schema — the group arrives as
-    a ``pyarrow.Table`` (zero-copy over the transferred batches), the
-    worker casts ONLY the kernel input columns to float64 numpy (null →
-    NaN, exactly what ``pdf[c].to_numpy(dtype="float64", na_value=nan)``
-    produces on the pandas arm), runs the identical kernels, and appends
-    the outputs as Arrow float64 arrays wrapping the kernels' numpy
-    buffers. Passthrough columns (the common case: OHLCV + earlier
+    The group arrives as a ``pyarrow.Table`` (``applyInArrow``); the worker
+    casts ONLY the kernel input columns to float64 numpy (null → NaN), runs
+    the kernels, and appends the outputs as Arrow float64 arrays wrapping
+    the kernels' numpy buffers. Passthrough columns (OHLCV + earlier
     indicator columns riding along) are never materialized in Python.
 
-    A later spec may consume an earlier spec's output column — the append
-    makes it visible to ``tbl.column`` just as ``pdf[name] = res`` does on
-    the pandas arm.
-
-    Tie caveat (same as both backtest fold arms): rows sort stably by
-    ``order_by``, so duplicate order keys resolve in arrival order —
-    deterministic per plan, not across shuffles. Bar data has unique
-    (symbol, t)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
+    A later spec may consume an earlier spec's output column: the append
+    makes it visible to the next spec's input extraction. Rows sort stably
+    by ``order_by`` (see ``arrow_group.sort_rows`` for the tie caveat)."""
     keys = [partition_by] if isinstance(partition_by, str) else list(partition_by)
     order = [order_by] if isinstance(order_by, str) else list(order_by)
-    schema = _recurrence_schema(df, specs)
+    schema = StructType(
+        df.schema.fields
+        + [StructField(name, DoubleType()) for s in specs for name in s.out_cols]
+    )
     spec_data = [(s.out_cols, s.kernel, s.cols, s.params) for s in specs]
 
-    def run(tbl: "pa.Table") -> "pa.Table":
-        idx = pc.sort_indices(tbl, sort_keys=[(c, "ascending") for c in order])
-        tbl = tbl.take(idx)
+    def run(tbl: pa.Table) -> pa.Table:
+        tbl = sort_rows(tbl, order)
         for out_cols, kname, cols, params in spec_data:
             fn, _ = KERNELS[kname]
-            arrays = [
-                pc.cast(tbl.column(c), pa.float64())
-                .combine_chunks()
-                .to_numpy(zero_copy_only=False)
-                for c in cols
-            ]
-            res = fn(*arrays, **params)
+            res = fn(*[f64(tbl, c) for c in cols], **params)
             if not isinstance(res, tuple):
                 res = (res,)
             for name, arr in zip(out_cols, res):
@@ -680,23 +599,20 @@ def macdext(
     signal_matype: int = 1,
 ):
     """MACD with per-leg MA type (composition momentum.py:83-88). Types:
-    0=SMA, 1=EMA — the two the composition supports; others raise."""
+    0=SMA, 1=EMA — the two the composition supports; others raise, on
+    every leg."""
 
     def leg(v: np.ndarray, p: int, t: int) -> np.ndarray:
         if t == 1:
             return ema(v, p)
         if t == 0:
-            out = np.full(v.shape[0], np.nan)
-            s = pd.Series(v)
-            r = s.rolling(p).mean().to_numpy()
-            return r
+            return pd.Series(v).rolling(p).mean().to_numpy()
         raise ValueError(f"macdext matype {t} unsupported")
 
     ef = leg(x, fast, fast_matype)
     es = leg(x, slow, slow_matype)
     dif = ef - es
-    dea_in = dif.copy()
-    dea = leg(dea_in, signal, signal_matype) if signal_matype == 0 else ema(dif, signal)
+    dea = leg(dif, signal, signal_matype)
     return dif, dea, dif - dea
 
 

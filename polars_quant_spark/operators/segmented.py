@@ -1,25 +1,26 @@
 """Segmented exponential scans — the huge-single-symbol escape hatch.
 
-``with_recurrences`` (operators/recurrence.py) materializes one pandas frame
-per symbol group; a symbol with billions of bars therefore becomes one
+``with_recurrences`` (operators/recurrence.py) runs one Arrow group per
+symbol; a symbol with billions of bars therefore becomes one
 executor-memory-sized group (the documented r1 limitation, recurrence.py
-module doc). ``ewma_segmented`` removes that bound for the EMA/RMA family
-while staying *bit-identical* to the single-group scan:
+module doc). The operators here remove that bound while staying
+*bit-identical* to the single-group kernels:
 
 * rows are split into ``segment_rows``-sized per-symbol segments
   (row_number over the symbol window — the same exchange the indicator
   pipeline already pays);
-* segments run as **sequential Spark passes**: pass k processes every
-  symbol's k-th segment in parallel (applyInPandas over symbols), then the
-  carried accumulator — ONE double per symbol, smuggled out on a marker row
-  — is JOINED into pass k+1's input as a ``_seed`` column (merge-pinned on
-  the symbol key: the same exchange the next pass's groupBy needs anyway).
-  VERDICT r8 gap #3: the carry used to round-trip through the driver
-  (``collect()`` of one marker row per symbol per segment — a 10⁶-row
-  driver funnel at 10⁶ symbols); the join keeps it executor-side at any
-  symbol count, and the whole chain is one lazy DAG;
-* segment 0 runs the ordinary ``_ewma`` (SMA seed, pandas-ewm tail);
-  continuation segments resume the pandas-ewm recurrence from the carried e.
+* segments run as **sequential Spark passes** (``_segmented_passes``, the
+  one pass driver): pass k processes every symbol's k-th segment in
+  parallel (applyInArrow over symbols), then the carried state — a few
+  doubles per symbol, smuggled out on marker rows — is JOINED into pass
+  k+1's input as ``_seed_j`` columns (merge-pinned on the symbol key: the
+  same exchange the next pass's groupBy needs anyway). VERDICT r8 gap #3:
+  the carry used to round-trip through the driver (``collect()`` of one
+  marker row per symbol per segment — a 10⁶-row driver funnel at 10⁶
+  symbols); the join keeps it executor-side at any symbol count, and the
+  whole chain is one lazy DAG;
+* each operator supplies only its numpy scan: segment 0 runs the kernel's
+  own seeding, continuation segments resume from the carried state.
 
 Exactness argument: an exponential scan is a strict left fold; cutting the
 fold and resuming from the carried accumulator replays identical float ops
@@ -41,30 +42,24 @@ result inside ``session.released(spark)`` (ADVICE r10).
 
 from __future__ import annotations
 
+import math
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.storagelevel import StorageLevel
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from polars_quant_spark.operators.recurrence import (
-    _arrow_group_path_available,
-    _ewma,
-)
+from polars_quant_spark.operators.arrow_group import f64, flags, sort_rows
+from polars_quant_spark.operators.recurrence import _ewma, _ewma_q
 
 # Truncate the sequential-pass lineage every this-many segments; plan depth
 # at any action is bounded by this constant instead of n_segments.
 _CHECKPOINT_EVERY_SEGMENTS = 4
-
-#: Test hook: force the applyInPandas arms (the executable spec) even when
-#: the Arrow group path is available, so the arm differential can pin
-#: pandas≡arrow on the same input (tests/test_segmented.py).
-_FORCE_PANDAS_ARM = False
-
-
-def _use_arrow(df: DataFrame) -> bool:
-    return (not _FORCE_PANDAS_ARM) and _arrow_group_path_available(df)
 
 #: segment_rows="auto" sizing: ceil(max-rows-per-key / TARGET) with a FLOOR.
 #: Wall-clock is n_segments SEQUENTIAL passes, so a fixed segment_rows makes
@@ -75,7 +70,7 @@ def _use_arrow(df: DataFrame) -> bool:
 #: SF whose histories exceed the floor, so the driver oracle keeps proving
 #: the segmented path, not a degenerate single segment. The FLOOR keeps tiny
 #: inputs from paying sequential-pass overhead for toy segments. Memory
-#: bound: the caller picking "auto" accepts ~max_rows/4 rows per pandas
+#: bound: the caller picking "auto" accepts ~max_rows/4 rows per
 #: group — for the memory-bounded regime (billion-row symbols) pass an
 #: explicit segment_rows instead.
 AUTO_SEGMENT_TARGET = 4
@@ -162,15 +157,168 @@ def _cache_piece(res: DataFrame, k: int) -> DataFrame:
     return res.persist(StorageLevel.DISK_ONLY)
 
 
-def _join_back(
-    base: DataFrame, pieces: list[DataFrame], partition_by: str
-) -> DataFrame:
-    """Shared output assembly: union the per-segment result pieces and
-    left-join them back onto the checkpointed base on (symbol, _rn)."""
+def _last_valid(res: np.ndarray) -> float:
+    """The last non-NaN value of a kernel output (NaN if none): the carry
+    out of a segment the kernel's own seeding scanned."""
+    valid = np.flatnonzero(~np.isnan(res))
+    return float(res[valid[-1]]) if valid.size else np.nan
+
+
+def _ewm_resume(e: float, vals: np.ndarray, alpha: float) -> np.ndarray:
+    """Continue the pandas-ewm recurrence of ``recurrence._ewma`` from the
+    carried accumulator ``e`` over ``vals``."""
+    z = np.empty(vals.shape[0] + 1, dtype=np.float64)
+    z[0] = e
+    z[1:] = vals
+    return pd.Series(z).ewm(alpha=alpha, adjust=False).mean().to_numpy()[1:]
+
+
+def _segmented_passes(
+    base: DataFrame,
+    last_seg: int,
+    segment_rows: int,
+    partition_by: str,
+    in_cols: list[str],
+    outs: list[str],
+    width: int,
+    scan,
+    carry: str | None = None,
+    halo: int = 0,
+) -> tuple[DataFrame, list[DataFrame]]:
+    """The one sequential-pass driver behind every operator in this module.
+
+    Pass k slices every symbol's k-th segment of ``base`` — plus, when
+    ``halo`` > 0, the previous segment's last ``halo`` rows, flagged by a
+    ``_halo`` column — joins in the state pass k−1 carried out, and runs
+    ``scan`` once per symbol in one ``applyInArrow`` pass:
+
+    ``scan(tbl, seed, halo_n) -> (results, state)``
+
+    * ``tbl``: the symbol's slice sorted by ``_rn`` (halo rows first);
+    * ``seed``: None on pass 0, else the ``width`` state floats pass k−1
+      emitted (null → NaN);
+    * ``results``: one float64 array per ``outs`` column, covering the
+      trailing rows the scan emits (halo rows it drops come first);
+    * ``state``: ``width`` floats for pass k+1.
+
+    The state leaves the executors on ``width`` marker rows (``_rn`` =
+    −1−j) in the ``carry`` output column, or, when ``carry`` is None, in
+    an extra ``_st`` column that is dropped from the output. A symbol
+    whose slice is all halo (its history ended inside the halo window) was
+    fully emitted by the previous pass and emits nothing. Output floats
+    map NaN → null.
+
+    Returns the result pieces left-joined back onto ``base`` on
+    (symbol, _rn), and the per-pass marker frames."""
+    fields = list(outs) if carry else [*outs, "_st"]
+    st_col = carry or "_st"
+    schema = StructType(
+        [
+            base.schema[partition_by],
+            StructField("_rn", LongType()),
+            *[StructField(o, DoubleType()) for o in fields],
+        ]
+    )
+    dbl = pa.float64()
+    marker_rn = list(range(-1, -1 - width, -1))
+
+    def run_arrow(tbl: pa.Table) -> pa.Table:
+        tbl = sort_rows(tbl, ["_rn"])
+        n = tbl.num_rows
+        key = tbl.column(partition_by)
+        rn = pc.cast(tbl.column("_rn"), pa.int64())
+        halo_n = int(pc.sum(tbl.column("_halo")).as_py() or 0) if halo else 0
+        if halo_n and halo_n == n:
+            return pa.table(
+                {
+                    partition_by: key.slice(0, 0),
+                    "_rn": rn.slice(0, 0),
+                    **{o: pa.nulls(0, dbl) for o in fields},
+                }
+            )
+        seed = None
+        if "_seed_0" in tbl.column_names:
+            seed = [tbl.column(f"_seed_{j}")[0].as_py() for j in range(width)]
+            seed = [np.nan if v is None else float(v) for v in seed]
+        results, state = scan(tbl, seed, halo_n)
+        start = n - len(results[0])
+        body = dict(zip(outs, results))
+        state_arr = pa.array([float(v) for v in state], type=dbl, from_pandas=True)
+        cols = {
+            partition_by: pa.chunked_array(
+                key.slice(start).chunks
+                + [pa.array([key[0].as_py()] * width, type=key.type)]
+            ),
+            "_rn": pa.chunked_array(
+                rn.slice(start).chunks + [pa.array(marker_rn, type=pa.int64())]
+            ),
+        }
+        for o in fields:
+            cols[o] = pa.chunked_array(
+                [
+                    pa.array(body[o], type=dbl, from_pandas=True)
+                    if o in body
+                    else pa.nulls(n - start, dbl),
+                    state_arr if o == st_col else pa.nulls(width, dbl),
+                ]
+            )
+        return pa.table(cols)
+
+    pieces: list[DataFrame] = []
+    marks: list[DataFrame] = []
+    prev: DataFrame | None = None
+    for k in range(last_seg + 1):
+        lo = k * segment_rows
+        if not halo:
+            seg = base.where(F.col("_seg") == k).select(partition_by, "_rn", *in_cols)
+        elif k == 0:
+            seg = base.where(F.col("_seg") == 0).select(
+                partition_by, "_rn", *in_cols, F.lit(0).alias("_halo")
+            )
+        else:
+            seg = base.where(
+                (F.col("_rn") > lo - halo) & (F.col("_rn") <= lo + segment_rows)
+            ).select(
+                partition_by, "_rn", *in_cols,
+                F.when(F.col("_rn") <= lo, 1).otherwise(0).alias("_halo"),
+            )
+        if prev is not None:
+            if width == 1:
+                seeds_df = prev.where(F.col("_rn") == -1).select(
+                    partition_by, F.col(st_col).alias("_seed_0")
+                )
+            else:
+                # pivot the marker rows back to one row of _seed_j columns
+                # per symbol; the aggregate's symbol-key exchange is the one
+                # the groupBy needs anyway
+                seeds_df = prev.where(F.col("_rn") < 0).groupBy(partition_by).agg(
+                    *[
+                        F.max(F.when(F.col("_rn") == -1 - j, F.col(st_col))).alias(
+                            f"_seed_{j}"
+                        )
+                        for j in range(width)
+                    ]
+                )
+            # merge pin: seeds_df is one row per SYMBOL (data-dimension-
+            # scaled, estimate-poisoned behind the Python UDF) and this join
+            # compiles inside the next pass's persisted subtree — i.e.
+            # AQE-less, where a static broadcast would be built for real at
+            # any true size (the r8 landmine class). The shuffle is free in
+            # context: the join's hash partitioning on the symbol key is
+            # exactly the exchange the groupBy.applyInArrow needs next.
+            seg = seg.join(seeds_df.hint("merge"), partition_by, "left")
+        res = seg.groupBy(partition_by).applyInArrow(run_arrow, schema=schema)
+        res = _cache_piece(res, k)
+        piece = res.where(F.col("_rn") >= 0)
+        pieces.append(piece if carry else piece.drop("_st"))
+        marks.append(res.where(F.col("_rn") < 0))
+        prev = res
+
     merged = pieces[0]
     for piece in pieces[1:]:
         merged = merged.unionByName(piece)
-    return base.join(merged, [partition_by, "_rn"], "left").drop("_seg", "_rn")
+    out = base.join(merged, [partition_by, "_rn"], "left").drop("_seg", "_rn")
+    return out, marks
 
 
 def ewma_segmented(
@@ -195,122 +343,97 @@ def ewma_segmented(
     if last_seg is None:
         return df.withColumn(out, F.lit(None).cast("double"))
 
-    schema = StructType(
-        [
-            df.schema[partition_by],
-            StructField("_rn", LongType()),
-            StructField(out, DoubleType()),
-        ]
+    def scan(tbl, seed, halo_n):
+        vals = f64(tbl, x)
+        # NaN seed: the prior segment produced no value yet
+        if seed is None or np.isnan(seed[0]):
+            res = _ewma(vals, alpha, p)
+            return [res], [_last_valid(res)]
+        res = _ewm_resume(seed[0], vals, alpha)
+        return [res], [res[-1] if res.size else seed[0]]
+
+    return _segmented_passes(
+        base, last_seg, segment_rows, partition_by, [x], [out], 1, scan, carry=out
+    )[0]
+
+
+# ---------------------------------------------------------------------------
+# Row-local SQL shared by the per-op and fused Wilder/T3 operators: the
+# exact float order (and NULL masks) of the plain kernels
+# ---------------------------------------------------------------------------
+
+
+def _true_range(high: str, low: str, close: str, w) -> Column:
+    """GREATEST of h−l, |h−prev_c|, |l−prev_c| (the kernel's
+    np.maximum.reduce, exact for any double triple), NULL on each symbol's
+    first row. Gated on the lag BEFORE greatest: Spark's GREATEST skips
+    NULL operands (numpy's maximum.reduce propagates NaN), so an ungated
+    first row would degrade to h−l and poison the RMA seed instead of
+    being dropped."""
+    prev_c = F.lag(close).over(w)
+    return F.when(
+        prev_c.isNotNull(),
+        F.greatest(
+            F.col(high) - F.col(low),
+            F.abs(F.col(high) - prev_c),
+            F.abs(F.col(low) - prev_c),
+        ),
     )
 
-    def scan(vals: np.ndarray, e: float | None):
-        """The per-group scan body, shared bit-identically by both arms:
-        (values, carried accumulator | None) → (result, carry-out)."""
-        if e is None:
-            res = _ewma(vals, alpha, p)
-            valid = np.where(~np.isnan(res))[0]
-            e_out = float(res[valid[-1]]) if valid.size else np.nan
-        else:
-            z = np.empty(vals.shape[0] + 1, dtype=np.float64)
-            z[0] = e
-            z[1:] = vals
-            res = (
-                pd.Series(z).ewm(alpha=alpha, adjust=False).mean().to_numpy()[1:]
-            )
-            e_out = float(res[-1]) if res.size else e
-        return res, e_out
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_rn", kind="mergesort").reset_index(drop=True)
-        sym = pdf[partition_by].iloc[0]
-        vals = pdf[x].to_numpy(dtype="float64", na_value=np.nan)
-        # the carried accumulator arrives as a joined `_seed` column
-        # (absent on pass 0; NaN when the prior segment produced no value)
-        e = None
-        if "_seed" in pdf.columns:
-            s0 = pdf["_seed"].iloc[0]
-            if s0 is not None and not pd.isna(s0):
-                e = float(s0)
-        res, e_out = scan(vals, e)
-        body = pd.DataFrame(
-            {
-                partition_by: pdf[partition_by],
-                "_rn": pdf["_rn"].astype("int64"),
-                out: res,
-            }
-        )
-        # marker row (_rn = -1) smuggles the carried accumulator out of
-        # the executors; joined into the next pass, filtered from output
-        mark = pd.DataFrame({partition_by: [sym], "_rn": [-1], out: [e_out]})
-        return pd.concat([body, mark], ignore_index=True)
+def _rsi_value() -> Column:
+    """100·au/(au+ad) over the smoothed _au/_ad chains, ad == 0 → 100
+    (operators/recurrence.py:163 — momentum.rs:506-541 semantics)."""
+    return F.when(F.col("_ad") == 0.0, F.lit(100.0)).otherwise(
+        F.lit(100.0) * F.col("_au") / (F.col("_au") + F.col("_ad"))
+    )
 
-    def run_arrow(tbl):
-        # applyInArrow arm (default on Spark 4): same scan, but the key and
-        # _rn buffers are REUSED zero-copy in the output instead of round-
-        # tripping through pandas blocks, and the result array is emitted
-        # with from_pandas=True (NaN→null), matching what the pandas
-        # serializer does to the pandas arm's NaN rows byte-for-byte.
-        import pyarrow as pa
-        import pyarrow.compute as pc
 
-        tbl = tbl.take(pc.sort_indices(tbl, sort_keys=[("_rn", "ascending")]))
-        sym_col = tbl.column(partition_by)
-        sym = sym_col[0].as_py()
-        vals = (
-            pc.cast(tbl.column(x), pa.float64())
-            .combine_chunks()
-            .to_numpy(zero_copy_only=False)
-        )
-        e = None
-        if "_seed" in tbl.column_names:
-            s0 = tbl.column("_seed")[0].as_py()
-            if s0 is not None and not (isinstance(s0, float) and np.isnan(s0)):
-                e = float(s0)
-        res, e_out = scan(vals, e)
-        rn_col = pc.cast(tbl.column("_rn"), pa.int64())
-        return pa.table(
-            {
-                partition_by: pa.chunked_array(
-                    list(sym_col.chunks) + [pa.array([sym], type=sym_col.type)]
-                ),
-                "_rn": pa.chunked_array(
-                    list(rn_col.chunks) + [pa.array([-1], type=pa.int64())]
-                ),
-                out: pa.chunked_array(
-                    [
-                        pa.array(res, type=pa.float64(), from_pandas=True),
-                        pa.array([e_out], type=pa.float64(), from_pandas=True),
-                    ]
-                ),
-            }
-        )
+def _dx(spdm: np.ndarray, smdm: np.ndarray, str_: np.ndarray) -> np.ndarray:
+    """DX from the smoothed ±DM and TR chains, in-kernel, with the exact
+    IEEE op sequence of ``_with_dmi``'s SQL (same doubles in,
+    correctly-rounded *,/ → same doubles out); NaN while TR warms up."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        pdi = np.where(str_ > 0, 100.0 * spdm / str_, 0.0)
+        mdi = np.where(str_ > 0, 100.0 * smdm / str_, 0.0)
+        dsum = pdi + mdi
+        dx = np.where(dsum > 0, 100.0 * np.abs(pdi - mdi) / dsum, 0.0)
+    dx[np.isnan(str_)] = np.nan
+    return dx
 
-    use_arrow = _use_arrow(df)
-    pieces: list[DataFrame] = []
-    prev: DataFrame | None = None
-    for k in range(int(last_seg) + 1):
-        seg = base.where(F.col("_seg") == k).select(partition_by, "_rn", x)
-        if prev is not None:
-            seeds_df = prev.where(F.col("_rn") == -1).select(
-                partition_by, F.col(out).alias("_seed")
-            )
-            # merge pin: seeds_df is one row per SYMBOL (data-dimension-
-            # scaled, estimate-poisoned behind applyInPandas) and this join
-            # compiles inside the next pass's persisted subtree — i.e.
-            # AQE-less, where a static broadcast would be built for real at
-            # any true size (the r8 landmine class). The shuffle is free in
-            # context: the join's hash partitioning on the symbol key is
-            # exactly the exchange the groupBy.applyInPandas needs next.
-            seg = seg.join(seeds_df.hint("merge"), partition_by, "left")
-        if use_arrow:
-            res = seg.groupBy(partition_by).applyInArrow(run_arrow, schema=schema)
-        else:
-            res = seg.groupBy(partition_by).applyInPandas(run, schema=schema)
-        res = _cache_piece(res, k)
-        pieces.append(res.where(F.col("_rn") >= 0))
-        prev = res
 
-    return _join_back(base, pieces, partition_by)
+def _with_dmi(sm: DataFrame) -> DataFrame:
+    """Add _pdi, _mdi and _dx from the smoothed _spdm/_smdm/_str chains.
+    Spark's NULL arithmetic mirrors the kernel's np.where + warm mask only
+    if each ratio is explicitly nulled while _str is, which this does."""
+    warm = F.col("_str").isNull()
+    pdi = F.when(warm, F.lit(None)).when(
+        F.col("_str") > 0, F.lit(100.0) * F.col("_spdm") / F.col("_str")
+    ).otherwise(F.lit(0.0))
+    mdi = F.when(warm, F.lit(None)).when(
+        F.col("_str") > 0, F.lit(100.0) * F.col("_smdm") / F.col("_str")
+    ).otherwise(F.lit(0.0))
+    scored = sm.withColumn("_pdi", pdi).withColumn("_mdi", mdi)
+    dsum = F.col("_pdi") + F.col("_mdi")
+    dx = F.when(warm, F.lit(None)).when(
+        dsum > 0, F.lit(100.0) * F.abs(F.col("_pdi") - F.col("_mdi")) / dsum
+    ).otherwise(F.lit(0.0))
+    return scored.withColumn("_dx", dx)
+
+
+def _t3_value(v: float) -> Column:
+    """Tillson's GD combine of chains _e3.._e6, coefficients computed in
+    Python doubles exactly as the kernel's (operators/recurrence.py:106)."""
+    c1 = -(v ** 3)
+    c2 = 3.0 * v ** 2 + 3.0 * v ** 3
+    c3 = -6.0 * v ** 2 - 3.0 * v - 3.0 * v ** 3
+    c4 = 1.0 + 3.0 * v + v ** 3 + 3.0 * v ** 2
+    return (
+        F.lit(c1) * F.col("_e6")
+        + F.lit(c2) * F.col("_e5")
+        + F.lit(c3) * F.col("_e4")
+        + F.lit(c4) * F.col("_e3")
+    )
 
 
 def rsi_segmented(
@@ -357,12 +480,7 @@ def rsi_segmented(
         diffs, ["_up", "_dn"], ["_au", "_ad"], p, 1.0 / p,
         partition_by, order_by, segment_rows,
     )
-    rsi = F.when(F.col("_ad") == 0.0, F.lit(100.0)).otherwise(
-        F.lit(100.0) * F.col("_au") / (F.col("_au") + F.col("_ad"))
-    )
-    scored = both.select(
-        partition_by, order_by, rsi.alias(out)
-    )
+    scored = both.select(partition_by, order_by, _rsi_value().alias(out))
     return df.join(scored, [partition_by, order_by], "left")
 
 
@@ -384,19 +502,7 @@ def atr_segmented(
     np.maximum.reduce, exact for any double triple), so one window plus
     one state-carrying RMA covers it (operators/recurrence.py:195)."""
     w = Window.partitionBy(partition_by).orderBy(order_by)
-    pc = F.lag(close).over(w)
-    # gate on the lag BEFORE greatest: Spark's GREATEST skips NULL operands
-    # (numpy's maximum.reduce propagates NaN), so an ungated first row would
-    # degrade to h−l and poison the RMA seed instead of being dropped
-    tr = F.when(
-        pc.isNotNull(),
-        F.greatest(
-            F.col(high) - F.col(low),
-            F.abs(F.col(high) - pc),
-            F.abs(F.col(low) - pc),
-        ),
-    )
-    rows = df.withColumn("_tr", tr).where(F.col("_tr").isNotNull())
+    rows = df.withColumn("_tr", _true_range(high, low, close, w)).where(F.col("_tr").isNotNull())
     res = ewma_segmented(
         rows, "_tr", p, alpha=1.0 / p, out=out,
         partition_by=partition_by, order_by=order_by, segment_rows=segment_rows,
@@ -437,17 +543,9 @@ def adx_family_segmented(
     segment; wall is sequential passes — use the plain kernels while a
     symbol fits executor memory."""
     w = Window.partitionBy(partition_by).orderBy(order_by)
-    ph, pl, pc = F.lag(high).over(w), F.lag(low).over(w), F.lag(close).over(w)
-    up_move = F.col(high) - ph
-    dn_move = pl - F.col(low)
-    tr = F.when(
-        pc.isNotNull(),
-        F.greatest(
-            F.col(high) - F.col(low),
-            F.abs(F.col(high) - pc),
-            F.abs(F.col(low) - pc),
-        ),
-    )
+    up_move = F.col(high) - F.lag(high).over(w)
+    dn_move = F.lag(low).over(w) - F.col(low)
+    tr = _true_range(high, low, close, w)
     base = (
         df.withColumn("_pdm", F.when((up_move > dn_move) & (up_move > 0), up_move).otherwise(F.lit(0.0)))
         .withColumn("_mdm", F.when((dn_move > up_move) & (dn_move > 0), dn_move).otherwise(F.lit(0.0)))
@@ -456,40 +554,16 @@ def adx_family_segmented(
     )
     # round-13: ONE fused sweep runs all four Wilder RMAs — the three
     # parallel DM/TR chains plus ADX's chain over dx, derived in-kernel
-    # from their outputs with the exact IEEE op sequence of the SQL
-    # expressions below (same doubles in, correctly-rounded *,/ → same
-    # doubles out). dx's warm-row NaNs are compacted by the scan itself,
-    # reproducing the old pre-filtered 4th sweep's "seed on the first p
-    # VALID dx" without re-segmenting. One base checkpoint and n_segments
-    # passes total instead of four of each.
-    def _dx_chain(res: list) -> np.ndarray:
-        spdm, smdm, str_ = res[0], res[1], res[2]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            pdi = np.where(str_ > 0, 100.0 * spdm / str_, 0.0)
-            mdi = np.where(str_ > 0, 100.0 * smdm / str_, 0.0)
-            dsum = pdi + mdi
-            dx = np.where(dsum > 0, 100.0 * np.abs(pdi - mdi) / dsum, 0.0)
-        dx[np.isnan(str_)] = np.nan
-        return dx
-
+    # from their outputs (``_dx``). dx's warm-row NaNs are compacted by the
+    # scan itself, reproducing the old pre-filtered 4th sweep's "seed on
+    # the first p VALID dx" without re-segmenting. One base checkpoint and
+    # n_segments passes total instead of four of each.
     sm = _fused_ewma_sweep(
-        base, ["_pdm", "_mdm", "_tr", _dx_chain],
+        base, ["_pdm", "_mdm", "_tr", lambda res: _dx(*res[:3])],
         ["_spdm", "_smdm", "_str", "_adx"], p, 1.0 / p,
         partition_by, order_by, segment_rows,
     )
-    warm = F.col("_str").isNull()
-    pdi = F.when(warm, F.lit(None)).when(
-        F.col("_str") > 0, F.lit(100.0) * F.col("_spdm") / F.col("_str")
-    ).otherwise(F.lit(0.0))
-    mdi = F.when(warm, F.lit(None)).when(
-        F.col("_str") > 0, F.lit(100.0) * F.col("_smdm") / F.col("_str")
-    ).otherwise(F.lit(0.0))
-    scored = sm.withColumn("_pdi", pdi).withColumn("_mdi", mdi)
-    dsum = F.col("_pdi") + F.col("_mdi")
-    dx = F.when(warm, F.lit(None)).when(
-        dsum > 0, F.lit(100.0) * F.abs(F.col("_pdi") - F.col("_mdi")) / dsum
-    ).otherwise(F.lit(0.0))
-    scored = scored.withColumn("_dx", dx)
+    scored = _with_dmi(sm)
     cols = [
         ("_spdm", "plus_dm"), ("_smdm", "minus_dm"), ("_pdi", "plus_di"),
         ("_mdi", "minus_di"), ("_dx", "dx"),
@@ -603,28 +677,16 @@ def _fused_ewma_sweep(
         return cur
     in_cols = sorted({s for s in srcs if isinstance(s, str)})
 
-    schema = StructType(
-        [
-            df.schema[partition_by],
-            StructField("_rn", LongType()),
-            *[StructField(o, DoubleType()) for o in outs],
-            # resume state, marker rows only: [seen, psum, e] × depth
-            StructField("_st", DoubleType(), True),
-        ]
-    )
-    n_st = 3 * depth
-
-    def scan_chains(fetch, st: list, n: int):
-        """The per-group chain loop, shared bit-identically by both arms.
-        ``fetch(name)`` returns a column as float64 ndarray (null→NaN);
-        mutates ``st`` in place and returns the per-chain output arrays."""
+    def scan(tbl, seed, halo_n):
+        # resume state per chain: [seen, psum, e]
+        st = list(seed) if seed is not None else [0.0, 0.0, np.nan] * depth
+        n = tbl.num_rows
         res_list: list[np.ndarray] = []
-        res_cols = {}
         for i in range(depth):
             s = srcs[i]
             p, alpha = ps[i], alphas[i]
             if isinstance(s, str):
-                cur = fetch(s)
+                cur = f64(tbl, s)
             elif callable(s):
                 cur = s(res_list)
             else:
@@ -662,147 +724,21 @@ def _fused_ewma_sweep(
                     out[pos[need - 1]] = e
                     tail = w[need:]
                     if len(tail):
-                        z = np.empty(len(tail) + 1)
-                        z[0] = e
-                        z[1:] = tail
-                        r = (
-                            pd.Series(z)
-                            .ewm(alpha=alpha, adjust=False)
-                            .mean()
-                            .to_numpy()[1:]
-                        )
+                        r = _ewm_resume(e, tail, alpha)
                         out[pos[need:]] = r
                         e = float(r[-1])
                     seen, psum = float(p), 0.0
-            else:
-                if len(w):
-                    z = np.empty(len(w) + 1)
-                    z[0] = e
-                    z[1:] = w
-                    r = (
-                        pd.Series(z)
-                        .ewm(alpha=alpha, adjust=False)
-                        .mean()
-                        .to_numpy()[1:]
-                    )
-                    out[pos] = r
-                    e = float(r[-1])
+            elif len(w):
+                r = _ewm_resume(e, w, alpha)
+                out[pos] = r
+                e = float(r[-1])
             st[3 * i], st[3 * i + 1], st[3 * i + 2] = seen, psum, e
-            res_cols[outs[i]] = out
             res_list.append(out)
-        return res_cols
+        return res_list, st
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_rn", kind="mergesort").reset_index(drop=True)
-        sym = pdf[partition_by].iloc[0]
-        n = len(pdf)
-        # carried state arrives as _seed_0.._seed_{3·depth−1} columns
-        # (absent on pass 0)
-        if "_seed_0" in pdf.columns:
-            st = [float(pdf[f"_seed_{j}"].iloc[0]) for j in range(n_st)]
-        else:
-            st = [0.0, 0.0, np.nan] * depth
-        res_cols = scan_chains(
-            lambda c: pdf[c].to_numpy(dtype="float64", na_value=np.nan), st, n
-        )
-        body = pd.DataFrame(
-            {
-                partition_by: pdf[partition_by],
-                "_rn": pdf["_rn"].astype("int64"),
-                **res_cols,
-                "_st": np.full(n, np.nan),
-            }
-        )
-        # marker rows (_rn = −1−j) smuggle the resume state out of the
-        # executors: state scalar j rides the _st column of marker row j
-        marks = pd.DataFrame(
-            {
-                partition_by: [sym] * n_st,
-                "_rn": [-1 - j for j in range(n_st)],
-                **{o: [np.nan] * n_st for o in outs},
-                "_st": st,
-            }
-        )
-        return pd.concat([body, marks], ignore_index=True)
-
-    def run_arrow(tbl):
-        # applyInArrow arm (default on Spark 4): identical scan; key/_rn
-        # buffers reused zero-copy, outputs emitted with from_pandas=True
-        # (NaN→null) to match the pandas serializer's treatment of the
-        # pandas arm's NaN rows. See ewma_segmented.run_arrow.
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        tbl = tbl.take(pc.sort_indices(tbl, sort_keys=[("_rn", "ascending")]))
-        n = tbl.num_rows
-        sym_col = tbl.column(partition_by)
-        sym = sym_col[0].as_py()
-        if "_seed_0" in tbl.column_names:
-            st = []
-            for j in range(n_st):
-                v = tbl.column(f"_seed_{j}")[0].as_py()
-                st.append(np.nan if v is None else float(v))
-        else:
-            st = [0.0, 0.0, np.nan] * depth
-        res_cols = scan_chains(
-            lambda c: pc.cast(tbl.column(c), pa.float64())
-            .combine_chunks()
-            .to_numpy(zero_copy_only=False),
-            st,
-            n,
-        )
-        rn_col = pc.cast(tbl.column("_rn"), pa.int64())
-        f64 = pa.float64()
-        cols = {
-            partition_by: pa.chunked_array(
-                list(sym_col.chunks) + [pa.array([sym] * n_st, type=sym_col.type)]
-            ),
-            "_rn": pa.chunked_array(
-                list(rn_col.chunks)
-                + [pa.array([-1 - j for j in range(n_st)], type=pa.int64())]
-            ),
-        }
-        for o in outs:
-            cols[o] = pa.chunked_array(
-                [
-                    pa.array(res_cols[o], type=f64, from_pandas=True),
-                    pa.nulls(n_st, f64),
-                ]
-            )
-        cols["_st"] = pa.chunked_array(
-            [pa.nulls(n, f64), pa.array(st, type=f64, from_pandas=True)]
-        )
-        return pa.table(cols)
-
-    use_arrow = _use_arrow(df)
-    pieces: list[DataFrame] = []
-    prev: DataFrame | None = None
-    for k in range(int(last_seg) + 1):
-        seg = base.where(F.col("_seg") == k).select(partition_by, "_rn", *in_cols)
-        if prev is not None:
-            # pivot the marker rows back to one row of _seed_j columns per
-            # symbol; merge pin for the ewma_segmented seed-join reasons
-            seeds_df = prev.where(F.col("_rn") < 0).groupBy(partition_by).agg(
-                *[
-                    F.max(F.when(F.col("_rn") == -1 - j, F.col("_st"))).alias(
-                        f"_seed_{j}"
-                    )
-                    for j in range(n_st)
-                ]
-            )
-            seg = seg.join(seeds_df.hint("merge"), partition_by, "left")
-        if use_arrow:
-            res = seg.groupBy(partition_by).applyInArrow(run_arrow, schema=schema)
-        else:
-            res = seg.groupBy(partition_by).applyInPandas(run, schema=schema)
-        res = _cache_piece(res, k)
-        pieces.append(res.where(F.col("_rn") >= 0).drop("_st"))
-        prev = res
-
-    merged = pieces[0]
-    for piece in pieces[1:]:
-        merged = merged.unionByName(piece)
-    return base.join(merged, [partition_by, "_rn"], "left").drop("_seg", "_rn")
+    return _segmented_passes(
+        base, last_seg, segment_rows, partition_by, in_cols, outs, 3 * depth, scan
+    )[0]
 
 
 def dema_segmented(
@@ -862,20 +798,9 @@ def t3_segmented(
     deepest chain composition in the family — only practical because each
     chain's base plan is checkpoint-truncated; coefficients are computed
     in Python doubles, identical to the kernel's."""
-    v = vfactor
-    c1 = -(v ** 3)
-    c2 = 3.0 * v ** 2 + 3.0 * v ** 3
-    c3 = -6.0 * v ** 2 - 3.0 * v - 3.0 * v ** 3
-    c4 = 1.0 + 3.0 * v + v ** 3 + 3.0 * v ** 2
     ch = _chained_emas(df, x, p, 6, partition_by, order_by, segment_rows)
-    val = (
-        F.lit(c1) * F.col("_e6")
-        + F.lit(c2) * F.col("_e5")
-        + F.lit(c3) * F.col("_e4")
-        + F.lit(c4) * F.col("_e3")
-    )
     return df.join(
-        ch.select(partition_by, order_by, val.alias(out)),
+        ch.select(partition_by, order_by, _t3_value(vfactor).alias(out)),
         [partition_by, order_by],
         "left",
     )
@@ -921,17 +846,9 @@ def indicator_family_segmented(
     segment; wall is n_segments passes — but ONE set of them."""
     w = Window.partitionBy(partition_by).orderBy(order_by)
     d = F.col(close) - F.lag(close).over(w)
-    ph, pl, pc = F.lag(high).over(w), F.lag(low).over(w), F.lag(close).over(w)
-    up_move = F.col(high) - ph
-    dn_move = pl - F.col(low)
-    tr = F.when(
-        pc.isNotNull(),
-        F.greatest(
-            F.col(high) - F.col(low),
-            F.abs(F.col(high) - pc),
-            F.abs(F.col(low) - pc),
-        ),
-    )
+    up_move = F.col(high) - F.lag(high).over(w)
+    dn_move = F.lag(low).over(w) - F.col(low)
+    tr = _true_range(high, low, close, w)
     # Null-gating (the per-op versions FILTER these rows out; here the
     # scan compacts the NaNs instead): _up/_dn are null where d is null,
     # _pdm/_mdm null where tr is null — `.otherwise(0.0)` alone would
@@ -972,22 +889,10 @@ def indicator_family_segmented(
         .drop("_d")
     )
 
-    def _dx_chain(res: list) -> np.ndarray:
-        # identical float order to adx_family_segmented._dx_chain — res
-        # indices shifted to this sweep's chain layout (2=_spdm, 3=_smdm,
-        # 4=_str)
-        spdm, smdm, str_ = res[2], res[3], res[4]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            pdi = np.where(str_ > 0, 100.0 * spdm / str_, 0.0)
-            mdi = np.where(str_ > 0, 100.0 * smdm / str_, 0.0)
-            dsum = pdi + mdi
-            dx = np.where(dsum > 0, 100.0 * np.abs(pdi - mdi) / dsum, 0.0)
-        dx[np.isnan(str_)] = np.nan
-        return dx
-
     wilder_r, wilder_a = 1.0 / rsi_p, 1.0 / adx_p
     ema_a = 2.0 / (t3_p + 1)
-    srcs: list = ["_up", "_dn", "_pdm", "_mdm", "_tr", _dx_chain]
+    # chains 2..4 are _spdm, _smdm, _str
+    srcs: list = ["_up", "_dn", "_pdm", "_mdm", "_tr", lambda res: _dx(*res[2:5])]
     outs = ["_au", "_ad", "_spdm", "_smdm", "_str", "_adx"]
     ps = [rsi_p, rsi_p, adx_p, adx_p, adx_p, adx_p]
     alphas = [wilder_r, wilder_r, wilder_a, wilder_a, wilder_a, wilder_a]
@@ -1006,40 +911,14 @@ def indicator_family_segmented(
         base, srcs, outs, ps, alphas, partition_by, order_by, segment_rows
     )
 
-    # row-local output SQL — copied verbatim from the per-op versions so
-    # the float order (and NULL masks) are identical
-    rsi = F.when(F.col("_ad") == 0.0, F.lit(100.0)).otherwise(
-        F.lit(100.0) * F.col("_au") / (F.col("_au") + F.col("_ad"))
-    )
-    warm = F.col("_str").isNull()
-    pdi = F.when(warm, F.lit(None)).when(
-        F.col("_str") > 0, F.lit(100.0) * F.col("_spdm") / F.col("_str")
-    ).otherwise(F.lit(0.0))
-    mdi = F.when(warm, F.lit(None)).when(
-        F.col("_str") > 0, F.lit(100.0) * F.col("_smdm") / F.col("_str")
-    ).otherwise(F.lit(0.0))
-    scored = sm.withColumn("_pdi", pdi).withColumn("_mdi", mdi)
-    dsum = F.col("_pdi") + F.col("_mdi")
-    dx = F.when(warm, F.lit(None)).when(
-        dsum > 0, F.lit(100.0) * F.abs(F.col("_pdi") - F.col("_mdi")) / dsum
-    ).otherwise(F.lit(0.0))
-    v = t3_vfactor
-    c1 = -(v ** 3)
-    c2 = 3.0 * v ** 2 + 3.0 * v ** 3
-    c3 = -6.0 * v ** 2 - 3.0 * v - 3.0 * v ** 3
-    c4 = 1.0 + 3.0 * v + v ** 3 + 3.0 * v ** 2
-    t3 = (
-        F.lit(c1) * F.col("_e6")
-        + F.lit(c2) * F.col("_e5")
-        + F.lit(c3) * F.col("_e4")
-        + F.lit(c4) * F.col("_e3")
-    )
+    # row-local output SQL shared with the per-op versions, so the float
+    # order (and NULL masks) are identical
+    scored = _with_dmi(sm)
     atr_col = F.col("_str") if atr_p == adx_p else F.col("_atr")
-    scored = scored.withColumn("_dx", dx)
     adxr = (F.col("_adx") + F.lag("_adx", adx_p - 1).over(w)) / F.lit(2.0)
     return scored.select(
         *df.columns,
-        rsi.alias("rsi"),
+        _rsi_value().alias("rsi"),
         atr_col.alias("atr"),
         F.col("_spdm").alias("plus_dm"),
         F.col("_smdm").alias("minus_dm"),
@@ -1048,7 +927,7 @@ def indicator_family_segmented(
         F.col("_dx").alias("dx"),
         F.col("_adx").alias("adx"),
         adxr.alias("adxr"),
-        t3.alias("t3"),
+        _t3_value(t3_vfactor).alias("t3"),
     )
 
 
@@ -1089,26 +968,16 @@ def kama_segmented(
     if last_seg is None:
         return df.withColumn(out, F.lit(None).cast("double"))
 
-    schema = StructType(
-        [
-            df.schema[partition_by],
-            StructField("_rn", LongType()),
-            StructField(out, DoubleType()),
-        ]
-    )
     fast_sc, slow_sc = 2.0 / 3.0, 2.0 / 31.0
 
-    def scan(vals: np.ndarray, halo_n: int, seed):
-        """The per-group body, shared bit-identically by both arms:
-        (values incl. halo rows, halo count, carried k | None) →
-        (body results, carry-out, body start index)."""
-        if seed is None or halo_n < p:
+    def scan(tbl, seed, halo_n):
+        vals = f64(tbl, x)
+        if seed is None or np.isnan(seed[0]) or halo_n < p:
             # pass 0 (or the unreachable lost-seed case, see docstring):
             # the kernel's own scan over the dense segment
             res = _kama_dense(vals, p)
-            valid = np.where(~np.isnan(res))[0]
-            k_out = float(res[valid[-1]]) if valid.size else np.nan
-            return res, k_out, 0
+            return [res], [_last_valid(res)]
+        # continuation: body rows follow the p halo rows
         n = vals.shape[0]
         nb = n - halo_n
         adiff = np.abs(np.diff(vals))
@@ -1120,141 +989,18 @@ def kama_segmented(
             vol[lo:hi] = win[lo:hi].cumsum(axis=1)[:, -1]
         with np.errstate(invalid="ignore", divide="ignore"):
             er = np.where(vol > 0, np.abs(vals[p:] - vals[:-p]) / vol, 0.0)
-        k = seed
+        k = seed[0]
         res = np.empty(nb)
         for j in range(nb):
             sc = (er[j] * (fast_sc - slow_sc) + slow_sc) ** 2
             k = k + sc * (vals[p + j] - k)
             res[j] = k
-        k_out = float(k) if nb else seed
-        return res, k_out, halo_n
+        return [res], [k]
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_rn", kind="mergesort").reset_index(drop=True)
-        sym = pdf[partition_by].iloc[0]
-        halo_n = int(pdf["_halo"].sum()) if "_halo" in pdf.columns else 0
-        if halo_n and halo_n == len(pdf):
-            # Halo-only group (ADVICE r10, high): a symbol whose total row
-            # count lands in the halo window (lo-p, lo] of this segment
-            # boundary — uneven symbol lengths. Every row here was already
-            # emitted by the previous pass's body and no body rows remain;
-            # the dense fallback would re-emit the halo rows as NaN
-            # duplicates (halo_n < p) and the continuation path would crash
-            # sliding_window_view (halo_n == p, nb == 0). Emit nothing: no
-            # later segment slices this symbol, so no marker is needed.
-            return pd.DataFrame(
-                {
-                    partition_by: pdf[partition_by].iloc[:0],
-                    "_rn": pdf["_rn"].iloc[:0].astype("int64"),
-                    out: np.empty(0, dtype="float64"),
-                }
-            )
-        vals = pdf[x].to_numpy(dtype="float64", na_value=np.nan)
-        seed = None
-        if "_seed" in pdf.columns:
-            s0 = pdf["_seed"].iloc[0]
-            if s0 is not None and not pd.isna(s0):
-                seed = float(s0)
-        res, k_out, start = scan(vals, halo_n, seed)
-        body = pdf.iloc[start:]
-        bdf = pd.DataFrame(
-            {
-                partition_by: body[partition_by],
-                "_rn": body["_rn"].astype("int64"),
-                out: res,
-            }
-        )
-        mark = pd.DataFrame({partition_by: [sym], "_rn": [-1], out: [k_out]})
-        return pd.concat([bdf, mark], ignore_index=True)
-
-    def run_arrow(tbl):
-        # applyInArrow arm (round-14 default on Spark 4): identical scan;
-        # key/_rn buffers reused zero-copy, outputs emitted with
-        # from_pandas=True (NaN→null) to match the pandas serializer's
-        # treatment of the pandas arm's NaN rows. See ewma_segmented.
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        tbl = tbl.take(pc.sort_indices(tbl, sort_keys=[("_rn", "ascending")]))
-        n = tbl.num_rows
-        sym_col = tbl.column(partition_by)
-        sym = sym_col[0].as_py()
-        rn_col = pc.cast(tbl.column("_rn"), pa.int64())
-        halo_n = (
-            int(pc.sum(tbl.column("_halo")).as_py() or 0)
-            if "_halo" in tbl.column_names
-            else 0
-        )
-        if halo_n and halo_n == n:
-            # halo-only group: emit nothing (see the pandas arm's comment)
-            return pa.table(
-                {
-                    partition_by: sym_col.slice(0, 0),
-                    "_rn": rn_col.slice(0, 0),
-                    out: pa.array([], type=pa.float64()),
-                }
-            )
-        vals = (
-            pc.cast(tbl.column(x), pa.float64())
-            .combine_chunks()
-            .to_numpy(zero_copy_only=False)
-        )
-        seed = None
-        if "_seed" in tbl.column_names:
-            s0 = tbl.column("_seed")[0].as_py()
-            if s0 is not None and not (isinstance(s0, float) and np.isnan(s0)):
-                seed = float(s0)
-        res, k_out, start = scan(vals, halo_n, seed)
-        body_sym = sym_col.slice(start)
-        body_rn = rn_col.slice(start)
-        return pa.table(
-            {
-                partition_by: pa.chunked_array(
-                    list(body_sym.chunks) + [pa.array([sym], type=sym_col.type)]
-                ),
-                "_rn": pa.chunked_array(
-                    list(body_rn.chunks) + [pa.array([-1], type=pa.int64())]
-                ),
-                out: pa.chunked_array(
-                    [
-                        pa.array(res, type=pa.float64(), from_pandas=True),
-                        pa.array([k_out], type=pa.float64(), from_pandas=True),
-                    ]
-                ),
-            }
-        )
-
-    use_arrow = _use_arrow(df)
-    s_rows = segment_rows
-    pieces: list[DataFrame] = []
-    prev: DataFrame | None = None
-    for k in range(int(last_seg) + 1):
-        lo = k * s_rows
-        if k == 0:
-            seg = base.where(F.col("_seg") == 0).select(
-                partition_by, "_rn", x, F.lit(0).alias("_halo")
-            )
-        else:
-            seg = base.where(
-                (F.col("_rn") > lo - p) & (F.col("_rn") <= lo + s_rows)
-            ).select(
-                partition_by, "_rn", x,
-                F.when(F.col("_rn") <= lo, 1).otherwise(0).alias("_halo"),
-            )
-        if prev is not None:
-            seeds_df = prev.where(F.col("_rn") == -1).select(
-                partition_by, F.col(out).alias("_seed")
-            )
-            seg = seg.join(seeds_df.hint("merge"), partition_by, "left")
-        if use_arrow:
-            res = seg.groupBy(partition_by).applyInArrow(run_arrow, schema=schema)
-        else:
-            res = seg.groupBy(partition_by).applyInPandas(run, schema=schema)
-        res = _cache_piece(res, k)
-        pieces.append(res.where(F.col("_rn") >= 0))
-        prev = res
-
-    return _join_back(base, pieces, partition_by)
+    return _segmented_passes(
+        base, last_seg, segment_rows, partition_by, [x], [out], 1, scan,
+        carry=out, halo=p,
+    )[0]
 
 
 # ---------------------------------------------------------------------------
@@ -1263,28 +1009,21 @@ def kama_segmented(
 # ---------------------------------------------------------------------------
 
 
-class _SarParams:
+class _SarParams(NamedTuple):
     """Step-rule constants shared by the SAR/SAREXT scans. Plain SAR is
     SAREXT with symmetric schedules, offset 0 and unsigned output:
     ``ep * (1.0 + 0.0)`` is ``ep * 1.0`` which IEEE-754 guarantees equals
     ``ep`` bit-for-bit, so one scan serves both kernels verbatim."""
 
-    __slots__ = (
-        "startvalue", "offset", "init_long", "inc_long", "max_long",
-        "init_short", "inc_short", "max_short", "signed",
-    )
-
-    def __init__(self, startvalue, offset, init_long, inc_long, max_long,
-                 init_short, inc_short, max_short, signed):
-        self.startvalue = startvalue
-        self.offset = offset
-        self.init_long = init_long
-        self.inc_long = inc_long
-        self.max_long = max_long
-        self.init_short = init_short
-        self.inc_short = inc_short
-        self.max_short = max_short
-        self.signed = signed
+    startvalue: float
+    offset: float
+    init_long: float
+    inc_long: float
+    max_long: float
+    init_short: float
+    inc_short: float
+    max_short: float
+    signed: bool
 
 
 def _sar_scan(hh, ll, state, i0, p):
@@ -1374,190 +1113,21 @@ def _sar_family_segmented(
     if last_seg is None:
         return df.withColumn(out, F.lit(None).cast("double"))
 
-    schema = StructType(
-        [
-            df.schema[partition_by],
-            StructField("_rn", LongType()),
-            StructField(out, DoubleType()),
-        ]
-    )
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_rn", kind="mergesort").reset_index(drop=True)
-        sym = pdf[partition_by].iloc[0]
-        halo_n = int(pdf["_halo"].sum()) if "_halo" in pdf.columns else 0
-        if halo_n and halo_n == len(pdf):
-            # halo-only group: symbol ended at/inside this boundary's halo
-            # window — previous pass emitted everything (see kama_segmented)
-            return pd.DataFrame(
-                {
-                    partition_by: pdf[partition_by].iloc[:0],
-                    "_rn": pdf["_rn"].iloc[:0].astype("int64"),
-                    out: np.empty(0, dtype="float64"),
-                }
-            )
-        hh = pdf[high].to_numpy(dtype="float64", na_value=np.nan)
-        ll = pdf[low].to_numpy(dtype="float64", na_value=np.nan)
-        state = None
-        if "_ss" in pdf.columns:
-            sv = pdf["_ss"].iloc[0]
-            if sv is not None and not pd.isna(sv):
-                state = (
-                    bool(pdf["_sl"].iloc[0]),
-                    float(sv),
-                    float(pdf["_sep"].iloc[0]),
-                    float(pdf["_saf"].iloc[0]),
-                )
-        if state is None:
+    def scan(tbl, seed, halo_n):
+        hh, ll = f64(tbl, high), f64(tbl, low)
+        if seed is None or np.isnan(seed[1]):
             # pass 0 (or the unreachable lost-seed case): kernel seeding
-            res, st_out = _sar_scan(hh, ll, None, 1, p)
-            body = pdf
+            res, st = _sar_scan(hh, ll, None, 1, p)
         else:
-            res_full, st_out = _sar_scan(hh, ll, state, halo_n, p)
-            res = res_full[halo_n:]
-            body = pdf.iloc[halo_n:]
-        bdf = pd.DataFrame(
-            {
-                partition_by: body[partition_by],
-                "_rn": body["_rn"].astype("int64"),
-                out: res,
-            }
-        )
-        lg, s, ep, af = st_out if st_out is not None else (
-            np.nan, np.nan, np.nan, np.nan
-        )
-        mark = pd.DataFrame(
-            {
-                partition_by: [sym] * 4,
-                "_rn": [-1, -2, -3, -4],
-                out: [float(lg), s, ep, af],
-            }
-        )
-        return pd.concat([bdf, mark], ignore_index=True)
+            state = (bool(seed[0]), seed[1], seed[2], seed[3])
+            res, st = _sar_scan(hh, ll, state, halo_n, p)
+            res = res[halo_n:]
+        return [res], st if st is not None else [np.nan] * 4
 
-    def run_arrow(tbl):
-        # applyInArrow arm (round-14 default on Spark 4): the identical
-        # ``_sar_scan`` body; key/_rn buffers reused zero-copy, outputs
-        # emitted with from_pandas=True (NaN→null) to match the pandas
-        # serializer. See ewma_segmented.run_arrow.
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        tbl = tbl.take(pc.sort_indices(tbl, sort_keys=[("_rn", "ascending")]))
-        n = tbl.num_rows
-        sym_col = tbl.column(partition_by)
-        sym = sym_col[0].as_py()
-        rn_col = pc.cast(tbl.column("_rn"), pa.int64())
-        halo_n = (
-            int(pc.sum(tbl.column("_halo")).as_py() or 0)
-            if "_halo" in tbl.column_names
-            else 0
-        )
-        if halo_n and halo_n == n:
-            # halo-only group: emit nothing (see the pandas arm's comment)
-            return pa.table(
-                {
-                    partition_by: sym_col.slice(0, 0),
-                    "_rn": rn_col.slice(0, 0),
-                    out: pa.array([], type=pa.float64()),
-                }
-            )
-        hh = (
-            pc.cast(tbl.column(high), pa.float64())
-            .combine_chunks()
-            .to_numpy(zero_copy_only=False)
-        )
-        ll = (
-            pc.cast(tbl.column(low), pa.float64())
-            .combine_chunks()
-            .to_numpy(zero_copy_only=False)
-        )
-        state = None
-        if "_ss" in tbl.column_names:
-            sv = tbl.column("_ss")[0].as_py()
-            if sv is not None and not (isinstance(sv, float) and np.isnan(sv)):
-                state = (
-                    bool(tbl.column("_sl")[0].as_py()),
-                    float(sv),
-                    float(tbl.column("_sep")[0].as_py()),
-                    float(tbl.column("_saf")[0].as_py()),
-                )
-        if state is None:
-            res, st_out = _sar_scan(hh, ll, None, 1, p)
-            start = 0
-        else:
-            res_full, st_out = _sar_scan(hh, ll, state, halo_n, p)
-            res = res_full[halo_n:]
-            start = halo_n
-        lg, s, ep, af = st_out if st_out is not None else (
-            np.nan, np.nan, np.nan, np.nan
-        )
-        body_sym = sym_col.slice(start)
-        body_rn = rn_col.slice(start)
-        return pa.table(
-            {
-                partition_by: pa.chunked_array(
-                    list(body_sym.chunks) + [pa.array([sym] * 4, type=sym_col.type)]
-                ),
-                "_rn": pa.chunked_array(
-                    list(body_rn.chunks)
-                    + [pa.array([-1, -2, -3, -4], type=pa.int64())]
-                ),
-                out: pa.chunked_array(
-                    [
-                        pa.array(res, type=pa.float64(), from_pandas=True),
-                        pa.array(
-                            [float(lg), s, ep, af],
-                            type=pa.float64(),
-                            from_pandas=True,
-                        ),
-                    ]
-                ),
-            }
-        )
-
-    use_arrow = _use_arrow(df)
-    s_rows = segment_rows
-    pieces: list[DataFrame] = []
-    prev: DataFrame | None = None
-    for k in range(int(last_seg) + 1):
-        lo = k * s_rows
-        if k == 0:
-            seg = base.where(F.col("_seg") == 0).select(
-                partition_by, "_rn", high, low, F.lit(0).alias("_halo")
-            )
-        else:
-            seg = base.where(
-                (F.col("_rn") > lo - 2) & (F.col("_rn") <= lo + s_rows)
-            ).select(
-                partition_by, "_rn", high, low,
-                F.when(F.col("_rn") <= lo, 1).otherwise(0).alias("_halo"),
-            )
-        if prev is not None:
-            # pivot the 4 marker rows back to columns; the aggregate's
-            # symbol-key exchange is the one the groupBy needs anyway,
-            # and the join stays merge-pinned (AQE-less subtree — the
-            # explode-estimate hazard class, see ewma_segmented)
-            seeds_df = (
-                prev.where(F.col("_rn") < 0)
-                .groupBy(partition_by)
-                .agg(
-                    F.max(F.when(F.col("_rn") == -1, F.col(out))).alias("_sl"),
-                    F.max(F.when(F.col("_rn") == -2, F.col(out))).alias("_ss"),
-                    F.max(F.when(F.col("_rn") == -3, F.col(out))).alias("_sep"),
-                    F.max(F.when(F.col("_rn") == -4, F.col(out))).alias("_saf"),
-                )
-            )
-            seg = seg.join(seeds_df.hint("merge"), partition_by, "left")
-        if use_arrow:
-            res = seg.groupBy(partition_by).applyInArrow(run_arrow, schema=schema)
-        else:
-            res = seg.groupBy(partition_by).applyInPandas(run, schema=schema)
-        res = _cache_piece(res, k)
-        pieces.append(res.where(F.col("_rn") >= 0))
-        prev = res
-
-    return _join_back(base, pieces, partition_by)
+    return _segmented_passes(
+        base, last_seg, segment_rows, partition_by, [high, low], [out], 4, scan,
+        carry=out, halo=2,
+    )[0]
 
 
 def sar_segmented(
@@ -1642,10 +1212,6 @@ def ewma_q_segmented(
     to 2⁵³), so the continuation is engine- and segmentation-invariant by
     construction. Input must be integer-valued micro-units as doubles
     (floor(v·1e6 + 0.5)); output is integer-valued micro-units."""
-    import math
-
-    from polars_quant_spark.operators.recurrence import _ewma_q
-
     a = float(alpha)
     b = 1.0 - a
     base, last_seg, segment_rows = _segmented_base(df, partition_by, order_by, segment_rows)
@@ -1656,107 +1222,21 @@ def ewma_q_segmented(
     if last_seg is None:
         return df.withColumn(out, F.lit(None).cast("double"))
 
-    schema = StructType(
-        [
-            df.schema[partition_by],
-            StructField("_rn", LongType()),
-            StructField(out, DoubleType()),
-        ]
-    )
-
-    def scan(vals: np.ndarray, s):
-        """The per-group scan body, shared bit-identically by both arms:
-        (values, carried lattice state | None) → (result, carry-out)."""
-        if s is None:
+    def scan(tbl, seed, halo_n):
+        vals = f64(tbl, x)
+        if seed is None or np.isnan(seed[0]):
             res = _ewma_q(vals, a, seed_n)
-            valid = np.where(~np.isnan(res))[0]
-            s_out = float(res[valid[-1]]) if valid.size else np.nan
-        else:
-            n = vals.shape[0]
-            res = np.empty(n)
-            for i in range(n):
-                s = math.floor(b * s + a * float(vals[i]) + 0.5)
-                res[i] = s
-            s_out = float(s)
-        return res, s_out
+            return [res], [_last_valid(res)]
+        s = seed[0]
+        res = np.empty(vals.shape[0])
+        for i in range(vals.shape[0]):
+            s = math.floor(b * s + a * float(vals[i]) + 0.5)
+            res[i] = s
+        return [res], [s]
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_rn", kind="mergesort").reset_index(drop=True)
-        sym = pdf[partition_by].iloc[0]
-        vals = pdf[x].to_numpy(dtype="float64", na_value=np.nan)
-        s = None
-        if "_seed" in pdf.columns:
-            s0 = pdf["_seed"].iloc[0]
-            if s0 is not None and not pd.isna(s0):
-                s = float(s0)
-        res, s_out = scan(vals, s)
-        body = pd.DataFrame(
-            {
-                partition_by: pdf[partition_by],
-                "_rn": pdf["_rn"].astype("int64"),
-                out: res,
-            }
-        )
-        mark = pd.DataFrame({partition_by: [sym], "_rn": [-1], out: [s_out]})
-        return pd.concat([body, mark], ignore_index=True)
-
-    def run_arrow(tbl):
-        # applyInArrow arm (round-14 default on Spark 4): identical scan;
-        # key/_rn buffers reused zero-copy. See ewma_segmented.run_arrow.
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        tbl = tbl.take(pc.sort_indices(tbl, sort_keys=[("_rn", "ascending")]))
-        sym_col = tbl.column(partition_by)
-        sym = sym_col[0].as_py()
-        vals = (
-            pc.cast(tbl.column(x), pa.float64())
-            .combine_chunks()
-            .to_numpy(zero_copy_only=False)
-        )
-        s = None
-        if "_seed" in tbl.column_names:
-            s0 = tbl.column("_seed")[0].as_py()
-            if s0 is not None and not (isinstance(s0, float) and np.isnan(s0)):
-                s = float(s0)
-        res, s_out = scan(vals, s)
-        rn_col = pc.cast(tbl.column("_rn"), pa.int64())
-        return pa.table(
-            {
-                partition_by: pa.chunked_array(
-                    list(sym_col.chunks) + [pa.array([sym], type=sym_col.type)]
-                ),
-                "_rn": pa.chunked_array(
-                    list(rn_col.chunks) + [pa.array([-1], type=pa.int64())]
-                ),
-                out: pa.chunked_array(
-                    [
-                        pa.array(res, type=pa.float64(), from_pandas=True),
-                        pa.array([s_out], type=pa.float64(), from_pandas=True),
-                    ]
-                ),
-            }
-        )
-
-    use_arrow = _use_arrow(df)
-    pieces: list[DataFrame] = []
-    prev: DataFrame | None = None
-    for k in range(int(last_seg) + 1):
-        seg = base.where(F.col("_seg") == k).select(partition_by, "_rn", x)
-        if prev is not None:
-            seeds_df = prev.where(F.col("_rn") == -1).select(
-                partition_by, F.col(out).alias("_seed")
-            )
-            seg = seg.join(seeds_df.hint("merge"), partition_by, "left")
-        if use_arrow:
-            res = seg.groupBy(partition_by).applyInArrow(run_arrow, schema=schema)
-        else:
-            res = seg.groupBy(partition_by).applyInPandas(run, schema=schema)
-        res = _cache_piece(res, k)
-        pieces.append(res.where(F.col("_rn") >= 0))
-        prev = res
-
-    return _join_back(base, pieces, partition_by)
+    return _segmented_passes(
+        base, last_seg, segment_rows, partition_by, [x], [out], 1, scan, carry=out
+    )[0]
 
 
 def macd_q_segmented(
@@ -1853,160 +1333,20 @@ def backtest_segmented(
             out = out.withColumn(c, F.lit(None).cast("long"))
         return out
 
-    schema = StructType(
-        [
-            df.schema[partition_by],
-            StructField("_rn", LongType()),
-            StructField("position", DoubleType()),
-            StructField("cash", DoubleType()),
-            StructField("equity", DoubleType()),
-            StructField("drawdown", DoubleType()),
-        ]
+    def scan(tbl, seed, halo_n):
+        state = None
+        # cash (state[1]) is never NaN in a real state
+        if seed is not None and not np.isnan(seed[1]):
+            state = (*seed[:6], int(seed[6]), int(seed[7]), seed[8])
+        pos, cash, eq, dd, st = _fold_state(
+            f64(tbl, price), flags(tbl, buy), flags(tbl, sell), p, state
+        )
+        return [pos, cash, eq, dd], st
+
+    out, marks = _segmented_passes(
+        base, last_seg, segment_rows, partition_by, [price, buy, sell],
+        ["position", "cash", "equity", "drawdown"], 9, scan, carry="position",
     )
-    seed_cols = [f"_s{i}" for i in range(1, 10)]
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_rn", kind="mergesort").reset_index(drop=True)
-        sym = pdf[partition_by].iloc[0]
-        px = pdf[price].to_numpy(dtype="float64", na_value=np.nan)
-        b = pdf[buy].astype("boolean").fillna(False).to_numpy(dtype="bool")
-        s = pdf[sell].astype("boolean").fillna(False).to_numpy(dtype="bool")
-        state = None
-        if "_s2" in pdf.columns:
-            cash0 = pdf["_s2"].iloc[0]  # cash: never NaN in a real state
-            if cash0 is not None and not pd.isna(cash0):
-                vals = [pdf[c].iloc[0] for c in seed_cols]
-                state = (
-                    float(vals[0]), float(vals[1]), float(vals[2]),
-                    float(vals[3]), float(vals[4]), float(vals[5]),
-                    int(vals[6]), int(vals[7]), float(vals[8]),
-                )
-        pos, cash, eq, dd, st = _fold_state(px, b, s, p, state)
-        bdf = pd.DataFrame(
-            {
-                partition_by: pdf[partition_by],
-                "_rn": pdf["_rn"].astype("int64"),
-                "position": pos,
-                "cash": cash,
-                "equity": eq,
-                "drawdown": dd,
-            }
-        )
-        mark = pd.DataFrame(
-            {
-                partition_by: [sym] * 9,
-                "_rn": list(range(-1, -10, -1)),
-                "position": [float(v) for v in st],
-                "cash": [np.nan] * 9,
-                "equity": [np.nan] * 9,
-                "drawdown": [np.nan] * 9,
-            }
-        )
-        return pd.concat([bdf, mark], ignore_index=True)
-
-    def run_arrow(tbl):
-        # applyInArrow arm (round-14 default on Spark 4): the identical
-        # ``_fold_state`` kernel; key/_rn buffers reused zero-copy, bool
-        # signals null→False exactly like the pandas arm's
-        # .astype("boolean").fillna(False). See vectorized_backtest_arrow.
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        tbl = tbl.take(pc.sort_indices(tbl, sort_keys=[("_rn", "ascending")]))
-        sym_col = tbl.column(partition_by)
-        sym = sym_col[0].as_py()
-        px = (
-            pc.cast(tbl.column(price), pa.float64())
-            .combine_chunks()
-            .to_numpy(zero_copy_only=False)
-        )
-        b = (
-            pc.fill_null(tbl.column(buy), False)
-            .combine_chunks()
-            .to_numpy(zero_copy_only=False)
-            .astype("bool", copy=False)
-        )
-        s = (
-            pc.fill_null(tbl.column(sell), False)
-            .combine_chunks()
-            .to_numpy(zero_copy_only=False)
-            .astype("bool", copy=False)
-        )
-        state = None
-        if "_s2" in tbl.column_names:
-            cash0 = tbl.column("_s2")[0].as_py()  # cash: never NaN in a real state
-            if cash0 is not None and not (
-                isinstance(cash0, float) and np.isnan(cash0)
-            ):
-                vals = [tbl.column(c)[0].as_py() for c in seed_cols]
-                state = (
-                    float(vals[0]), float(vals[1]), float(vals[2]),
-                    float(vals[3]), float(vals[4]), float(vals[5]),
-                    int(vals[6]), int(vals[7]), float(vals[8]),
-                )
-        pos, cash, eq, dd, st = _fold_state(px, b, s, p, state)
-        rn_col = pc.cast(tbl.column("_rn"), pa.int64())
-        f64 = pa.float64()
-        return pa.table(
-            {
-                partition_by: pa.chunked_array(
-                    list(sym_col.chunks) + [pa.array([sym] * 9, type=sym_col.type)]
-                ),
-                "_rn": pa.chunked_array(
-                    list(rn_col.chunks)
-                    + [pa.array(list(range(-1, -10, -1)), type=pa.int64())]
-                ),
-                "position": pa.chunked_array(
-                    [
-                        pa.array(pos, type=f64, from_pandas=True),
-                        pa.array(
-                            [float(v) for v in st], type=f64, from_pandas=True
-                        ),
-                    ]
-                ),
-                "cash": pa.chunked_array(
-                    [pa.array(cash, type=f64, from_pandas=True), pa.nulls(9, f64)]
-                ),
-                "equity": pa.chunked_array(
-                    [pa.array(eq, type=f64, from_pandas=True), pa.nulls(9, f64)]
-                ),
-                "drawdown": pa.chunked_array(
-                    [pa.array(dd, type=f64, from_pandas=True), pa.nulls(9, f64)]
-                ),
-            }
-        )
-
-    use_arrow = _use_arrow(df)
-    pieces: list[DataFrame] = []
-    marks: list[DataFrame] = []
-    prev: DataFrame | None = None
-    for k in range(int(last_seg) + 1):
-        seg = base.where(F.col("_seg") == k).select(
-            partition_by, "_rn", price, buy, sell
-        )
-        if prev is not None:
-            seeds_df = (
-                prev.where(F.col("_rn") < 0)
-                .groupBy(partition_by)
-                .agg(
-                    *[
-                        F.max(
-                            F.when(F.col("_rn") == -i, F.col("position"))
-                        ).alias(f"_s{i}")
-                        for i in range(1, 10)
-                    ]
-                )
-            )
-            seg = seg.join(seeds_df.hint("merge"), partition_by, "left")
-        if use_arrow:
-            res = seg.groupBy(partition_by).applyInArrow(run_arrow, schema=schema)
-        else:
-            res = seg.groupBy(partition_by).applyInPandas(run, schema=schema)
-        res = _cache_piece(res, k)
-        pieces.append(res.where(F.col("_rn") >= 0))
-        marks.append(res.where(F.col("_rn") < 0))
-        prev = res
-
     allmarks = marks[0]
     for m in marks[1:]:
         allmarks = allmarks.unionByName(m)
@@ -2020,7 +1360,6 @@ def backtest_segmented(
         .cast("long")
         .alias("n_wins"),
     )
-    out = _join_back(base, pieces, partition_by)
     return out.join(totals.hint("merge"), partition_by, "left")
 
 

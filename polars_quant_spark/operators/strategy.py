@@ -4,7 +4,7 @@ buy/sell columns, composable with backtest.vectorized.
 
 Every generator takes (df, w) where w = Window.partitionBy(symbol).orderBy(t)
 and the frame already carries the indicator columns it names (build them with
-functions.* / operators.recurrence — keeps one applyInPandas pass for all
+functions.* / operators.recurrence — keeps one applyInArrow pass for all
 recurrences). Crossover helpers treat NULL warm-up rows as no-signal."""
 
 from __future__ import annotations

@@ -2227,7 +2227,7 @@ def ind_ewma_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EWMA volatility (RiskMetrics-style): the SMA-seeded EMA(20) of
     squared returns, square-rooted — running through the SAME recurrence
     runner as the price EMAs, just over a derived column (one extra window
-    upstream, still one applyInPandas pass)."""
+    upstream, still one applyInArrow pass)."""
     b = bars(spark, sf_dir)
     w = _w()
     r2 = F.pow(F.col("close") / F.lag("close").over(w) - F.lit(1.0), F.lit(2.0))
@@ -2408,7 +2408,7 @@ def bars_gap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Keltner channels: EMA(20) midline ± 2·ATR(10) — composes two recurrence
-# kernels in ONE applyInPandas pass; beyond the reference's TA-Lib set.
+# kernels in ONE applyInArrow pass; beyond the reference's TA-Lib set.
 ORACLES_KELTNER = (
     recursive_with(
         """
@@ -2441,7 +2441,7 @@ def ind_keltner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keltner channels (EMA(20) ± 2·ATR(10)) — a named indicator beyond
     the reference's TA-Lib set, routed through the library entry point
     ``functions.trend.keltner`` (two recurrence kernels in ONE
-    applyInPandas pass; adding kernels costs numpy time, not shuffles)."""
+    applyInArrow pass; adding kernels costs numpy time, not shuffles)."""
     from polars_quant_spark.functions.trend import keltner
 
     b = bars(spark, sf_dir)
@@ -2547,7 +2547,7 @@ FROM stb b JOIN strec r ON r.symbol = b.symbol AND r.rn = b.rn
 def ind_supertrend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SuperTrend(10, 3): ratcheting ATR bands with a flip state machine —
     a sequential two-state recurrence (beyond the reference's TA-Lib set)
-    running in the same batched applyInPandas pass as every other scan.
+    running in the same batched applyInArrow pass as every other scan.
     The recursive twin replays the identical ratchet/flip conditions."""
     b = bars(spark, sf_dir)
     out = with_recurrences(
@@ -2816,7 +2816,7 @@ def ind_choppiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Mass index: rolling-25 sum of EMA9(range)/EMA9(EMA9(range)) — CHAINED
 # recurrences: the second Rec consumes the first's output column inside the
-# same applyInPandas pass (specs evaluate in order on the growing frame).
+# same applyInArrow pass (specs evaluate in order on the growing frame).
 ORACLES_MASS = (
     recursive_with(
         """
@@ -2945,7 +2945,7 @@ def ind_tsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """True Strength Index (13, 25): double-smoothed momentum over
     double-smoothed absolute momentum — routed through the library entry
     point ``functions.momentum.tsi`` (FOUR chained recurrences in one
-    applyInPandas pass)."""
+    applyInArrow pass)."""
     from polars_quant_spark.functions.momentum import tsi
 
     b = bars(spark, sf_dir)
@@ -3932,7 +3932,7 @@ ORDER BY t
 def mkt_mcclellan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """McClellan oscillator (EMA19 − EMA39 of universe net advances) and
     summation index (its running total). The symbol axis collapses first
-    (groupBy t), then ONE applyInPandas recurrence pass runs both EMAs on
+    (groupBy t), then ONE applyInArrow recurrence pass runs both EMAs on
     the single market series — a tiny frame at any SF, since breadth is one
     row per timestamp regardless of universe size. The oscillator is
     micro-quantized before the cumulative sum so the running total is an
@@ -3981,7 +3981,7 @@ ORACLES["mkt_mcclellan"] = ORACLES_MCCLELLAN
 
 
 # GARCH(1,1) conditional volatility — fixed-parameter filtering recurrence
-# (ω=1e-5, α=0.05, β=0.9), one applyInPandas pass per symbol; the twin is
+# (ω=1e-5, α=0.05, β=0.9), one applyInArrow pass per symbol; the twin is
 # an ema_ctes-style recursive chain carrying (r, h) state.
 _GW, _GA, _GB = repr(1e-05), repr(0.05), repr(0.9)
 
@@ -4951,7 +4951,7 @@ def ind_renko(spark: SparkSession, sf_dir: str) -> DataFrame:
     close brick). The state machine is pure integer arithmetic, so the
     recursive-CTE twin matches with zero float analysis — the strongest
     form of the recurrence contract. Same one-pass-per-symbol
-    applyInPandas shape as the EMA family."""
+    applyInArrow shape as the EMA family."""
     b = bars(spark, sf_dir).where(F.col("close").isNotNull())
     out = with_recurrences(
         b.select("symbol", "t", "close"),

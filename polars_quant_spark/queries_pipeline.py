@@ -5599,7 +5599,7 @@ def events_holt_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     trend, and the one-step-ahead forecast for every day — the capacity-
     planning / anomaly-baseline primitive. The event log collapses to one
     row per day FIRST (a distributed aggregate), then the two-state
-    recurrence runs in one applyInPandas pass over that tiny series — the
+    recurrence runs in one applyInArrow pass over that tiny series — the
     same collapse-then-recur shape as the McClellan oscillator, so it costs
     the same at 100 TB as at sf0.001. The oracle's recursive CTE mirrors
     the kernel's operation tree literally (operators/recurrence.holt)."""
@@ -8889,7 +8889,7 @@ def events_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic SPC drift accumulator (5%-of-mean allowance, mean threshold)
     flagging sustained level shifts that z-score monitors miss. Integer
     state machine (operators/recurrence.cusum) over the day-collapsed
-    series — bit-identical recursive twin, one applyInPandas pass."""
+    series — bit-identical recursive twin, one applyInArrow pass."""
     from polars_quant_spark.sources.bars import ts_us_expr
 
     ev0 = load_table(spark, sf_dir, "events")

@@ -16,7 +16,10 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(app_name: str = "polars_quant_spark", shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # SPARK_GRAFT_CPUS pins the local thread count; without it, use the
+    # cores this process may run on (not a fixed 32 that oversubscribes
+    # small hosts)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if str(cpus).isdigit() else 32
     builder = (

@@ -129,16 +129,13 @@ def test_vectorized_backtest_spark(spark):
     assert row["A"]["n_bars"] == 100
 
 
-def test_vectorized_backtest_arrow_bit_equal(spark):
-    """The applyInArrow group path (VERDICT r12 #4: kills the per-group
-    pandas frame build) must be BIT-EQUAL to the applyInPandas arm — same
-    kernel, same sorted inputs, so any divergence is a conversion bug
-    (null handling, dtype, sort order). Covers NaN prices, null booleans,
-    a tiny group, and the stop/trailing param regime."""
-    from polars_quant_spark.backtest.vectorized import (
-        vectorized_backtest_arrow,
-        vectorized_backtest_pandas,
-    )
+def test_vectorized_backtest_matches_fold_per_group(spark):
+    """The grouped fold must be BIT-EQUAL to its spec, ``_fold`` run
+    locally on each symbol's rows sorted by t (price null → NaN, signal
+    null → False; NaN outputs stay NaN). Any divergence is a conversion
+    bug (null handling, dtype, sort order). Covers NaN prices, null
+    booleans, a tiny group, and the stop/trailing param regime."""
+    from tests.group_spec import assert_matches_group_spec
 
     rng = np.random.default_rng(11)
     frames = []
@@ -155,31 +152,29 @@ def test_vectorized_backtest_arrow_bit_equal(spark):
             }
         )
         # null booleans exercise the fill_null path on the Arrow side
+        fr["buy"] = fr["buy"].astype(object)
         fr.loc[fr.sample(frac=0.05, random_state=1).index, "buy"] = None
         frames.append(fr)
-    df = spark.createDataFrame(pd.concat(frames, ignore_index=True))
+    pdf = pd.concat(frames, ignore_index=True).sample(frac=1.0, random_state=4)
+    df = spark.createDataFrame(pdf)
     cols = ["position", "cash", "equity", "drawdown", "n_trades", "n_wins"]
     for p in [
         BacktestParams(),
         BacktestParams(stop_loss=0.04, trailing_stop=0.03, buy_slippage=0.01),
     ]:
-        want = {
-            (r["symbol"], r["t"]): tuple(r[c] for c in cols)
-            for r in vectorized_backtest_pandas(df, params=p)
-            .select("symbol", "t", *cols)
-            .collect()
-        }
-        got = {
-            (r["symbol"], r["t"]): tuple(r[c] for c in cols)
-            for r in vectorized_backtest_arrow(df, params=p)
-            .select("symbol", "t", *cols)
-            .collect()
-        }
-        assert got == want
-        # the public entry point must route to the arrow path here
-        from polars_quant_spark.backtest.vectorized import _ARROW_GROUP_PATH_AVAILABLE
 
-        assert _ARROW_GROUP_PATH_AVAILABLE(df)
+        def spec(g):
+            pos, cash, eq, dd, trades, wins = _fold(
+                g["close"].to_numpy(dtype="float64"),
+                g["buy"].astype("boolean").fillna(False).to_numpy(dtype="bool"),
+                g["sell"].astype("boolean").fillna(False).to_numpy(dtype="bool"),
+                p,
+            )
+            n = len(g)
+            return dict(zip(cols, (pos, cash, eq, dd, np.full(n, trades), np.full(n, wins))))
+
+        rows = vectorized_backtest(df, params=p).select("symbol", "t", *cols).collect()
+        assert_matches_group_spec(pdf, rows, cols, spec, nan_is_null=False)
 
 
 class TestSequential:

@@ -653,12 +653,15 @@ def test_macd_q_lattice_and_float_parity():
     assert np.max(np.abs(hist_q[mask] / 1e6 - hist_f[mask])) < 2e-4
 
 
-def test_with_recurrences_arrow_bit_equal(spark):
-    """The applyInArrow runner arm must be BIT-EQUAL to the applyInPandas
-    arm — same kernels on the same float64 arrays, so any divergence is a
-    conversion bug (null handling, dtype cast, sort order). Covers NaN
-    inputs, an int-typed kernel input (volume), a multi-output kernel, a
-    spec consuming an earlier spec's output, and a tiny group."""
+def test_with_recurrences_matches_kernels_per_group(spark):
+    """The grouped runner must be BIT-EQUAL to its spec, the ``KERNELS``
+    run locally on each symbol's rows sorted by t, with warm-up NaN as
+    NULL. Any divergence is a conversion bug (null handling, dtype cast,
+    sort order). Covers NaN inputs, an int-typed kernel input (volume), a
+    multi-output kernel, a spec consuming an earlier spec's output, and a
+    tiny group."""
+    from tests.group_spec import assert_matches_group_spec
+
     rng = np.random.default_rng(7)
     frames = []
     for sym, n in [("A", 3000), ("B", 1700), ("C", 7)]:
@@ -679,7 +682,8 @@ def test_with_recurrences_arrow_bit_equal(spark):
                 }
             )
         )
-    df = spark.createDataFrame(pd.concat(frames, ignore_index=True))
+    pdf = pd.concat(frames, ignore_index=True).sample(frac=1.0, random_state=3)
+    df = spark.createDataFrame(pdf)
     specs = [
         rec.Rec("ema_9", "ema", ["close"], {"p": 9}),
         rec.Rec("atr_5", "atr", ["high", "low", "close"], {"p": 5}),
@@ -689,18 +693,30 @@ def test_with_recurrences_arrow_bit_equal(spark):
         rec.Rec("ema_ema", "ema", ["ema_9"], {"p": 4}),
     ]
     out_cols = ["ema_9", "atr_5", "macd_dif", "macd_dea", "macd_hist", "adosc", "ema_ema"]
-    want = {
-        (r["symbol"], r["t"]): tuple(r[c] for c in out_cols)
-        for r in rec.with_recurrences_pandas(df, specs)
-        .select("symbol", "t", *out_cols)
-        .collect()
-    }
-    got = {
-        (r["symbol"], r["t"]): tuple(r[c] for c in out_cols)
-        for r in rec.with_recurrences_arrow(df, specs)
-        .select("symbol", "t", *out_cols)
-        .collect()
-    }
-    assert got == want
-    # the public entry point must route to the arrow arm on this runtime
-    assert rec._arrow_group_path_available(df)
+
+    def spec(g):
+        cols = {c: g[c].to_numpy(dtype="float64") for c in g.columns if c != "symbol"}
+        for s in specs:
+            fn, _ = rec.KERNELS[s.kernel]
+            res = fn(*[cols[c] for c in s.cols], **s.params)
+            res = res if isinstance(res, tuple) else (res,)
+            cols.update(zip(s.out_cols, res))
+        return cols
+
+    rows = rec.with_recurrences(df, specs).select("symbol", "t", *out_cols).collect()
+    assert_matches_group_spec(pdf, rows, out_cols, spec, nan_is_null=True)
+
+
+def test_macdext_rejects_unsupported_matype_on_every_leg():
+    """An unsupported MA type raises on the signal leg exactly as on the
+    fast and slow legs (it used to fall through to an EMA signal), and
+    the supported types keep their composition."""
+    x = 100.0 + np.cumsum(np.random.default_rng(2).normal(0, 1, 200))
+    for leg in ("fast_matype", "slow_matype", "signal_matype"):
+        with pytest.raises(ValueError, match="matype 2"):
+            rec.macdext(x, **{leg: 2})
+    dif, dea, hist = rec.macdext(x, signal_matype=1)
+    np.testing.assert_array_equal(dea, rec.ema(dif, 9))
+    dif, dea, hist = rec.macdext(x, signal_matype=0)
+    np.testing.assert_array_equal(dea, pd.Series(dif).rolling(9).mean().to_numpy())
+    np.testing.assert_array_equal(hist, dif - dea)

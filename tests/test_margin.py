@@ -320,15 +320,15 @@ class TestEventFoldBitEquality:
         )
 
 
-class TestMarginArrowArm:
-    def test_arrow_arm_bit_equal_to_pandas_arm(self, spark):
-        """Round-14 (VERDICT r13 #3): margin_backtest's applyInArrow arm
-        must produce EXACTLY what the applyInPandas spec arm produces —
-        every float column bit-equal, NULL positions identical (incl. the
-        NaN trade fields on non-exit bars and the exit_reason string/None
-        column) — on a shape with buys, sells, margin calls, interest
-        accrual and frozen (NaN) bars."""
+class TestMarginKernelSpec:
+    def test_spark_bit_equal_to_local_fold(self, spark):
+        """margin_backtest must produce EXACTLY what its spec, ``_fold``
+        run locally on each symbol's rows sorted by t, produces — every
+        float column bit-equal, NaN trade fields (non-exit bars) as NULL,
+        and the exit_reason string/None column — on a shape with buys,
+        sells, margin calls, interest accrual and frozen (NaN) bars."""
         from polars_quant_spark.backtest import margin as margin_mod
+        from tests.group_spec import assert_matches_group_spec
 
         rng = np.random.default_rng(41)
         rows = []
@@ -341,25 +341,25 @@ class TestMarginArrowArm:
                     (s, i, float(px[i]), i % 11 == 2, i % 29 == 17)
                 )
         pdf = pd.DataFrame(rows, columns=["symbol", "t", "close", "buy", "sell"])
+        pdf = pdf.sample(frac=1.0, random_state=5)
         df = spark.createDataFrame(pdf)
         p = MarginParams(
             leverage=3.0, interest_rate=0.08, margin_call_threshold=0.4
         )
         cols = [f.name for f in margin_mod._SCHEMA_EXTRA]
 
-        assert not margin_mod._FORCE_PANDAS_ARM
-        a = margin_backtest(df, params=p).collect()
-        margin_mod._FORCE_PANDAS_ARM = True
-        try:
-            b = margin_backtest(df, params=p).collect()
-        finally:
-            margin_mod._FORCE_PANDAS_ARM = False
-        ka = {(r["symbol"], r["t"]): tuple(r[c] for c in cols) for r in a}
-        kb = {(r["symbol"], r["t"]): tuple(r[c] for c in cols) for r in b}
-        assert set(ka) == set(kb) and len(ka) == 3 * 150
-        bad = [k for k in ka if ka[k] != kb[k]]
-        assert not bad, bad[:5]
+        def spec(g):
+            out = _fold(
+                g["t"].to_numpy(dtype="float64"),
+                g["close"].to_numpy(dtype="float64"),
+                g["buy"].to_numpy(dtype="bool"),
+                g["sell"].to_numpy(dtype="bool"),
+                p,
+            )
+            return dict(zip(cols, out))
+
+        got = margin_backtest(df, params=p).collect()
+        assert_matches_group_spec(pdf, got, cols, spec, nan_is_null=True)
         # the shape actually exercised trades (exit kinds are covered by
-        # the local-fold differential suite; this test pins ARM equality)
-        reasons = {r["exit_reason"] for r in a if r["exit_reason"]}
-        assert reasons
+        # the local-fold differential suite)
+        assert {r["exit_reason"] for r in got if r["exit_reason"]}

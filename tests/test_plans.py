@@ -884,26 +884,38 @@ def test_rp_lsh_topk_plan_hygiene(spark, sf_dir):
 def test_segmented_seed_joins_are_merge_pinned_at_source():
     """Every continuation-seed (and totals) join in operators/segmented.py
     compiles inside a checkpoint-truncated subtree where AQE cannot demote
-    a bad static broadcast, and the joined frame descends from
-    applyInPandas (estimate-poisoned) — so each MUST carry the merge hint
-    at the source (the r8 landmine contract). Plan-level assertion is not
+    a bad static broadcast, and the joined frame descends from a Python
+    UDF (estimate-poisoned) — so each MUST carry the merge hint at the
+    source (the r8 landmine contract). Plan-level assertion is not
     possible from outside: the per-pass joins hide behind InMemoryRelation
     display collapse, so this pins the invariant at the source level, the
-    same net as test_forced_broadcast_ratchet."""
+    same net as test_forced_broadcast_ratchet.
+
+    Every segmented operator runs through the one pass driver, so "every
+    operator pins its seed join" is: exactly one grouped-kernel call and
+    exactly one seed join in the module, and that join is merge-hinted.
+    None of the grouped-kernel modules keeps an applyInPandas arm."""
     import os
     import re
 
-    path = os.path.join(
-        os.path.dirname(__file__), "..", "polars_quant_spark", "operators",
-        "segmented.py",
-    )
-    src = open(path).read()
-    # every join against a seeds/totals frame must be hint-pinned
+    pkg = os.path.join(os.path.dirname(__file__), "..", "polars_quant_spark")
+
+    def source(*parts):
+        with open(os.path.join(pkg, *parts)) as fh:
+            return fh.read()
+
+    src = source("operators", "segmented.py")
+    assert src.count(".applyInArrow(") == 1
+    seed_joins = re.findall(r"\.join\(\s*seeds_df[^,]*", src)
+    assert seed_joins == ['.join(seeds_df.hint("merge")'], seed_joins
+    # the totals join must be hint-pinned too
     # ((?!\.hint) = a bare frame reference with no hint call)
-    for m in re.finditer(r"\.join\((seeds_df|totals)(?!\.hint)", src):
-        raise AssertionError(
-            f"unpinned {m.group(1)} join at offset {m.start()} — "
-            "seed/totals joins must be .hint('merge')"
-        )
-    assert src.count('seeds_df.hint("merge")') >= 4  # ewma/kama/sar/q/backtest
+    assert not re.search(r"\.join\(\s*totals(?!\.hint)", src)
     assert 'totals.hint("merge")' in src
+    for parts in (
+        ("operators", "segmented.py"),
+        ("operators", "recurrence.py"),
+        ("backtest", "vectorized.py"),
+        ("backtest", "margin.py"),
+    ):
+        assert ".applyInPandas(" not in source(*parts), parts

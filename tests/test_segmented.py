@@ -705,19 +705,21 @@ def test_ema_chain_fused_seed_spans_segment_boundary(spark, tall_df):
     assert sum(v is not None for v in s.values()) > 1800
 
 
-def test_segmented_arrow_arm_bit_equal_to_pandas_arm(spark, tall_df):
-    """The applyInArrow arms (round-13 default) must produce EXACTLY what
-    the applyInPandas spec arms produce — values and NULL positions — for
-    both the single-chain sweep (ewma_segmented) and the fused multi-chain
-    sweep with a derived chain (adx_family_segmented → _fused_ewma_sweep's
-    str/index/callable source forms)."""
-    from polars_quant_spark.operators import segmented as seg_mod
+def test_segmented_bit_equal_to_kernels_per_group(spark):
+    """The segmented sweeps must produce EXACTLY what their spec — the
+    ``KERNELS`` run locally on the whole sorted symbol — produces, values
+    and NULL positions, for both the single-chain sweep (ewma_segmented)
+    and the fused multi-chain sweep with a derived chain
+    (adx_family_segmented → _fused_ewma_sweep's str/index/callable
+    source forms)."""
+    from polars_quant_spark.operators.recurrence import KERNELS
     from polars_quant_spark.operators.segmented import adx_family_segmented
+    from tests.group_spec import assert_matches_group_spec
 
     rng = np.random.default_rng(11)
     n = 1200
     hi = 100.0 + np.cumsum(rng.normal(0, 1, n))
-    base = pd.DataFrame(
+    pdf = pd.DataFrame(
         {
             "symbol": "FAT",
             "t": np.arange(n),
@@ -726,60 +728,44 @@ def test_segmented_arrow_arm_bit_equal_to_pandas_arm(spark, tall_df):
             "close": hi - rng.uniform(0.0, 1.5, n),
         }
     )
-    df = spark.createDataFrame(base)
+    df = spark.createDataFrame(pdf)
 
-    def both(fn):
-        assert not seg_mod._FORCE_PANDAS_ARM
-        arrow_rows = fn().collect()
-        seg_mod._FORCE_PANDAS_ARM = True
-        try:
-            pandas_rows = fn().collect()
-        finally:
-            seg_mod._FORCE_PANDAS_ARM = False
-        return arrow_rows, pandas_rows
+    def kernel(name, *cols, **params):
+        return lambda g: KERNELS[name][0](*[g[c].to_numpy() for c in cols], **params)
 
-    # single-chain sweep
-    a, b = both(
-        lambda: ewma_segmented(
-            df.select("symbol", "t", "close"), "close", 14,
-            alpha=1.0 / 14, out="e", segment_rows=300,
-        ).select("symbol", "t", "e")
-    )
-    ka = {(r["symbol"], r["t"]): r["e"] for r in a}
-    kb = {(r["symbol"], r["t"]): r["e"] for r in b}
-    assert set(ka) == set(kb) and len(ka) == n
-    bad = [k for k in ka if ka[k] != kb[k] and not (ka[k] is None and kb[k] is None)]
-    assert not bad, bad[:5]
+    rows = ewma_segmented(
+        df.select("symbol", "t", "close"), "close", 14,
+        alpha=1.0 / 14, out="e", segment_rows=300,
+    ).select("symbol", "t", "e").collect()
+    rma = kernel("rma", "close", p=14)
+    assert_matches_group_spec(pdf, rows, ["e"], lambda g: {"e": rma(g)}, nan_is_null=True)
 
-    # fused sweep, all three source forms (str, callable) + 7 outputs
     cols = ["plus_dm", "minus_dm", "plus_di", "minus_di", "dx", "adx", "adxr"]
-    a, b = both(
-        lambda: adx_family_segmented(df, p=14, segment_rows=300).select(
-            "symbol", "t", *cols
-        )
+    hlc = ("high", "low", "close")
+    specs = {c: kernel(c, *(hlc[:2] if c.endswith("_dm") else hlc), p=14) for c in cols}
+    rows = adx_family_segmented(df, p=14, segment_rows=300).select(
+        "symbol", "t", *cols
+    ).collect()
+    assert_matches_group_spec(
+        pdf, rows, cols, lambda g: {c: f(g) for c, f in specs.items()}, nan_is_null=True
     )
-    ka = {(r["symbol"], r["t"]): tuple(r[c] for c in cols) for r in a}
-    kb = {(r["symbol"], r["t"]): tuple(r[c] for c in cols) for r in b}
-    assert set(ka) == set(kb) and len(ka) == n
-    bad = [k for k in ka if ka[k] != kb[k]]
-    assert not bad, bad[:5]
 
 
-def test_segmented_arrow_arm_bit_equal_remaining_sites(spark):
-    """Round-14: the four remaining segmented operators grew applyInArrow
-    arms (kama, sar-family, ewma_q, backtest segmented). Each Arrow arm
-    must produce EXACTLY what its applyInPandas spec arm produces — values
-    and NULL positions — including the halo-only-group early-exit (uneven
-    symbol lengths: MID ends just inside, EDGE exactly at, a later
-    boundary's halo window)."""
-    from polars_quant_spark.backtest.vectorized import BacktestParams
-    from polars_quant_spark.operators import segmented as seg_mod
+def test_segmented_halo_sites_bit_equal_to_kernels_per_group(spark):
+    """kama, sar-family, ewma_q and backtest segmented must produce
+    EXACTLY what their spec — the kernel (or ``_fold``) run locally on the
+    whole sorted symbol — produces, values and NULL positions, including
+    the halo-only-group early exit (uneven symbol lengths: MID ends just
+    inside, EDGE exactly at, a later boundary's halo window)."""
+    from polars_quant_spark.backtest.vectorized import BacktestParams, _fold
+    from polars_quant_spark.operators.recurrence import KERNELS, _ewma_q
     from polars_quant_spark.operators.segmented import (
         backtest_segmented,
         ewma_q_segmented,
         kama_segmented,
         sarext_segmented,
     )
+    from tests.group_spec import assert_matches_group_spec
 
     rng = np.random.default_rng(17)
     frames = []
@@ -799,36 +785,36 @@ def test_segmented_arrow_arm_bit_equal_remaining_sites(spark):
                 }
             )
         )
-    df = spark.createDataFrame(pd.concat(frames, ignore_index=True))
+    pdf = pd.concat(frames, ignore_index=True)
+    df = spark.createDataFrame(pdf)
 
-    def both(fn, cols):
-        assert not seg_mod._FORCE_PANDAS_ARM
-        a = fn().select("symbol", "t", *cols).collect()
-        seg_mod._FORCE_PANDAS_ARM = True
-        try:
-            b = fn().select("symbol", "t", *cols).collect()
-        finally:
-            seg_mod._FORCE_PANDAS_ARM = False
-        ka = {(r["symbol"], r["t"]): tuple(r[c] for c in cols) for r in a}
-        kb = {(r["symbol"], r["t"]): tuple(r[c] for c in cols) for r in b}
-        assert set(ka) == set(kb) and len(ka) == 450 + 99 + 100
-        bad = [k for k in ka if ka[k] != kb[k]]
-        assert not bad, bad[:5]
+    def check(frame, cols, spec):
+        rows = frame.select("symbol", "t", *cols).collect()
+        assert_matches_group_spec(pdf, rows, cols, spec, nan_is_null=True)
 
-    both(lambda: kama_segmented(df, "close", 10, out="v", segment_rows=100), ["v"])
-    both(lambda: sarext_segmented(df, out="v", segment_rows=100), ["v"])
-    both(
-        lambda: ewma_q_segmented(df, "cm", 2.0 / 13.0, 12, out="v", segment_rows=100),
-        ["v"],
+    check(
+        kama_segmented(df, "close", 10, out="v", segment_rows=100), ["v"],
+        lambda g: {"v": KERNELS["kama"][0](g["close"].to_numpy(), 10)},
     )
-    both(
-        lambda: backtest_segmented(
-            df,
-            params=BacktestParams(stop_loss=0.02, trailing_stop=0.03),
-            segment_rows=137,
-        ),
-        ["position", "cash", "equity", "drawdown", "n_trades", "n_wins"],
+    check(
+        sarext_segmented(df, out="v", segment_rows=100), ["v"],
+        lambda g: {"v": KERNELS["sarext"][0](g["high"].to_numpy(), g["low"].to_numpy())},
     )
+    check(
+        ewma_q_segmented(df, "cm", 2.0 / 13.0, 12, out="v", segment_rows=100), ["v"],
+        lambda g: {"v": _ewma_q(g["cm"].to_numpy(), 2.0 / 13.0, 12)},
+    )
+    p = BacktestParams(stop_loss=0.02, trailing_stop=0.03)
+    cols = ["position", "cash", "equity", "drawdown", "n_trades", "n_wins"]
+
+    def fold(g):
+        *arrays, trades, wins = _fold(
+            g["close"].to_numpy(), g["buy"].to_numpy(), g["sell"].to_numpy(), p
+        )
+        n = len(g)
+        return dict(zip(cols, [*arrays, np.full(n, trades), np.full(n, wins)]))
+
+    check(backtest_segmented(df, params=p, segment_rows=137), cols, fold)
 
 
 def test_fused_sweep_nan_accumulator_after_seed_propagates(spark):
