@@ -83,10 +83,12 @@ LEGACY_DUCK_REF_S = 0.016
 
 
 def host_fingerprint() -> str:
-    """cpu model + logical core count, e.g.
+    """cpu model + the core count Spark runs on, e.g.
     ``intel(r)-xeon(r)-processor-@-2.10ghz/32t`` — stable across runs on
     the same container class, distinct across the host generations the
-    r10-r12 pin history mixed."""
+    r10-r12 pin history mixed. The count is ``$SPARK_GRAFT_CPUS`` (the
+    ``local[N]`` get_spark starts), else the cores this process may run
+    on — not ``os.cpu_count()``, which counts the machine's cores."""
     model = "unknown-cpu"
     try:
         with open("/proc/cpuinfo") as fh:
@@ -96,7 +98,8 @@ def host_fingerprint() -> str:
                     break
     except OSError:
         pass
-    return f"{'-'.join(model.lower().split())}/{os.cpu_count()}t"
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    return f"{'-'.join(model.lower().split())}/{cpus}t"
 
 _TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -363,11 +366,17 @@ def main() -> None:
     # declared in the JSON ("timing").
     timings: dict[str, float] = {}
     split: dict[str, dict[str, float]] = {}
+    # classes Spark compiled per rep, read outside the timed region: a
+    # query whose later reps are not 0 misses the codegen cache every run
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    compiles: dict[str, list[int]] = {}
     for name, fn in BENCH.items():
         best = float("inf")
         best_construct = float("inf")
         df = None
+        compiles[name] = []
         for _ in range(3):
+            n_compiled = codegen.getCount()
             t0 = time.time()
             # released(): drop the pins persist-on-return operators
             # (dedup_minhash) leave behind each rep, so rep N doesn't run
@@ -378,6 +387,7 @@ def main() -> None:
                 _force(df)
             best = min(best, time.time() - t0)
             best_construct = min(best_construct, t_built - t0)
+            compiles[name].append(int(codegen.getCount() - n_compiled))
         timings[name] = round(best, 3)
         # Construction/exec split (VERDICT r13 #1/#2): construct_s is the
         # driver-side Column/plan build inside the timed reps above;
@@ -506,6 +516,8 @@ def main() -> None:
                 # the 3 timed reps) vs execution (same-DataFrame re-exec,
                 # best of 2) — VERDICT r13 #1/#2
                 "split": split,
+                # codegen classes compiled in each timed rep, per query
+                "compiles": compiles,
                 "bench_scale": bench_scale,
             }
         )

@@ -507,7 +507,10 @@ def connected_components(
             "u", F.least(F.coalesce("nl", "label"), F.col("label")).alias("newl"), "label"
         )
         new = new.localCheckpoint()
-        done = new.where(F.col("newl") < F.col("label")).limit(1).count() == 0
+        # no LIMIT in the probe: Spark names each LIMIT's counter from a
+        # JVM-global sequence, so its generated class is new every round of
+        # every call and never hits the codegen cache
+        done = not new.agg(F.bool_or(F.col("newl") < F.col("label"))).first()[0]
         last_cc_stats["rounds"] = i + 1
         t_jump = _time.time()
         if not done and i >= 2:

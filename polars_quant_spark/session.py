@@ -4,6 +4,16 @@ Local test sessions run on ``local[N]``; the configuration below is chosen so
 the same code scales to a real cluster: AQE on (runtime skew-join + partition
 coalescing), Arrow on (all pandas-UDF exchange is columnar), and a shuffle
 partition count that AQE can shrink.
+
+The codegen class cache holds 1024 entries, not Spark's 100, so a warm job
+reuses the classes earlier jobs compiled. The default cache is a Guava LRU
+in 4 segments that evict independently (~25 classes each), and one job's
+working set is larger: the benchmark's first ``backtest_history`` job
+compiles 139 classes and ``screen_corpus`` 197. At the default, each warm
+job recompiled 55-62 and 174-193 of them, and the JIT then compiled each
+new class again. At 1024, warm jobs compile 0-5 and 0-2 classes; the
+residue is AQE plan variants that shift codegen stage ids, so the
+generated source differs (BASELINE.md has the per-job counts).
 """
 
 from __future__ import annotations
@@ -40,6 +50,10 @@ def get_spark(app_name: str = "polars_quant_spark", shuffle_partitions: int | No
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # one job's generated classes outgrow the default 100-entry cache,
+        # so warm jobs recompiled most of them (measured counts in the
+        # module docstring). Static conf: set when the session is built.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     # Pre-size the heap (-Xms) for big-heap smoke runs: a fresh large-Xmx
     # JVM growing its heap under 32 threads of agg allocation pays a

@@ -919,3 +919,52 @@ def test_segmented_seed_joins_are_merge_pinned_at_source():
         ("backtest", "margin.py"),
     ):
         assert ".applyInPandas(" not in source(*parts), parts
+
+
+def test_warm_rebuild_compiles_no_class(spark):
+    """A warm job compiles nothing: building and running the same plans a
+    second time must find every generated class in Spark's codegen cache.
+    Two things broke this: the default 100-entry cache (a 4-segment LRU
+    that evicts at ~25 classes per segment, fewer than one job's working
+    set; session.get_spark sizes it to 1024), and a per-call LIMIT in
+    connected_components' convergence probe, whose counter name is unique
+    per plan so its class never hits the cache. The three frames together
+    generate more classes than one default-cache segment holds."""
+    import numpy as np
+    import pandas as pd
+
+    from polars_quant_spark.backtest.vectorized import vectorized_backtest
+    from polars_quant_spark.operators import dedup
+    from polars_quant_spark.operators.recurrence import Rec, with_recurrences
+    from polars_quant_spark.operators.segmented import indicator_family_segmented
+
+    rng = np.random.default_rng(3)
+    n = 120
+    close = 100.0 + np.cumsum(rng.normal(0, 1, 2 * n))
+    bars_pdf = pd.DataFrame(
+        {
+            "symbol": ["A"] * n + ["B"] * n,
+            "t": np.tile(np.arange(n), 2),
+            "close": close,
+            "high": close * 1.01,
+            "low": close * 0.99,
+        }
+    )
+    edges_pdf = pd.DataFrame({"id_a": [1, 2, 3, 7, 10], "id_b": [2, 3, 4, 8, 11]})
+
+    def run_all() -> None:
+        b = spark.createDataFrame(bars_pdf)
+        sig = with_recurrences(b, [Rec("e", "ema", ["close"], {"p": 10})])
+        sig = sig.withColumn("buy", F.col("close") > F.col("e")).withColumn(
+            "sell", F.col("close") < F.col("e")
+        )
+        vectorized_backtest(sig).collect()
+        # n rows per symbol at n // 2 rows per segment: 2 segments
+        indicator_family_segmented(b, segment_rows=n // 2).collect()
+        dedup.connected_components(spark.createDataFrame(edges_pdf)).collect()
+
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    run_all()
+    before = compiled.getCount()
+    run_all()
+    assert compiled.getCount() - before == 0

@@ -69,10 +69,13 @@ def test_segmented_many_segments_crosses_checkpoint_boundary(spark, tall_df):
     (_CHECKPOINT_EVERY_SEGMENTS = 4, round-10 advisor item) fires twice
     mid-chain and must not perturb the carried fold — output stays
     bit-equal to the single-group scan. The plan assertion pins that the
-    cut actually happened: checkpoint scans (ExistingRDD) appear in the
-    physical plan and the nested applyInPandas count stays bounded
-    (measured: 61 nodes truncated vs 161 untruncated at 10 segments — a
-    silent revert to persist() would trip the <=100 bound)."""
+    cut actually happened: each checkpoint is one ExistingRDD scan with
+    output attributes of its own, and a 10-segment run shows the base
+    checkpoint plus one piece checkpoint per boundary (after segments 4
+    and 8). A silent revert to persist() leaves the base alone."""
+    import re
+
+    from polars_quant_spark.operators.segmented import _CHECKPOINT_EVERY_SEGMENTS
     from polars_quant_spark.plans.inspect import plan_str
 
     p = 20
@@ -83,8 +86,10 @@ def test_segmented_many_segments_crosses_checkpoint_boundary(spark, tall_df):
     )
     seg_df = ewma_segmented(tall_df, "close", p, out="e", segment_rows=250)
     plan = plan_str(seg_df)
-    assert "ExistingRDD" in plan, "lineage cut missing: no checkpoint scan"
-    assert plan.count("FlatMapGroupsInPandas") <= 100
+    checkpoints = set(
+        re.findall(r"^\(\d+\) Scan ExistingRDD.*\nOutput \[\d+\]: (\[.*\])", plan, re.M)
+    )
+    assert len(checkpoints) == 1 + 10 // _CHECKPOINT_EVERY_SEGMENTS, checkpoints
     segd = seg_df.select("symbol", "t", "e").collect()
     w = {(r["symbol"], r["t"]): r["e"] for r in whole}
     s = {(r["symbol"], r["t"]): r["e"] for r in segd}
