@@ -37,9 +37,20 @@ def pagerank(
     oracle a finite CTE chain; for rank-until-convergence wrap in a driver
     loop with ``localCheckpoint`` every few rounds (see
     ``dedup.connected_components``)."""
-    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+    s, d = F.col(src), F.col(dst)
     if undirected:
-        e = e.unionByName(e.select(F.col("_d").alias("_s"), F.col("_s").alias("_d")))
+        # both directions from ONE explode: a two-branch union would read
+        # the (usually lazy) upstream pair plan twice in the checkpoint job
+        e = edges.select(
+            F.explode(
+                F.array(
+                    F.struct(s.alias("_s"), d.alias("_d")),
+                    F.struct(d.alias("_s"), s.alias("_d")),
+                )
+            ).alias("_e")
+        ).select("_e._s", "_e._d")
+    else:
+        e = edges.select(s.alias("_s"), d.alias("_d"))
     # materialize the edge list before iterating: every round joins against
     # it, and without the checkpoint each round re-executes the whole
     # upstream pipeline (e.g. the MinHash LSH subtree) once per reference —
