@@ -2,7 +2,8 @@
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
 Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ...}, plus the load the sweep ran under, as
+measured (BASELINE.md, "How to read the load fields").
 
 Each query is forced through a noop sink so the optimizer can't prune the
 measured work (count() would drop every computed column).
@@ -12,6 +13,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -32,61 +34,15 @@ from polars_quant_spark.operators.recurrence import Rec, with_recurrences
 from polars_quant_spark.queries import QUERIES
 from polars_quant_spark.session import get_spark, released
 from polars_quant_spark.sources.bars import bars, load_table
+from perfbench.run import cpu_steal_ticks, loadavg
+from perfbench.trace import Tracer
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# --------------------------------------------------------------------------
-# Per-host sentinel pins (VERDICT r12 #3). Rounds 10-12 hardcoded a single
-# (NOOP_REF_S, DUCK_REF_S) pair whose two halves were pinned on DIFFERENT
-# host generations (the r10 box had ~2x this container class's 32-thread
-# throughput; its single-thread probe was ~1.4x slower), so
-# value_normalized silently mixed "slow box" into "ambient load". The pins
-# are now a committed table keyed by a host fingerprint (cpu model +
-# logical core count from /proc/cpuinfo); the bench JSON carries the
-# fingerprint and which pins were used, and an UNPINNED host gets a loud
-# WARN + the legacy constants (which are exactly the r10-generation box's
-# quiet numbers) instead of a silent cross-machine normalization.
-#
-# value_normalized = value / (noop_s / noop_ref): backs the ambient CPU
-# factor out of the total (r10 adjudication: driver noop_s 0.208 vs
-# builder 0.135 explained the entire 13.2s-vs-8.7s drift). The two probes
-# see DIFFERENT ambient — noop is a 32-thread job (contention hits it
-# hard), the DuckDB probe is one thread (contention barely moves it) — so
-# when their implied factors split >1.3x the run carries
-# "sentinel_disagreement" + a WARN; adjudicate per BASELINE.md (parallel
-# workloads follow the noop factor; the two normalized totals bracket the
-# truth). Re-pin only from a quiet box (load avg < ~2), best-of-8.
-# --------------------------------------------------------------------------
-
-#: fingerprint -> {"noop": quiet-box best-of-8 range-sum seconds,
-#:                 "duck": quiet-box best-of-8 sf0.1-lineitem-agg seconds}
-HOST_PINS: dict[str, dict[str, float]] = {
-    # r12/r13 container class (pinned round 13, quiet box). The noop probe
-    # is JIT-warmup-sensitive: a fresh session declines 0.70 -> 0.25 over
-    # 8 reps and reaches ~0.18 steady-state by rep ~20; bench.py runs the
-    # probe AFTER the full query sweep (deep JIT), so the pin is the
-    # steady-state number (best-of-30: 0.184; observed in-bench: 0.174).
-    # r12's shallow-warmup idle observation on this class read 0.275.
-    # The duck pin was RE-PINNED round 14 (VERDICT r13 #2: the r13 value
-    # 0.016 was inherited from the legacy r10-generation constant, never
-    # measured on this class, and every r13 run read "disagreement ~1.5"
-    # against it): quiet-box (load 0.35) best-of-16 = 0.0244, typical
-    # quiet range 0.024-0.030 with occasional ~0.13 page-cache outliers —
-    # expect in-bench probes of 0.024-0.032 and disagreement < 1.3.
-    "intel(r)-xeon(r)-processor-@-2.10ghz/32t": {"noop": 0.18, "duck": 0.024},
-}
-
-#: unknown-host fallback = the legacy r10-generation constants (that box's
-#: own quiet numbers, kept so old-class driver boxes normalize as before)
-LEGACY_NOOP_REF_S = 0.135
-LEGACY_DUCK_REF_S = 0.016
-
-
 def host_fingerprint() -> str:
     """cpu model + the core count Spark runs on, e.g.
-    ``intel(r)-xeon(r)-processor-@-2.10ghz/32t`` — stable across runs on
-    the same container class, distinct across the host generations the
-    r10-r12 pin history mixed. The count is ``$SPARK_GRAFT_CPUS`` (the
+    ``intel(r)-xeon(r)-processor/4t``, so runs on different host classes
+    are not compared by mistake. The count is ``$SPARK_GRAFT_CPUS`` (the
     ``local[N]`` get_spark starts), else the cores this process may run
     on — not ``os.cpu_count()``, which counts the machine's cores."""
     model = "unknown-cpu"
@@ -100,6 +56,16 @@ def host_fingerprint() -> str:
         pass
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     return f"{'-'.join(model.lower().split())}/{cpus}t"
+
+
+def scale_factor(sf_dir: str) -> float | None:
+    """N of the last ``sf<N>`` component of ``sf_dir``, else None."""
+    for part in reversed(sf_dir.rstrip("/").split("/")):
+        m = re.fullmatch(r"sf(\d+(?:\.\d*)?)", part)
+        if m:
+            return float(m.group(1))
+    return None
+
 
 _TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -315,6 +281,8 @@ BENCH = {
 
 
 def main() -> None:
+    load_start = loadavg()
+    steal_start = cpu_steal_ticks()
     spark = get_spark("pqs-bench")
     spark.sparkContext.setLogLevel("ERROR")
     # Opt-in scale tier (VERDICT r13 #2): SPARK_GRAFT_BENCH_SCALE=N runs
@@ -364,7 +332,7 @@ def main() -> None:
         with_recurrences(b, [Rec("e", "ema", ["close"], {"p": 5})]).select("symbol", "e")
     )
 
-    # Two reps per query, best-of: rep0 pays one-time plan compilation
+    # Three reps per query, best-of: rep0 pays one-time plan compilation
     # (Catalyst analysis of ~180-column trees, janino codegen, JIT) that a
     # long-running engine pays once per app, not per batch; rep1 is the
     # steady-state number a 100 TB deployment actually sees. Methodology is
@@ -375,11 +343,18 @@ def main() -> None:
     # query whose later reps are not 0 misses the codegen cache every run
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     compiles: dict[str, list[int]] = {}
+    # per-query load, from the stage store of the query's job group: read
+    # right after its timed reps, since the store keeps only ~1,000 stages
+    sc = spark.sparkContext
+    stages = Tracer(spark, enabled=False)
+    load: dict[str, dict[str, float | None]] = {}
     for name, fn in BENCH.items():
-        best = float("inf")
+        reps: list[float] = []
         best_construct = float("inf")
         df = None
         compiles[name] = []
+        group = f"bench/{name}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
         for _ in range(3):
             n_compiled = codegen.getCount()
             t0 = time.time()
@@ -390,10 +365,18 @@ def main() -> None:
                 df = fn(spark, sf_dir)
                 t_built = time.time()
                 _force(df)
-            best = min(best, time.time() - t0)
+            reps.append(time.time() - t0)
             best_construct = min(best_construct, t_built - t0)
             compiles[name].append(int(codegen.getCount() - n_compiled))
-        timings[name] = round(best, 3)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        timings[name] = round(min(reps), 3)
+        stages.drain()
+        tot = stages.stage_totals(stages.job_ids(group))
+        load[name] = {
+            "spread_s": round(max(reps) - min(reps), 3),
+            "cpu_ratio": round(tot["cpu_ns"] / 1e6 / tot["run_ms"], 3) if tot["run_ms"] else None,
+            "gc_s": round(tot["gc_ms"] / 1e3, 3),
+        }
         # Construction/exec split (VERDICT r13 #1/#2): construct_s is the
         # driver-side Column/plan build inside the timed reps above;
         # exec_s re-forces the SAME DataFrame object (plan already
@@ -413,104 +396,37 @@ def main() -> None:
             "exec_s": round(exec_s, 3),
         }
 
-    # Ambient-load sentinels (VERDICT r9 #3): rounds 7 and 9 both showed
-    # uniform +5-25% drift across UNTOUCHED queries that every judge had to
-    # re-adjudicate as box load by hand. Two fixed-cost probes, measured
-    # under the same best-of-3 protocol AFTER the query sweep, make drift
-    # machine-checkable: compare sentinel movement round-over-round before
-    # reading any per-query delta as a regression.
-    #   noop_s      — data-independent Spark job (range-sum): scheduler +
-    #                 codegen + 32-thread CPU throughput, no I/O, no repo code.
-    #   duckdb_ref_s — fixed DuckDB aggregate over the same lineitem parquet:
-    #                 the other engine's view of the same box.
+    # noop probe: a data-independent Spark job (range-sum), run after the
+    # sweep, reported raw — scheduler, codegen and CPU throughput with no
+    # I/O and no repo code
     noop = float("inf")
     for _ in range(3):
         t0 = time.time()
         spark.range(2_000_000_000).selectExpr("sum(id) s").collect()
         noop = min(noop, time.time() - t0)
-    try:
-        import duckdb
+    load_end = loadavg()
+    steal_end = cpu_steal_ticks()
 
-        # FIXED-COST probe: always the sf0.1 lineitem when present (the
-        # DUCK_REF_S pin's file), regardless of $SPARK_GRAFT_SF_DIR — a
-        # probe that scaled with the benchmarked SF would make the pin,
-        # and the disagreement signal, meaningless at other SFs.
-        ref_file = "/root/testdata/sf0.1/lineitem.parquet"
-        if not os.path.exists(ref_file):
-            ref_file = os.path.join(SF_DIR, "lineitem.parquet")
-        ref_sql = (
-            "SELECT l_returnflag, count(*) n, sum(l_quantity) q "
-            f"FROM '{ref_file}' "
-            "GROUP BY 1 ORDER BY 1"
-        )
-        duck = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            duckdb.sql(ref_sql).fetchall()
-            duck = min(duck, time.time() - t0)
-    except Exception as exc:  # noqa: BLE001 — sentinel must not kill the run,
-        # but its absence must be LOUD (stderr; stdout stays one JSON line):
-        # a silently-null sentinel re-opens the hand-adjudicated-drift hole
-        # it exists to close.
-        print(f"WARNING: duckdb_ref_s sentinel failed: {exc!r}", file=sys.stderr)
-        duck = None
-
-    sf = SF_DIR.rstrip("/").split("sf")[-1]
-    total = sum(timings.values())
-    fp = host_fingerprint()
-    pins = HOST_PINS.get(fp)
-    host_pinned = pins is not None
-    if not host_pinned:
-        print(
-            f"WARNING: no sentinel pins for host {fp!r} — normalizing "
-            "against the legacy r10-generation constants; treat "
-            "value_normalized as host-class-confounded until this "
-            "fingerprint is pinned in bench.HOST_PINS (quiet box, "
-            "best-of-8; protocol in BASELINE.md)",
-            file=sys.stderr,
-        )
-        pins = {"noop": LEGACY_NOOP_REF_S, "duck": LEGACY_DUCK_REF_S}
-    noop_ref, duck_ref = pins["noop"], pins["duck"]
-    amb_noop = noop / noop_ref
-    amb_duck = duck / duck_ref if duck is not None else None
-    # Sentinel-disagreement signal (VERDICT r11 #3): the two probes measure
-    # different ambient (32-thread contention vs single-thread). When their
-    # implied factors split by >1.3x, flag it machine-readably AND loudly.
-    disagreement = (
-        round(max(amb_noop, amb_duck) / min(amb_noop, amb_duck), 3)
-        if amb_duck is not None
-        else None
-    )
-    if disagreement is not None and disagreement > 1.3:
-        print(
-            f"WARNING: ambient sentinels disagree {disagreement}x "
-            f"(noop {amb_noop:.2f}x vs duckdb {amb_duck:.2f}x vs clean-box pins) — "
-            "contention is workload-shape-specific; adjudicate per BASELINE.md "
-            "(parallel workloads follow the noop factor; the two normalized "
-            "totals bracket the truth)",
-            file=sys.stderr,
-        )
     print(
         json.dumps(
             {
                 "metric": "pqs_bench_total",
-                "value": round(total, 3),
+                "value": round(sum(timings.values()), 3),
                 "unit": "sec",
                 "queries": timings,
-                "sf": float(sf),
-                "host": fp,
-                "host_pinned": host_pinned,
+                "sf": scale_factor(SF_DIR),
+                "host": host_fingerprint(),
                 "noop_s": round(noop, 3),
-                "noop_ref_s": noop_ref,
-                # ambient-corrected totals: raw total divided by the ambient
-                # factor each sentinel measures on THIS run
-                "value_normalized": round(total / amb_noop, 3),
-                "duckdb_ref_s": round(duck, 3) if duck is not None else None,
-                "duck_ref_s_pin": duck_ref,
-                "value_normalized_duckdb": (
-                    round(total / amb_duck, 3) if amb_duck is not None else None
+                # /proc/loadavg (1, 5, 15 min) before the session starts
+                # and after the noop probe; the CPU-steal share between them
+                "loadavg_start": load_start,
+                "loadavg_end": load_end,
+                "cpu_steal_share": round(
+                    (steal_end[0] - steal_start[0]) / max(1, steal_end[1] - steal_start[1]), 4
                 ),
-                "sentinel_disagreement": disagreement,
+                # per query: max-min of the 3 timed reps, executor CPU over
+                # executor run time, and JVM GC, over those reps' stages
+                "load": load,
                 "timing": "best of 3 reps per query (steady-state)",
                 "layout": (
                     f"{bench_scale}x replica of the driver tables (opt-in scale tier)"

@@ -101,9 +101,8 @@ def _segmented_base(
     COMPOSED plan text across 4 chains OOM'd the driver in Catalyst's
     PlanStringConcat — truncating to a leaf bounds plan size per chain.
     DISK_ONLY blocks for the same write-once/read-few reason as the piece
-    cache (storageLevel kwarg is Spark 4.x; fall back if absent). AQE-less
-    compilation is safe here: base is one window over the input, and every
-    downstream join in this module is merge-pinned."""
+    cache. AQE-less compilation is safe here: base is one window over the
+    input, and every downstream join in this module is merge-pinned."""
     # Validate BEFORE any Spark job (ADVICE r12): a bad value previously
     # surfaced as ZeroDivisionError at the _seg projection, and only after
     # paying the checkpoint + max(_rn) action below.
@@ -118,10 +117,7 @@ def _segmented_base(
             )
     w = Window.partitionBy(partition_by).orderBy(order_by)
     base = df.withColumn("_rn", F.row_number().over(w))
-    try:
-        base = base.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-    except TypeError:
-        base = base.localCheckpoint(eager=False)
+    base = base.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     max_rn = base.agg(F.max("_rn")).collect()[0][0]
     if segment_rows == "auto":
         if max_rn is None:

@@ -246,31 +246,6 @@ def test_minhash_dedup_end_to_end(spark):
     assert rows[4] == (4, True)
 
 
-def test_cosine_topk_np_matches_exact(spark, sf_dir):
-    """The GEMM scale path must reproduce the HOF exact path row-for-row
-    after the engine-wide 6-dp rounding."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.orderBy("vec_id").limit(5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = (
-        similarity.cosine_topk(emb, queries, k=7)
-        .orderBy("query_id", "rank")
-        .collect()
-    )
-    fast = (
-        similarity.cosine_topk_np(emb, queries, k=7)
-        .orderBy("query_id", "rank")
-        .collect()
-    )
-    assert len(exact) == len(fast)
-    for e, f in zip(exact, fast):
-        assert (e["query_id"], e["vec_id"], e["rank"]) == (
-            f["query_id"], f["vec_id"], f["rank"],
-        )
-        assert f["cos_sim"] == pytest.approx(e["cos_sim"], abs=2e-6)
-
-
 def test_ivf_topk_mostly_agrees_with_exact(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.limit(2).select(F.col("vec_id").alias("query_id"), "embedding")
@@ -899,23 +874,32 @@ def test_cosine_topk_arrow_bit_exact_vs_expression(spark):
     rng = np.random.default_rng(17)
     rows = [(i, rng.normal(size=16).tolist()) for i in range(300)]
     rows.append((300, [0.0] * 16))  # zero vector exercises the 0-guard
+    # a null vector scores 0.0 on either side; row 1 sits ahead of the rest
+    # of its Arrow batch, so a kernel that drops its slot shifts them all
+    rows[1] = (1, None)
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    qs = df.limit(7).select(
+    qs = df.where(F.col("vec_id") < 7).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     a = sorted(map(tuple, similarity.cosine_topk(df, qs, k=9).collect()))
     b = sorted(map(tuple, similarity.cosine_topk_arrow(df, qs, k=9).collect()))
     assert a == b  # bit-exact, including rounded sims and tie-broken ranks
+    null_q = qs.where(F.col("query_id") == 1)  # no query vector at all
+    a = sorted(map(tuple, similarity.cosine_topk(df, null_q, k=3).collect()))
+    b = sorted(map(tuple, similarity.cosine_topk_arrow(df, null_q, k=3).collect()))
+    assert a == b == [(1, 0, 0.0, 1), (1, 1, 0.0, 2), (1, 2, 0.0, 3)]
 
 
-def test_cosine_topk_auto_dispatches_and_matches(spark, sf_dir):
+def test_cosine_topk_auto_dispatches_and_matches(spark, sf_dir, monkeypatch):
     emb = load_table(spark, sf_dir, "embeddings")
     qs = emb.orderBy("vec_id").limit(4).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     # tiny threshold forces the Arrow path; huge forces the expression path
-    lo = similarity.cosine_topk_auto(emb, qs, k=5, arrow_threshold_bytes=1)
-    hi = similarity.cosine_topk_auto(emb, qs, k=5, arrow_threshold_bytes=1 << 40)
+    monkeypatch.setattr(similarity, "ARROW_THRESHOLD_BYTES", 1)
+    lo = similarity.cosine_topk_auto(emb, qs, k=5)
+    monkeypatch.setattr(similarity, "ARROW_THRESHOLD_BYTES", 1 << 40)
+    hi = similarity.cosine_topk_auto(emb, qs, k=5)
     # The branch choice must be visible in the plan, not just the values:
     # r3/r4's `f[7:]` URI mangling made getsize throw, so the except-arm
     # routed EVERYTHING to Arrow and a values-only assertion still passed.

@@ -713,12 +713,16 @@ def test_ema_chain_fused_seed_spans_segment_boundary(spark, tall_df):
 def test_segmented_bit_equal_to_kernels_per_group(spark):
     """The segmented sweeps must produce EXACTLY what their spec — the
     ``KERNELS`` run locally on the whole sorted symbol — produces, values
-    and NULL positions, for both the single-chain sweep (ewma_segmented)
-    and the fused multi-chain sweep with a derived chain
-    (adx_family_segmented → _fused_ewma_sweep's str/index/callable
-    source forms)."""
+    and NULL positions, for the single-chain sweep (ewma_segmented), the
+    fused multi-chain sweep with a derived chain (adx_family_segmented →
+    _fused_ewma_sweep's str/index/callable source forms), and the fused
+    family sweep (indicator_family_segmented) with ATR sharing ADX's TR
+    chain (atr_p == adx_p) and on its own chain (atr_p != adx_p)."""
     from polars_quant_spark.operators.recurrence import KERNELS
-    from polars_quant_spark.operators.segmented import adx_family_segmented
+    from polars_quant_spark.operators.segmented import (
+        adx_family_segmented,
+        indicator_family_segmented,
+    )
     from tests.group_spec import assert_matches_group_spec
 
     rng = np.random.default_rng(11)
@@ -754,6 +758,20 @@ def test_segmented_bit_equal_to_kernels_per_group(spark):
     assert_matches_group_spec(
         pdf, rows, cols, lambda g: {c: f(g) for c, f in specs.items()}, nan_is_null=True
     )
+
+    for atr_p in (14, 10):
+        fam = dict(specs)
+        fam["rsi"] = kernel("rsi", "close", p=14)
+        fam["atr"] = kernel("atr", *hlc, p=atr_p)
+        fam["t3"] = kernel("t3", "close", p=5, vfactor=0.7)
+        rows = indicator_family_segmented(
+            df, rsi_p=14, atr_p=atr_p, adx_p=14, t3_p=5, t3_vfactor=0.7,
+            segment_rows=300,
+        ).select("symbol", "t", *fam).collect()
+        assert_matches_group_spec(
+            pdf, rows, list(fam), lambda g: {c: f(g) for c, f in fam.items()},
+            nan_is_null=True,
+        )
 
 
 def test_segmented_halo_sites_bit_equal_to_kernels_per_group(spark):
