@@ -14,6 +14,20 @@ job recompiled 55-62 and 174-193 of them, and the JIT then compiled each
 new class again. At 1024, warm jobs compile 0-5 and 0-2 classes; the
 residue is AQE plan variants that shift codegen stage ids, so the
 generated source differs (BASELINE.md has the per-job counts).
+
+Python workers fork from ``worker_daemon``, not ``pyspark.daemon``. The
+daemon stat-gates the zip-archive re-reads behind PySpark's per-task
+``importlib.invalidate_caches()``, imports this package (numpy, pandas,
+pyarrow) once, and freezes its heap before the first fork. Per task, on a
+warm ``backtest_history`` job on 4 cores, ``invalidate_caches`` fell from
+190-210 ms to 0.2 ms, the daemon's ``gc.collect()`` after each task from
+40-46 ms to 0.25 ms, and the Python workers' CPU from 2.5-2.6 s to
+0.26-0.28 s a job over its 10 Python tasks (BASELINE.md, "Where a warm
+perfbench job's CPU goes"). A file added with ``addPyFile`` later in the
+session is still found: only unchanged archives skip the re-read, and
+directory finders are invalidated as before. The daemon starts before any
+``addPyFile`` include reaches the worker, so on a cluster the package must
+be installed (or on ``PYTHONPATH``) where executors start Python.
 """
 
 from __future__ import annotations
@@ -54,6 +68,9 @@ def get_spark(app_name: str = "polars_quant_spark", shuffle_partitions: int | No
         # so warm jobs recompiled most of them (measured counts in the
         # module docstring). Static conf: set when the session is built.
         .config("spark.sql.codegen.cache.maxEntries", "1024")
+        # Python workers fork from a daemon that has paid their fixed
+        # costs once (module docstring)
+        .config("spark.python.daemon.module", "polars_quant_spark.worker_daemon")
     )
     # Pre-size the heap (-Xms) for big-heap smoke runs: a fresh large-Xmx
     # JVM growing its heap under 32 threads of agg allocation pays a
