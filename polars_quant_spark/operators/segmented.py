@@ -14,13 +14,15 @@ module doc). The operators here remove that bound while staying
   parallel (applyInArrow over symbols), then the carried state — a few
   doubles per symbol, smuggled out on marker rows — is JOINED into pass
   k+1's input as ``_seed_j`` columns (merge-pinned on the symbol key: the
-  same exchange the next pass's groupBy needs anyway). VERDICT r8 gap #3:
-  the carry used to round-trip through the driver (``collect()`` of one
-  marker row per symbol per segment — a 10⁶-row driver funnel at 10⁶
-  symbols); the join keeps it executor-side at any symbol count, and the
-  whole chain is one lazy DAG;
+  same exchange the next pass's groupBy needs anyway). The carry never
+  round-trips through the driver (a ``collect()`` of one marker row per
+  symbol per segment would be a 10⁶-row driver funnel at 10⁶ symbols);
+  the join keeps it executor-side at any symbol count, and the whole
+  chain is one lazy DAG;
 * each operator supplies only its numpy scan: segment 0 runs the kernel's
-  own seeding, continuation segments resume from the carried state.
+  own seeding, continuation segments resume from the carried state. Every
+  EMA/Wilder operator (EMA, RMA, RSI, ATR, DMI/ADX, DEMA, TEMA, T3) is one
+  ``_fused_ewma_sweep``.
 
 Exactness argument: an exponential scan is a strict left fold; cutting the
 fold and resuming from the carried accumulator replays identical float ops
@@ -30,9 +32,12 @@ segment instead of one symbol; wall-clock is n_segments sequential jobs,
 each parallel across symbols — the right trade exactly when single symbols
 are huge.
 
-Constraints: ``segment_rows ≥ p`` (so the SMA seed always completes inside
-segment 0) and null-free input (compact/filter upstream; a null inside a
-continuation would shift the fold).
+Constraints: ``segment_rows`` must cover the operator's warm-up (``p``
+for the EMA/Wilder family, ``p + 1`` for KAMA, 2 for SAR, ``seed_n`` for
+the quantized EMA); an int is rejected before any Spark job. The sweep
+skips NaN/null inputs the way the kernels' ``_compact_apply`` does; the
+other scans need null-free input (a null inside a continuation would
+shift the fold).
 
 Cache hygiene: every operator here pins its continuation pieces
 (DISK_ONLY persist / localCheckpoint) because they feed the returned lazy
@@ -55,7 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from polars_quant_spark.operators.arrow_group import f64, flags, sort_rows
-from polars_quant_spark.operators.recurrence import _ewma, _ewma_q
+from polars_quant_spark.operators.recurrence import _ewma_q
 
 # Truncate the sequential-pass lineage every this-many segments; plan depth
 # at any action is bounded by this constant instead of n_segments.
@@ -78,76 +83,83 @@ AUTO_SEGMENT_FLOOR = 512
 
 
 def _segmented_base(
-    df: DataFrame, partition_by: str, order_by: str, segment_rows: int | str
+    df: DataFrame,
+    partition_by: str,
+    order_by: str,
+    segment_rows: int | str,
+    min_rows: int,
+    min_name: str,
 ):
     """Shared pass-0 scaffolding: (_rn, _seg) columns over the symbol
     window, materialized ONCE behind a lineage cut. Returns (base,
-    last_seg, resolved_segment_rows); last_seg is None on empty input.
+    last_seg, resolved_segment_rows); empty input is one empty pass
+    (last_seg = 0).
 
-    ``segment_rows="auto"`` sizes segments from the data: one action reads
-    max(_rn) off the checkpointed base (the same materializing action the
-    fixed path spends on max(_seg)) and sets segment_rows =
-    max(AUTO_SEGMENT_FLOOR, ceil(max_rn / AUTO_SEGMENT_TARGET)); _seg is a
-    trivial projection over the checkpoint either way, and last_seg is
-    derived arithmetically — the action count is identical to the fixed
-    path.
+    ``min_rows`` is the operator's shortest valid segment (``min_name`` in
+    the error). An int ``segment_rows`` is checked before any Spark job:
+    a bad value must not pay the checkpoint + max(_rn) action first.
+    ``"auto"`` is checked once resolved: one action reads max(_rn) off
+    the checkpointed base (the action the fixed path spends on last_seg)
+    and sets segment_rows = max(AUTO_SEGMENT_FLOOR, ceil(max_rn /
+    AUTO_SEGMENT_TARGET)); _seg is a trivial projection over the
+    checkpoint either way, and last_seg is derived arithmetically — the
+    action count is identical to the fixed path.
 
-    base is read n_segments + 2 times (the max-seg action, one slice per
+    base is read n_segments + 2 times (the max(_rn) action, one slice per
     pass, the final join); without materialization every read re-executes
     the full upstream lineage — harmless for a raw scan, MULTIPLICATIVE
-    for chained segmented ops (rsi = 2 chains, adx = 4: pass k of chain c
-    re-ran chains 1..c-1, and ind_adx_seg_14 took >20 min at sf0.01).
-    localCheckpoint, not persist: a cache keeps the nested plan, and the
-    COMPOSED plan text across 4 chains OOM'd the driver in Catalyst's
-    PlanStringConcat — truncating to a leaf bounds plan size per chain.
-    DISK_ONLY blocks for the same write-once/read-few reason as the piece
-    cache. AQE-less compilation is safe here: base is one window over the
-    input, and every downstream join in this module is merge-pinned."""
-    # Validate BEFORE any Spark job (ADVICE r12): a bad value previously
-    # surfaced as ZeroDivisionError at the _seg projection, and only after
-    # paying the checkpoint + max(_rn) action below.
+    for segmented ops chained on each other's output (pass k of chain c
+    re-runs chains 1..c-1). localCheckpoint, not persist: a cache keeps
+    the nested plan, and the composed plan text of chained ops OOMs the
+    driver in Catalyst's PlanStringConcat — truncating to a leaf bounds
+    plan size per chain. DISK_ONLY blocks for the same write-once/read-few
+    reason as the piece cache. AQE-less compilation is safe here: base is
+    one window over the input, and every downstream join in this module is
+    merge-pinned."""
+
+    def check(rows: int) -> None:
+        if rows < min_rows:
+            raise ValueError(
+                f"segment_rows ({rows}) must be >= {min_name} ({min_rows})"
+            )
+
     if segment_rows != "auto":
-        if not isinstance(segment_rows, int) or isinstance(segment_rows, bool):
+        if (
+            not isinstance(segment_rows, int)
+            or isinstance(segment_rows, bool)
+            or segment_rows < 1
+        ):
             raise ValueError(
                 f"segment_rows must be an int >= 1 or 'auto'; got {segment_rows!r}"
             )
-        if segment_rows < 1:
-            raise ValueError(
-                f"segment_rows must be >= 1; got {segment_rows}"
-            )
+        check(segment_rows)
     w = Window.partitionBy(partition_by).orderBy(order_by)
     base = df.withColumn("_rn", F.row_number().over(w))
     base = base.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-    max_rn = base.agg(F.max("_rn")).collect()[0][0]
+    max_rn = base.agg(F.max("_rn")).collect()[0][0] or 0
     if segment_rows == "auto":
-        if max_rn is None:
-            segment_rows = AUTO_SEGMENT_FLOOR
-        else:
-            segment_rows = max(
-                AUTO_SEGMENT_FLOOR,
-                -(-int(max_rn) // AUTO_SEGMENT_TARGET),
-            )
+        segment_rows = max(AUTO_SEGMENT_FLOOR, -(-max_rn // AUTO_SEGMENT_TARGET))
+        check(segment_rows)
     base = base.withColumn(
-        "_seg", ((F.col("_rn") - 1) / F.lit(int(segment_rows))).cast("long")
+        "_seg", ((F.col("_rn") - 1) / F.lit(segment_rows)).cast("long")
     )
-    last_seg = None if max_rn is None else (int(max_rn) - 1) // int(segment_rows)
-    return base, last_seg, int(segment_rows)
+    return base, max(max_rn - 1, 0) // segment_rows, segment_rows
 
 
 def _cache_piece(res: DataFrame, k: int) -> DataFrame:
     """Shared piece-cache policy. Pass k's plan nests pass k-1's, and
     persist() is lazy, so without a periodic cut the final action analyzes
     O(n_segments)-deep plans — O(n_segments²) total Catalyst work, a
-    driver blowup at thousands of segments (round-10 advisor). A periodic
-    localCheckpoint resets plan depth to ≤ the checkpoint interval (the
-    bpe_merges pattern, text.py:863); it compiles WITHOUT AQE, which is
-    exactly why every seed join in this module is merge-pinned at the
-    source rather than left to runtime demotion. Between cuts: DISK_ONLY,
-    not the MEMORY_AND_DISK default — each piece is written once and read
-    at most twice (the seed row for pass k+1, the final union), and ALL
-    pieces stay pinned until that union; at 26 segments × a 25.6 M-row
-    corpus the on-heap copies thrashed the GC (GCLocker retry storms on
-    the 256× replica) where the spill-to-disk level streams cleanly."""
+    driver blowup at thousands of segments. A periodic localCheckpoint
+    resets plan depth to ≤ the checkpoint interval (the bpe_merges
+    pattern, text.py:863); it compiles WITHOUT AQE, which is exactly why
+    every seed join in this module is merge-pinned at the source rather
+    than left to runtime demotion. Between cuts: DISK_ONLY, not the
+    MEMORY_AND_DISK default — each piece is written once and read at most
+    twice (the seed row for pass k+1, the final union), and ALL pieces
+    stay pinned until that union; at 26 segments × a 25.6 M-row corpus the
+    on-heap copies thrashed the GC (GCLocker retry storms on the 256×
+    replica) where the spill-to-disk level streams cleanly."""
     if (k + 1) % _CHECKPOINT_EVERY_SEGMENTS == 0:
         return res.localCheckpoint(eager=False)
     return res.persist(StorageLevel.DISK_ONLY)
@@ -170,10 +182,12 @@ def _ewm_resume(e: float, vals: np.ndarray, alpha: float) -> np.ndarray:
 
 
 def _segmented_passes(
-    base: DataFrame,
-    last_seg: int,
-    segment_rows: int,
+    df: DataFrame,
     partition_by: str,
+    order_by: str,
+    segment_rows: int | str,
+    min_rows: int,
+    min_name: str,
     in_cols: list[str],
     outs: list[str],
     width: int,
@@ -183,10 +197,12 @@ def _segmented_passes(
 ) -> tuple[DataFrame, list[DataFrame]]:
     """The one sequential-pass driver behind every operator in this module.
 
-    Pass k slices every symbol's k-th segment of ``base`` — plus, when
-    ``halo`` > 0, the previous segment's last ``halo`` rows, flagged by a
-    ``_halo`` column — joins in the state pass k−1 carried out, and runs
-    ``scan`` once per symbol in one ``applyInArrow`` pass:
+    Segments ``df`` with ``_segmented_base`` (``min_rows``/``min_name``:
+    the operator's shortest valid segment). Pass k slices every symbol's
+    k-th segment — plus, when ``halo`` > 0, the previous segment's last
+    ``halo`` rows, flagged by a ``_halo`` column — joins in the state pass
+    k−1 carried out, and runs ``scan`` once per symbol in one
+    ``applyInArrow`` pass:
 
     ``scan(tbl, seed, halo_n) -> (results, state)``
 
@@ -204,8 +220,13 @@ def _segmented_passes(
     fully emitted by the previous pass and emits nothing. Output floats
     map NaN → null.
 
-    Returns the result pieces left-joined back onto ``base`` on
-    (symbol, _rn), and the per-pass marker frames."""
+    Returns every row and column of ``df`` plus the ``outs`` columns (the
+    pieces left-joined back onto the checkpointed base on (symbol, _rn),
+    so a duplicated (symbol, order) key stays one row per input row), and
+    the per-pass marker frames."""
+    base, last_seg, segment_rows = _segmented_base(
+        df, partition_by, order_by, segment_rows, min_rows, min_name
+    )
     fields = list(outs) if carry else [*outs, "_st"]
     st_col = carry or "_st"
     schema = StructType(
@@ -317,6 +338,101 @@ def _segmented_passes(
     return out, marks
 
 
+def _fused_ewma_sweep(
+    df: DataFrame,
+    srcs: list,
+    outs: list[str],
+    p: int | list[int],
+    alpha: float | list[float],
+    partition_by: str,
+    order_by: str,
+    segment_rows: int | str,
+) -> DataFrame:
+    """The one EMA/Wilder scan: len(outs) SMA-seeded exponential chains in
+    one segmented sweep (one base checkpoint, one pass per segment, every
+    chain run in-process on each segment). Returns ``df`` with the
+    ``outs`` columns added.
+
+    ``srcs[i]`` names chain i's input: a df COLUMN NAME (str), the INDEX
+    of an earlier chain whose output feeds it — so ``[x, 0, 1]`` is the
+    TEMA chain and ``["_up", "_dn"]`` is RSI's two parallel Wilder RMAs —
+    or a CALLABLE of the earlier-output list (row-local derivation, e.g.
+    ADX's dx from the three smoothed DM/TR chains). Each chain scans only
+    its input's non-NaN entries (null inputs arrive as NaN) and leaves NaN
+    elsewhere — the plain kernels' ``_compact_apply``, which also
+    re-compacts warm-up NaNs before every chained scan. ``p``/``alpha``
+    are scalars (every chain) or per-chain lists — heterogeneous (p, α)
+    is what lets Wilder α=1/p chains run next to EMA α=2/(p+1) chains
+    (``indicator_family_segmented``).
+
+    Exactness: each chain carries (seen, psum, e) across segments —
+
+    * ``(seen, psum)`` while it is still inside its SMA warm-up:
+      ``np.cumsum`` seeded by prepending the carried partial sum replays
+      the identical left-to-right adds, so a seed window spanning a
+      segment boundary sums in the unsegmented order;
+    * the accumulator ``e`` once seeded — the ewm tail resumes from it
+      (the module's exactness argument).
+
+    The carry makes the fold independent of WHERE the segment cuts fall,
+    so rows whose inputs are NaN can stay in the segmentation, and chains
+    derived from other chains reuse the base segmentation."""
+    depth = len(outs)
+    ps = list(p) if isinstance(p, (list, tuple)) else [int(p)] * depth
+    alphas = (
+        list(alpha) if isinstance(alpha, (list, tuple)) else [float(alpha)] * depth
+    )
+    if len(ps) != depth or len(alphas) != depth:
+        raise ValueError("per-chain p/alpha lists must match len(outs)")
+    in_cols = sorted({s for s in srcs if isinstance(s, str)})
+
+    def seed_sum(psum: float, seen: float, w: np.ndarray) -> float:
+        # a fresh sum must not prepend the 0.0 carry: 0.0 + -0.0 is +0.0
+        if seen:
+            return float(np.cumsum(np.concatenate(([psum], w)))[-1])
+        return float(np.cumsum(w)[-1])
+
+    def scan(tbl, seed, halo_n):
+        # resume state per chain: [seen, psum, e]
+        st = list(seed) if seed is not None else [0.0, 0.0, np.nan] * depth
+        res: list[np.ndarray] = []
+        for i, (s, p_i, a_i) in enumerate(zip(srcs, ps, alphas)):
+            if isinstance(s, str):
+                cur = f64(tbl, s)
+            else:
+                cur = s(res) if callable(s) else res[s]
+            seen, psum, e = st[3 * i : 3 * i + 3]
+            out = np.full(tbl.num_rows, np.nan)
+            pos = np.flatnonzero(~np.isnan(cur))
+            w = cur[pos]
+            # warm-up is `seen < p`, NOT `isnan(e)`: a chain whose
+            # accumulator went NaN AFTER seeding (inf/degenerate inputs
+            # propagating through the ewm) must resume — the NaN-seeded ewm
+            # restarts at the next valid value exactly like the kernel's
+            # one continuous ewm does after an interior NaN — instead of
+            # re-seeding from a bogus psum/p on the segment's last row.
+            if seen < p_i:
+                k = min(len(w), int(p_i - seen))
+                if k:
+                    psum, seen = seed_sum(psum, seen, w[:k]), seen + k
+                    if seen == p_i:
+                        e = psum / p_i
+                        out[pos[k - 1]] = e
+                pos, w = pos[k:], w[k:]
+            if len(w):
+                r = _ewm_resume(e, w, a_i)
+                out[pos] = r
+                e = float(r[-1])
+            st[3 * i : 3 * i + 3] = seen, psum, e
+            res.append(out)
+        return res, st
+
+    return _segmented_passes(
+        df, partition_by, order_by, segment_rows, max(ps), "p",
+        in_cols, outs, 3 * depth, scan,
+    )[0]
+
+
 def ewma_segmented(
     df: DataFrame,
     x: str,
@@ -328,29 +444,14 @@ def ewma_segmented(
     segment_rows: int | str = 1_000_000,
 ) -> DataFrame:
     """SMA-seeded exponential scan, bit-equal to
-    ``with_recurrences(..., Rec(out, "ema"|"rma", ...))`` on null-free input,
-    but bounded by ``segment_rows`` of executor memory per group instead of
-    the whole symbol. α defaults to 2/(p+1); pass 1/p for Wilder RMA."""
-    if alpha is None:
-        alpha = 2.0 / (p + 1)
-    base, last_seg, segment_rows = _segmented_base(df, partition_by, order_by, segment_rows)
-    if segment_rows < p:
-        raise ValueError(f"segment_rows ({segment_rows}) must be >= p ({p})")
-    if last_seg is None:
-        return df.withColumn(out, F.lit(None).cast("double"))
-
-    def scan(tbl, seed, halo_n):
-        vals = f64(tbl, x)
-        # NaN seed: the prior segment produced no value yet
-        if seed is None or np.isnan(seed[0]):
-            res = _ewma(vals, alpha, p)
-            return [res], [_last_valid(res)]
-        res = _ewm_resume(seed[0], vals, alpha)
-        return [res], [res[-1] if res.size else seed[0]]
-
-    return _segmented_passes(
-        base, last_seg, segment_rows, partition_by, [x], [out], 1, scan, carry=out
-    )[0]
+    ``with_recurrences(..., Rec(out, "ema"|"rma", ...))`` — NaN/null
+    inputs are skipped as those kernels skip them — but bounded by
+    ``segment_rows`` of executor memory per group instead of the whole
+    symbol. α defaults to 2/(p+1); pass 1/p for Wilder RMA."""
+    return _fused_ewma_sweep(
+        df, [x], [out], p, 2.0 / (p + 1) if alpha is None else alpha,
+        partition_by, order_by, segment_rows,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -375,6 +476,50 @@ def _true_range(high: str, low: str, close: str, w) -> Column:
             F.abs(F.col(low) - prev_c),
         ),
     )
+
+
+def _gated_inputs(
+    df: DataFrame, w, close: str, high: str | None = None, low: str | None = None
+) -> DataFrame:
+    """Add the sweep inputs of the Wilder chains over the LAG window ``w``:
+    RSI's _up/_dn, and with ``high``/``low`` also _tr (``_true_range``)
+    and the directional moves _pdm/_mdm. Each is NULL where its lag is
+    missing — _up/_dn where the close difference is, _pdm/_mdm where
+    _tr is — so the sweep skips exactly the rows a filter on those lags
+    would drop (``.otherwise(0.0)`` alone would turn them into spurious
+    0.0 observations), and every input row stays in the sweep's output."""
+    d = F.col("_d")
+    out = (
+        df.withColumn("_d", F.col(close) - F.lag(close).over(w))
+        .withColumn("_up", F.when(d > 0, d).when(d.isNotNull(), F.lit(0.0)))
+        .withColumn("_dn", F.when(d < 0, -d).when(d.isNotNull(), F.lit(0.0)))
+    )
+    if high is not None:
+        up_move = F.col(high) - F.lag(high).over(w)
+        dn_move = F.lag(low).over(w) - F.col(low)
+        tr = _true_range(high, low, close, w)
+        out = (
+            out.withColumn("_tr", tr)
+            .withColumn(
+                "_pdm",
+                F.when(
+                    tr.isNotNull(),
+                    F.when(
+                        (up_move > dn_move) & (up_move > 0), up_move
+                    ).otherwise(F.lit(0.0)),
+                ),
+            )
+            .withColumn(
+                "_mdm",
+                F.when(
+                    tr.isNotNull(),
+                    F.when(
+                        (dn_move > up_move) & (dn_move > 0), dn_move
+                    ).otherwise(F.lit(0.0)),
+                ),
+            )
+        )
+    return out.drop("_d")
 
 
 def _rsi_value() -> Column:
@@ -417,6 +562,18 @@ def _with_dmi(sm: DataFrame) -> DataFrame:
     return scored.withColumn("_dx", dx)
 
 
+def _dmi_columns(p: int, w) -> list[Column]:
+    """plus_dm, minus_dm, plus_di, minus_di, dx, adx and adxr over a
+    ``_with_dmi`` frame; ADXR is a LAG(p−1) average over the full row
+    grid."""
+    names = [
+        ("_spdm", "plus_dm"), ("_smdm", "minus_dm"), ("_pdi", "plus_di"),
+        ("_mdi", "minus_di"), ("_dx", "dx"), ("_adx", "adx"),
+    ]
+    adxr = (F.col("_adx") + F.lag("_adx", p - 1).over(w)) / F.lit(2.0)
+    return [F.col(c).alias(n) for c, n in names] + [adxr.alias("adxr")]
+
+
 def _t3_value(v: float) -> Column:
     """Tillson's GD combine of chains _e3.._e6, coefficients computed in
     Python doubles exactly as the kernel's (operators/recurrence.py:106)."""
@@ -447,8 +604,8 @@ def rsi_segmented(
 
     RSI is a pure composition of two Wilder RMA scans over row-local
     transforms: up/dn come from one LAG window (the exchange the pipeline
-    already pays), each RMA runs through ``ewma_segmented`` (α = 1/p —
-    state-carrying segments, executor memory bounded by ``segment_rows``
+    already pays), both RMAs (α = 1/p) run in one ``_fused_ewma_sweep``
+    (state-carrying segments, executor memory bounded by ``segment_rows``
     instead of the whole symbol), and the final combine replays the
     kernel's float sequence exactly: 100·au/(au+ad), ad == 0 → 100
     (operators/recurrence.py:163 — momentum.rs:506-541 semantics).
@@ -462,22 +619,11 @@ def rsi_segmented(
     wall-clock answer; this is the unbounded-memory-recurrence one
     (the 256× sequential-history smoke in docs/SCALE.md motivated both)."""
     w = Window.partitionBy(partition_by).orderBy(order_by)
-    d = F.col(x) - F.lag(x).over(w)
-    diffs = (
-        df.withColumn("_d", d)
-        .where(F.col("_d").isNotNull())
-        .withColumn("_up", F.when(F.col("_d") > 0, F.col("_d")).otherwise(F.lit(0.0)))
-        .withColumn("_dn", F.when(F.col("_d") < 0, -F.col("_d")).otherwise(F.lit(0.0)))
-    )
-    # round-13: ONE fused sweep runs both Wilder RMAs (they are parallel
-    # scans over row-local columns) — one base checkpoint and n_segments
-    # passes total instead of two of each
-    both = _fused_ewma_sweep(
-        diffs, ["_up", "_dn"], ["_au", "_ad"], p, 1.0 / p,
+    sm = _fused_ewma_sweep(
+        _gated_inputs(df, w, x), ["_up", "_dn"], ["_au", "_ad"], p, 1.0 / p,
         partition_by, order_by, segment_rows,
     )
-    scored = both.select(partition_by, order_by, _rsi_value().alias(out))
-    return df.join(scored, [partition_by, order_by], "left")
+    return sm.select(*df.columns, _rsi_value().alias(out))
 
 
 def atr_segmented(
@@ -494,18 +640,14 @@ def atr_segmented(
     """ATR = RMA(true range, p) without the per-symbol memory/serial bound —
     bit-equal to ``with_recurrences(..., Rec(out, "atr", ...))`` on
     null-free input. True range is row-local given LAG(close)
-    (GREATEST of h−l, |h−prev_c|, |l−prev_c| — the kernel's
-    np.maximum.reduce, exact for any double triple), so one window plus
-    one state-carrying RMA covers it (operators/recurrence.py:195)."""
+    (``_true_range``), so one window plus one state-carrying RMA covers it
+    (operators/recurrence.py:195)."""
     w = Window.partitionBy(partition_by).orderBy(order_by)
-    rows = df.withColumn("_tr", _true_range(high, low, close, w)).where(F.col("_tr").isNotNull())
-    res = ewma_segmented(
-        rows, "_tr", p, alpha=1.0 / p, out=out,
-        partition_by=partition_by, order_by=order_by, segment_rows=segment_rows,
+    rows = _gated_inputs(df, w, close, high, low).select(*df.columns, "_tr")
+    sm = _fused_ewma_sweep(
+        rows, ["_tr"], [out], p, 1.0 / p, partition_by, order_by, segment_rows
     )
-    return df.join(
-        res.select(partition_by, order_by, out), [partition_by, order_by], "left"
-    )
+    return sm.select(*df.columns, out)
 
 
 def adx_family_segmented(
@@ -526,215 +668,23 @@ def adx_family_segmented(
     all FOUR Wilder RMAs (s_pdm, s_mdm, s_tr, and ADX over dx) run in one
     ``_fused_ewma_sweep`` — dx is derived in-kernel from the first three
     chains' outputs with the exact float order of the ±DI/DX SQL
-    expressions, and its warm-row NaNs are compacted by the scan itself
-    (the kernel seeds on the first p VALID dx values, exactly as the old
-    pre-filtered fourth sweep did); ±DI and DX are then the same
-    row-local SQL ratios for output (including the warm-row NaN mask —
-    Spark's NULL arithmetic mirrors np.where + mask only if DX is
-    explicitly nulled while s_tr is, which this does); ADXR is a
-    LAG(p−1) average over the full row grid. Adds the seven columns to
-    ``df``.
+    expressions (``_dx``), and the scan skips its warm-row NaNs, so the
+    ADX chain seeds on the first p VALID dx values as the kernel does;
+    ±DI and DX are then the same row-local SQL ratios for output
+    (``_with_dmi``, including the warm-row NULL mask); ADXR is a LAG(p−1)
+    average over the full row grid. Adds the seven columns to ``df``.
 
     Same scale contract as ``rsi_segmented``: memory bounded per
     segment; wall is sequential passes — use the plain kernels while a
     symbol fits executor memory."""
     w = Window.partitionBy(partition_by).orderBy(order_by)
-    up_move = F.col(high) - F.lag(high).over(w)
-    dn_move = F.lag(low).over(w) - F.col(low)
-    tr = _true_range(high, low, close, w)
-    base = (
-        df.withColumn("_pdm", F.when((up_move > dn_move) & (up_move > 0), up_move).otherwise(F.lit(0.0)))
-        .withColumn("_mdm", F.when((dn_move > up_move) & (dn_move > 0), dn_move).otherwise(F.lit(0.0)))
-        .withColumn("_tr", tr)
-        .where(F.col("_tr").isNotNull())
-    )
-    # round-13: ONE fused sweep runs all four Wilder RMAs — the three
-    # parallel DM/TR chains plus ADX's chain over dx, derived in-kernel
-    # from their outputs (``_dx``). dx's warm-row NaNs are compacted by the
-    # scan itself, reproducing the old pre-filtered 4th sweep's "seed on
-    # the first p VALID dx" without re-segmenting. One base checkpoint and
-    # n_segments passes total instead of four of each.
     sm = _fused_ewma_sweep(
-        base, ["_pdm", "_mdm", "_tr", lambda res: _dx(*res[:3])],
+        _gated_inputs(df, w, close, high, low).drop("_up", "_dn"),
+        ["_pdm", "_mdm", "_tr", lambda res: _dx(*res[:3])],
         ["_spdm", "_smdm", "_str", "_adx"], p, 1.0 / p,
         partition_by, order_by, segment_rows,
     )
-    scored = _with_dmi(sm)
-    cols = [
-        ("_spdm", "plus_dm"), ("_smdm", "minus_dm"), ("_pdi", "plus_di"),
-        ("_mdi", "minus_di"), ("_dx", "dx"),
-    ]
-    out = df.join(
-        scored.select(partition_by, order_by, *[c for c, _ in cols], "_adx"),
-        [partition_by, order_by],
-        "left",
-    )
-    adxr = (F.col("_adx") + F.lag("_adx", p - 1).over(w)) / F.lit(2.0)
-    return (
-        out.withColumn("_adxr", adxr)
-        .select(
-            *df.columns,
-            *[F.col(c).alias(n) for c, n in cols],
-            F.col("_adx").alias("adx"),
-            F.col("_adxr").alias("adxr"),
-        )
-    )
-
-
-def _chained_emas(
-    df: DataFrame,
-    x: str,
-    p: int,
-    depth: int,
-    partition_by: str,
-    order_by: str,
-    segment_rows: int | str,
-) -> DataFrame:
-    """Run ``depth`` SMA-seeded EMA scans, each over the previous output's
-    VALID rows — the exact composition of the plain kernels, whose
-    ``_compact_apply`` re-compacts warm-up NaNs before every chained scan.
-    Adds columns _e1.._e{depth}.
-
-    Round-13 optimization: ONE fused segmented sweep instead of ``depth``
-    sequential ``ewma_segmented`` calls. The old composition paid depth ×
-    (base checkpoint + max(_rn) action + n_segments passes + join-back) —
-    ~60 stages for T3's six chains, 12.9 s at sf0.1 where the plain kernel
-    runs in ~0.5 s, and at true scale depth full re-reads of the corpus.
-    The fused sweep pays ONE base and n_segments passes total; each pass
-    runs all ``depth`` chains on the segment in-process (chain i's input
-    is chain i−1's output array, exactly as the plain ``t3`` kernel
-    composes them) and carries per-chain resume state across segments:
-
-    * ``(seen, psum)`` while a chain is still inside its SMA warm-up —
-      ``np.cumsum`` seeded by prepending the carried partial sum replays
-      the identical left-to-right adds, so a seed window spanning a
-      segment boundary sums in the unsegmented order (the old per-chain
-      re-segmentation never had a spanning seed; the carry makes the cut
-      position irrelevant instead);
-    * the accumulator ``e`` once seeded — the ewm tail resumes from it
-      (the module's standing exactness argument, unchanged).
-
-    Chain outputs are NaN-prefix + valid-tail on null-free input; the
-    kernel still compacts by mask (not prefix-assumption), mirroring
-    ``_compact_apply``. Bit-equality vs the plain chain is pinned by the
-    existing dema/tema/t3 segmented tests plus the boundary-spanning-seed
-    case in tests/test_segmented.py."""
-    outs = [f"_e{i}" for i in range(1, depth + 1)]
-    return _fused_ewma_sweep(
-        df, [x] + list(range(depth - 1)), outs, p, 2.0 / (p + 1),
-        partition_by, order_by, segment_rows,
-    )
-
-
-def _fused_ewma_sweep(
-    df: DataFrame,
-    srcs: list,
-    outs: list[str],
-    p: int | list[int],
-    alpha: float | list[float],
-    partition_by: str,
-    order_by: str,
-    segment_rows: int | str,
-) -> DataFrame:
-    """One segmented sweep running len(outs) SMA-seeded exponential scans
-    with shared scaffolding (one base checkpoint, one pass per segment).
-    ``srcs[i]`` names chain i's input: a df COLUMN NAME (str), the INDEX
-    of an earlier chain whose output feeds it — so ``[x, 0, 1]`` is the
-    TEMA chain and ``["_up", "_dn"]`` is RSI's two parallel Wilder RMAs —
-    or a CALLABLE of the earlier-output list (row-local derivation, e.g.
-    ADX's dx from the three smoothed DM/TR chains; NaN entries are
-    compacted by the scan exactly as a pre-filtered frame would be).
-    ``p``/``alpha`` are scalars (every chain, the common case) or
-    per-chain lists — heterogeneous (p, α) is what lets DIFFERENT
-    indicator families (Wilder α=1/p next to EMA α=2/(p+1)) share one
-    sweep (``indicator_family_segmented``). Exactness: the per-chain
-    (seen, partial-sum, accumulator) carry of ``_chained_emas`` (see its
-    docstring), per chain — the carry makes the fold independent of WHERE
-    the segment cuts fall, which is what lets a derived chain reuse the
-    base segmentation instead of re-segmenting its own filtered frame."""
-    depth = len(outs)
-    ps = list(p) if isinstance(p, (list, tuple)) else [int(p)] * depth
-    alphas = (
-        list(alpha) if isinstance(alpha, (list, tuple)) else [float(alpha)] * depth
-    )
-    if len(ps) != depth or len(alphas) != depth:
-        raise ValueError("per-chain p/alpha lists must match len(outs)")
-    base, last_seg, segment_rows = _segmented_base(
-        df, partition_by, order_by, segment_rows
-    )
-    if segment_rows < max(ps):
-        raise ValueError(
-            f"segment_rows ({segment_rows}) must be >= max p ({max(ps)})"
-        )
-    if last_seg is None:
-        cur = df
-        for o in outs:
-            cur = cur.withColumn(o, F.lit(None).cast("double"))
-        return cur
-    in_cols = sorted({s for s in srcs if isinstance(s, str)})
-
-    def scan(tbl, seed, halo_n):
-        # resume state per chain: [seen, psum, e]
-        st = list(seed) if seed is not None else [0.0, 0.0, np.nan] * depth
-        n = tbl.num_rows
-        res_list: list[np.ndarray] = []
-        for i in range(depth):
-            s = srcs[i]
-            p, alpha = ps[i], alphas[i]
-            if isinstance(s, str):
-                cur = f64(tbl, s)
-            elif callable(s):
-                cur = s(res_list)
-            else:
-                cur = res_list[s]
-            seen, psum, e = st[3 * i], st[3 * i + 1], st[3 * i + 2]
-            out = np.full(n, np.nan)
-            pos = np.flatnonzero(~np.isnan(cur))
-            w = cur[pos]
-            # warm-up is `seen < p`, NOT `isnan(e)` (ADVICE r13): a chain
-            # whose accumulator went NaN AFTER seeding (inf/degenerate
-            # inputs propagating through the ewm) must take the resume
-            # branch — whose NaN-seeded ewm restarts at the next valid
-            # value exactly like the single-group kernel's one continuous
-            # ewm does after an interior NaN — instead of re-entering
-            # warm-up with need == 0 and writing a bogus psum/p re-seed
-            # onto the segment's last valid row.
-            if seen < p:
-                need = int(p - seen)
-                if len(w) < need:
-                    if len(w):
-                        psum = float(
-                            np.cumsum(np.concatenate(([psum], w)))[-1]
-                            if seen
-                            else np.cumsum(w)[-1]
-                        )
-                        seen += len(w)
-                else:
-                    head = w[:need]
-                    psum = float(
-                        np.cumsum(np.concatenate(([psum], head)))[-1]
-                        if seen
-                        else np.cumsum(head)[-1]
-                    )
-                    e = psum / p
-                    out[pos[need - 1]] = e
-                    tail = w[need:]
-                    if len(tail):
-                        r = _ewm_resume(e, tail, alpha)
-                        out[pos[need:]] = r
-                        e = float(r[-1])
-                    seen, psum = float(p), 0.0
-            elif len(w):
-                r = _ewm_resume(e, w, alpha)
-                out[pos] = r
-                e = float(r[-1])
-            st[3 * i], st[3 * i + 1], st[3 * i + 2] = seen, psum, e
-            res_list.append(out)
-        return res_list, st
-
-    return _segmented_passes(
-        base, last_seg, segment_rows, partition_by, in_cols, outs, 3 * depth, scan
-    )[0]
+    return _with_dmi(sm).select(*df.columns, *_dmi_columns(p, w))
 
 
 def dema_segmented(
@@ -750,13 +700,11 @@ def dema_segmented(
     ``with_recurrences(..., Rec(out, "dema", ...))`` on null-free input
     (operators/recurrence.py:91, overlap.rs:543-658). Two state-carrying
     EMA chains + one row-local combine in the kernel's float order."""
-    ch = _chained_emas(df, x, p, 2, partition_by, order_by, segment_rows)
-    val = F.lit(2.0) * F.col("_e1") - F.col("_e2")
-    return df.join(
-        ch.select(partition_by, order_by, val.alias(out)),
-        [partition_by, order_by],
-        "left",
+    ch = _fused_ewma_sweep(
+        df, [x, 0], ["_e1", "_e2"], p, 2.0 / (p + 1),
+        partition_by, order_by, segment_rows,
     )
+    return ch.select(*df.columns, (F.lit(2.0) * F.col("_e1") - F.col("_e2")).alias(out))
 
 
 def tema_segmented(
@@ -770,13 +718,12 @@ def tema_segmented(
 ) -> DataFrame:
     """3·E1 − 3·E2 + E3, segmented (operators/recurrence.py:98,
     overlap.rs:1177-1311) — three chains, kernel float order."""
-    ch = _chained_emas(df, x, p, 3, partition_by, order_by, segment_rows)
-    val = F.lit(3.0) * F.col("_e1") - F.lit(3.0) * F.col("_e2") + F.col("_e3")
-    return df.join(
-        ch.select(partition_by, order_by, val.alias(out)),
-        [partition_by, order_by],
-        "left",
+    ch = _fused_ewma_sweep(
+        df, [x, 0, 1], ["_e1", "_e2", "_e3"], p, 2.0 / (p + 1),
+        partition_by, order_by, segment_rows,
     )
+    val = F.lit(3.0) * F.col("_e1") - F.lit(3.0) * F.col("_e2") + F.col("_e3")
+    return ch.select(*df.columns, val.alias(out))
 
 
 def t3_segmented(
@@ -790,16 +737,14 @@ def t3_segmented(
     segment_rows: int | str = 1_000_000,
 ) -> DataFrame:
     """Tillson T3 (SIX chained SMA-seeded EMAs + GD coefficients),
-    segmented (operators/recurrence.py:106, overlap.rs:939-1175). The
-    deepest chain composition in the family — only practical because each
-    chain's base plan is checkpoint-truncated; coefficients are computed
-    in Python doubles, identical to the kernel's."""
-    ch = _chained_emas(df, x, p, 6, partition_by, order_by, segment_rows)
-    return df.join(
-        ch.select(partition_by, order_by, _t3_value(vfactor).alias(out)),
-        [partition_by, order_by],
-        "left",
+    segmented (operators/recurrence.py:106, overlap.rs:939-1175): the six
+    chains run in one sweep; coefficients are computed in Python doubles,
+    identical to the kernel's."""
+    ch = _fused_ewma_sweep(
+        df, [x, 0, 1, 2, 3, 4], [f"_e{i}" for i in range(1, 7)], p,
+        2.0 / (p + 1), partition_by, order_by, segment_rows,
     )
+    return ch.select(*df.columns, _t3_value(vfactor).alias(out))
 
 
 def indicator_family_segmented(
@@ -817,74 +762,26 @@ def indicator_family_segmented(
     segment_rows: int | str = 1_000_000,
 ) -> DataFrame:
     """RSI + ATR + the full Wilder DMI/ADX family + T3 in **one** fused
-    segmented sweep — the combined multi-indicator shape that previously
-    paid four separate ops: 4 base checkpoints, 4 max(_rn) actions,
-    4 × n_segments group passes and 4 join-backs over the same corpus
-    (round-14, VERDICT r13 #5). Bit-equal to composing
-    ``rsi_segmented`` / ``atr_segmented`` / ``adx_family_segmented`` /
-    ``t3_segmented`` (asserted in tests/test_segmented.py), which are
-    themselves bit-equal to the plain ``with_recurrences`` kernels on
-    null-free input.
+    segmented sweep: one base checkpoint, one max(_rn) action and one set
+    of n_segments passes over the corpus instead of one per operator.
+    Bit-equal to composing ``rsi_segmented`` / ``atr_segmented`` /
+    ``adx_family_segmented`` / ``t3_segmented`` (asserted in
+    tests/test_segmented.py), which are themselves bit-equal to the plain
+    ``with_recurrences`` kernels on null-free input.
 
-    How the fusion stays exact: every source column is NULL-GATED in one
-    projection over the shared LAG window (a null input row is what the
-    per-op versions' ``.where`` filters dropped; the sweep's scan compacts
-    NaN entries exactly as a pre-filtered frame would), and the sweep's
-    per-chain (p, α) support runs Wilder α=1/p chains next to T3's six
-    α=2/(p+1) chains in the same pass. ATR is RMA(_tr, atr_p) — when
-    ``atr_p == adx_p`` it is literally ADX's ``_str`` chain (one chain
-    serves both outputs); otherwise it gets its own chain. DX derives
-    in-kernel from the smoothed DM/TR chains with the exact IEEE op order
-    of the output SQL (see ``adx_family_segmented``).
+    The inputs are the per-op versions' null-gated projection
+    (``_gated_inputs``), and the sweep's per-chain (p, α) support runs
+    Wilder α=1/p chains next to T3's six α=2/(p+1) chains in the same
+    pass. ATR is RMA(_tr, atr_p) — when ``atr_p == adx_p`` it is literally
+    ADX's ``_str`` chain (one chain serves both outputs); otherwise it
+    gets its own chain. DX derives in-kernel from the smoothed DM/TR
+    chains with the exact IEEE op order of the output SQL (see
+    ``adx_family_segmented``).
 
     Adds: rsi, atr, plus_dm, minus_dm, plus_di, minus_di, dx, adx, adxr,
     t3. Same scale contract as the per-op versions: per-task memory is one
     segment; wall is n_segments passes — but ONE set of them."""
     w = Window.partitionBy(partition_by).orderBy(order_by)
-    d = F.col(close) - F.lag(close).over(w)
-    up_move = F.col(high) - F.lag(high).over(w)
-    dn_move = F.lag(low).over(w) - F.col(low)
-    tr = _true_range(high, low, close, w)
-    # Null-gating (the per-op versions FILTER these rows out; here the
-    # scan compacts the NaNs instead): _up/_dn are null where d is null,
-    # _pdm/_mdm null where tr is null — `.otherwise(0.0)` alone would
-    # turn those rows into spurious 0.0 observations.
-    base = (
-        df.withColumn("_d", d)
-        .withColumn(
-            "_up",
-            F.when(F.col("_d") > 0, F.col("_d")).when(
-                F.col("_d").isNotNull(), F.lit(0.0)
-            ),
-        )
-        .withColumn(
-            "_dn",
-            F.when(F.col("_d") < 0, -F.col("_d")).when(
-                F.col("_d").isNotNull(), F.lit(0.0)
-            ),
-        )
-        .withColumn("_tr", tr)
-        .withColumn(
-            "_pdm",
-            F.when(
-                tr.isNotNull(),
-                F.when(
-                    (up_move > dn_move) & (up_move > 0), up_move
-                ).otherwise(F.lit(0.0)),
-            ),
-        )
-        .withColumn(
-            "_mdm",
-            F.when(
-                tr.isNotNull(),
-                F.when(
-                    (dn_move > up_move) & (dn_move > 0), dn_move
-                ).otherwise(F.lit(0.0)),
-            ),
-        )
-        .drop("_d")
-    )
-
     wilder_r, wilder_a = 1.0 / rsi_p, 1.0 / adx_p
     ema_a = 2.0 / (t3_p + 1)
     # chains 2..4 are _spdm, _smdm, _str
@@ -904,25 +801,15 @@ def indicator_family_segmented(
     alphas += [ema_a] * 6
 
     sm = _fused_ewma_sweep(
-        base, srcs, outs, ps, alphas, partition_by, order_by, segment_rows
+        _gated_inputs(df, w, close, high, low), srcs, outs, ps, alphas,
+        partition_by, order_by, segment_rows,
     )
-
-    # row-local output SQL shared with the per-op versions, so the float
-    # order (and NULL masks) are identical
-    scored = _with_dmi(sm)
     atr_col = F.col("_str") if atr_p == adx_p else F.col("_atr")
-    adxr = (F.col("_adx") + F.lag("_adx", adx_p - 1).over(w)) / F.lit(2.0)
-    return scored.select(
+    return _with_dmi(sm).select(
         *df.columns,
         _rsi_value().alias("rsi"),
         atr_col.alias("atr"),
-        F.col("_spdm").alias("plus_dm"),
-        F.col("_smdm").alias("minus_dm"),
-        F.col("_pdi").alias("plus_di"),
-        F.col("_mdi").alias("minus_di"),
-        F.col("_dx").alias("dx"),
-        F.col("_adx").alias("adx"),
-        adxr.alias("adxr"),
+        *_dmi_columns(adx_p, w),
         _t3_value(t3_vfactor).alias("t3"),
     )
 
@@ -944,25 +831,19 @@ def kama_segmented(
     (data-dependent smoothing constant) and each step needs the trailing
     p+1 raw values for the efficiency ratio — a scalar carry alone is not
     enough. Each continuation pass therefore ships TWO things: the carried
-    accumulator k (marker-row join, as in ``ewma_segmented``) and a p-row
-    HALO of the previous segment's tail (sliced from the SAME checkpointed
-    base — no extra lineage), so every body row can rebuild its exact
-    ER window locally; halo rows are dropped from the output. The
-    continuation replays the kernel's per-step arithmetic verbatim
-    (including the chunked row-wise cumsum volatility and libm ``** 2``),
-    so the composition is bit-exact across segment boundaries.
+    accumulator k (one marker row) and a p-row HALO of the previous
+    segment's tail (sliced from the SAME checkpointed base — no extra
+    lineage), so every body row can rebuild its exact ER window locally;
+    halo rows are dropped from the output. The continuation replays the
+    kernel's per-step arithmetic verbatim (including the chunked row-wise
+    cumsum volatility and libm ``** 2``), so the composition is bit-exact
+    across segment boundaries.
 
     Requires ``segment_rows ≥ p + 1`` (the kernel emits nothing for
     n < p+1, so a p-row segment 0 would diverge from the whole-symbol
     scan). Same scale contract as the rest of the module: executor memory
     bounded by segment + halo; wall is n_segments sequential passes."""
     from polars_quant_spark.operators.recurrence import kama as _kama_dense
-
-    base, last_seg, segment_rows = _segmented_base(df, partition_by, order_by, segment_rows)
-    if segment_rows < p + 1:
-        raise ValueError(f"segment_rows ({segment_rows}) must be >= p + 1 ({p + 1})")
-    if last_seg is None:
-        return df.withColumn(out, F.lit(None).cast("double"))
 
     fast_sc, slow_sc = 2.0 / 3.0, 2.0 / 31.0
 
@@ -994,14 +875,13 @@ def kama_segmented(
         return [res], [k]
 
     return _segmented_passes(
-        base, last_seg, segment_rows, partition_by, [x], [out], 1, scan,
-        carry=out, halo=p,
+        df, partition_by, order_by, segment_rows, p + 1, "p + 1",
+        [x], [out], 1, scan, carry=out, halo=p,
     )[0]
 
 
 # ---------------------------------------------------------------------------
-# Parabolic SAR family (the last with_recurrences kernels without a
-# memory-bounded escape — VERDICT r10 #3)
+# Parabolic SAR family
 # ---------------------------------------------------------------------------
 
 
@@ -1089,25 +969,19 @@ def _sar_family_segmented(
     machine — (long, s, ep, af) — whose clamp reads the trailing TWO bars'
     high/low, so each continuation pass ships:
 
-    * the carried state on FOUR marker rows (_rn −1..−4 = long/s/ep/af —
-      the ewma marker generalized; pivoted back to columns by a per-symbol
-      aggregate that rides the same symbol-key exchange the next pass's
-      groupBy needs), and
+    * the carried state on FOUR marker rows (_rn −1..−4 = long/s/ep/af,
+      pivoted back to columns by a per-symbol aggregate that rides the
+      same symbol-key exchange the next pass's groupBy needs), and
     * a 2-row halo of the previous segment's tail (sliced from the SAME
       checkpointed base), so steps at the boundary rebuild their exact
       ``ll[i-1], ll[i-2]`` clamp window locally; halo rows are dropped
       from the output.
 
     Halo-only groups (symbols whose total length lands in (lo-2, lo]) are
-    excluded the same way as kama_segmented's ADVICE-r10 fix: every such
-    row was already emitted by the previous pass. Same scale contract as
+    excluded as in kama_segmented: every such row was already emitted by
+    the previous pass. Same scale contract as
     the module: executor memory bounded by segment + halo; wall is
     n_segments sequential passes."""
-    base, last_seg, segment_rows = _segmented_base(df, partition_by, order_by, segment_rows)
-    if segment_rows < 2:
-        raise ValueError(f"segment_rows ({segment_rows}) must be >= 2")
-    if last_seg is None:
-        return df.withColumn(out, F.lit(None).cast("double"))
 
     def scan(tbl, seed, halo_n):
         hh, ll = f64(tbl, high), f64(tbl, low)
@@ -1121,8 +995,8 @@ def _sar_family_segmented(
         return [res], st if st is not None else [np.nan] * 4
 
     return _segmented_passes(
-        base, last_seg, segment_rows, partition_by, [high, low], [out], 4, scan,
-        carry=out, halo=2,
+        df, partition_by, order_by, segment_rows, 2, "the 2-bar clamp window",
+        [high, low], [out], 4, scan, carry=out, halo=2,
     )[0]
 
 
@@ -1185,8 +1059,7 @@ def sarext_segmented(
 
 
 # ---------------------------------------------------------------------------
-# Integer-lattice (quantized) EMA / MACD trio — closing the second r10
-# segmented non-goal (VERDICT r10 #3)
+# Integer-lattice (quantized) EMA / MACD trio
 # ---------------------------------------------------------------------------
 
 
@@ -1210,13 +1083,6 @@ def ewma_q_segmented(
     (floor(v·1e6 + 0.5)); output is integer-valued micro-units."""
     a = float(alpha)
     b = 1.0 - a
-    base, last_seg, segment_rows = _segmented_base(df, partition_by, order_by, segment_rows)
-    if segment_rows < seed_n:
-        raise ValueError(
-            f"segment_rows ({segment_rows}) must be >= seed_n ({seed_n})"
-        )
-    if last_seg is None:
-        return df.withColumn(out, F.lit(None).cast("double"))
 
     def scan(tbl, seed, halo_n):
         vals = f64(tbl, x)
@@ -1231,7 +1097,8 @@ def ewma_q_segmented(
         return [res], [s]
 
     return _segmented_passes(
-        base, last_seg, segment_rows, partition_by, [x], [out], 1, scan, carry=out
+        df, partition_by, order_by, segment_rows, seed_n, "seed_n",
+        [x], [out], 1, scan, carry=out,
     )[0]
 
 
@@ -1252,35 +1119,52 @@ def macd_q_segmented(
     to ``with_recurrences(..., Rec([...], "macd_q", [x], ...))`` on
     null-free integer-micro-unit input (operators/recurrence.py:359;
     asserted in tests/test_segmented.py). MACDFIX is this with the fixed
-    12/26 legs.
-
-    Composition (the ``adx_family_segmented`` discipline): two quantized
-    EMA chains over the input build ``dif``; the signal chain scans only
-    dif-VALID rows (the kernel's ``_compact_apply`` compacts the warm-up
-    NaN prefix before seeding — filtering before the scan reproduces that
-    compaction exactly, since on null-free input the invalid rows are a
-    contiguous per-symbol prefix); warm-up rows rejoin by union (no
-    shuffle beyond the scans' own symbol-key exchanges). Differences of
-    lattice integers are exact in doubles."""
+    12/26 legs. Composition: ``_macd_q``, with one more segmented
+    integer-lattice EMA as the signal leg."""
     kw = dict(
         partition_by=partition_by, order_by=order_by, segment_rows=segment_rows
     )
+
+    def signal_leg(valid: DataFrame) -> DataFrame:
+        return ewma_q_segmented(
+            valid, dif_out, 2.0 / (signal + 1), signal, out=dea_out, **kw
+        )
+
+    return _macd_q(df, x, fast, slow, signal_leg, dif_out, dea_out, hist_out, kw)
+
+
+def _macd_q(
+    df: DataFrame,
+    x: str,
+    fast: int,
+    slow: int,
+    signal_leg,
+    dif_out: str,
+    dea_out: str,
+    hist_out: str,
+    kw: dict,
+) -> DataFrame:
+    """The quantized MACD shape shared by ``macd_q_segmented`` and
+    ``macdext_q_segmented``: two segmented integer-lattice EMA legs over
+    ``x`` build ``dif``, and ``signal_leg`` adds ``dea_out`` to the
+    dif-VALID rows only (the kernel's ``_compact_apply`` compacts the
+    warm-up NaN prefix before the signal — filtering reproduces that
+    compaction exactly, since on null-free input the invalid rows are a
+    contiguous per-symbol prefix); warm-up rows rejoin by union with a
+    NULL dea (no shuffle beyond the legs' own symbol-key exchanges).
+    Differences of lattice integers are exact in doubles."""
     ch = ewma_q_segmented(df, x, 2.0 / (fast + 1), fast, out="_efq", **kw)
     ch = ewma_q_segmented(ch, x, 2.0 / (slow + 1), slow, out="_esq", **kw)
-    ch = ch.withColumn(dif_out, F.col("_efq") - F.col("_esq"))
-    valid = ch.where(F.col(dif_out).isNotNull())
-    dea = ewma_q_segmented(valid, dif_out, 2.0 / (signal + 1), signal, out=dea_out, **kw)
+    ch = ch.withColumn(dif_out, F.col("_efq") - F.col("_esq")).drop("_efq", "_esq")
+    dea = signal_leg(ch.where(F.col(dif_out).isNotNull()))
     warm = ch.where(F.col(dif_out).isNull()).withColumn(
         dea_out, F.lit(None).cast("double")
     )
-    full = dea.unionByName(warm)
-    return full.withColumn(hist_out, F.col(dif_out) - F.col(dea_out)).drop(
-        "_efq", "_esq"
-    )
+    return dea.unionByName(warm).withColumn(hist_out, F.col(dif_out) - F.col(dea_out))
 
 
 # ---------------------------------------------------------------------------
-# Vectorized backtest fold, segmented — the round-11 1024x finding
+# Vectorized backtest fold, segmented
 # ---------------------------------------------------------------------------
 
 
@@ -1320,14 +1204,6 @@ def backtest_segmented(
     )
 
     p = params or BacktestParams()
-    base, last_seg, segment_rows = _segmented_base(df, partition_by, order_by, segment_rows)
-    if last_seg is None:
-        out = df
-        for c in ("position", "cash", "equity", "drawdown"):
-            out = out.withColumn(c, F.lit(None).cast("double"))
-        for c in ("n_trades", "n_wins"):
-            out = out.withColumn(c, F.lit(None).cast("long"))
-        return out
 
     def scan(tbl, seed, halo_n):
         state = None
@@ -1340,7 +1216,7 @@ def backtest_segmented(
         return [pos, cash, eq, dd], st
 
     out, marks = _segmented_passes(
-        base, last_seg, segment_rows, partition_by, [price, buy, sell],
+        df, partition_by, order_by, segment_rows, 1, "1", [price, buy, sell],
         ["position", "cash", "equity", "drawdown"], 9, scan, carry="position",
     )
     allmarks = marks[0]
@@ -1377,8 +1253,8 @@ def macdext_q_segmented(
     ``with_recurrences(..., Rec([...], "macdext_q", [x], ...))`` on
     null-free integer-micro-unit input (operators/recurrence.py:376).
 
-    The EMA legs are the same segmented integer-lattice folds as
-    ``macd_q_segmented``. The SMA signal leg needs no segmentation at all:
+    The EMA legs are ``macd_q_segmented``'s (``_macd_q``). The SMA signal
+    leg needs no segmentation at all:
     ``_sma_q`` is a BOUNDED trailing window (``signal`` rows), which Spark's
     window exec evaluates with spill — floor(avg + 0.5) over dif-valid rows
     reproduces the kernel's compacted rolling mean exactly (integer sums are
@@ -1387,35 +1263,13 @@ def macdext_q_segmented(
     kw = dict(
         partition_by=partition_by, order_by=order_by, segment_rows=segment_rows
     )
-    ch = ewma_q_segmented(df, x, 2.0 / (fast + 1), fast, out="_efq", **kw)
-    ch = ewma_q_segmented(ch, x, 2.0 / (slow + 1), slow, out="_esq", **kw)
-    ch = ch.withColumn(dif_out, F.col("_efq") - F.col("_esq"))
-    # the kernel compacts dif's warm-up NaNs before the rolling mean, so
-    # the window must rank over dif-VALID rows only
-    wv = (
-        Window.partitionBy(partition_by)
-        .orderBy(order_by)
-        .rowsBetween(-(signal - 1), 0)
-    )
-    valid = ch.where(F.col(dif_out).isNotNull()).withColumn(
-        "_nv",
-        F.count(F.lit(1)).over(
-            Window.partitionBy(partition_by)
-            .orderBy(order_by)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    )
-    dea = valid.withColumn(
-        dea_out,
-        F.when(
-            F.col("_nv") >= signal,
-            F.floor(F.avg(dif_out).over(wv) + F.lit(0.5)),
-        ),
-    ).drop("_nv")
-    warm = ch.where(F.col(dif_out).isNull()).withColumn(
-        dea_out, F.lit(None).cast("double")
-    )
-    full = dea.unionByName(warm)
-    return full.withColumn(hist_out, F.col(dif_out) - F.col(dea_out)).drop(
-        "_efq", "_esq"
-    )
+    w = Window.partitionBy(partition_by).orderBy(order_by)
+
+    def signal_leg(valid: DataFrame) -> DataFrame:
+        # the window ranks over dif-VALID rows only, as the kernel's
+        # rolling mean runs on the compacted dif
+        nv = F.count(F.lit(1)).over(w.rowsBetween(Window.unboundedPreceding, 0))
+        sma = F.floor(F.avg(dif_out).over(w.rowsBetween(-(signal - 1), 0)) + F.lit(0.5))
+        return valid.withColumn(dea_out, F.when(nv >= signal, sma))
+
+    return _macd_q(df, x, fast, slow, signal_leg, dif_out, dea_out, hist_out, kw)

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from polars_quant_spark.operators import segmented as seg
 from polars_quant_spark.operators.recurrence import Rec, with_recurrences
 from polars_quant_spark.operators.segmented import ewma_segmented
 
@@ -543,7 +544,7 @@ def test_auto_segment_rows_resolution(spark, tall_df):
         _segmented_base,
     )
 
-    base, last_seg, rows = _segmented_base(tall_df, "symbol", "t", "auto")
+    base, last_seg, rows = _segmented_base(tall_df, "symbol", "t", "auto", 1, "1")
     # FAT has 2500 bars: ceil(2500/4)=625 >= the 512 floor -> 4 segments
     assert rows == max(AUTO_SEGMENT_FLOOR, -(-2500 // AUTO_SEGMENT_TARGET))
     assert last_seg == (2500 - 1) // rows == AUTO_SEGMENT_TARGET - 1
@@ -578,14 +579,37 @@ def test_segment_rows_validated_before_any_job(spark, tall_df):
     """Invalid segment_rows raises ValueError at the TOP of
     _segmented_base (ADVICE r12) — previously 0 surfaced as
     ZeroDivisionError, and only after paying the checkpoint + max(_rn)
-    action."""
+    action. An int below the operator's minimum segment (p, p + 1, 2) is
+    rejected there too, so no case submits a Spark job."""
+    import uuid
+
     import pytest as _pytest
 
     from polars_quant_spark.operators.segmented import ewma_segmented as es
+    from polars_quant_spark.operators.segmented import kama_segmented, sar_segmented
 
-    for bad in (0, -5, 2.5, "autox", True):
-        with _pytest.raises(ValueError, match="segment_rows"):
-            es(tall_df, "close", 5, out="e", segment_rows=bad)
+    hl = tall_df.withColumn("high", F.col("close") * 1.01).withColumn(
+        "low", F.col("close") * 0.99
+    )
+    calls = [
+        lambda bad=bad: es(tall_df, "close", 5, out="e", segment_rows=bad)
+        for bad in (0, -5, 2.5, "autox", True)
+    ] + [
+        lambda: es(tall_df, "close", 20, out="e", segment_rows=10),
+        lambda: kama_segmented(tall_df, "close", p=10, segment_rows=10),
+        lambda: sar_segmented(hl, segment_rows=1),
+    ]
+    sc = spark.sparkContext
+    group = f"segment-rows-{uuid.uuid4().hex}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        for call in calls:
+            with _pytest.raises(ValueError, match="segment_rows"):
+                call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_auto_backtest_mixed_corpus_split(spark, tall_df):
@@ -713,7 +737,9 @@ def test_ema_chain_fused_seed_spans_segment_boundary(spark, tall_df):
 def test_segmented_bit_equal_to_kernels_per_group(spark):
     """The segmented sweeps must produce EXACTLY what their spec — the
     ``KERNELS`` run locally on the whole sorted symbol — produces, values
-    and NULL positions, for the single-chain sweep (ewma_segmented), the
+    and NULL positions, for the single-chain sweep (ewma_segmented, also
+    on input with NaN holes, which it skips as the kernel's
+    ``_compact_apply`` does), the
     fused multi-chain sweep with a derived chain (adx_family_segmented →
     _fused_ewma_sweep's str/index/callable source forms), and the fused
     family sweep (indicator_family_segmented) with ATR sharing ADX's TR
@@ -748,6 +774,17 @@ def test_segmented_bit_equal_to_kernels_per_group(spark):
     ).select("symbol", "t", "e").collect()
     rma = kernel("rma", "close", p=14)
     assert_matches_group_spec(pdf, rows, ["e"], lambda g: {"e": rma(g)}, nan_is_null=True)
+
+    # holes inside the SMA seed, at and around the segment boundary at 300,
+    # and a 20-row gap
+    holes = pdf["close"].copy()
+    holes.iloc[[3, 10, 299, 300, 301, 650, *range(700, 720)]] = np.nan
+    nan_pdf = pdf.assign(close=holes)
+    rows = ewma_segmented(
+        spark.createDataFrame(nan_pdf).select("symbol", "t", "close"), "close", 14,
+        alpha=1.0 / 14, out="e", segment_rows=300,
+    ).select("symbol", "t", "e").collect()
+    assert_matches_group_spec(nan_pdf, rows, ["e"], lambda g: {"e": rma(g)}, nan_is_null=True)
 
     cols = ["plus_dm", "minus_dm", "plus_di", "minus_di", "dx", "adx", "adxr"]
     hlc = ("high", "low", "close")
@@ -909,3 +946,92 @@ def test_indicator_family_segmented_bit_equal_to_per_op(spark, tall_df):
         b = fam.select("symbol", "t", *fam_cols).collect()
         for c in fam_cols:
             _bit_equal(a, b, c)
+
+
+def _every_input(tall_df):
+    """tall_df plus every column some segmented operator reads."""
+    return (
+        tall_df.withColumn("high", F.col("close") * 1.01)
+        .withColumn("low", F.col("close") * 0.99)
+        .withColumn("_cm", F.floor(F.col("close") * 1000000.0 + F.lit(0.5)).cast("double"))
+        .withColumn("buy", F.col("t") % 37 == 3)
+        .withColumn("sell", F.col("t") % 29 == 7)
+    )
+
+
+_EVERY_OPERATOR = {
+    "ewma_segmented": lambda df: seg.ewma_segmented(df, "close", 5, segment_rows=700),
+    "rsi_segmented": lambda df: seg.rsi_segmented(df, segment_rows=700),
+    "atr_segmented": lambda df: seg.atr_segmented(df, segment_rows=700),
+    "adx_family_segmented": lambda df: seg.adx_family_segmented(df, segment_rows=700),
+    "dema_segmented": lambda df: seg.dema_segmented(df, p=5, segment_rows=700),
+    "tema_segmented": lambda df: seg.tema_segmented(df, p=5, segment_rows=700),
+    "t3_segmented": lambda df: seg.t3_segmented(df, segment_rows=700),
+    "indicator_family_segmented": lambda df: seg.indicator_family_segmented(
+        df, segment_rows=700
+    ),
+    "kama_segmented": lambda df: seg.kama_segmented(df, p=10, segment_rows=700),
+    "sar_segmented": lambda df: seg.sar_segmented(df, segment_rows=700),
+    "sarext_segmented": lambda df: seg.sarext_segmented(df, segment_rows=700),
+    "ewma_q_segmented": lambda df: seg.ewma_q_segmented(
+        df, "_cm", 2.0 / 13.0, 12, segment_rows=700
+    ),
+    "macd_q_segmented": lambda df: seg.macd_q_segmented(df, segment_rows=700),
+    "macdext_q_segmented": lambda df: seg.macdext_q_segmented(df, segment_rows=700),
+    "backtest_segmented": lambda df: seg.backtest_segmented(df, segment_rows=700),
+}
+
+
+def test_every_public_segmented_operator_is_covered():
+    public = {n for n in dir(seg) if n.endswith("_segmented") and not n.startswith("_")}
+    assert public == set(_EVERY_OPERATOR)
+
+
+@pytest.mark.parametrize("name", sorted(_EVERY_OPERATOR))
+def test_segmented_empty_input(spark, tall_df, name):
+    """Empty input is one empty pass: 0 rows, with the column names and
+    types of a non-empty call (double outputs, long n_trades/n_wins)."""
+    from pyspark.sql.types import DoubleType, LongType
+
+    df = _every_input(tall_df)
+    full = _EVERY_OPERATOR[name](df)
+    empty = _EVERY_OPERATOR[name](df.limit(0))
+    assert empty.collect() == []
+    fields = [(f.name, f.dataType) for f in empty.schema]
+    assert fields == [(f.name, f.dataType) for f in full.schema]
+    added = [(c, t) for c, t in fields if c not in df.columns]
+    assert added
+    for c, t in added:
+        assert t == (LongType() if c in ("n_trades", "n_wins") else DoubleType()), c
+
+
+@pytest.mark.parametrize("name", ["rsi_segmented", "t3_segmented"])
+def test_segmented_duplicate_key_keeps_row_count(spark, tall_df, name):
+    """A duplicated (symbol, t) row stays one output row per input row:
+    the outputs are selected off the sweep, which holds every input row,
+    instead of joined back on (symbol, t), which pairs every copy with
+    every copy. Values on the tied rows are not asserted: row_number's
+    tie order is arbitrary."""
+    dup = tall_df.unionByName(
+        tall_df.where((F.col("symbol") == "FAT") & (F.col("t") == 1500))
+    )
+    rows = _EVERY_OPERATOR[name](dup).select("symbol", "t").collect()
+    assert len(rows) == 2540 + 1
+
+
+@pytest.mark.parametrize(
+    "name", ["rsi_segmented", "t3_segmented", "adx_family_segmented"]
+)
+def test_segmented_plan_has_no_order_key_join(spark, tall_df, name):
+    """No join keyed on the order column (``t#``) in the physical plan:
+    the operator's outputs come off the sweep's output, which already
+    holds every input row and column. The driver's (symbol, _rn)
+    join-back stays."""
+    import re
+
+    from polars_quant_spark.plans.inspect import plan_str
+
+    plan = plan_str(_EVERY_OPERATOR[name](_every_input(tall_df)))
+    keys = re.findall(r"^(?:Left|Right) keys \[\d+\]: \[(.*)\]$", plan, re.M)
+    assert any(re.search(r"\b_rn#\d+", k) for k in keys), keys
+    assert not [k for k in keys if re.search(r"\bt#\d+", k)], keys
