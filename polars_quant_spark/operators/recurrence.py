@@ -31,8 +31,9 @@ contract — RMA(TR, p), i.e. α=1/p with an SMA-of-first-p seed.
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -44,29 +45,49 @@ from polars_quant_spark.operators.arrow_group import f64, sort_rows
 
 # ---------------------------------------------------------------------------
 # numpy scan kernels (null-compacting)
+#
+# Each recurrence's per-step arithmetic lives in ONE resumable function
+# (``_ewm_resume``, ``_ewma_q_resume``, ``_kama_tail``, ``_sar_scan``): the
+# kernel runs it after its own seeding, and the segmented operators
+# (operators/segmented.py) resume it from a carried state — a strict left
+# fold cut and resumed replays identical float ops in identical order.
 # ---------------------------------------------------------------------------
+
+
+def _ewm_resume(e: float, vals: np.ndarray, alpha: float) -> np.ndarray:
+    """The pandas ``ewm(alpha, adjust=False)`` recurrence
+    e' = ((1−α)·e + α·x)/((1−α)+α), with the update skipped when x == e,
+    continued from the accumulator ``e`` over ``vals``: one output per
+    value. It runs in pandas' Cython ewm kernel — no Python loop on the hot
+    path (a 10M-bar symbol scans in ~1.3 s instead of ~10 s)."""
+    z = np.empty(vals.shape[0] + 1, dtype=np.float64)
+    z[0] = e
+    z[1:] = vals
+    return pd.Series(z).ewm(alpha=alpha, adjust=False).mean().to_numpy()[1:]
+
+
+def _ewm_seed(e: float) -> float:
+    """The seed row's output: the SMA seed as ``_ewm_resume`` reads it
+    (±inf is missing there, so the row is NaN)."""
+    return e if math.isfinite(e) else np.nan
 
 
 def _ewma(x: np.ndarray, alpha: float, seed_n: int) -> np.ndarray:
     """Exponential scan over a dense array: out[seed_n-1] = mean(x[:seed_n]),
-    then the pandas ``ewm(alpha, adjust=False)`` recurrence
-    e' = ((1−α)·e + α·x)/((1−α)+α) with the update skipped when x == e.
-    NaN before the seed.
+    then ``_ewm_resume`` from it. NaN before the seed, and at the seed when
+    the mean is ±inf: pandas' ewm reads ±inf as missing, so the tail
+    restarts at the next finite value (``_ewm_seed``).
 
-    The tail scan runs in pandas' Cython ewm kernel — no Python loop on the
-    hot path (a 10M-bar symbol scans in ~1.3 s instead of ~10 s). The SQL
-    twin is ``oracle.ewm_step``, which emits the identical float sequence
-    including the skip-on-equal (the computed form can differ in the last
-    ulp when x == e, ~10% of random doubles)."""
+    The SQL twin is ``oracle.ewm_step``, which emits the identical float
+    sequence including the skip-on-equal (the computed form can differ in
+    the last ulp when x == e, ~10% of random doubles)."""
     n = x.shape[0]
     out = np.full(n, np.nan)
     if n < seed_n or seed_n <= 0:
         return out
     e = float(np.cumsum(x[:seed_n])[-1]) / seed_n  # sequential sum = oracle's AVG
-    z = np.empty(n - seed_n + 1, dtype=np.float64)
-    z[0] = e
-    z[1:] = x[seed_n:]
-    out[seed_n - 1 :] = pd.Series(z).ewm(alpha=alpha, adjust=False).mean().to_numpy()
+    out[seed_n - 1] = _ewm_seed(e)
+    out[seed_n:] = _ewm_resume(e, x[seed_n:], alpha)
     return out
 
 
@@ -124,40 +145,50 @@ def t3(x: np.ndarray, p: int = 5, vfactor: float = 0.7) -> np.ndarray:
     return c1 * e6 + c2 * e5 + c3 * e4 + c4 * e3_
 
 
+def _kama_tail(v: np.ndarray, p: int, k: float) -> np.ndarray:
+    """KAMA steps over ``v[p:]`` from the accumulator ``k``; ``v[:p]`` is
+    the trailing window the first step's efficiency ratio reads (the SMA
+    seed rows in the kernel, the halo in a segmented continuation). One
+    output per row of ``v[p:]``."""
+    m = v.shape[0] - p
+    adiff = np.abs(np.diff(v))
+    # trailing-p volatility, vectorized but with the exact left-to-right
+    # summation order of a fresh per-window cumsum (row-wise cumsum over
+    # sliding windows; chunked so the (rows × p) scratch stays small)
+    vol = np.empty(m)
+    win = np.lib.stride_tricks.sliding_window_view(adiff, p)  # rows: [j, j+p)
+    step = max(1, 4_000_000 // p)
+    for lo in range(0, m, step):
+        hi = min(lo + step, m)
+        vol[lo:hi] = win[lo:hi].cumsum(axis=1)[:, -1]
+    with np.errstate(invalid="ignore", divide="ignore"):
+        er = np.where(vol > 0, np.abs(v[p:] - v[:-p]) / vol, 0.0)
+    # the k-fold stays a scalar loop (data-dependent smoothing constant),
+    # with the identical per-step arithmetic (incl. libm `** 2`, which
+    # Python floats and numpy scalars both call) as the DuckDB
+    # POWER(er·Δ + s, 2) recursion
+    fast_sc, slow_sc = 2.0 / 3.0, 2.0 / 31.0
+    d = fast_sc - slow_sc
+    out = np.empty(m)
+    for j, (e, x) in enumerate(zip(er.tolist(), v[p:].tolist())):
+        k = k + (e * d + slow_sc) ** 2 * (x - k)
+        out[j] = k
+    return out
+
+
 def kama(x: np.ndarray, p: int = 30) -> np.ndarray:
     """Kaufman adaptive MA (overlap.rs:732-855): ER = |x−x₋ₚ|/Σ|Δx| over
     trailing p, SC = (ER·(2/3 − 2/31) + 2/31)², k += SC·(x−k); seed = SMA of
-    the first p values at row p−1."""
+    the first p values at row p−1, then ``_kama_tail``."""
 
     def _kama(v: np.ndarray) -> np.ndarray:
         n = v.shape[0]
         out = np.full(n, np.nan)
         if n < p + 1:
             return out
-        fast_sc, slow_sc = 2.0 / 3.0, 2.0 / 31.0
         k = float(np.cumsum(v[:p])[-1]) / p
         out[p - 1] = k
-        adiff = np.abs(np.diff(v))
-        # trailing-p volatility, vectorized but with the exact left-to-right
-        # summation order of a fresh per-window cumsum (row-wise cumsum over
-        # sliding windows; chunked so the (rows × p) scratch stays small).
-        # The r1 kernel sliced+cumsum'd per step — O(n·p) with Python-level
-        # slicing overhead dominating the scan.
-        vol = np.empty(n - p)
-        win = np.lib.stride_tricks.sliding_window_view(adiff, p)  # rows: [j, j+p)
-        step = max(1, 4_000_000 // p)
-        for lo in range(0, n - p, step):
-            hi = min(lo + step, n - p)
-            vol[lo:hi] = win[lo:hi].cumsum(axis=1)[:, -1]
-        with np.errstate(invalid="ignore", divide="ignore"):
-            er_all = np.where(vol > 0, np.abs(v[p:] - v[:-p]) / vol, 0.0)
-        # the k-fold stays a scalar loop (data-dependent smoothing constant),
-        # with the identical per-step arithmetic (incl. libm `** 2`) as the
-        # DuckDB POWER(er·Δ + s, 2) recursion
-        for i in range(p, n):
-            sc = (er_all[i - p] * (fast_sc - slow_sc) + slow_sc) ** 2
-            k = k + sc * (v[i] - k)
-            out[i] = k
+        out[p:] = _kama_tail(v, p, k)
         return out
 
     return _compact_apply(_kama, x)
@@ -332,21 +363,27 @@ def _ewma_q(m: np.ndarray, alpha: float, seed_n: int) -> np.ndarray:
     any series length. The SQL twin is ``oracle.ema_q_ctes``.
 
     Inherently a Python loop (per-step flooring defeats the Cython ewm
-    kernel) — fine for the oracle-paired MACD queries (~20k steps/symbol
-    at sf0.1, ~0.1 s/chain); the float ``_ewma`` stays the package's hot
-    path."""
-    import math
-
+    kernel, see ``_ewma_q_resume``) — fine for the oracle-paired MACD
+    queries (~20k steps/symbol at sf0.1, ~0.1 s/chain); the float
+    ``_ewma`` stays the package's hot path."""
     n = m.shape[0]
     out = np.full(n, np.nan)
     if n < seed_n or seed_n <= 0:
         return out
-    a = float(alpha)
-    b = 1.0 - a
     s = math.floor(float(np.cumsum(m[:seed_n])[-1]) / seed_n + 0.5)
     out[seed_n - 1] = s
-    for i in range(seed_n, n):
-        s = math.floor(b * s + a * float(m[i]) + 0.5)
+    out[seed_n:] = _ewma_q_resume(s, m[seed_n:], alpha)
+    return out
+
+
+def _ewma_q_resume(s: float, vals: np.ndarray, alpha: float) -> np.ndarray:
+    """The lattice step s' = floor((1−α)·s + α·x + 0.5) continued from the
+    integer accumulator ``s`` over ``vals``: one output per value."""
+    a = float(alpha)
+    b = 1.0 - a
+    out = np.empty(vals.shape[0])
+    for i, x in enumerate(vals.tolist()):
+        s = math.floor(b * s + a * x + 0.5)
         out[i] = s
     return out
 
@@ -398,47 +435,90 @@ def trix(x: np.ndarray, p: int = 30) -> np.ndarray:
     return out
 
 
+class _SarParams(NamedTuple):
+    """Step-rule constants of the SAR/SAREXT scan. Plain SAR is SAREXT with
+    symmetric schedules, offset 0 and unsigned output: ``ep * (1.0 + 0.0)``
+    is ``ep * 1.0``, which IEEE-754 guarantees equals ``ep`` bit-for-bit,
+    so one scan serves both kernels verbatim."""
+
+    startvalue: float
+    offset: float
+    init_long: float
+    inc_long: float
+    max_long: float
+    init_short: float
+    inc_short: float
+    max_short: float
+    signed: bool
+
+
+def _sar_scan(hh, ll, state, i0, p: _SarParams):
+    """The SAR/SAREXT iterations ``i0..n-1`` from an optional carried
+    state. ``state`` is (long, s, ep, af) at the end of the previous
+    iteration; None means the kernel's own trend seeding (startvalue sign
+    for SAREXT, bar-1 range comparison otherwise) and a loop from i=1.
+    Returns (out, state_out); state_out is None only when n < 2 without a
+    state (nothing is emitted there). The steps run on Python floats — the
+    same IEEE doubles as numpy scalars, without their boxing cost."""
+    (startvalue, offset, init_long, inc_long, max_long,
+     init_short, inc_short, max_short, signed) = p
+    n = hh.shape[0]
+    out = np.full(n, np.nan)
+    h, l = hh.tolist(), ll.tolist()
+    if state is None:
+        if n < 2:
+            return out, None
+        if startvalue > 0:
+            long_, s = True, startvalue
+        elif startvalue < 0:
+            long_, s = False, -startvalue
+        else:
+            long_ = (h[1] - h[0]) >= (l[0] - l[1])
+            s = l[0] if long_ else h[0]
+        ep = h[1] if long_ else l[1]
+        af = init_long if long_ else init_short
+        i0 = 1
+    else:
+        long_, s, ep, af = state
+    for i in range(i0, n):
+        s = s + af * (ep - s)
+        if long_:
+            s = min(s, l[i - 1], l[max(i - 2, 0)])
+            if l[i] < s:  # reverse to short
+                s = ep * (1.0 + offset)
+                ep = l[i]
+                af = init_short
+                long_ = False
+            elif h[i] > ep:
+                ep = h[i]
+                af = min(af + inc_long, max_long)
+        else:
+            s = max(s, h[i - 1], h[max(i - 2, 0)])
+            if h[i] > s:  # reverse to long
+                s = ep * (1.0 - offset)
+                ep = h[i]
+                af = init_long
+                long_ = True
+            elif l[i] < ep:
+                ep = l[i]
+                af = min(af + inc_short, max_short)
+        out[i] = (s if long_ else -s) if signed else s
+    return out, (long_, s, ep, af)
+
+
 def sar(h: np.ndarray, l: np.ndarray, acceleration: float = 0.02, maximum: float = 0.2) -> np.ndarray:
     """Parabolic SAR (overlap.rs:437-454 entry; helper missing from the
     snapshot — standard Wilder algorithm, our declared semantics: initial
     trend long iff h[1]−h[0] ≥ l[0]−l[1]; SAR clamped to the prior two bars'
-    range; AF resets on reversal)."""
-
-    def _sar(hh: np.ndarray, ll: np.ndarray) -> np.ndarray:
-        n = hh.shape[0]
-        out = np.full(n, np.nan)
-        if n < 2:
-            return out
-        long = (hh[1] - hh[0]) >= (ll[0] - ll[1])
-        s = ll[0] if long else hh[0]
-        ep = hh[1] if long else ll[1]
-        af = acceleration
-        for i in range(1, n):
-            s = s + af * (ep - s)
-            if long:
-                s = min(s, ll[i - 1], ll[max(i - 2, 0)])
-                if ll[i] < s:  # reverse to short
-                    s = ep
-                    ep = ll[i]
-                    af = acceleration
-                    long = False
-                elif hh[i] > ep:
-                    ep = hh[i]
-                    af = min(af + acceleration, maximum)
-            else:
-                s = max(s, hh[i - 1], hh[max(i - 2, 0)])
-                if hh[i] > s:  # reverse to long
-                    s = ep
-                    ep = hh[i]
-                    af = acceleration
-                    long = True
-                elif ll[i] < ep:
-                    ep = ll[i]
-                    af = min(af + acceleration, maximum)
-            out[i] = s
-        return out
-
-    return _compact_apply(_sar, h, l)
+    range; AF resets on reversal). ``_sar_scan`` with SAREXT's symmetric,
+    offset-free, unsigned parameters (see ``_SarParams``)."""
+    p = _SarParams(
+        0.0, 0.0,
+        acceleration, acceleration, maximum,
+        acceleration, acceleration, maximum,
+        signed=False,
+    )
+    return _compact_apply(lambda hh, ll: _sar_scan(hh, ll, None, 1, p)[0], h, l)
 
 
 # ---------------------------------------------------------------------------
@@ -664,50 +744,14 @@ def sarext(
     """Extended parabolic SAR (overlap.rs:457-491 entry; helper missing —
     TA-Lib contract: separate long/short acceleration schedules, an offset
     applied on reversal, and a signed start value choosing the initial trend;
-    output is positive while long, negative while short)."""
-
-    def _sarext(hh: np.ndarray, ll: np.ndarray) -> np.ndarray:
-        n = hh.shape[0]
-        out = np.full(n, np.nan)
-        if n < 2:
-            return out
-        if startvalue > 0:
-            long = True
-            s = startvalue
-        elif startvalue < 0:
-            long = False
-            s = -startvalue
-        else:
-            long = (hh[1] - hh[0]) >= (ll[0] - ll[1])
-            s = ll[0] if long else hh[0]
-        ep = hh[1] if long else ll[1]
-        af = accelerationinitlong if long else accelerationinitshort
-        for i in range(1, n):
-            s = s + af * (ep - s)
-            if long:
-                s = min(s, ll[i - 1], ll[max(i - 2, 0)])
-                if ll[i] < s:
-                    s = ep * (1.0 + offsetonreverse)
-                    ep = ll[i]
-                    af = accelerationinitshort
-                    long = False
-                elif hh[i] > ep:
-                    ep = hh[i]
-                    af = min(af + accelerationlong, accelerationmaxlong)
-            else:
-                s = max(s, hh[i - 1], hh[max(i - 2, 0)])
-                if hh[i] > s:
-                    s = ep * (1.0 - offsetonreverse)
-                    ep = hh[i]
-                    af = accelerationinitlong
-                    long = True
-                elif ll[i] < ep:
-                    ep = ll[i]
-                    af = min(af + accelerationshort, accelerationmaxshort)
-            out[i] = s if long else -s
-        return out
-
-    return _compact_apply(_sarext, h, l)
+    output is positive while long, negative while short): ``_sar_scan``."""
+    p = _SarParams(
+        startvalue, offsetonreverse,
+        accelerationinitlong, accelerationlong, accelerationmaxlong,
+        accelerationinitshort, accelerationshort, accelerationmaxshort,
+        signed=True,
+    )
+    return _compact_apply(lambda hh, ll: _sar_scan(hh, ll, None, 1, p)[0], h, l)
 
 
 KERNELS.update({"sarext": (sarext, 2)})

@@ -20,9 +20,12 @@ module doc). The operators here remove that bound while staying
   the join keeps it executor-side at any symbol count, and the whole
   chain is one lazy DAG;
 * each operator supplies only its numpy scan: segment 0 runs the kernel's
-  own seeding, continuation segments resume from the carried state. Every
-  EMA/Wilder operator (EMA, RMA, RSI, ATR, DMI/ADX, DEMA, TEMA, T3) is one
-  ``_fused_ewma_sweep``.
+  own seeding, continuation segments resume from the carried state with
+  the kernel's own per-step function (``recurrence._ewm_resume``,
+  ``_ewma_q_resume``, ``_kama_tail``, ``_sar_scan``). Every EMA/Wilder
+  operator (EMA, RMA, RSI, ATR, DMI/ADX, DEMA, TEMA, T3) is one
+  ``_fused_ewma_sweep``, and so is every integer-lattice one (the
+  quantized EMA, and the quantized MACD and MACDEXT EMA legs).
 
 Exactness argument: an exponential scan is a strict left fold; cutting the
 fold and resuming from the carried accumulator replays identical float ops
@@ -32,11 +35,12 @@ segment instead of one symbol; wall-clock is n_segments sequential jobs,
 each parallel across symbols — the right trade exactly when single symbols
 are huge.
 
-Constraints: ``segment_rows`` must cover the operator's warm-up (``p``
-for the EMA/Wilder family, ``p + 1`` for KAMA, 2 for SAR, ``seed_n`` for
-the quantized EMA); an int is rejected before any Spark job. The sweep
-skips NaN/null inputs the way the kernels' ``_compact_apply`` does; the
-other scans need null-free input (a null inside a continuation would
+Constraints: ``segment_rows`` must cover the operator's warm-up (the
+sweep's largest ``p`` for the EMA/Wilder family and the quantized
+EMA/MACD operators, ``p + 1`` for KAMA, 2 for SAR); an int is rejected
+before any Spark job. The sweep, lattice chains included, skips NaN/null
+inputs the way the kernels' ``_compact_apply`` does; the KAMA, SAR and
+backtest scans need null-free input (a null inside a continuation would
 shift the fold).
 
 Cache hygiene: every operator here pins its continuation pieces
@@ -48,10 +52,8 @@ result inside ``session.released(spark)`` (ADVICE r10).
 from __future__ import annotations
 
 import math
-from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
@@ -60,7 +62,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from polars_quant_spark.operators.arrow_group import f64, flags, sort_rows
-from polars_quant_spark.operators.recurrence import _ewma_q
+from polars_quant_spark.operators.recurrence import (
+    _SarParams,
+    _ewm_resume,
+    _ewm_seed,
+    _ewma_q_resume,
+    _kama_tail,
+    _sar_scan,
+    kama,
+)
 
 # Truncate the sequential-pass lineage every this-many segments; plan depth
 # at any action is bounded by this constant instead of n_segments.
@@ -170,15 +180,6 @@ def _last_valid(res: np.ndarray) -> float:
     out of a segment the kernel's own seeding scanned."""
     valid = np.flatnonzero(~np.isnan(res))
     return float(res[valid[-1]]) if valid.size else np.nan
-
-
-def _ewm_resume(e: float, vals: np.ndarray, alpha: float) -> np.ndarray:
-    """Continue the pandas-ewm recurrence of ``recurrence._ewma`` from the
-    carried accumulator ``e`` over ``vals``."""
-    z = np.empty(vals.shape[0] + 1, dtype=np.float64)
-    z[0] = e
-    z[1:] = vals
-    return pd.Series(z).ewm(alpha=alpha, adjust=False).mean().to_numpy()[1:]
 
 
 def _segmented_passes(
@@ -347,11 +348,14 @@ def _fused_ewma_sweep(
     partition_by: str,
     order_by: str,
     segment_rows: int | str,
+    lattice: bool = False,
 ) -> DataFrame:
     """The one EMA/Wilder scan: len(outs) SMA-seeded exponential chains in
     one segmented sweep (one base checkpoint, one pass per segment, every
     chain run in-process on each segment). Returns ``df`` with the
-    ``outs`` columns added.
+    ``outs`` columns added. With ``lattice`` every chain is the
+    integer-lattice EMA of ``recurrence._ewma_q``: the seed is
+    floor(psum/p + 0.5) and the tail is ``_ewma_q_resume``.
 
     ``srcs[i]`` names chain i's input: a df COLUMN NAME (str), the INDEX
     of an earlier chain whose output feeds it — so ``[x, 0, 1]`` is the
@@ -385,6 +389,7 @@ def _fused_ewma_sweep(
     if len(ps) != depth or len(alphas) != depth:
         raise ValueError("per-chain p/alpha lists must match len(outs)")
     in_cols = sorted({s for s in srcs if isinstance(s, str)})
+    resume = _ewma_q_resume if lattice else _ewm_resume
 
     def seed_sum(psum: float, seen: float, w: np.ndarray) -> float:
         # a fresh sum must not prepend the 0.0 carry: 0.0 + -0.0 is +0.0
@@ -416,11 +421,11 @@ def _fused_ewma_sweep(
                 if k:
                     psum, seen = seed_sum(psum, seen, w[:k]), seen + k
                     if seen == p_i:
-                        e = psum / p_i
-                        out[pos[k - 1]] = e
+                        e = math.floor(psum / p_i + 0.5) if lattice else psum / p_i
+                        out[pos[k - 1]] = _ewm_seed(e)
                 pos, w = pos[k:], w[k:]
             if len(w):
-                r = _ewm_resume(e, w, a_i)
+                r = resume(e, w, a_i)
                 out[pos] = r
                 e = float(r[-1])
             st[3 * i : 3 * i + 3] = seen, psum, e
@@ -524,7 +529,7 @@ def _gated_inputs(
 
 def _rsi_value() -> Column:
     """100·au/(au+ad) over the smoothed _au/_ad chains, ad == 0 → 100
-    (operators/recurrence.py:163 — momentum.rs:506-541 semantics)."""
+    (``recurrence.rsi`` — momentum.rs:506-541 semantics)."""
     return F.when(F.col("_ad") == 0.0, F.lit(100.0)).otherwise(
         F.lit(100.0) * F.col("_au") / (F.col("_au") + F.col("_ad"))
     )
@@ -576,7 +581,7 @@ def _dmi_columns(p: int, w) -> list[Column]:
 
 def _t3_value(v: float) -> Column:
     """Tillson's GD combine of chains _e3.._e6, coefficients computed in
-    Python doubles exactly as the kernel's (operators/recurrence.py:106)."""
+    Python doubles exactly as the kernel's (``recurrence.t3``)."""
     c1 = -(v ** 3)
     c2 = 3.0 * v ** 2 + 3.0 * v ** 3
     c3 = -6.0 * v ** 2 - 3.0 * v - 3.0 * v ** 3
@@ -608,7 +613,7 @@ def rsi_segmented(
     (state-carrying segments, executor memory bounded by ``segment_rows``
     instead of the whole symbol), and the final combine replays the
     kernel's float sequence exactly: 100·au/(au+ad), ad == 0 → 100
-    (operators/recurrence.py:163 — momentum.rs:506-541 semantics).
+    (``recurrence.rsi`` — momentum.rs:506-541 semantics).
 
     When to use: an exact exponential fold cannot be parallelized WITHIN
     a symbol (every step depends on the previous), so this does not beat
@@ -641,7 +646,7 @@ def atr_segmented(
     bit-equal to ``with_recurrences(..., Rec(out, "atr", ...))`` on
     null-free input. True range is row-local given LAG(close)
     (``_true_range``), so one window plus one state-carrying RMA covers it
-    (operators/recurrence.py:195)."""
+    (``recurrence.atr``)."""
     w = Window.partitionBy(partition_by).orderBy(order_by)
     rows = _gated_inputs(df, w, close, high, low).select(*df.columns, "_tr")
     sm = _fused_ewma_sweep(
@@ -662,7 +667,7 @@ def adx_family_segmented(
 ) -> DataFrame:
     """The full Wilder DMI/ADX family (±DM, ±DI, DX, ADX, ADXR) without the
     per-symbol memory bound — bit-equal to the ``with_recurrences`` kernels
-    on null-free input (operators/recurrence.py:216-308, momentum.rs:668-727).
+    on null-free input (``recurrence._dmi`` and its callers, momentum.rs:668-727).
 
     Composition: up/dn moves and true range are row-local LAG transforms;
     all FOUR Wilder RMAs (s_pdm, s_mdm, s_tr, and ADX over dx) run in one
@@ -698,7 +703,7 @@ def dema_segmented(
 ) -> DataFrame:
     """2·EMA − EMA(EMA) without the per-symbol memory bound — bit-equal to
     ``with_recurrences(..., Rec(out, "dema", ...))`` on null-free input
-    (operators/recurrence.py:91, overlap.rs:543-658). Two state-carrying
+    (``recurrence.dema``, overlap.rs:543-658). Two state-carrying
     EMA chains + one row-local combine in the kernel's float order."""
     ch = _fused_ewma_sweep(
         df, [x, 0], ["_e1", "_e2"], p, 2.0 / (p + 1),
@@ -716,7 +721,7 @@ def tema_segmented(
     order_by: str = "t",
     segment_rows: int | str = 1_000_000,
 ) -> DataFrame:
-    """3·E1 − 3·E2 + E3, segmented (operators/recurrence.py:98,
+    """3·E1 − 3·E2 + E3, segmented (``recurrence.tema``,
     overlap.rs:1177-1311) — three chains, kernel float order."""
     ch = _fused_ewma_sweep(
         df, [x, 0, 1], ["_e1", "_e2", "_e3"], p, 2.0 / (p + 1),
@@ -737,7 +742,7 @@ def t3_segmented(
     segment_rows: int | str = 1_000_000,
 ) -> DataFrame:
     """Tillson T3 (SIX chained SMA-seeded EMAs + GD coefficients),
-    segmented (operators/recurrence.py:106, overlap.rs:939-1175): the six
+    segmented (``recurrence.t3``, overlap.rs:939-1175): the six
     chains run in one sweep; coefficients are computed in Python doubles,
     identical to the kernel's."""
     ch = _fused_ewma_sweep(
@@ -825,7 +830,7 @@ def kama_segmented(
 ) -> DataFrame:
     """Kaufman adaptive MA without the per-symbol memory bound — bit-equal
     to ``with_recurrences(..., Rec(out, "kama", ...))`` on null-free input
-    (operators/recurrence.py:123, overlap.rs:732-855).
+    (``recurrence.kama``, overlap.rs:732-855).
 
     KAMA is the family's hardest case: the fold is NONLINEAR
     (data-dependent smoothing constant) and each step needs the trailing
@@ -834,45 +839,26 @@ def kama_segmented(
     accumulator k (one marker row) and a p-row HALO of the previous
     segment's tail (sliced from the SAME checkpointed base — no extra
     lineage), so every body row can rebuild its exact ER window locally;
-    halo rows are dropped from the output. The continuation replays the
-    kernel's per-step arithmetic verbatim (including the chunked row-wise
-    cumsum volatility and libm ``** 2``), so the composition is bit-exact
-    across segment boundaries.
+    halo rows are dropped from the output. The continuation runs the
+    kernel's own ``recurrence._kama_tail`` on halo + body from the carried
+    k (the chunked row-wise cumsum volatility and libm ``** 2`` included),
+    so the composition is bit-exact across segment boundaries.
 
     Requires ``segment_rows ≥ p + 1`` (the kernel emits nothing for
     n < p+1, so a p-row segment 0 would diverge from the whole-symbol
     scan). Same scale contract as the rest of the module: executor memory
     bounded by segment + halo; wall is n_segments sequential passes."""
-    from polars_quant_spark.operators.recurrence import kama as _kama_dense
-
-    fast_sc, slow_sc = 2.0 / 3.0, 2.0 / 31.0
 
     def scan(tbl, seed, halo_n):
         vals = f64(tbl, x)
         if seed is None or np.isnan(seed[0]) or halo_n < p:
             # pass 0 (or the unreachable lost-seed case, see docstring):
             # the kernel's own scan over the dense segment
-            res = _kama_dense(vals, p)
+            res = kama(vals, p)
             return [res], [_last_valid(res)]
         # continuation: body rows follow the p halo rows
-        n = vals.shape[0]
-        nb = n - halo_n
-        adiff = np.abs(np.diff(vals))
-        vol = np.empty(nb)
-        win = np.lib.stride_tricks.sliding_window_view(adiff, p)
-        step = max(1, 4_000_000 // p)
-        for lo in range(0, nb, step):
-            hi = min(lo + step, nb)
-            vol[lo:hi] = win[lo:hi].cumsum(axis=1)[:, -1]
-        with np.errstate(invalid="ignore", divide="ignore"):
-            er = np.where(vol > 0, np.abs(vals[p:] - vals[:-p]) / vol, 0.0)
-        k = seed[0]
-        res = np.empty(nb)
-        for j in range(nb):
-            sc = (er[j] * (fast_sc - slow_sc) + slow_sc) ** 2
-            k = k + sc * (vals[p + j] - k)
-            res[j] = k
-        return [res], [k]
+        res = _kama_tail(vals, p, seed[0])
+        return [res], [res[-1]]
 
     return _segmented_passes(
         df, partition_by, order_by, segment_rows, p + 1, "p + 1",
@@ -883,75 +869,6 @@ def kama_segmented(
 # ---------------------------------------------------------------------------
 # Parabolic SAR family
 # ---------------------------------------------------------------------------
-
-
-class _SarParams(NamedTuple):
-    """Step-rule constants shared by the SAR/SAREXT scans. Plain SAR is
-    SAREXT with symmetric schedules, offset 0 and unsigned output:
-    ``ep * (1.0 + 0.0)`` is ``ep * 1.0`` which IEEE-754 guarantees equals
-    ``ep`` bit-for-bit, so one scan serves both kernels verbatim."""
-
-    startvalue: float
-    offset: float
-    init_long: float
-    inc_long: float
-    max_long: float
-    init_short: float
-    inc_short: float
-    max_short: float
-    signed: bool
-
-
-def _sar_scan(hh, ll, state, i0, p):
-    """Replay ``recurrence.sar``/``sarext`` iterations ``i0..n-1`` from an
-    optional carried state (operators/recurrence.py:398,639 — identical
-    per-step arithmetic and branch order). ``state`` is (long, s, ep, af)
-    at the end of the previous iteration; None means segment 0, where the
-    kernel's own trend seeding runs (startvalue sign for SAREXT, bar-1
-    range comparison otherwise) and the loop starts at i=1. Returns
-    (out, state_out); state_out is None only when n < 2 on segment 0 (the
-    kernel emits nothing there)."""
-    n = hh.shape[0]
-    out = np.full(n, np.nan)
-    if state is None:
-        if n < 2:
-            return out, None
-        if p.startvalue > 0:
-            long_, s = True, p.startvalue
-        elif p.startvalue < 0:
-            long_, s = False, -p.startvalue
-        else:
-            long_ = (hh[1] - hh[0]) >= (ll[0] - ll[1])
-            s = ll[0] if long_ else hh[0]
-        ep = hh[1] if long_ else ll[1]
-        af = p.init_long if long_ else p.init_short
-        i0 = 1
-    else:
-        long_, s, ep, af = state
-    for i in range(i0, n):
-        s = s + af * (ep - s)
-        if long_:
-            s = min(s, ll[i - 1], ll[max(i - 2, 0)])
-            if ll[i] < s:  # reverse to short
-                s = ep * (1.0 + p.offset)
-                ep = ll[i]
-                af = p.init_short
-                long_ = False
-            elif hh[i] > ep:
-                ep = hh[i]
-                af = min(af + p.inc_long, p.max_long)
-        else:
-            s = max(s, hh[i - 1], hh[max(i - 2, 0)])
-            if hh[i] > s:  # reverse to long
-                s = ep * (1.0 - p.offset)
-                ep = hh[i]
-                af = p.init_long
-                long_ = True
-            elif ll[i] < ep:
-                ep = ll[i]
-                af = min(af + p.inc_short, p.max_short)
-        out[i] = (s if long_ else -s) if p.signed else s
-    return out, (long_, s, ep, af)
 
 
 def _sar_family_segmented(
@@ -965,7 +882,9 @@ def _sar_family_segmented(
     segment_rows: int | str,
 ) -> DataFrame:
     """Shared state+halo plumbing for ``sar_segmented``/``sarext_segmented``
-    (the ``kama_segmented`` pattern). The SAR fold is a 4-tuple state
+    (the ``kama_segmented`` pattern): every pass runs the kernels' own
+    ``recurrence._sar_scan``, pass 0 with its trend seeding and each
+    continuation from the carried state. The SAR fold is a 4-tuple state
     machine — (long, s, ep, af) — whose clamp reads the trailing TWO bars'
     high/low, so each continuation pass ships:
 
@@ -1013,7 +932,8 @@ def sar_segmented(
 ) -> DataFrame:
     """Parabolic SAR without the per-symbol memory bound — bit-equal to
     ``with_recurrences(..., Rec(out, "sar", [high, low], ...))`` on
-    null-free input (operators/recurrence.py:398; asserted in
+    null-free input (``recurrence.sar``: one ``_sar_scan`` with SAREXT's
+    symmetric, offset-free, unsigned parameters; asserted in
     tests/test_segmented.py across segment AND checkpoint boundaries)."""
     p = _SarParams(
         0.0, 0.0,
@@ -1045,8 +965,8 @@ def sarext_segmented(
 ) -> DataFrame:
     """Extended parabolic SAR, segmented — bit-equal to
     ``with_recurrences(..., Rec(out, "sarext", [high, low], ...))`` on
-    null-free input (operators/recurrence.py:639). ``startvalue`` applies
-    only on segment 0, exactly as in the kernel."""
+    null-free input (``recurrence.sarext``, the same ``_sar_scan``).
+    ``startvalue`` applies only on segment 0, exactly as in the kernel."""
     p = _SarParams(
         startvalue, offsetonreverse,
         accelerationinitlong, accelerationlong, accelerationmaxlong,
@@ -1074,32 +994,19 @@ def ewma_q_segmented(
     segment_rows: int | str = 1_000_000,
 ) -> DataFrame:
     """INTEGER-LATTICE exponential scan (``recurrence._ewma_q``: every step
-    re-quantizes with floor(x + 0.5)), segmented. Bit-equal by the same
-    argument as ``ewma_segmented`` — a strict left fold resumed from its
-    carried accumulator replays identical ops — but here the argument is
-    even stronger: the carried state is an INTEGER (exact in a double up
-    to 2⁵³), so the continuation is engine- and segmentation-invariant by
+    re-quantizes with floor(x + 0.5)), segmented: a one-chain lattice
+    ``_fused_ewma_sweep``, so NaN/null inputs are skipped as the kernel's
+    ``_compact_apply`` skips them. Bit-equal by the same argument as
+    ``ewma_segmented`` — a strict left fold resumed from its carried
+    accumulator replays identical ops — but here the argument is even
+    stronger: the carried state is an INTEGER (exact in a double up to
+    2⁵³), so the continuation is engine- and segmentation-invariant by
     construction. Input must be integer-valued micro-units as doubles
     (floor(v·1e6 + 0.5)); output is integer-valued micro-units."""
-    a = float(alpha)
-    b = 1.0 - a
-
-    def scan(tbl, seed, halo_n):
-        vals = f64(tbl, x)
-        if seed is None or np.isnan(seed[0]):
-            res = _ewma_q(vals, a, seed_n)
-            return [res], [_last_valid(res)]
-        s = seed[0]
-        res = np.empty(vals.shape[0])
-        for i in range(vals.shape[0]):
-            s = math.floor(b * s + a * float(vals[i]) + 0.5)
-            res[i] = s
-        return [res], [s]
-
-    return _segmented_passes(
-        df, partition_by, order_by, segment_rows, seed_n, "seed_n",
-        [x], [out], 1, scan, carry=out,
-    )[0]
+    return _fused_ewma_sweep(
+        df, [x], [out], seed_n, alpha, partition_by, order_by, segment_rows,
+        lattice=True,
+    )
 
 
 def macd_q_segmented(
@@ -1117,50 +1024,74 @@ def macd_q_segmented(
 ) -> DataFrame:
     """Quantized MACD trio without the per-symbol memory bound — bit-equal
     to ``with_recurrences(..., Rec([...], "macd_q", [x], ...))`` on
-    null-free integer-micro-unit input (operators/recurrence.py:359;
+    integer-micro-unit input, NaN/null holes included (``recurrence.macd_q``;
     asserted in tests/test_segmented.py). MACDFIX is this with the fixed
-    12/26 legs. Composition: ``_macd_q``, with one more segmented
-    integer-lattice EMA as the signal leg."""
-    kw = dict(
-        partition_by=partition_by, order_by=order_by, segment_rows=segment_rows
+    12/26 legs.
+
+    One three-chain lattice sweep: the fast and slow EMAs of ``x``, and the
+    signal EMA of their difference, derived in-kernel — NaN while either
+    leg warms up, so the chain compacts it away exactly as the kernel's
+    ``_compact_apply`` compacts dif before its signal EMA. ``dif`` and
+    ``hist`` are then SQL differences of lattice integers, exact in
+    doubles."""
+    ps = [fast, slow, signal]
+    ch = _fused_ewma_sweep(
+        df, [x, x, lambda res: res[0] - res[1]], ["_efq", "_esq", dea_out], ps,
+        [2.0 / (q + 1) for q in ps], partition_by, order_by, segment_rows,
+        lattice=True,
+    )
+    dif = F.col("_efq") - F.col("_esq")
+    return ch.select(
+        *df.columns, dif.alias(dif_out), dea_out, (dif - F.col(dea_out)).alias(hist_out)
     )
 
-    def signal_leg(valid: DataFrame) -> DataFrame:
-        return ewma_q_segmented(
-            valid, dif_out, 2.0 / (signal + 1), signal, out=dea_out, **kw
-        )
 
-    return _macd_q(df, x, fast, slow, signal_leg, dif_out, dea_out, hist_out, kw)
-
-
-def _macd_q(
+def macdext_q_segmented(
     df: DataFrame,
-    x: str,
-    fast: int,
-    slow: int,
-    signal_leg,
-    dif_out: str,
-    dea_out: str,
-    hist_out: str,
-    kw: dict,
+    x: str = "_cm",
+    fast: int = 12,
+    slow: int = 26,
+    signal: int = 9,
+    dif_out: str = "macd_dif",
+    dea_out: str = "macd_dea",
+    hist_out: str = "macd_hist",
+    partition_by: str = "symbol",
+    order_by: str = "t",
+    segment_rows: int | str = 1_000_000,
 ) -> DataFrame:
-    """The quantized MACD shape shared by ``macd_q_segmented`` and
-    ``macdext_q_segmented``: two segmented integer-lattice EMA legs over
-    ``x`` build ``dif``, and ``signal_leg`` adds ``dea_out`` to the
-    dif-VALID rows only (the kernel's ``_compact_apply`` compacts the
-    warm-up NaN prefix before the signal — filtering reproduces that
-    compaction exactly, since on null-free input the invalid rows are a
-    contiguous per-symbol prefix); warm-up rows rejoin by union with a
-    NULL dea (no shuffle beyond the legs' own symbol-key exchanges).
-    Differences of lattice integers are exact in doubles."""
-    ch = ewma_q_segmented(df, x, 2.0 / (fast + 1), fast, out="_efq", **kw)
-    ch = ewma_q_segmented(ch, x, 2.0 / (slow + 1), slow, out="_esq", **kw)
-    ch = ch.withColumn(dif_out, F.col("_efq") - F.col("_esq")).drop("_efq", "_esq")
-    dea = signal_leg(ch.where(F.col(dif_out).isNotNull()))
-    warm = ch.where(F.col(dif_out).isNull()).withColumn(
-        dea_out, F.lit(None).cast("double")
+    """Quantized MACDEXT (EMA fast/slow legs + SMA signal — matypes 1/1/0,
+    the shape ``ind_macdext`` exercises), segmented. Bit-equal to
+    ``with_recurrences(..., Rec([...], "macdext_q", [x], ...))`` on
+    integer-micro-unit input (``recurrence.macdext_q``).
+
+    The EMA legs are one two-chain lattice sweep; ``dif`` is their SQL
+    difference (exact on lattice integers). The SMA signal leg needs no
+    segmentation at all: ``_sma_q`` is a BOUNDED trailing window
+    (``signal`` rows), which Spark's window exec evaluates with spill —
+    floor(avg + 0.5) over the dif-VALID rows reproduces the kernel's
+    compacted rolling mean exactly (integer sums are exact in doubles, the
+    divide and floor are single correctly-rounded ops)."""
+    ch = _fused_ewma_sweep(
+        df, [x, x], ["_efq", "_esq"], [fast, slow],
+        [2.0 / (fast + 1), 2.0 / (slow + 1)], partition_by, order_by,
+        segment_rows, lattice=True,
     )
-    return dea.unionByName(warm).withColumn(hist_out, F.col(dif_out) - F.col(dea_out))
+    ch = ch.withColumn(dif_out, F.col("_efq") - F.col("_esq")).drop("_efq", "_esq")
+    # partitioned on dif's validity too, the frame runs over the dif-VALID
+    # rows only, as the kernel's rolling mean runs on the compacted dif;
+    # the warm-up rows and the first signal - 1 valid rows get a NULL dea
+    valid = F.col(dif_out).isNotNull()
+    frame = (
+        Window.partitionBy(partition_by, valid)
+        .orderBy(order_by)
+        .rowsBetween(-(signal - 1), 0)
+    )
+    full = F.count(F.lit(1)).over(frame) == signal
+    sma = F.floor(F.avg(dif_out).over(frame) + F.lit(0.5))
+    dea = F.when(valid & full, sma).cast("double")  # floor gives a long
+    return ch.withColumn(dea_out, dea).withColumn(
+        hist_out, F.col(dif_out) - F.col(dea_out)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1233,43 +1164,3 @@ def backtest_segmented(
         .alias("n_wins"),
     )
     return out.join(totals.hint("merge"), partition_by, "left")
-
-
-def macdext_q_segmented(
-    df: DataFrame,
-    x: str = "_cm",
-    fast: int = 12,
-    slow: int = 26,
-    signal: int = 9,
-    dif_out: str = "macd_dif",
-    dea_out: str = "macd_dea",
-    hist_out: str = "macd_hist",
-    partition_by: str = "symbol",
-    order_by: str = "t",
-    segment_rows: int | str = 1_000_000,
-) -> DataFrame:
-    """Quantized MACDEXT (EMA fast/slow legs + SMA signal — matypes 1/1/0,
-    the shape ``ind_macdext`` exercises), segmented. Bit-equal to
-    ``with_recurrences(..., Rec([...], "macdext_q", [x], ...))`` on
-    null-free integer-micro-unit input (operators/recurrence.py:376).
-
-    The EMA legs are ``macd_q_segmented``'s (``_macd_q``). The SMA signal
-    leg needs no segmentation at all:
-    ``_sma_q`` is a BOUNDED trailing window (``signal`` rows), which Spark's
-    window exec evaluates with spill — floor(avg + 0.5) over dif-valid rows
-    reproduces the kernel's compacted rolling mean exactly (integer sums are
-    exact in doubles, the divide and floor are single correctly-rounded
-    ops)."""
-    kw = dict(
-        partition_by=partition_by, order_by=order_by, segment_rows=segment_rows
-    )
-    w = Window.partitionBy(partition_by).orderBy(order_by)
-
-    def signal_leg(valid: DataFrame) -> DataFrame:
-        # the window ranks over dif-VALID rows only, as the kernel's
-        # rolling mean runs on the compacted dif
-        nv = F.count(F.lit(1)).over(w.rowsBetween(Window.unboundedPreceding, 0))
-        sma = F.floor(F.avg(dif_out).over(w.rowsBetween(-(signal - 1), 0)) + F.lit(0.5))
-        return valid.withColumn(dea_out, F.when(nv >= signal, sma))
-
-    return _macd_q(df, x, fast, slow, signal_leg, dif_out, dea_out, hist_out, kw)

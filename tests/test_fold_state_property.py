@@ -17,7 +17,12 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from polars_quant_spark.backtest.vectorized import BacktestParams, _fold_state
-from polars_quant_spark.operators.segmented import _SarParams, _sar_scan
+from polars_quant_spark.operators.recurrence import (
+    _SarParams,
+    _ewma_q_resume,
+    _kama_tail,
+    _sar_scan,
+)
 
 
 @given(
@@ -47,6 +52,46 @@ def test_sar_scan_segmentation_invariant(seed, n, ext, sv):
     glued = np.concatenate([first, second[2:]])
     np.testing.assert_array_equal(whole, glued)
     assert st_whole == st2
+
+
+@given(
+    seed=st.integers(0, 2**32 - 1),
+    p=st.integers(1, 12),
+    extra=st.integers(1, 200),
+    flat=st.booleans(),
+)
+@settings(max_examples=150, deadline=None)
+def test_kama_tail_segmentation_invariant(seed, p, extra, flat):
+    rng = np.random.default_rng(seed)
+    n = p + 1 + extra
+    v = 100 + np.cumsum(rng.normal(0, 1, n))
+    if flat:  # zero-volatility windows (ER 0) and repeated values
+        v = np.round(v / 4)
+    k0 = float(np.cumsum(v[:p])[-1]) / p
+    whole = _kama_tail(v, p, k0)
+    cut = int(rng.integers(p + 1, n))  # both pieces emit at least one row
+    first = _kama_tail(v[:cut], p, k0)
+    # the continuation's first p rows are the halo: the previous p values
+    second = _kama_tail(v[cut - p :], p, first[-1])
+    np.testing.assert_array_equal(whole, np.concatenate([first, second]))
+
+
+@given(
+    seed=st.integers(0, 2**32 - 1),
+    n=st.integers(0, 200),
+    p=st.integers(1, 30),
+)
+@settings(max_examples=150, deadline=None)
+def test_ewma_q_resume_segmentation_invariant(seed, n, p):
+    rng = np.random.default_rng(seed)
+    m = np.floor((100 + np.cumsum(rng.normal(0, 1, n))) * 1e6 + 0.5)
+    alpha = 2.0 / (p + 1)
+    s0 = float(np.floor(100 * 1e6 + 0.5))
+    whole = _ewma_q_resume(s0, m, alpha)
+    cut = int(rng.integers(0, n + 1))
+    first = _ewma_q_resume(s0, m[:cut], alpha)
+    second = _ewma_q_resume(first[-1] if cut else s0, m[cut:], alpha)
+    np.testing.assert_array_equal(whole, np.concatenate([first, second]))
 
 
 @given(

@@ -580,17 +580,25 @@ def test_segment_rows_validated_before_any_job(spark, tall_df):
     _segmented_base (ADVICE r12) — previously 0 surfaced as
     ZeroDivisionError, and only after paying the checkpoint + max(_rn)
     action. An int below the operator's minimum segment (p, p + 1, 2) is
-    rejected there too, so no case submits a Spark job."""
+    rejected there too, so no case submits a Spark job — the quantized
+    MACD operators included, whose slow leg (26) does not fit a 20-row
+    segment though the fast leg (12) does."""
     import uuid
 
     import pytest as _pytest
 
     from polars_quant_spark.operators.segmented import ewma_segmented as es
-    from polars_quant_spark.operators.segmented import kama_segmented, sar_segmented
+    from polars_quant_spark.operators.segmented import (
+        kama_segmented,
+        macd_q_segmented,
+        macdext_q_segmented,
+        sar_segmented,
+    )
 
     hl = tall_df.withColumn("high", F.col("close") * 1.01).withColumn(
         "low", F.col("close") * 0.99
     )
+    qb = _every_input(tall_df)
     calls = [
         lambda bad=bad: es(tall_df, "close", 5, out="e", segment_rows=bad)
         for bad in (0, -5, 2.5, "autox", True)
@@ -598,6 +606,8 @@ def test_segment_rows_validated_before_any_job(spark, tall_df):
         lambda: es(tall_df, "close", 20, out="e", segment_rows=10),
         lambda: kama_segmented(tall_df, "close", p=10, segment_rows=10),
         lambda: sar_segmented(hl, segment_rows=1),
+        lambda: macd_q_segmented(qb, "_cm", segment_rows=20),
+        lambda: macdext_q_segmented(qb, "_cm", segment_rows=20),
     ]
     sc = spark.sparkContext
     group = f"segment-rows-{uuid.uuid4().hex}"
@@ -610,6 +620,37 @@ def test_segment_rows_validated_before_any_job(spark, tall_df):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", prev)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_quantized_macd_builds_one_base(spark, tall_df):
+    """Building ``macd_q_segmented`` or ``macdext_q_segmented`` submits the
+    Spark jobs of ONE ``ewma_segmented`` build on the same frame: every
+    leg shares one base checkpoint and one max(_rn) action, and nothing
+    else runs before an action on the result."""
+    import uuid
+
+    qb = _every_input(tall_df)
+    sc = spark.sparkContext
+
+    def jobs_of(build) -> int:
+        group = f"macd-q-build-{uuid.uuid4().hex}"
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def ewma():
+        return ewma_segmented(qb, "_cm", 12, segment_rows=700)
+
+    ewma()  # one-off upstream jobs, if any, are paid outside the counts
+    one = jobs_of(ewma)
+    assert one >= 1
+    assert jobs_of(lambda: seg.macd_q_segmented(qb, segment_rows=700)) == one
+    assert jobs_of(lambda: seg.macdext_q_segmented(qb, segment_rows=700)) == one
 
 
 def test_auto_backtest_mixed_corpus_split(spark, tall_df):
@@ -739,15 +780,20 @@ def test_segmented_bit_equal_to_kernels_per_group(spark):
     ``KERNELS`` run locally on the whole sorted symbol — produces, values
     and NULL positions, for the single-chain sweep (ewma_segmented, also
     on input with NaN holes, which it skips as the kernel's
-    ``_compact_apply`` does), the
+    ``_compact_apply`` does), the integer-lattice sweeps on the same
+    holes (ewma_q_segmented against ``_compact_apply(_ewma_q)``, and the
+    quantized MACD/MACDEXT trios against their kernels), the
     fused multi-chain sweep with a derived chain (adx_family_segmented →
     _fused_ewma_sweep's str/index/callable source forms), and the fused
     family sweep (indicator_family_segmented) with ATR sharing ADX's TR
     chain (atr_p == adx_p) and on its own chain (atr_p != adx_p)."""
-    from polars_quant_spark.operators.recurrence import KERNELS
+    from polars_quant_spark.operators.recurrence import KERNELS, _compact_apply, _ewma_q
     from polars_quant_spark.operators.segmented import (
         adx_family_segmented,
+        ewma_q_segmented,
         indicator_family_segmented,
+        macd_q_segmented,
+        macdext_q_segmented,
     )
     from tests.group_spec import assert_matches_group_spec
 
@@ -785,6 +831,23 @@ def test_segmented_bit_equal_to_kernels_per_group(spark):
         alpha=1.0 / 14, out="e", segment_rows=300,
     ).select("symbol", "t", "e").collect()
     assert_matches_group_spec(nan_pdf, rows, ["e"], lambda g: {"e": rma(g)}, nan_is_null=True)
+
+    cm_pdf = nan_pdf.assign(cm=np.floor(nan_pdf["close"] * 1e6 + 0.5))
+    cm_df = spark.createDataFrame(cm_pdf).select("symbol", "t", "cm")
+    rows = ewma_q_segmented(
+        cm_df, "cm", 2.0 / 13.0, 12, out="v", segment_rows=300
+    ).select("symbol", "t", "v").collect()
+    ema_q = lambda g: _compact_apply(lambda v: _ewma_q(v, 2.0 / 13.0, 12), g["cm"].to_numpy())
+    assert_matches_group_spec(cm_pdf, rows, ["v"], lambda g: {"v": ema_q(g)}, nan_is_null=True)
+    trio = ["d", "s", "h"]
+    for op, name in ((macd_q_segmented, "macd_q"), (macdext_q_segmented, "macdext_q")):
+        rows = op(
+            cm_df, "cm", dif_out="d", dea_out="s", hist_out="h", segment_rows=300
+        ).select("symbol", "t", *trio).collect()
+        spec = kernel(name, "cm")
+        assert_matches_group_spec(
+            cm_pdf, rows, trio, lambda g: dict(zip(trio, spec(g))), nan_is_null=True
+        )
 
     cols = ["plus_dm", "minus_dm", "plus_di", "minus_di", "dx", "adx", "adxr"]
     hlc = ("high", "low", "close")
@@ -907,6 +970,34 @@ def test_fused_sweep_nan_accumulator_after_seed_propagates(spark):
         .collect()
     )
     _bit_equal(whole, segd, "v")
+
+
+def test_fused_sweep_infinite_seed_row_matches_kernel(spark):
+    """An SMA seed whose mean is +inf (an inf inside the seed window) is
+    missing to pandas' ewm, so the kernel's seed row is NaN and its tail
+    restarts at the next finite value. The sweep must emit the same NULL
+    on that row, not the inf, or the next chained EMA seeds on it: DEMA's
+    second chain would sum the inf into its own seed."""
+    from polars_quant_spark.operators.segmented import dema_segmented
+
+    n = 20
+    close = np.arange(5.0, 5.0 + n)
+    close[1] = np.inf  # seed window rows 0-2 (p=3) has mean +inf
+    df = spark.createDataFrame(
+        pd.DataFrame({"symbol": "X", "t": np.arange(n), "close": close})
+    )
+    whole = (
+        with_recurrences(df, [Rec("v", "dema", ["close"], {"p": 3})])
+        .select("symbol", "t", "v")
+        .collect()
+    )
+    segd = (
+        dema_segmented(df, "close", p=3, out="v", segment_rows=5)
+        .select("symbol", "t", "v")
+        .collect()
+    )
+    _bit_equal(whole, segd, "v")
+    assert sum(r["v"] is not None for r in segd) > 10
 
 
 def test_indicator_family_segmented_bit_equal_to_per_op(spark, tall_df):
