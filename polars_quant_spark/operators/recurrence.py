@@ -49,8 +49,10 @@ from polars_quant_spark.operators.arrow_group import f64, sort_rows
 # Each recurrence's per-step arithmetic lives in ONE resumable function
 # (``_ewm_resume``, ``_ewma_q_resume``, ``_kama_tail``, ``_sar_scan``): the
 # kernel runs it after its own seeding, and the segmented operators
-# (operators/segmented.py) resume it from a carried state — a strict left
-# fold cut and resumed replays identical float ops in identical order.
+# (operators/segmented.py) and streaming operators (streaming/stateful.py)
+# resume it from a carried state (an SMA-seeded EMA chain through
+# ``_ewm_chain``, which carries the seed sum too) — a strict left fold cut
+# and resumed replays identical float ops in identical order.
 # ---------------------------------------------------------------------------
 
 
@@ -388,6 +390,47 @@ def _ewma_q_resume(s: float, vals: np.ndarray, alpha: float) -> np.ndarray:
     return out
 
 
+def _ewm_chain(
+    state: tuple, x: np.ndarray, p: int, alpha: float, lattice: bool = False
+) -> tuple[np.ndarray, tuple]:
+    """One SMA-seeded exponential chain over ``x``, resumed from the carry
+    ``state`` = (seen, psum, e) — (0, 0.0, NaN) for a fresh chain — and
+    returning one output per row plus the carry for the next piece.
+
+    NaN inputs are skipped and emit NaN, as ``_compact_apply`` does. While
+    ``seen < p`` the valid values add into the SMA sum ``psum`` (np.cumsum
+    seeded by prepending the carried partial sum replays the identical
+    left-to-right adds; a fresh sum never prepends the 0.0, because
+    0.0 + −0.0 is +0.0); the p-th value emits the seed (``_ewm_seed``), and
+    the tail is ``_ewm_resume`` from ``e``. With ``lattice`` the seed is
+    floor(psum/p + 0.5) and the tail ``_ewma_q_resume``.
+
+    Cutting ``x`` anywhere and handing the returned state across yields the
+    bits of ``ema``/``rma`` (or ``_compact_apply(_ewma_q)``) on the whole
+    series: the segmented sweep and the streaming EMA run this once per
+    chain per piece. Warm-up is ``seen < p``, not ``isnan(e)``: a chain
+    whose accumulator went NaN after seeding (±inf inputs) resumes the
+    NaN-seeded ewm as the whole-series kernel does instead of re-seeding."""
+    seen, psum, e = state
+    out = np.full(x.shape[0], np.nan)
+    pos = np.flatnonzero(~np.isnan(x))
+    w = x[pos]
+    if seen < p:
+        k = min(len(w), int(p - seen))
+        if k:
+            head = np.concatenate(([psum], w[:k])) if seen else w[:k]
+            psum, seen = float(np.cumsum(head)[-1]), seen + k
+            if seen == p:
+                e = math.floor(psum / p + 0.5) if lattice else psum / p
+                out[pos[k - 1]] = _ewm_seed(e)
+        pos, w = pos[k:], w[k:]
+    if len(w):
+        r = (_ewma_q_resume if lattice else _ewm_resume)(e, w, alpha)
+        out[pos] = r
+        e = float(r[-1])
+    return out, (seen, psum, e)
+
+
 def _sma_q(m: np.ndarray, p: int) -> np.ndarray:
     """Quantized trailing mean over integer micro-units: floor(sum/p + 0.5).
     The rolling sum of integers is exact in double, the division and floor
@@ -642,7 +685,24 @@ def with_recurrences(
 
     A later spec may consume an earlier spec's output column: the append
     makes it visible to the next spec's input extraction. Rows sort stably
-    by ``order_by`` (see ``arrow_group.sort_rows`` for the tie caveat)."""
+    by ``order_by`` (see ``arrow_group.sort_rows`` for the tie caveat).
+
+    Raises ValueError before any Spark job for an unknown kernel, an input
+    column count other than the kernel's registered arity, or an input
+    column that is neither in ``df`` nor an earlier spec's output."""
+    seen = set(df.columns)
+    for s in specs:
+        if s.kernel not in KERNELS:
+            raise ValueError(f"unknown recurrence kernel {s.kernel!r}")
+        arity = KERNELS[s.kernel][1]
+        if len(s.cols) != arity:
+            raise ValueError(
+                f"kernel {s.kernel!r} takes {arity} input column(s), got {s.cols}"
+            )
+        missing = [c for c in s.cols if c not in seen]
+        if missing:
+            raise ValueError(f"kernel {s.kernel!r} input column(s) {missing} not found")
+        seen.update(s.out_cols)
     keys = [partition_by] if isinstance(partition_by, str) else list(partition_by)
     order = [order_by] if isinstance(order_by, str) else list(order_by)
     schema = StructType(

@@ -21,11 +21,11 @@ module doc). The operators here remove that bound while staying
   chain is one lazy DAG;
 * each operator supplies only its numpy scan: segment 0 runs the kernel's
   own seeding, continuation segments resume from the carried state with
-  the kernel's own per-step function (``recurrence._ewm_resume``,
-  ``_ewma_q_resume``, ``_kama_tail``, ``_sar_scan``). Every EMA/Wilder
-  operator (EMA, RMA, RSI, ATR, DMI/ADX, DEMA, TEMA, T3) is one
-  ``_fused_ewma_sweep``, and so is every integer-lattice one (the
-  quantized EMA, and the quantized MACD and MACDEXT EMA legs).
+  the kernel's own per-step function (``recurrence._ewm_chain``,
+  ``_kama_tail``, ``_sar_scan``). Every EMA/Wilder operator (EMA, RMA,
+  RSI, ATR, DMI/ADX, DEMA, TEMA, T3) is one ``_fused_ewma_sweep``, and so
+  is every integer-lattice one (the quantized EMA, and the quantized MACD
+  and MACDEXT EMA legs).
 
 Exactness argument: an exponential scan is a strict left fold; cutting the
 fold and resuming from the carried accumulator replays identical float ops
@@ -51,8 +51,6 @@ result inside ``session.released(spark)`` (ADVICE r10).
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -64,9 +62,7 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from polars_quant_spark.operators.arrow_group import f64, flags, sort_rows
 from polars_quant_spark.operators.recurrence import (
     _SarParams,
-    _ewm_resume,
-    _ewm_seed,
-    _ewma_q_resume,
+    _ewm_chain,
     _kama_tail,
     _sar_scan,
     kama,
@@ -369,18 +365,12 @@ def _fused_ewma_sweep(
     is what lets Wilder α=1/p chains run next to EMA α=2/(p+1) chains
     (``indicator_family_segmented``).
 
-    Exactness: each chain carries (seen, psum, e) across segments —
-
-    * ``(seen, psum)`` while it is still inside its SMA warm-up:
-      ``np.cumsum`` seeded by prepending the carried partial sum replays
-      the identical left-to-right adds, so a seed window spanning a
-      segment boundary sums in the unsegmented order;
-    * the accumulator ``e`` once seeded — the ewm tail resumes from it
-      (the module's exactness argument).
-
-    The carry makes the fold independent of WHERE the segment cuts fall,
-    so rows whose inputs are NaN can stay in the segmentation, and chains
-    derived from other chains reuse the base segmentation."""
+    Exactness: each chain is ``recurrence._ewm_chain``, which carries
+    (seen, psum, e) across segments — the partial SMA sum while the chain
+    is inside its warm-up, the ewm accumulator once seeded — and is
+    bit-equal to the whole-series kernel wherever the cuts fall. So rows
+    whose inputs are NaN can stay in the segmentation, and chains derived
+    from other chains reuse the base segmentation."""
     depth = len(outs)
     ps = list(p) if isinstance(p, (list, tuple)) else [int(p)] * depth
     alphas = (
@@ -389,13 +379,6 @@ def _fused_ewma_sweep(
     if len(ps) != depth or len(alphas) != depth:
         raise ValueError("per-chain p/alpha lists must match len(outs)")
     in_cols = sorted({s for s in srcs if isinstance(s, str)})
-    resume = _ewma_q_resume if lattice else _ewm_resume
-
-    def seed_sum(psum: float, seen: float, w: np.ndarray) -> float:
-        # a fresh sum must not prepend the 0.0 carry: 0.0 + -0.0 is +0.0
-        if seen:
-            return float(np.cumsum(np.concatenate(([psum], w)))[-1])
-        return float(np.cumsum(w)[-1])
 
     def scan(tbl, seed, halo_n):
         # resume state per chain: [seen, psum, e]
@@ -406,29 +389,9 @@ def _fused_ewma_sweep(
                 cur = f64(tbl, s)
             else:
                 cur = s(res) if callable(s) else res[s]
-            seen, psum, e = st[3 * i : 3 * i + 3]
-            out = np.full(tbl.num_rows, np.nan)
-            pos = np.flatnonzero(~np.isnan(cur))
-            w = cur[pos]
-            # warm-up is `seen < p`, NOT `isnan(e)`: a chain whose
-            # accumulator went NaN AFTER seeding (inf/degenerate inputs
-            # propagating through the ewm) must resume — the NaN-seeded ewm
-            # restarts at the next valid value exactly like the kernel's
-            # one continuous ewm does after an interior NaN — instead of
-            # re-seeding from a bogus psum/p on the segment's last row.
-            if seen < p_i:
-                k = min(len(w), int(p_i - seen))
-                if k:
-                    psum, seen = seed_sum(psum, seen, w[:k]), seen + k
-                    if seen == p_i:
-                        e = math.floor(psum / p_i + 0.5) if lattice else psum / p_i
-                        out[pos[k - 1]] = _ewm_seed(e)
-                pos, w = pos[k:], w[k:]
-            if len(w):
-                r = resume(e, w, a_i)
-                out[pos] = r
-                e = float(r[-1])
-            st[3 * i : 3 * i + 3] = seen, psum, e
+            out, st[3 * i : 3 * i + 3] = _ewm_chain(
+                st[3 * i : 3 * i + 3], cur, p_i, a_i, lattice
+            )
             res.append(out)
         return res, st
 

@@ -17,6 +17,7 @@ from polars_quant_spark.oracle import floor_rounds as _fr_seq
 from polars_quant_spark.oracle import recursive_with
 from polars_quant_spark.queries import ORACLES, QUERIES, merge_micros, micros, q, units
 from polars_quant_spark.sources.bars import BARS_CTE, bars, load_table
+from polars_quant_spark.streaming.windows import run_available_now
 
 _TOKS = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '')"
 
@@ -2126,10 +2127,6 @@ def events_props_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stateful operator itself passes the oracle gate, not just a batch stand-in.
 # ---------------------------------------------------------------------------
 
-import itertools as _it
-
-_STREAM_SEQ = _it.count()
-
 
 def _ema_stream_oracle() -> str:
     from polars_quant_spark.oracle import ema_ctes, recursive_with
@@ -2157,16 +2154,7 @@ def stream_ema_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(300.0) + F.col("value").cast("double") / F.lit(10.0)).alias("close"),
     )
     out = streaming_ema(inp, p=20)
-    name = f"pqs_stream_ema_{next(_STREAM_SEQ)}"
-    sq = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    sq.awaitTermination()
-    return spark.table(name).select(
+    return run_available_now(out, "pqs_stream_ema").select(
         "symbol", "ts_us", r6(F.col("ema")).alias("ema_20")
     )
 
@@ -2214,8 +2202,10 @@ def stream_position_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming long-flat position fold (the vectorized backtester's state
     machine as a stateful streaming operator), drained with availableNow and
     checked against a recursive-CTE fold twin. Signals are row-wise
-    (value thresholds), so the stream needs no windows; the kernel's
-    float(int(cash/px)) equals the twin's FLOOR for positive operands."""
+    (value thresholds), so the stream needs no windows; the zero-cost
+    fold buys floor(cash/px) shares, the twin's FLOOR, on positive closes
+    (one fewer only where that many shares would cost more than cash in
+    double rounding)."""
     from polars_quant_spark.streaming.stateful import streaming_position
     from polars_quant_spark.streaming.windows import read_events_stream
 
@@ -2228,16 +2218,7 @@ def stream_position_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("value") < 100.0).alias("sell"),
     )
     out = streaming_position(inp, initial_capital=100_000.0)
-    name = f"pqs_stream_pos_{next(_STREAM_SEQ)}"
-    sq = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    sq.awaitTermination()
-    return spark.table(name).select(
+    return run_available_now(out, "pqs_stream_pos").select(
         "symbol",
         "ts_us",
         r6(F.col("position")).alias("position"),
@@ -2287,16 +2268,7 @@ def stream_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = interval_join(
         purchases, clicks, "user_id", "p_time", "c_time", lookback="3 days"
     )
-    name = f"pqs_stream_attr_{next(_STREAM_SEQ)}"
-    sq = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    sq.awaitTermination()
-    return spark.table(name).select(
+    return run_available_now(out, "pqs_stream_attr").select(
         "purchase_id",
         "click_id",
         "user_id",
@@ -3079,16 +3051,7 @@ def stream_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", "doc_id", text.token_count("text").cast("long").alias("n_tokens")
     )
     out = streaming_source_quota(inp, budget=20_000)
-    name = f"pqs_stream_quota_{next(_STREAM_SEQ)}"
-    sq = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    sq.awaitTermination()
-    return spark.table(name)
+    return run_available_now(out, "pqs_stream_quota")
 
 
 # ---------------------------------------------------------------------------
@@ -3636,19 +3599,9 @@ def stream_ohlcv_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = read_events_stream(spark, sf_dir)
     out = streaming_ohlcv(ev, window="1 hour", watermark="2 hours")
-    name = f"pqs_stream_ohlcv_{next(_STREAM_SEQ)}"
     # complete mode: append would hold back the windows still inside the
     # watermark horizon at end-of-stream (the drain is a finite replay)
-    sq = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    sq.awaitTermination()
-    t = spark.table(name)
-    return t.select(
+    return run_available_now(out, "pqs_stream_ohlcv", "complete").select(
         F.unix_micros(F.col("window_start")).alias("win_start_us"),
         "symbol",
         r6(F.col("open")).alias("open"),
@@ -4556,17 +4509,7 @@ def stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").cast("double").alias("value"),
     )
     out = streaming_zscore(inp, window=50, threshold=3.0)
-    name = f"pqs_stream_zs_{next(_STREAM_SEQ)}"
-    sq = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    sq.awaitTermination()
-    t = spark.table(name)
-    return t.select(
+    return run_available_now(out, "pqs_stream_zs").select(
         "event_type", "event_id", r6(F.col("value")).alias("value"), r6(F.col("z")).alias("z")
     )
 
@@ -5673,18 +5616,9 @@ def stream_cdc_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").cast("double").alias("value"),
     )
     out = streaming_latest_compact(inp)
-    name = f"pqs_stream_cdc_{next(_STREAM_SEQ)}"
-    sq = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    sq.awaitTermination()
-    t = spark.table(name)
     return (
-        t.groupBy("user_id")
+        run_available_now(out, "pqs_stream_cdc")
+        .groupBy("user_id")
         .agg(
             F.max_by(
                 F.struct("last_ts_us", "last_event_type", "last_value"),

@@ -1,33 +1,69 @@
 """Custom stateful streaming operators via applyInPandasWithState.
 
 The reference's sequential backtester is "the natural streaming candidate
-(stateful per-key fold)" (SURVEY §2.7). These operators carry per-key state
-across micro-batches:
+(stateful per-key fold)" (SURVEY §2.7). A micro-batch is one more split of
+the frame, so these operators carry per-key state across micro-batches and
+the folds that have a batch kernel resume that kernel's own step from it:
 
-* ``streaming_ema`` — per-symbol EMA whose state (last smoothed value +
-  warm-up buffer) survives batch boundaries; the streaming twin of the batch
-  recurrence runner.
-* ``streaming_position`` — per-symbol long-flat position fold (the
-  vectorized backtester's state machine) over a signal stream.
+* ``streaming_ema`` — state (seen, psum, e), the carry of
+  ``recurrence._ewm_chain``, the step the segmented EMA sweep resumes;
+* ``streaming_position`` — state the 9-scalar ``vectorized.FoldState`` of
+  ``vectorized._fold_state``, the carry ``backtest_segmented`` resumes;
+* ``streaming_source_quota`` — state the running token total;
+* ``streaming_zscore`` — state the last window−1 micro-quantized values;
+* ``streaming_latest_compact`` — state the winning change row.
 
-State is a tiny tuple per key, stored in the state store — size is bounded
-by key cardinality, not stream length.
+Every operator is one ``_keyed_fold``. State is a tiny tuple per key,
+stored in the state store — size is bounded by key cardinality, not
+stream length.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
+    ArrayType,
     DoubleType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from polars_quant_spark.backtest.vectorized import BacktestParams, _fold_state
+from polars_quant_spark.operators.recurrence import _ewm_chain
+
+
+def _keyed_fold(
+    df: DataFrame,
+    key: str,
+    fold: Callable[..., Iterator[pd.DataFrame]],
+    init: tuple | None,
+    out: StructType,
+    state: StructType,
+) -> DataFrame:
+    """``df.groupBy(key).applyInPandasWithState`` over one generator
+    ``fold(key_value, pdfs, carry)``: it yields the output frames of a
+    key's micro-batch and returns the carry to store as the key's state.
+    ``carry`` is the stored state, or ``init`` for a key not seen yet."""
+
+    def fn(k, pdfs, st):
+        carry = yield from fold(k[0], pdfs, tuple(st.get) if st.exists else init)
+        st.update(carry)
+
+    return df.groupBy(key).applyInPandasWithState(
+        fn,
+        outputStructType=out,
+        stateStructType=state,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
 
 EMA_OUT = StructType(
     [
@@ -38,7 +74,7 @@ EMA_OUT = StructType(
     ]
 )
 
-# state: (n_seen, warmup_sum, ema_value)
+# state: the _ewm_chain carry (seen, psum, e)
 EMA_STATE = StructType(
     [
         StructField("n", LongType()),
@@ -48,56 +84,25 @@ EMA_STATE = StructType(
 )
 
 
-def _ema_fn(p: int):
+def streaming_ema(events: DataFrame, p: int = 20) -> DataFrame:
+    """Per-symbol streaming EMA (α = 2/(p+1), SMA-seeded), bit-equal to
+    ``recurrence.ema`` over the whole stream however it is cut into
+    micro-batches: each micro-batch, sorted by ``ts_us``, runs
+    ``recurrence._ewm_chain`` from the carried (seen, psum, e). NaN/null
+    closes are skipped and emit null, as the kernel's ``_compact_apply``
+    does. Input needs (symbol, ts_us, close) columns."""
+    if isinstance(p, bool) or not isinstance(p, int) or p < 1:
+        raise ValueError(f"p must be an int >= 1, got {p!r}")
     alpha = 2.0 / (p + 1)
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (symbol,) = key
-        if state.exists:
-            n, acc, e = state.get
-        else:
-            n, acc, e = 0, 0.0, float("nan")
+    def fold(symbol, pdfs, carry):
         for pdf in pdfs:
-            pdf = pdf.sort_values(["ts_us"])
-            out_ema = []
-            for px in pdf["close"]:
-                n += 1
-                if n < p:
-                    acc += px
-                    out_ema.append(None)
-                elif n == p:
-                    acc += px
-                    e = acc / p
-                    out_ema.append(e)
-                else:
-                    e = e + alpha * (px - e)
-                    out_ema.append(e)
-            yield pd.DataFrame(
-                {
-                    "symbol": symbol,
-                    "ts_us": pdf["ts_us"],
-                    "close": pdf["close"],
-                    "ema": out_ema,
-                }
-            )
-        state.update((n, acc, e if e == e else 0.0))
+            pdf = pdf.sort_values("ts_us")
+            ema, carry = _ewm_chain(carry, pdf["close"].to_numpy("float64"), p, alpha)
+            yield pdf[["symbol", "ts_us", "close"]].assign(ema=ema)
+        return carry
 
-    return fn
-
-
-def streaming_ema(events: DataFrame, p: int = 20) -> DataFrame:
-    """Per-symbol streaming EMA with SMA seeding — identical semantics to the
-    batch kernel, state carried across micro-batches. Input needs
-    (symbol, ts_us, close) columns."""
-    return events.groupBy("symbol").applyInPandasWithState(
-        _ema_fn(p),
-        outputStructType=EMA_OUT,
-        stateStructType=EMA_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_fold(events, "symbol", fold, (0, 0.0, np.nan), EMA_OUT, EMA_STATE)
 
 
 POS_OUT = StructType(
@@ -110,55 +115,48 @@ POS_OUT = StructType(
     ]
 )
 
+# state: vectorized.FoldState
 POS_STATE = StructType(
     [
-        StructField("position", DoubleType()),
-        StructField("cash", DoubleType()),
+        *[
+            StructField(f, DoubleType())
+            for f in ("position", "cash", "peak", "entry_cost", "entry_px", "last_price")
+        ],
+        StructField("trades", LongType()),
+        StructField("wins", LongType()),
+        StructField("hwm", DoubleType()),
     ]
 )
 
 
-def _position_fn(initial_capital: float):
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (symbol,) = key
-        pos, cash = state.get if state.exists else (0.0, initial_capital)
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts_us"])
-            out = {"ts_us": [], "position": [], "cash": [], "equity": []}
-            for _, row in pdf.iterrows():
-                px = float(row["close"])
-                if px > 0:
-                    if bool(row["sell"]) and pos > 0:
-                        cash += pos * px
-                        pos = 0.0
-                    elif bool(row["buy"]) and pos == 0:
-                        shares = float(int(cash / px))
-                        if shares > 0:
-                            cash -= shares * px
-                            pos = shares
-                out["ts_us"].append(row["ts_us"])
-                out["position"].append(pos)
-                out["cash"].append(cash)
-                out["equity"].append(cash + pos * px)
-            yield pd.DataFrame({"symbol": symbol, **out})
-        state.update((pos, cash))
-
-    return fn
-
-
 def streaming_position(signals: DataFrame, initial_capital: float = 100_000.0) -> DataFrame:
     """Long-flat position fold over a streaming signal frame
-    (symbol, ts_us, close, buy, sell) — the streaming variant of the
-    vectorized backtester's state machine (zero-cost config)."""
-    return signals.groupBy("symbol").applyInPandasWithState(
-        _position_fn(initial_capital),
-        outputStructType=POS_OUT,
-        stateStructType=POS_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    (symbol, ts_us, close, buy, sell): ``vectorized._fold_state`` with
+    zero commissions, resumed per micro-batch (sorted by ``ts_us``) from
+    the carried ``FoldState``, so the output is bit-equal to the batch
+    fold over the whole stream. NaN and non-positive closes are frozen
+    bars, marked at the last valid price; null signals are False."""
+    params = BacktestParams(
+        initial_capital,
+        buy_commission_rate=0.0,
+        sell_commission_rate=0.0,
+        min_commission=0.0,
     )
+
+    def fold(symbol, pdfs, carry):
+        for pdf in pdfs:
+            pdf = pdf.sort_values("ts_us")
+            pos, cash, equity, _, carry = _fold_state(
+                pdf["close"].to_numpy("float64"),
+                pdf["buy"].eq(True).to_numpy(),
+                pdf["sell"].eq(True).to_numpy(),
+                params,
+                carry,
+            )
+            yield pdf[["symbol", "ts_us"]].assign(position=pos, cash=cash, equity=equity)
+        return carry
+
+    return _keyed_fold(signals, "symbol", fold, None, POS_OUT, POS_STATE)
 
 
 # ---------------------------------------------------------------------------
@@ -178,33 +176,6 @@ QUOTA_OUT = StructType(
 QUOTA_STATE = StructType([StructField("cum", LongType())])
 
 
-def _quota_fn(budget: int):
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (source,) = key
-        cum = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values("doc_id")
-            run = pdf["n_tokens"].astype("int64").cumsum() + cum
-            cum = int(run.iloc[-1])
-            keep = run <= budget
-            if keep.any():
-                yield pd.DataFrame(
-                    {
-                        "source": source,
-                        "doc_id": pdf["doc_id"][keep].astype("int64"),
-                        "n_tokens": pdf["n_tokens"][keep].astype("int64"),
-                        "cum_tokens": run[keep].astype("int64"),
-                    }
-                )
-        state.update((cum,))
-
-    return fn
-
-
 def streaming_source_quota(docs: DataFrame, budget: int = 10_000) -> DataFrame:
     """Streaming per-source token-budget admission — the ingest-side quota
     that caps any one source's contribution to a training corpus (the
@@ -221,20 +192,33 @@ def streaming_source_quota(docs: DataFrame, budget: int = 10_000) -> DataFrame:
     operator (ValueState per key, TTL, timers); this runtime lacks its
     protobuf dependency, so the op rides applyInPandasWithState — same
     state contract, same output."""
-    return docs.groupBy("source").applyInPandasWithState(
-        _quota_fn(budget),
-        outputStructType=QUOTA_OUT,
-        stateStructType=QUOTA_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+
+    def fold(source, pdfs, carry):
+        (cum,) = carry
+        for pdf in pdfs:
+            if len(pdf) == 0:
+                continue
+            pdf = pdf.sort_values("doc_id")
+            run = pdf["n_tokens"].astype("int64").cumsum() + cum
+            cum = int(run.iloc[-1])
+            keep = run <= budget
+            if keep.any():
+                yield pd.DataFrame(
+                    {
+                        "source": source,
+                        "doc_id": pdf["doc_id"][keep].astype("int64"),
+                        "n_tokens": pdf["n_tokens"][keep].astype("int64"),
+                        "cum_tokens": run[keep].astype("int64"),
+                    }
+                )
+        return (cum,)
+
+    return _keyed_fold(docs, "source", fold, (0,), QUOTA_OUT, QUOTA_STATE)
 
 
 # ---------------------------------------------------------------------------
 # Streaming rolling z-score anomaly detector (bounded per-key buffer)
 # ---------------------------------------------------------------------------
-
-from pyspark.sql.types import ArrayType  # noqa: E402
 
 ZS_OUT = StructType(
     [
@@ -249,14 +233,23 @@ ZS_OUT = StructType(
 ZS_STATE = StructType([StructField("buf", ArrayType(LongType()))])
 
 
-def _zscore_fn(window: int, threshold: float):
-    import numpy as np
+def streaming_zscore(
+    events: DataFrame, window: int = 50, threshold: float = 3.0
+) -> DataFrame:
+    """Streaming rolling z-score anomaly detector: each event's value vs
+    the trailing-``window`` mean/σ of its event type, flagging
+    |z| > threshold — the arrival-time twin of the batch
+    events_anomaly_zscore. State is the last window−1 MICRO-QUANTIZED
+    values per key (bounded, integer-exact), so the window moments are
+    pure functions of the data: integer sums → identical double formula
+    on every engine and every replay. Python-object cumsum keeps the
+    squared sums exact beyond int64 (values are bounded in practice;
+    correctness first).
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (etype,) = key
-        buf = list(state.get[0]) if state.exists else []
+    Input must carry (event_type, event_id, ts_us, value)."""
+
+    def fold(etype, pdfs, carry):
+        buf = list(carry[0])
         for pdf in pdfs:
             if len(pdf) == 0:
                 continue
@@ -297,32 +290,9 @@ def _zscore_fn(window: int, threshold: float):
                     "z": pd.Series([r[3] for r in out], dtype="float64"),
                 }
             )
-        state.update(([int(x) for x in buf],))
+        return ([int(x) for x in buf],)
 
-    return fn
-
-
-def streaming_zscore(
-    events: DataFrame, window: int = 50, threshold: float = 3.0
-) -> DataFrame:
-    """Streaming rolling z-score anomaly detector: each event's value vs
-    the trailing-``window`` mean/σ of its event type, flagging
-    |z| > threshold — the arrival-time twin of the batch
-    events_anomaly_zscore. State is the last window−1 MICRO-QUANTIZED
-    values per key (bounded, integer-exact), so the window moments are
-    pure functions of the data: integer sums → identical double formula
-    on every engine and every replay. Python-object cumsum keeps the
-    squared sums exact beyond int64 (values are bounded in practice;
-    correctness first).
-
-    Input must carry (event_type, event_id, ts_us, value)."""
-    return events.groupBy("event_type").applyInPandasWithState(
-        _zscore_fn(window, threshold),
-        outputStructType=ZS_OUT,
-        stateStructType=ZS_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_fold(events, "event_type", fold, ([],), ZS_OUT, ZS_STATE)
 
 
 # ---------------------------------------------------------------------------
@@ -354,14 +324,20 @@ CDC_STATE = StructType(
 )
 
 
-def _latest_fn():
-    import numpy as np
+def streaming_latest_compact(events: DataFrame) -> DataFrame:
+    """CDC latest-wins compaction: the change stream folds to ONE current
+    row per key — the lakehouse upsert/SCD-1 primitive. State per key is a
+    single (ts, event_id, type, value) tuple; each batch reduces
+    vectorized to its per-key lexicographic max on the FULL
+    (ts_us, event_id) pair (np.lexsort — the same ORDER BY ts_us DESC,
+    event_id DESC the SQL twin uses, so ordering is engine-identical and
+    collision-free), then merges with state. Emits the post-merge current
+    row each batch: with an availableNow drain the sink's last row per
+    key IS the compacted table.
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (uid,) = key
-        best = tuple(state.get) if state.exists else None
+    Input must carry (user_id, event_id, ts_us, event_type, value)."""
+
+    def fold(uid, pdfs, best):
         for pdf in pdfs:
             if len(pdf) == 0:
                 continue
@@ -377,7 +353,6 @@ def _latest_fn():
             )
             if best is None or cand[:2] > best[:2]:
                 best = cand
-        state.update(best)
         yield pd.DataFrame(
             [
                 {
@@ -389,26 +364,6 @@ def _latest_fn():
                 }
             ]
         )
+        return best
 
-    return fn
-
-
-def streaming_latest_compact(events: DataFrame) -> DataFrame:
-    """CDC latest-wins compaction: the change stream folds to ONE current
-    row per key — the lakehouse upsert/SCD-1 primitive. State per key is a
-    single (ts, event_id, type, value) tuple; each batch reduces
-    vectorized to its per-key lexicographic max on the FULL
-    (ts_us, event_id) pair (np.lexsort — the same ORDER BY ts_us DESC,
-    event_id DESC the SQL twin uses, so ordering is engine-identical and
-    collision-free), then merges with state. Emits the post-merge current
-    row each batch: with an availableNow drain the sink's last row per
-    key IS the compacted table.
-
-    Input must carry (user_id, event_id, ts_us, event_type, value)."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _latest_fn(),
-        outputStructType=CDC_OUT,
-        stateStructType=CDC_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_fold(events, "user_id", fold, None, CDC_OUT, CDC_STATE)

@@ -9,6 +9,8 @@ the identical plan runs unmodified.
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -196,18 +198,27 @@ def session_windows(
     )
 
 
-def run_available_now(stream_df: DataFrame, query_name: str = "pqs_stream") -> list:
-    """Drain a streaming plan with availableNow into a memory sink and return
-    the collected rows (test harness)."""
-    q = (
+_DRAINS = itertools.count()
+
+
+def run_available_now(
+    stream_df: DataFrame, query_name: str = "pqs_stream", output_mode: str = "append"
+) -> DataFrame:
+    """Drain a streaming plan with ``trigger(availableNow=True)`` into a
+    memory sink named ``{query_name}_{k}`` (k unique per process) and
+    return the sink as a table. ``output_mode`` is the sink's: "complete"
+    for a windowed aggregation whose windows are still open at the end of
+    a finite replay."""
+    name = f"{query_name}_{next(_DRAINS)}"
+    (
         stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete" if stream_df.isStreaming else "append")
+        .queryName(name)
+        .outputMode(output_mode)
         .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    q.awaitTermination()
-    return stream_df.sparkSession.sql(f"SELECT * FROM {query_name}").collect()
+    return stream_df.sparkSession.table(name)
 
 
 def streaming_ohlcv(

@@ -19,9 +19,14 @@ from hypothesis import strategies as st
 from polars_quant_spark.backtest.vectorized import BacktestParams, _fold_state
 from polars_quant_spark.operators.recurrence import (
     _SarParams,
+    _compact_apply,
+    _ewm_chain,
+    _ewma_q,
     _ewma_q_resume,
     _kama_tail,
     _sar_scan,
+    ema,
+    rma,
 )
 
 
@@ -92,6 +97,56 @@ def test_ewma_q_resume_segmentation_invariant(seed, n, p):
     first = _ewma_q_resume(s0, m[:cut], alpha)
     second = _ewma_q_resume(first[-1] if cut else s0, m[cut:], alpha)
     np.testing.assert_array_equal(whole, np.concatenate([first, second]))
+
+
+@given(
+    seed=st.integers(0, 2**32 - 1),
+    n=st.integers(0, 200),
+    p=st.integers(1, 30),
+    kind=st.sampled_from(["ema", "rma", "lattice"]),
+    n_cuts=st.integers(0, 4),
+    holes=st.booleans(),
+    inf_seed=st.booleans(),
+    neg_zero=st.booleans(),
+)
+@settings(max_examples=300, deadline=None)
+def test_ewm_chain_segmentation_invariant(
+    seed, n, p, kind, n_cuts, holes, inf_seed, neg_zero
+):
+    """``_ewm_chain`` cut at random rows, the state handed across, is bit
+    for bit ``ema``, ``rma`` or ``_compact_apply(_ewma_q)`` on the whole
+    series: one cut falls inside the SMA seed, NaN holes are compacted
+    out, a ±inf inside the seed window makes the seed mean ±inf, and a
+    −0.0 head checks that a fresh SMA sum does not start from +0.0."""
+    rng = np.random.default_rng(seed)
+    x = 100 + np.cumsum(rng.normal(0, 1, n))
+    lattice = kind == "lattice"
+    if lattice:
+        x = np.floor(x * 1e6 + 0.5)
+    if neg_zero:
+        x[:p] = -0.0
+    if holes and n:
+        x[rng.random(n) < 0.2] = np.nan
+    valid = np.flatnonzero(~np.isnan(x))
+    if inf_seed and not lattice and len(valid):
+        x[valid[rng.integers(0, min(p, len(valid)))]] = rng.choice([np.inf, -np.inf])
+    if kind == "ema":
+        alpha, want = 2.0 / (p + 1), ema(x, p)
+    elif kind == "rma":
+        alpha, want = 1.0 / p, rma(x, p)
+    else:
+        alpha = 2.0 / (p + 1)
+        want = _compact_apply(lambda v: _ewma_q(v, alpha, p), x)
+    cuts = [int(c) for c in rng.integers(0, n + 1, n_cuts)]
+    if p > 1 and len(valid) > 1:  # a piece ending inside the SMA seed
+        cuts.append(int(valid[rng.integers(1, min(p, len(valid)))]))
+    bounds = [0, *sorted(cuts), n]
+    state, pieces = (0, 0.0, np.nan), []
+    for lo, hi in zip(bounds, bounds[1:]):
+        out, state = _ewm_chain(state, x[lo:hi], p, alpha, lattice)
+        pieces.append(out)
+    got = np.concatenate([np.zeros(0), *pieces])
+    np.testing.assert_array_equal(got.view(np.uint64), want.view(np.uint64))
 
 
 @given(

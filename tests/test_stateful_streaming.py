@@ -18,40 +18,51 @@ from pyspark.sql.types import (
 
 from polars_quant_spark.operators import recurrence as rec
 from polars_quant_spark.streaming import stateful
+from polars_quant_spark.streaming.windows import run_available_now
 
 
-def _run_stream(spark, tmp_path, pdf, schema, build, name):
-    """Write pdf as several parquet files (micro-batches), run the stateful
-    query with maxFilesPerTrigger=1 so state genuinely crosses batches."""
+def _run_stream(spark, tmp_path, pdf, schema, build, name, cuts=None):
+    """Write pdf as several parquet files (micro-batches): four equal parts,
+    or the pieces between the row indices ``cuts``. Run the stateful query
+    with maxFilesPerTrigger=1 so state genuinely crosses batches."""
     src = tmp_path / "src"
-    src.mkdir()
+    src.mkdir(parents=True)
     n = len(pdf)
-    for i, lo in enumerate(range(0, n, n // 4)):
-        pdf.iloc[lo : lo + n // 4].to_parquet(src / f"part{i}.parquet", index=False)
+    bounds = [0, *cuts, n] if cuts else [*range(0, n, n // 4), n]
+    for i, (lo, hi) in enumerate(zip(bounds, bounds[1:])):
+        pdf.iloc[lo:hi].to_parquet(src / f"part{i}.parquet", index=False)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    q = (
-        build(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.sql(f"SELECT * FROM {name}").toPandas()
-    q.stop()
-    return out
+    return run_available_now(build(stream), name).toPandas()
+
+
+def _bits(a) -> np.ndarray:
+    return np.asarray(a, dtype="float64").view(np.uint64)
+
+
+# A close series with a NaN close at row 50 and a non-positive one at row
+# 80, cut into micro-batches inside the EMA's 20-row SMA seed, right after
+# the NaN close, or right after the non-positive close.
+_N = 120
+_CUTS = {"in_seed": [10], "after_nan": [51], "after_nonpositive": [81]}
+
+
+def _close(seed: int) -> np.ndarray:
+    close = 50 + np.cumsum(np.random.default_rng(seed).normal(0, 1, _N))
+    close[50] = np.nan
+    close[80] = -1.0
+    return close
 
 
 def test_streaming_ema_matches_batch(spark, tmp_path):
-    n = 120
-    close = 100 + np.cumsum(np.random.default_rng(2).normal(0, 1, n))
+    """Bit-equal to ``recurrence.ema`` over the whole stream, for each
+    micro-batch split."""
+    close = _close(2)
     pdf = pd.DataFrame(
-        {"symbol": ["X"] * n, "ts_us": np.arange(1, n + 1, dtype="int64"), "close": close}
+        {"symbol": ["X"] * _N, "ts_us": np.arange(1, _N + 1, dtype="int64"), "close": close}
     )
     schema = StructType(
         [
@@ -60,26 +71,30 @@ def test_streaming_ema_matches_batch(spark, tmp_path):
             StructField("close", DoubleType()),
         ]
     )
-    out = _run_stream(
-        spark, tmp_path, pdf, schema, lambda s: stateful.streaming_ema(s, 20), "sema"
-    )
-    got = out.sort_values("ts_us")["ema"].to_numpy(dtype="float64", na_value=np.nan)
-    want = rec.ema(close, 20)
-    np.testing.assert_allclose(got, want, rtol=1e-9, equal_nan=True)
+    want = _bits(rec.ema(close, 20))
+    for label, cuts in _CUTS.items():
+        out = _run_stream(
+            spark, tmp_path / label, pdf, schema,
+            lambda s: stateful.streaming_ema(s, 20), "sema", cuts,
+        )
+        got = out.sort_values("ts_us")["ema"].to_numpy(dtype="float64", na_value=np.nan)
+        np.testing.assert_array_equal(_bits(got), want, err_msg=label)
 
 
 def test_streaming_position_matches_batch_fold(spark, tmp_path):
-    from polars_quant_spark.backtest.vectorized import BacktestParams, _fold
+    """Bit-equal to the zero-cost ``_fold_state`` over the whole stream,
+    for each micro-batch split: the NaN and non-positive closes are frozen
+    bars marked at the last valid price."""
+    from polars_quant_spark.backtest.vectorized import BacktestParams, _fold_state
 
-    n = 120
     rng = np.random.default_rng(4)
-    close = np.maximum(50 + np.cumsum(rng.normal(0, 1, n)), 1.0)
-    buy = rng.random(n) < 0.2
-    sell = rng.random(n) < 0.2
+    close = _close(4)
+    buy = rng.random(_N) < 0.2
+    sell = rng.random(_N) < 0.2
     pdf = pd.DataFrame(
         {
-            "symbol": ["X"] * n,
-            "ts_us": np.arange(1, n + 1, dtype="int64"),
+            "symbol": ["X"] * _N,
+            "ts_us": np.arange(1, _N + 1, dtype="int64"),
             "close": close,
             "buy": buy,
             "sell": sell,
@@ -94,13 +109,80 @@ def test_streaming_position_matches_batch_fold(spark, tmp_path):
             StructField("sell", BooleanType()),
         ]
     )
-    out = _run_stream(
-        spark, tmp_path, pdf, schema, stateful.streaming_position, "spos"
-    ).sort_values("ts_us")
     p = BacktestParams(buy_commission_rate=0.0, sell_commission_rate=0.0, min_commission=0.0)
-    pos, cash, eq, dd, _, _ = _fold(close, buy, sell, p)
-    np.testing.assert_allclose(out["position"].to_numpy(), pos, rtol=1e-12)
-    np.testing.assert_allclose(out["equity"].to_numpy(), eq, rtol=1e-12)
+    pos, cash, eq, _, _ = _fold_state(close, buy, sell, p)
+    assert (pos > 0).any() and (pos == 0).any()
+    for label, cuts in _CUTS.items():
+        out = _run_stream(
+            spark, tmp_path / label, pdf, schema, stateful.streaming_position, "spos", cuts
+        ).sort_values("ts_us")
+        for col, want in (("position", pos), ("cash", cash), ("equity", eq)):
+            np.testing.assert_array_equal(
+                _bits(out[col]), _bits(want), err_msg=f"{label} {col}"
+            )
+
+
+def test_recurrence_and_stream_calls_validated_before_any_job(spark):
+    """``with_recurrences`` rejects an unknown kernel, an input column count
+    off the kernel's registered arity and an input column that is neither
+    in the frame nor an earlier spec's output; ``streaming_ema`` rejects a
+    ``p`` that is not an int >= 1. Each raises ValueError at call time, so
+    no case submits a Spark job (before, each failed only inside a Python
+    task, after the shuffle)."""
+    import uuid
+
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "symbol": ["X"] * 3,
+                "t": [1, 2, 3],
+                "ts_us": [1, 2, 3],
+                "close": [1.0, 2.0, 3.0],
+                "high": [1.5, 2.5, 3.5],
+                "low": [0.5, 1.5, 2.5],
+            }
+        )
+    )
+    wr = rec.with_recurrences
+    calls = [
+        (lambda: wr(df, [rec.Rec("e", "emaa", ["close"], {"p": 5})]), "unknown"),
+        (lambda: wr(df, [rec.Rec("a", "atr", ["high", "low"], {"p": 5})]), "takes 3"),
+        (lambda: wr(df, [rec.Rec("e", "ema", ["close", "high"], {"p": 5})]), "takes 1"),
+        (lambda: wr(df, [rec.Rec("e", "ema", ["volume"], {"p": 5})]), "not found"),
+        (
+            lambda: wr(
+                df,
+                [
+                    rec.Rec("e2", "ema", ["e"], {"p": 5}),
+                    rec.Rec("e", "ema", ["close"], {"p": 5}),
+                ],
+            ),
+            "not found",
+        ),
+    ] + [
+        (lambda bad=bad: stateful.streaming_ema(df, bad), "p must be")
+        for bad in (0, -3, 2.5, "20", True)
+    ]
+    sc = spark.sparkContext
+    group = f"call-validation-{uuid.uuid4().hex}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        for call, match in calls:
+            with pytest.raises(ValueError, match=match):
+                call()
+        # an earlier spec's output is a valid input of a later spec
+        wr(
+            df,
+            [
+                rec.Rec("e", "ema", ["close"], {"p": 2}),
+                rec.Rec("e2", "ema", ["e"], {"p": 2}),
+            ],
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_stream_static_enrich_matches_batch(spark, tmp_path):
@@ -300,20 +382,11 @@ def test_streaming_ohlcv_matches_batch_across_batches(spark, tmp_path):
         .parquet(str(src))
         .withColumn("event_time", F.timestamp_micros(F.col("ts_us")))
     )
-    q = (
-        streaming_ohlcv(stream, window="1 hour", watermark="10 hours")
-        .writeStream.format("memory")
-        .queryName("pqs_ohlcv_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    bars = streaming_ohlcv(stream, window="1 hour", watermark="10 hours")
     got = {
         (r["window_start"], r["symbol"]): (r["open"], r["high"], r["low"], r["close"], r["n_ticks"])
-        for r in spark.sql("SELECT * FROM pqs_ohlcv_test").collect()
+        for r in run_available_now(bars, "pqs_ohlcv_test", "complete").collect()
     }
-    q.stop()
 
     pdf["px"] = 300.0 + pdf["value"] / 10.0
     pdf["ts"] = pd.to_datetime(pdf["ts_us"], unit="us")
