@@ -285,6 +285,11 @@ def main() -> None:
     steal_start = cpu_steal_ticks()
     spark = get_spark("pqs-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    # JIT compile time (ms, summed over the compiler threads) the driver
+    # JVM spent by session start, and per query around its timed reps,
+    # both read outside the timed regions like gc_s
+    jit = spark._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    setup_jit_s = round(jit.getTotalCompilationTime() / 1e3, 3)
     # Opt-in scale tier (VERDICT r13 #2): SPARK_GRAFT_BENCH_SCALE=N runs
     # the SAME queries over an N× replica of the driver tables
     # (tools/scale_smoke.build — the standing replica discipline: longer
@@ -355,6 +360,7 @@ def main() -> None:
         compiles[name] = []
         group = f"bench/{name}"
         sc.setLocalProperty("spark.jobGroup.id", group)
+        jit_ms = jit.getTotalCompilationTime()
         for _ in range(3):
             n_compiled = codegen.getCount()
             t0 = time.time()
@@ -368,6 +374,7 @@ def main() -> None:
             reps.append(time.time() - t0)
             best_construct = min(best_construct, t_built - t0)
             compiles[name].append(int(codegen.getCount() - n_compiled))
+        jit_ms = jit.getTotalCompilationTime() - jit_ms
         sc.setLocalProperty("spark.jobGroup.id", None)
         timings[name] = round(min(reps), 3)
         stages.drain()
@@ -376,6 +383,7 @@ def main() -> None:
             "spread_s": round(max(reps) - min(reps), 3),
             "cpu_ratio": round(tot["cpu_ns"] / 1e6 / tot["run_ms"], 3) if tot["run_ms"] else None,
             "gc_s": round(tot["gc_ms"] / 1e3, 3),
+            "jit_s": round(jit_ms / 1e3, 3),
         }
         # Construction/exec split (VERDICT r13 #1/#2): construct_s is the
         # driver-side Column/plan build inside the timed reps above;
@@ -425,8 +433,10 @@ def main() -> None:
                     (steal_end[0] - steal_start[0]) / max(1, steal_end[1] - steal_start[1]), 4
                 ),
                 # per query: max-min of the 3 timed reps, executor CPU over
-                # executor run time, and JVM GC, over those reps' stages
+                # executor run time, and JVM GC, over those reps' stages;
+                # the driver JVM's JIT compile time over the 3 reps
                 "load": load,
+                "setup_jit_s": setup_jit_s,
                 "timing": "best of 3 reps per query (steady-state)",
                 "layout": (
                     f"{bench_scale}x replica of the driver tables (opt-in scale tier)"

@@ -148,7 +148,21 @@ MA = _ov.ma
 # --- recurrence indicators (DataFrame-level) -------------------------------
 
 
-def _rec1(kernel: str, default_out: str, ncols: int = 1, outs: list[str] | None = None):
+_HL = ("high", "low")
+_HLC = (*_HL, "close")
+
+
+def _rec1(
+    kernel: str,
+    default_out: str | None,
+    outs: list[str] | None = None,
+    inputs: tuple[str, ...] | None = ("close",),
+):
+    """A TA-Lib-style wrapper over one recurrence kernel. ``inputs`` are the
+    default input columns, TA-Lib's own (``high, low, close`` for ATR);
+    None when the kernel has no conventional input name, so the caller
+    must name them."""
+
     def fn(
         df: DataFrame,
         *cols: str,
@@ -160,7 +174,12 @@ def _rec1(kernel: str, default_out: str, ncols: int = 1, outs: list[str] | None 
     ) -> DataFrame:
         if timeperiod is not None:
             params["p"] = timeperiod
-        cols = list(cols) or ["close"]
+        if not cols and inputs is None:
+            raise ValueError(
+                f"{kernel.upper()} has no default input columns; name them, "
+                f"e.g. {kernel.upper()}(df, 'close', 'periods')"
+            )
+        cols = list(cols or inputs)
         target = outs if outs is not None else (out or default_out)
         return with_recurrences(
             df, [Rec(target, kernel, cols, params)], partition_by, order_by
@@ -176,15 +195,15 @@ TEMA = _rec1("tema", "tema")
 KAMA = _rec1("kama", "kama")
 RSI = _rec1("rsi", "rsi")
 TRIX = _rec1("trix", "trix")
-ADX = _rec1("adx", "adx")
-ADXR = _rec1("adxr", "adxr")
-DX = _rec1("dx", "dx")
-PLUS_DI = _rec1("plus_di", "plus_di")
-MINUS_DI = _rec1("minus_di", "minus_di")
-PLUS_DM = _rec1("plus_dm", "plus_dm")
-MINUS_DM = _rec1("minus_dm", "minus_dm")
-SAR = _rec1("sar", "sar")
-SAREXT = _rec1("sarext", "sarext")
+ADX = _rec1("adx", "adx", inputs=_HLC)
+ADXR = _rec1("adxr", "adxr", inputs=_HLC)
+DX = _rec1("dx", "dx", inputs=_HLC)
+PLUS_DI = _rec1("plus_di", "plus_di", inputs=_HLC)
+MINUS_DI = _rec1("minus_di", "minus_di", inputs=_HLC)
+PLUS_DM = _rec1("plus_dm", "plus_dm", inputs=_HL)
+MINUS_DM = _rec1("minus_dm", "minus_dm", inputs=_HL)
+SAR = _rec1("sar", "sar", inputs=_HL)
+SAREXT = _rec1("sarext", "sarext", inputs=_HL)
 HT_DCPERIOD = _rec1("ht_dcperiod", "ht_dcperiod")
 HT_DCPHASE = _rec1("ht_dcphase", "ht_dcphase")
 HT_TRENDLINE = _rec1("ht_trendline", "ht_trendline")
@@ -195,10 +214,10 @@ MAMA = _rec1("mama", None, outs=["mama", "fama"])
 MACD = _rec1("macd", None, outs=["macd", "macdsignal", "macdhist"])
 MACDEXT = _rec1("macdext", None, outs=["macd", "macdsignal", "macdhist"])
 MACDFIX = _rec1("macdfix", None, outs=["macd", "macdsignal", "macdhist"])
-ADOSC = _rec1("adosc", "adosc")
-ATR = _rec1("atr", "atr")
-NATR = _rec1("natr", "natr")
-MAVP = _rec1("mavp", "mavp")
+ADOSC = _rec1("adosc", "adosc", inputs=(*_HLC, "volume"))
+ATR = _rec1("atr", "atr", inputs=_HLC)
+NATR = _rec1("natr", "natr", inputs=_HLC)
+MAVP = _rec1("mavp", "mavp", inputs=None)
 
 
 def T3(df, *cols, timeperiod: int = 5, vfactor: float = 0.7, **kw) -> DataFrame:

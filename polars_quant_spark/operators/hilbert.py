@@ -324,3 +324,15 @@ _rec.KERNELS.update(
         "mavp": (mavp, 2),
     }
 )
+_rec.KERNEL_OUTPUTS.update(
+    {
+        "ht_dcperiod": 1,
+        "ht_dcphase": 1,
+        "ht_phasor": 2,
+        "ht_sine": 2,
+        "ht_trendline": 1,
+        "ht_trendmode": 1,
+        "mama": 2,
+        "mavp": 1,
+    }
+)

@@ -31,6 +31,7 @@ contract — RMA(TR, p), i.e. α=1/p with an SMA-of-first-p seed.
 
 from __future__ import annotations
 
+import inspect
 import math
 from dataclasses import dataclass, field
 from typing import Callable, NamedTuple
@@ -635,6 +636,12 @@ KERNELS: dict[str, tuple[Callable, int]] = {
     "sar": (sar, 2),
     "supertrend": (supertrend, 3),
 }
+#: kernel name → output count: how many names a Rec's ``out`` must give.
+#: Each module that extends KERNELS registers its kernels here too.
+KERNEL_OUTPUTS: dict[str, int] = {
+    **dict.fromkeys(KERNELS, 1),
+    "macd": 3, "macd_q": 3, "macdfix_q": 3, "macdext_q": 3, "supertrend": 2,
+}
 
 
 @dataclass
@@ -687,18 +694,29 @@ def with_recurrences(
     makes it visible to the next spec's input extraction. Rows sort stably
     by ``order_by`` (see ``arrow_group.sort_rows`` for the tie caveat).
 
-    Raises ValueError before any Spark job for an unknown kernel, an input
-    column count other than the kernel's registered arity, or an input
-    column that is neither in ``df`` nor an earlier spec's output."""
+    Raises before any Spark job: ValueError for an unknown kernel, an input
+    column count other than the kernel's registered arity, an output name
+    count other than its registered output count, or an input column that
+    is neither in ``df`` nor an earlier spec's output; TypeError for
+    ``params`` the kernel's signature does not bind."""
     seen = set(df.columns)
     for s in specs:
         if s.kernel not in KERNELS:
             raise ValueError(f"unknown recurrence kernel {s.kernel!r}")
-        arity = KERNELS[s.kernel][1]
+        fn, arity = KERNELS[s.kernel]
         if len(s.cols) != arity:
             raise ValueError(
                 f"kernel {s.kernel!r} takes {arity} input column(s), got {s.cols}"
             )
+        n_out = KERNEL_OUTPUTS[s.kernel]
+        if len(s.out_cols) != n_out:
+            raise ValueError(
+                f"kernel {s.kernel!r} returns {n_out} output(s), got names {s.out_cols}"
+            )
+        try:
+            inspect.signature(fn).bind(*s.cols, **s.params)
+        except TypeError as exc:
+            raise TypeError(f"kernel {s.kernel!r} params {s.params}: {exc}") from None
         missing = [c for c in s.cols if c not in seen]
         if missing:
             raise ValueError(f"kernel {s.kernel!r} input column(s) {missing} not found")
@@ -762,6 +780,7 @@ def macdfix(x: np.ndarray, signal: int = 9):
 
 
 KERNELS.update({"macdext": (macdext, 1), "macdfix": (macdfix, 1)})
+KERNEL_OUTPUTS.update({"macdext": 3, "macdfix": 3})
 
 
 def adosc(
@@ -787,6 +806,7 @@ def adosc(
 
 
 KERNELS.update({"adosc": (adosc, 4)})
+KERNEL_OUTPUTS.update({"adosc": 1})
 
 
 def sarext(
@@ -815,6 +835,7 @@ def sarext(
 
 
 KERNELS.update({"sarext": (sarext, 2)})
+KERNEL_OUTPUTS.update({"sarext": 1})
 
 
 def holt(x: np.ndarray, alpha: float = 0.5, beta: float = 0.3) -> tuple:
@@ -858,6 +879,7 @@ def holt(x: np.ndarray, alpha: float = 0.5, beta: float = 0.3) -> tuple:
 
 
 KERNELS.update({"holt": (holt, 1)})
+KERNEL_OUTPUTS.update({"holt": 3})
 
 
 def garch(x: np.ndarray, omega: float = 1e-05, a: float = 0.05, b: float = 0.9) -> np.ndarray:
@@ -886,6 +908,7 @@ def garch(x: np.ndarray, omega: float = 1e-05, a: float = 0.05, b: float = 0.9) 
 
 
 KERNELS.update({"garch": (garch, 1)})
+KERNEL_OUTPUTS.update({"garch": 1})
 
 
 def renko(c: np.ndarray, pct: float = 0.005) -> tuple:
@@ -930,6 +953,7 @@ def renko(c: np.ndarray, pct: float = 0.005) -> tuple:
 
 
 KERNELS.update({"renko": (renko, 1)})
+KERNEL_OUTPUTS.update({"renko": 2})
 
 
 def zigzag(c: np.ndarray, pct: float = 0.03) -> tuple:
@@ -973,6 +997,7 @@ def zigzag(c: np.ndarray, pct: float = 0.03) -> tuple:
 
 
 KERNELS.update({"zigzag": (zigzag, 1)})
+KERNEL_OUTPUTS.update({"zigzag": 2})
 
 
 def cusum(x: np.ndarray, drift_frac: float = 0.05) -> tuple:
@@ -1009,3 +1034,4 @@ def cusum(x: np.ndarray, drift_frac: float = 0.05) -> tuple:
 
 
 KERNELS.update({"cusum": (cusum, 1)})
+KERNEL_OUTPUTS.update({"cusum": 3})

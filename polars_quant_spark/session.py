@@ -28,6 +28,29 @@ session is still found: only unchanged archives skip the re-read, and
 directory finders are invalidated as before. The daemon starts before any
 ``addPyFile`` include reaches the worker, so on a cluster the package must
 be installed (or on ``PYTHONPATH``) where executors start Python.
+
+The driver JVM starts with the tier-4 (C2) compile thresholds at 3x the
+JDK 17 defaults: ``-XX:Tier4InvocationThreshold=15000``,
+``-XX:Tier4MinInvocationThreshold=1800``, ``-XX:Tier4CompileThreshold=45000``
+and ``-XX:Tier4BackEdgeThreshold=120000``. JIT compilation is the largest
+CPU cost of a short session; with the higher bar only really hot methods
+reach C2, and planner and launcher code that runs a few thousand times
+stays in C1. The JVM's JIT compile time by session start fell from
+8.3-9.4 s to 3.9-4.8 s (``bench.py`` ``setup_jit_s``, 5 runs a side)
+while no ``bench.py`` query got slower beyond its spread; C1 only
+(``TieredStopAtLevel=1``) lost ~70% there, and 5x slowed
+``events_daily``. On perfbench ``backtest_history`` (4 cores, 10
+interleaved pairs) ``setup_s`` fell from a median 18.2 s to 14.3 s in
+10 of 10 pairs, ``first_job_cpu_s`` from 41.8 to 37.6 s and
+``job_cpu_s.mean`` from 10.1 to 8.1 s.
+
+The flags go through ``spark.driver.defaultJavaOptions``, not
+``extraJavaOptions``: a ``--driver-java-options`` in
+``PYSPARK_SUBMIT_ARGS`` replaces the latter but is appended to the
+former, and ``SPARK_GRAFT_XMS`` joins the same string. They size a driver
+that hosts local executors; on a cluster the executor JVMs keep the JVM
+defaults (BASELINE.md, "JIT thresholds", has the sweep and the rejected
+candidates).
 """
 
 from __future__ import annotations
@@ -37,6 +60,16 @@ from contextlib import contextmanager
 from typing import Iterator
 
 from pyspark.sql import SparkSession
+
+
+# tier-4 (C2) compile thresholds at 3x the JDK 17 defaults (5000 / 600 /
+# 15000 / 40000), so only really hot methods reach C2 (module docstring)
+_DRIVER_JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=15000",
+    "-XX:Tier4MinInvocationThreshold=1800",
+    "-XX:Tier4CompileThreshold=45000",
+    "-XX:Tier4BackEdgeThreshold=120000",
+)
 
 
 def get_spark(app_name: str = "polars_quant_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -81,8 +114,10 @@ def get_spark(app_name: str = "polars_quant_spark", shuffle_partitions: int | No
     # box would be hostile. Usage: SPARK_GRAFT_XMS=48g (normally set equal
     # to SPARK_DRIVER_MEMORY).
     xms = os.environ.get("SPARK_GRAFT_XMS")
-    if xms:
-        builder = builder.config("spark.driver.extraJavaOptions", f"-Xms{xms}")
+    java_options = [*_DRIVER_JIT_OPTIONS, *([f"-Xms{xms}"] if xms else [])]
+    # defaultJavaOptions: a --driver-java-options in PYSPARK_SUBMIT_ARGS
+    # would replace extraJavaOptions (module docstring)
+    builder = builder.config("spark.driver.defaultJavaOptions", " ".join(java_options))
     return builder.getOrCreate()
 
 

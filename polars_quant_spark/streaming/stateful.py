@@ -279,9 +279,12 @@ def streaming_zscore(
                         (etype, int(pdf["event_id"].iloc[j]), qv[j] / 1e6, z)
                     )
             buf = list(concat[-(window - 1):])
-            # always yield a dtype-stable frame (an omitted/implicit empty
-            # yield makes Spark's serializer concat all-NA blocks → pandas
-            # FutureWarning noise in the driver log)
+            # one frame per group with fixed dtypes, empty when no row
+            # passes the warm-up. pandas' "concatenation with empty or
+            # all-NA entries" FutureWarning still shows: PySpark's state
+            # serializer (pyspark/sql/pandas/serializers.py) pads the data
+            # and state blocks to one length with all-NA rows and
+            # concatenates them, whatever this function yields
             yield pd.DataFrame(
                 {
                     "event_type": pd.Series([r[0] for r in out], dtype="object"),

@@ -10,6 +10,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 import polars_quant_spark.compat as pq
+from polars_quant_spark.operators.recurrence import KERNELS
 
 REFERENCE_EXPORTS = [
     # talib
@@ -57,6 +58,49 @@ def frame(spark):
             }
         )
     )
+
+
+_C, _HL = ["close"], ["high", "low"]
+_HLC = [*_HL, "close"]
+# every DataFrame-level wrapper, with TA-Lib's input columns for its kernel
+REC_WRAPPERS = {
+    "EMA": _C, "DEMA": _C, "TEMA": _C, "KAMA": _C, "RSI": _C, "TRIX": _C, "T3": _C,
+    "HT_DCPERIOD": _C, "HT_DCPHASE": _C, "HT_TRENDLINE": _C, "HT_TRENDMODE": _C,
+    "HT_PHASOR": _C, "HT_SINE": _C, "MAMA": _C,
+    "MACD": _C, "MACDEXT": _C, "MACDFIX": _C,
+    "ADX": _HLC, "ADXR": _HLC, "DX": _HLC, "PLUS_DI": _HLC, "MINUS_DI": _HLC,
+    "ATR": _HLC, "NATR": _HLC,
+    "PLUS_DM": _HL, "MINUS_DM": _HL, "SAR": _HL, "SAREXT": _HL,
+    "ADOSC": [*_HLC, "volume"],
+}
+
+
+def test_recurrence_wrappers_default_to_talib_inputs(frame):
+    """Each wrapper called with no input columns reads TA-Lib's inputs for
+    its kernel, and its outputs equal the kernel's on those columns. MAVP's
+    ``periods`` has no conventional name, so it asks for explicit columns."""
+    wrappers = {
+        n for n in dir(pq)
+        if getattr(getattr(pq, n), "__qualname__", "").startswith("_rec1.")
+    }
+    assert wrappers - {"MAVP"} == set(REC_WRAPPERS) - {"T3"}
+    pdf = frame.toPandas()
+    for name, cols in REC_WRAPPERS.items():
+        out = getattr(pq, name)(frame)
+        new = [c for c in out.columns if c not in frame.columns]
+        got = out.orderBy("t").select(*new).toPandas()
+        fn, _ = KERNELS[name.lower()]
+        want = fn(*[pdf[c].to_numpy(dtype="float64") for c in cols])
+        want = want if isinstance(want, tuple) else (want,)
+        assert len(new) == len(want), name
+        for col, w in zip(new, want):
+            np.testing.assert_array_equal(
+                got[col].to_numpy(dtype="float64"), w, err_msg=f"{name} {col}"
+            )
+    with pytest.raises(ValueError, match="no default input columns"):
+        pq.MAVP(frame)
+    periods = frame.withColumn("periods", F.lit(10.0))
+    assert "mavp" in pq.MAVP(periods, "close", "periods").columns
 
 
 def test_column_style_indicators(frame):

@@ -921,6 +921,17 @@ def test_segmented_seed_joins_are_merge_pinned_at_source():
         assert ".applyInPandas(" not in source(*parts), parts
 
 
+def test_driver_jvm_runs_with_the_jit_flags(spark):
+    """The driver JVM the session runs in was started with every flag of
+    ``session._DRIVER_JIT_OPTIONS`` (``get_spark`` passes them through
+    ``spark.driver.defaultJavaOptions``)."""
+    from polars_quant_spark.session import _DRIVER_JIT_OPTIONS
+
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    args = set(mf.getRuntimeMXBean().getInputArguments())
+    assert _DRIVER_JIT_OPTIONS and set(_DRIVER_JIT_OPTIONS) <= args, sorted(args)
+
+
 def test_warm_rebuild_compiles_no_class(spark):
     """A warm job compiles nothing: building and running the same plans a
     second time must find every generated class in Spark's codegen cache.

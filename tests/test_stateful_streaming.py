@@ -124,11 +124,13 @@ def test_streaming_position_matches_batch_fold(spark, tmp_path):
 
 def test_recurrence_and_stream_calls_validated_before_any_job(spark):
     """``with_recurrences`` rejects an unknown kernel, an input column count
-    off the kernel's registered arity and an input column that is neither
-    in the frame nor an earlier spec's output; ``streaming_ema`` rejects a
-    ``p`` that is not an int >= 1. Each raises ValueError at call time, so
-    no case submits a Spark job (before, each failed only inside a Python
-    task, after the shuffle)."""
+    off the kernel's registered arity, an output name count off its
+    registered output count and an input column that is neither in the
+    frame nor an earlier spec's output (ValueError), and ``params`` the
+    kernel's signature does not bind (TypeError); ``streaming_ema`` rejects
+    a ``p`` that is not an int >= 1 (ValueError). Each raises at call time,
+    so no case submits a Spark job (before, each failed only inside a
+    Python task, after the shuffle)."""
     import uuid
 
     df = spark.createDataFrame(
@@ -159,17 +161,33 @@ def test_recurrence_and_stream_calls_validated_before_any_job(spark):
             ),
             "not found",
         ),
+        (lambda: wr(df, [rec.Rec("m", "macd", ["close"], {})]), "returns 3"),
+        (lambda: wr(df, [rec.Rec(["e", "f"], "ema", ["close"], {"p": 5})]), "returns 1"),
+        (
+            lambda: wr(df, [rec.Rec(["s"], "supertrend", ["high", "low", "close"], {})]),
+            "returns 2",
+        ),
     ] + [
         (lambda bad=bad: stateful.streaming_ema(df, bad), "p must be")
         for bad in (0, -3, 2.5, "20", True)
+    ]
+    unbound = [
+        rec.Rec("e", "ema", ["close"], {"period": 5}),
+        rec.Rec("e", "ema", ["close"], {"x": 5}),
+        rec.Rec("s", "sar", ["high", "low"], {"p": 5}),
+        rec.Rec(["m", "s", "h"], "macdfix", ["close"], {"fast": 12}),
+    ]
+    calls = [(call, ValueError, match) for call, match in calls] + [
+        (lambda r=r: wr(df, [r]), TypeError, f"kernel '{r.kernel}' params")
+        for r in unbound
     ]
     sc = spark.sparkContext
     group = f"call-validation-{uuid.uuid4().hex}"
     prev = sc.getLocalProperty("spark.jobGroup.id")
     sc.setLocalProperty("spark.jobGroup.id", group)
     try:
-        for call, match in calls:
-            with pytest.raises(ValueError, match=match):
+        for call, exc, match in calls:
+            with pytest.raises(exc, match=match):
                 call()
         # an earlier spec's output is a valid input of a later spec
         wr(
