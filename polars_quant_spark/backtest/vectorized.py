@@ -57,11 +57,11 @@ class BacktestParams:
     trailing_stop: float | None = None
 
 
-#: the fold's full carried state, in marker-row order (see
-#: ``segmented.backtest_segmented``): position, cash, running peak, entry
-#: cost, entry fill price, last valid price, trade count, win count, and
-#: the trailing-stop high-water mark. Every element is a scalar, which is
-#: what makes the fold segmentable with bit-equality.
+#: the fold's full carried state, in the order of the segmented passes'
+#: state array (see ``segmented.backtest_segmented``): position, cash,
+#: running peak, entry cost, entry fill price, last valid price, trade
+#: count, win count, and the trailing-stop high-water mark. Every element
+#: is a scalar, which is what makes the fold segmentable with bit-equality.
 FoldState = tuple[
     float, float, float, float, float, float, int, int, float
 ]
@@ -568,9 +568,9 @@ def auto_backtest(
     moves the work, never the answer.
 
     ``partition_by`` must be a single column name (str, or a one-element
-    list which is normalized): the segmented arm's marker pivot and
-    join-back assume one key column, and a multi-key caller would get a
-    working plain arm below ``threshold`` and an opaque crash above it
+    list which is normalized): the segmented arm's seed and totals joins
+    and its join-back assume one key column, and a multi-key caller would
+    get a working plain arm below ``threshold`` and an opaque crash above it
     (ADVICE r11). Multi-key folds: call ``vectorized_backtest`` directly
     (it accepts a key list) or pre-concatenate the keys."""
     if not isinstance(partition_by, str):

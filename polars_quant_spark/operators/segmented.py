@@ -12,11 +12,12 @@ module doc). The operators here remove that bound while staying
 * segments run as **sequential Spark passes** (``_segmented_passes``, the
   one pass driver): pass k processes every symbol's k-th segment in
   parallel (applyInArrow over symbols), then the carried state — a few
-  doubles per symbol, smuggled out on marker rows — is JOINED into pass
-  k+1's input as ``_seed_j`` columns (merge-pinned on the symbol key: the
-  same exchange the next pass's groupBy needs anyway). The carry never
-  round-trips through the driver (a ``collect()`` of one marker row per
-  symbol per segment would be a 10⁶-row driver funnel at 10⁶ symbols);
+  doubles per symbol, one ``array<double>`` on one marker row — is
+  JOINED into pass k+1's input as its ``_seed`` column (merge-pinned on
+  the symbol key: the same exchange the next pass's groupBy needs
+  anyway). The carry never round-trips through the driver (a
+  ``collect()`` of one marker row per symbol per segment would be a
+  10⁶-row driver funnel at 10⁶ symbols);
   the join keeps it executor-side at any symbol count, and the whole
   chain is one lazy DAG;
 * each operator supplies only its numpy scan: segment 0 runs the kernel's
@@ -57,7 +58,7 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.storagelevel import StorageLevel
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
 from polars_quant_spark.operators.arrow_group import f64, flags, sort_rows
 from polars_quant_spark.operators.recurrence import (
@@ -96,8 +97,8 @@ def _segmented_base(
     min_rows: int,
     min_name: str,
 ):
-    """Shared pass-0 scaffolding: (_rn, _seg) columns over the symbol
-    window, materialized ONCE behind a lineage cut. Returns (base,
+    """Shared pass-0 scaffolding: the _rn column over the symbol window,
+    materialized ONCE behind a lineage cut. Returns (base,
     last_seg, resolved_segment_rows); empty input is one empty pass
     (last_seg = 0).
 
@@ -107,9 +108,8 @@ def _segmented_base(
     ``"auto"`` is checked once resolved: one action reads max(_rn) off
     the checkpointed base (the action the fixed path spends on last_seg)
     and sets segment_rows = max(AUTO_SEGMENT_FLOOR, ceil(max_rn /
-    AUTO_SEGMENT_TARGET)); _seg is a trivial projection over the
-    checkpoint either way, and last_seg is derived arithmetically — the
-    action count is identical to the fixed path.
+    AUTO_SEGMENT_TARGET)); last_seg is derived arithmetically either
+    way, so the action count is identical to the fixed path.
 
     base is read n_segments + 2 times (the max(_rn) action, one slice per
     pass, the final join); without materialization every read re-executes
@@ -146,9 +146,6 @@ def _segmented_base(
     if segment_rows == "auto":
         segment_rows = max(AUTO_SEGMENT_FLOOR, -(-max_rn // AUTO_SEGMENT_TARGET))
         check(segment_rows)
-    base = base.withColumn(
-        "_seg", ((F.col("_rn") - 1) / F.lit(segment_rows)).cast("long")
-    )
     return base, max(max_rn - 1, 0) // segment_rows, segment_rows
 
 
@@ -187,9 +184,7 @@ def _segmented_passes(
     min_name: str,
     in_cols: list[str],
     outs: list[str],
-    width: int,
     scan,
-    carry: str | None = None,
     halo: int = 0,
 ) -> tuple[DataFrame, list[DataFrame]]:
     """The one sequential-pass driver behind every operator in this module.
@@ -204,18 +199,18 @@ def _segmented_passes(
     ``scan(tbl, seed, halo_n) -> (results, state)``
 
     * ``tbl``: the symbol's slice sorted by ``_rn`` (halo rows first);
-    * ``seed``: None on pass 0, else the ``width`` state floats pass k−1
-      emitted (null → NaN);
+    * ``seed``: None on pass 0, else the list of state floats pass k−1
+      emitted;
     * ``results``: one float64 array per ``outs`` column, covering the
       trailing rows the scan emits (halo rows it drops come first);
-    * ``state``: ``width`` floats for pass k+1.
+    * ``state``: the floats for pass k+1 (None: the symbol carries none).
 
-    The state leaves the executors on ``width`` marker rows (``_rn`` =
-    −1−j) in the ``carry`` output column, or, when ``carry`` is None, in
-    an extra ``_st`` column that is dropped from the output. A symbol
-    whose slice is all halo (its history ended inside the halo window) was
-    fully emitted by the previous pass and emits nothing. Output floats
-    map NaN → null.
+    The state leaves the executors on ONE marker row per symbol (``_rn``
+    = −1) as an ``array<double>`` ``_st`` column, null on body rows and
+    dropped from the output; pass k+1 reads it back as its ``_seed``. A
+    symbol whose slice is all halo (its history ended inside the halo
+    window) was fully emitted by the previous pass and emits nothing.
+    Output floats map NaN → null.
 
     Returns every row and column of ``df`` plus the ``outs`` columns (the
     pieces left-joined back onto the checkpointed base on (symbol, _rn),
@@ -224,17 +219,15 @@ def _segmented_passes(
     base, last_seg, segment_rows = _segmented_base(
         df, partition_by, order_by, segment_rows, min_rows, min_name
     )
-    fields = list(outs) if carry else [*outs, "_st"]
-    st_col = carry or "_st"
+    dbl, lst = pa.float64(), pa.list_(pa.float64())
     schema = StructType(
         [
             base.schema[partition_by],
             StructField("_rn", LongType()),
-            *[StructField(o, DoubleType()) for o in fields],
+            *[StructField(o, DoubleType()) for o in outs],
+            StructField("_st", ArrayType(DoubleType())),
         ]
     )
-    dbl = pa.float64()
-    marker_rn = list(range(-1, -1 - width, -1))
 
     def run_arrow(tbl: pa.Table) -> pa.Table:
         tbl = sort_rows(tbl, ["_rn"])
@@ -242,77 +235,43 @@ def _segmented_passes(
         key = tbl.column(partition_by)
         rn = pc.cast(tbl.column("_rn"), pa.int64())
         halo_n = int(pc.sum(tbl.column("_halo")).as_py() or 0) if halo else 0
+
+        def table(keys, rns, vals, sts) -> pa.Table:
+            cols = {partition_by: keys, "_rn": rns, **dict(zip(outs, vals))}
+            return pa.table({**cols, "_st": sts})
+
         if halo_n and halo_n == n:
-            return pa.table(
-                {
-                    partition_by: key.slice(0, 0),
-                    "_rn": rn.slice(0, 0),
-                    **{o: pa.nulls(0, dbl) for o in fields},
-                }
-            )
-        seed = None
-        if "_seed_0" in tbl.column_names:
-            seed = [tbl.column(f"_seed_{j}")[0].as_py() for j in range(width)]
-            seed = [np.nan if v is None else float(v) for v in seed]
+            none = [pa.nulls(0, dbl)] * len(outs)
+            return table(key.slice(0, 0), rn.slice(0, 0), none, pa.nulls(0, lst))
+        seed = tbl.column("_seed")[0].as_py() if "_seed" in tbl.column_names else None
         results, state = scan(tbl, seed, halo_n)
         start = n - len(results[0])
-        body = dict(zip(outs, results))
-        state_arr = pa.array([float(v) for v in state], type=dbl, from_pandas=True)
-        cols = {
-            partition_by: pa.chunked_array(
-                key.slice(start).chunks
-                + [pa.array([key[0].as_py()] * width, type=key.type)]
-            ),
-            "_rn": pa.chunked_array(
-                rn.slice(start).chunks + [pa.array(marker_rn, type=pa.int64())]
-            ),
-        }
-        for o in fields:
-            cols[o] = pa.chunked_array(
-                [
-                    pa.array(body[o], type=dbl, from_pandas=True)
-                    if o in body
-                    else pa.nulls(n - start, dbl),
-                    state_arr if o == st_col else pa.nulls(width, dbl),
-                ]
-            )
-        return pa.table(cols)
+        body = table(
+            key.slice(start), rn.slice(start),
+            [pa.array(r, type=dbl, from_pandas=True) for r in results],
+            pa.nulls(n - start, lst),
+        )
+        st = None if state is None else [float(v) for v in state]
+        marker = table(
+            key.slice(0, 1), pa.array([-1], pa.int64()),
+            [pa.nulls(1, dbl)] * len(outs), pa.array([st], lst),
+        )
+        return pa.concat_tables([body, marker])
 
     pieces: list[DataFrame] = []
     marks: list[DataFrame] = []
     prev: DataFrame | None = None
+    row = F.col("_rn")
     for k in range(last_seg + 1):
         lo = k * segment_rows
-        if not halo:
-            seg = base.where(F.col("_seg") == k).select(partition_by, "_rn", *in_cols)
-        elif k == 0:
-            seg = base.where(F.col("_seg") == 0).select(
-                partition_by, "_rn", *in_cols, F.lit(0).alias("_halo")
-            )
-        else:
-            seg = base.where(
-                (F.col("_rn") > lo - halo) & (F.col("_rn") <= lo + segment_rows)
-            ).select(
-                partition_by, "_rn", *in_cols,
-                F.when(F.col("_rn") <= lo, 1).otherwise(0).alias("_halo"),
-            )
+        cols = [partition_by, "_rn", *in_cols]
+        if halo:
+            cols.append((row <= lo).cast("int").alias("_halo"))
+        seg = base.where((row > lo - halo) & (row <= lo + segment_rows)).select(*cols)
         if prev is not None:
-            if width == 1:
-                seeds_df = prev.where(F.col("_rn") == -1).select(
-                    partition_by, F.col(st_col).alias("_seed_0")
-                )
-            else:
-                # pivot the marker rows back to one row of _seed_j columns
-                # per symbol; the aggregate's symbol-key exchange is the one
-                # the groupBy needs anyway
-                seeds_df = prev.where(F.col("_rn") < 0).groupBy(partition_by).agg(
-                    *[
-                        F.max(F.when(F.col("_rn") == -1 - j, F.col(st_col))).alias(
-                            f"_seed_{j}"
-                        )
-                        for j in range(width)
-                    ]
-                )
+            seeds_df = prev.where(row == -1).select(
+                partition_by, F.col("_st").alias("_seed")
+            )
             # merge pin: seeds_df is one row per SYMBOL (data-dimension-
             # scaled, estimate-poisoned behind the Python UDF) and this join
             # compiles inside the next pass's persisted subtree — i.e.
@@ -323,15 +282,14 @@ def _segmented_passes(
             seg = seg.join(seeds_df.hint("merge"), partition_by, "left")
         res = seg.groupBy(partition_by).applyInArrow(run_arrow, schema=schema)
         res = _cache_piece(res, k)
-        piece = res.where(F.col("_rn") >= 0)
-        pieces.append(piece if carry else piece.drop("_st"))
-        marks.append(res.where(F.col("_rn") < 0))
+        pieces.append(res.where(row >= 0).drop("_st"))
+        marks.append(res.where(row < 0))
         prev = res
 
     merged = pieces[0]
     for piece in pieces[1:]:
         merged = merged.unionByName(piece)
-    out = base.join(merged, [partition_by, "_rn"], "left").drop("_seg", "_rn")
+    out = base.join(merged, [partition_by, "_rn"], "left").drop("_rn")
     return out, marks
 
 
@@ -397,7 +355,7 @@ def _fused_ewma_sweep(
 
     return _segmented_passes(
         df, partition_by, order_by, segment_rows, max(ps), "p",
-        in_cols, outs, 3 * depth, scan,
+        in_cols, outs, scan,
     )[0]
 
 
@@ -799,7 +757,7 @@ def kama_segmented(
     (data-dependent smoothing constant) and each step needs the trailing
     p+1 raw values for the efficiency ratio — a scalar carry alone is not
     enough. Each continuation pass therefore ships TWO things: the carried
-    accumulator k (one marker row) and a p-row HALO of the previous
+    accumulator k (the one-element state) and a p-row HALO of the previous
     segment's tail (sliced from the SAME checkpointed base — no extra
     lineage), so every body row can rebuild its exact ER window locally;
     halo rows are dropped from the output. The continuation runs the
@@ -809,14 +767,16 @@ def kama_segmented(
 
     Requires ``segment_rows ≥ p + 1`` (the kernel emits nothing for
     n < p+1, so a p-row segment 0 would diverge from the whole-symbol
-    scan). Same scale contract as the rest of the module: executor memory
-    bounded by segment + halo; wall is n_segments sequential passes."""
+    scan). That bound, checked before any job, is also why every
+    continuation sees a full p-row halo and a finite carried k on
+    null-free input: the previous segment held ≥ p + 1 rows. Same scale
+    contract as the rest of the module: executor memory bounded by
+    segment + halo; wall is n_segments sequential passes."""
 
     def scan(tbl, seed, halo_n):
         vals = f64(tbl, x)
-        if seed is None or np.isnan(seed[0]) or halo_n < p:
-            # pass 0 (or the unreachable lost-seed case, see docstring):
-            # the kernel's own scan over the dense segment
+        if seed is None:
+            # pass 0: the kernel's own scan over the dense segment
             res = kama(vals, p)
             return [res], [_last_valid(res)]
         # continuation: body rows follow the p halo rows
@@ -825,7 +785,7 @@ def kama_segmented(
 
     return _segmented_passes(
         df, partition_by, order_by, segment_rows, p + 1, "p + 1",
-        [x], [out], 1, scan, carry=out, halo=p,
+        [x], [out], scan, halo=p,
     )[0]
 
 
@@ -851,9 +811,7 @@ def _sar_family_segmented(
     machine — (long, s, ep, af) — whose clamp reads the trailing TWO bars'
     high/low, so each continuation pass ships:
 
-    * the carried state on FOUR marker rows (_rn −1..−4 = long/s/ep/af,
-      pivoted back to columns by a per-symbol aggregate that rides the
-      same symbol-key exchange the next pass's groupBy needs), and
+    * the carried state (long, s, ep, af) as the pass's state array, and
     * a 2-row halo of the previous segment's tail (sliced from the SAME
       checkpointed base), so steps at the boundary rebuild their exact
       ``ll[i-1], ll[i-2]`` clamp window locally; halo rows are dropped
@@ -867,18 +825,18 @@ def _sar_family_segmented(
 
     def scan(tbl, seed, halo_n):
         hh, ll = f64(tbl, high), f64(tbl, low)
-        if seed is None or np.isnan(seed[1]):
-            # pass 0 (or the unreachable lost-seed case): kernel seeding
+        if seed is None:
+            # pass 0: kernel seeding (a 1-bar symbol carries no state and
+            # has no continuation)
             res, st = _sar_scan(hh, ll, None, 1, p)
-        else:
-            state = (bool(seed[0]), seed[1], seed[2], seed[3])
-            res, st = _sar_scan(hh, ll, state, halo_n, p)
-            res = res[halo_n:]
-        return [res], st if st is not None else [np.nan] * 4
+            return [res], st
+        state = (bool(seed[0]), seed[1], seed[2], seed[3])
+        res, st = _sar_scan(hh, ll, state, halo_n, p)
+        return [res[halo_n:]], st
 
     return _segmented_passes(
         df, partition_by, order_by, segment_rows, 2, "the 2-bar clamp window",
-        [high, low], [out], 4, scan, carry=out, halo=2,
+        [high, low], [out], scan, halo=2,
     )[0]
 
 
@@ -1082,16 +1040,16 @@ def backtest_segmented(
     superlinearity (98 s @256x -> 1135 s @1024x, 11.5x wall for 4x data)
     — memory pressure, not algorithm. The fold's carried state is NINE
     scalars (``vectorized.FoldState``: position, cash, peak, entry_cost,
-    entry_px, last_price, trades, wins, hwm), so the SAR multi-marker
-    pattern applies directly: marker rows _rn -1..-9 smuggle the state
-    (in the ``position`` column), a per-symbol aggregate pivots them back
-    for the next pass, and no halo is needed (pure scalar carry).
+    entry_px, last_price, trades, wins, hwm), so it rides the pass
+    driver's state array as is, and no halo is needed (pure scalar
+    carry).
 
     One contract wrinkle: the plain op repeats each symbol's FINAL
     (n_trades, n_wins) on every row. Counters are monotone nondecreasing
-    across segments, so the final value per symbol is the MAX over all
-    segment markers — one extra symbol-key aggregate + merge-pinned join,
-    the same exchange the output join pays anyway."""
+    across segments, so the final value per symbol is the MAX of state
+    elements 6 and 7 over every pass's marker row — one symbol-key
+    aggregate + merge-pinned join, the same exchange the output join pays
+    anyway."""
     from polars_quant_spark.backtest.vectorized import (
         BacktestParams,
         _fold_state,
@@ -1101,8 +1059,7 @@ def backtest_segmented(
 
     def scan(tbl, seed, halo_n):
         state = None
-        # cash (state[1]) is never NaN in a real state
-        if seed is not None and not np.isnan(seed[1]):
+        if seed is not None:
             state = (*seed[:6], int(seed[6]), int(seed[7]), seed[8])
         pos, cash, eq, dd, st = _fold_state(
             f64(tbl, price), flags(tbl, buy), flags(tbl, sell), p, state
@@ -1111,19 +1068,16 @@ def backtest_segmented(
 
     out, marks = _segmented_passes(
         df, partition_by, order_by, segment_rows, 1, "1", [price, buy, sell],
-        ["position", "cash", "equity", "drawdown"], 9, scan, carry="position",
+        ["position", "cash", "equity", "drawdown"], scan,
     )
     allmarks = marks[0]
     for m in marks[1:]:
         allmarks = allmarks.unionByName(m)
-    # final per-symbol totals: trades (-7) / wins (-8) are monotone
-    # nondecreasing across segments, so max over all markers = final
-    totals = allmarks.where(F.col("_rn").isin(-7, -8)).groupBy(partition_by).agg(
-        F.max(F.when(F.col("_rn") == -7, F.col("position")))
-        .cast("long")
-        .alias("n_trades"),
-        F.max(F.when(F.col("_rn") == -8, F.col("position")))
-        .cast("long")
-        .alias("n_wins"),
+    # final per-symbol totals: trades / wins are monotone nondecreasing
+    # across segments, so max over all markers = final
+    st = F.col("_st")
+    totals = allmarks.groupBy(partition_by).agg(
+        F.max(st[6]).cast("long").alias("n_trades"),
+        F.max(st[7]).cast("long").alias("n_wins"),
     )
     return out.join(totals.hint("merge"), partition_by, "left")

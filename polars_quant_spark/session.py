@@ -96,6 +96,8 @@ def get_spark(app_name: str = "polars_quant_spark", shuffle_partitions: int | No
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # the console progress bar redraws over stdout lines (harness logs)
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # one job's generated classes outgrow the default 100-entry cache,
         # so warm jobs recompiled most of them (measured counts in the

@@ -921,6 +921,76 @@ def test_segmented_seed_joins_are_merge_pinned_at_source():
         assert ".applyInPandas(" not in source(*parts), parts
 
 
+def _two_symbol_bars(spark):
+    """Two symbols of 120 random-walk bars each (close, high, low)."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(3)
+    n = 120
+    close = 100.0 + np.cumsum(rng.normal(0, 1, 2 * n))
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "symbol": ["A"] * n + ["B"] * n,
+                "t": np.tile(np.arange(n), 2),
+                "close": close,
+                "high": close * 1.01,
+                "low": close * 0.99,
+            }
+        )
+    )
+
+
+def _executed_node_names(spark, df) -> list[str]:
+    """Collect ``df`` and return the names of its SQL execution's plan
+    nodes. A cached piece is drawn again inside every plan that reads it;
+    those copies share their metrics with the original and count once."""
+    df.collect()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    sql = spark._jsparkSession.sharedState().statusStore()
+    ex = sql.executionsList(int(sql.executionsCount()) - 1, 1).apply(0)
+
+    def seq(s):
+        it = s.iterator()
+        while it.hasNext():
+            yield it.next()
+
+    names: dict[tuple, str] = {}
+    for node in seq(sql.planGraph(ex.executionId()).allNodes()):
+        ids = tuple(sorted(m.accumulatorId() for m in seq(node.metrics())))
+        names.setdefault(ids or (node.id(),), node.name())
+    return list(names.values())
+
+
+def test_segmented_state_rides_one_marker_row(spark):
+    """Each segmented pass hands its state forward on one marker row per
+    symbol, so no pass pivots marker rows back with an aggregate: at two
+    segments the only HashAggregate nodes in an executed plan are
+    backtest_segmented's totals (partial + final)."""
+    from polars_quant_spark.operators import segmented as seg
+
+    b = _two_symbol_bars(spark)
+    sig = b.withColumn("buy", F.col("t") % 7 == 0).withColumn(
+        "sell", F.col("t") % 11 == 0
+    )
+    # 120 rows per symbol at 60 rows per segment: 2 segments
+    for op, frame, expect in [
+        (seg.indicator_family_segmented, b, 0),
+        (seg.sar_segmented, b, 0),
+        (seg.backtest_segmented, sig, 2),
+    ]:
+        names = _executed_node_names(spark, op(frame, segment_rows=60))
+        assert "FlatMapGroupsInArrow" in names, (op.__name__, names)
+        assert names.count("HashAggregate") == expect, (op.__name__, names)
+
+
+def test_console_progress_bar_is_off(spark):
+    """``get_spark`` turns the console progress bar off: its redraws would
+    land inside stdout lines such as the harness's PASS lines."""
+    assert spark.conf.get("spark.ui.showConsoleProgress") == "false"
+
+
 def test_driver_jvm_runs_with_the_jit_flags(spark):
     """The driver JVM the session runs in was started with every flag of
     ``session._DRIVER_JIT_OPTIONS`` (``get_spark`` passes them through
@@ -941,7 +1011,6 @@ def test_warm_rebuild_compiles_no_class(spark):
     connected_components' convergence probe, whose counter name is unique
     per plan so its class never hits the cache. The three frames together
     generate more classes than one default-cache segment holds."""
-    import numpy as np
     import pandas as pd
 
     from polars_quant_spark.backtest.vectorized import vectorized_backtest
@@ -949,22 +1018,11 @@ def test_warm_rebuild_compiles_no_class(spark):
     from polars_quant_spark.operators.recurrence import Rec, with_recurrences
     from polars_quant_spark.operators.segmented import indicator_family_segmented
 
-    rng = np.random.default_rng(3)
     n = 120
-    close = 100.0 + np.cumsum(rng.normal(0, 1, 2 * n))
-    bars_pdf = pd.DataFrame(
-        {
-            "symbol": ["A"] * n + ["B"] * n,
-            "t": np.tile(np.arange(n), 2),
-            "close": close,
-            "high": close * 1.01,
-            "low": close * 0.99,
-        }
-    )
     edges_pdf = pd.DataFrame({"id_a": [1, 2, 3, 7, 10], "id_b": [2, 3, 4, 8, 11]})
 
     def run_all() -> None:
-        b = spark.createDataFrame(bars_pdf)
+        b = _two_symbol_bars(spark)
         sig = with_recurrences(b, [Rec("e", "ema", ["close"], {"p": 10})])
         sig = sig.withColumn("buy", F.col("close") > F.col("e")).withColumn(
             "sell", F.col("close") < F.col("e")

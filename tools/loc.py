@@ -1,9 +1,11 @@
 """Line counts per Python file, split by kind.
 
     python tools/loc.py polars_quant_spark/operators/segmented.py [more.py ...]
+    python tools/loc.py polars_quant_spark
 
 Prints total, code, docstring, comment-only and blank lines per file (and a
-TOTAL row for several files). A line belongs to the first kind that claims
+TOTAL row for several files). A directory stands for its ``*.py`` files,
+recursively, in sorted order. A line belongs to the first kind that claims
 it: docstring (any line of a statement that is a bare string literal, as
 the AST sees it), blank, comment-only (``#`` after indentation), else code.
 """
@@ -12,6 +14,7 @@ from __future__ import annotations
 
 import ast
 import sys
+from pathlib import Path
 
 
 def count(path: str) -> tuple[int, int, int, int, int]:
@@ -28,8 +31,17 @@ def count(path: str) -> tuple[int, int, int, int, int]:
     return len(lines), code, len(doc), comment, blank
 
 
+def expand(args: list[str]) -> list[str]:
+    """The files ``args`` name: a directory expands to its ``*.py`` files."""
+    out: list[str] = []
+    for a in args:
+        d = Path(a)
+        out += sorted(str(f) for f in d.rglob("*.py")) if d.is_dir() else [a]
+    return out
+
+
 if __name__ == "__main__":
-    rows = [(p, count(p)) for p in sys.argv[1:]]
+    rows = [(p, count(p)) for p in expand(sys.argv[1:])]
     if len(rows) > 1:
         rows.append(("TOTAL", tuple(map(sum, zip(*(c for _, c in rows))))))
     print(f"{'total':>7} {'code':>7} {'doc':>7} {'comment':>7} {'blank':>7}  file")
