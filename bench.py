@@ -34,7 +34,7 @@ from polars_quant_spark.operators.recurrence import Rec, with_recurrences
 from polars_quant_spark.queries import QUERIES
 from polars_quant_spark.session import get_spark, released
 from polars_quant_spark.sources.bars import bars, load_table
-from perfbench.run import cpu_steal_ticks, loadavg
+from perfbench.run import cpu_steal_ticks, loadavg, tree_cpu_s
 from perfbench.trace import Tracer
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -280,10 +280,27 @@ BENCH = {
 }
 
 
+def _driver_maps_archive(spark) -> bool:
+    """True when the driver JVM was given a class-data-sharing archive and
+    has it mapped, read from its ``/proc/<pid>/maps``."""
+    bean = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    given = [a.split("=", 1)[1] for a in bean.getInputArguments() if a.startswith("-XX:SharedArchiveFile=")]
+    try:
+        with open(f"/proc/{bean.getPid()}/maps") as fh:
+            return bool(given) and given[0] in fh.read()
+    except OSError:
+        return False
+
+
 def main() -> None:
     load_start = loadavg()
     steal_start = cpu_steal_ticks()
+    cpu0 = tree_cpu_s()
     spark = get_spark("pqs-bench")
+    # process-tree CPU of the session start (the JVM launch included), and
+    # whether the driver JVM mapped its class-data-sharing archive
+    setup_cpu_s = round(tree_cpu_s() - cpu0, 3)
+    cds_mapped = _driver_maps_archive(spark)
     spark.sparkContext.setLogLevel("ERROR")
     # JIT compile time (ms, summed over the compiler threads) the driver
     # JVM spent by session start, and per query around its timed reps,
@@ -437,6 +454,8 @@ def main() -> None:
                 # the driver JVM's JIT compile time over the 3 reps
                 "load": load,
                 "setup_jit_s": setup_jit_s,
+                "setup_cpu_s": setup_cpu_s,
+                "cds_mapped": cds_mapped,
                 "timing": "best of 3 reps per query (steady-state)",
                 "layout": (
                     f"{bench_scale}x replica of the driver tables (opt-in scale tier)"

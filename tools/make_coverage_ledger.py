@@ -16,8 +16,10 @@ Run from the repo root after each round's artifacts land:
 
     python tools/make_coverage_ledger.py
 
-tests/test_coverage_ledger.py re-derives the same mapping and fails if the
-committed file has drifted, so the ledger can never silently go stale.
+tests/test_coverage_ledger.py re-derives the same mapping from the artifacts
+up to the ledger's newest ``last_seen`` round and fails if the committed
+file has drifted, so the ledger can never silently go stale; an artifact of
+a later round changes nothing until the ledger is regenerated.
 """
 
 from __future__ import annotations
@@ -31,7 +33,9 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def build_ledger(root: str = ROOT) -> dict[str, dict]:
+def build_ledger(root: str = ROOT, max_round: int | None = None) -> dict[str, dict]:
+    """The ledger derived from the artifacts in ``root``; with ``max_round``,
+    from those of that round and earlier only."""
     sys.path.insert(0, root)
     import __spark_entry__ as entry
 
@@ -47,6 +51,8 @@ def build_ledger(root: str = ROOT) -> dict[str, dict]:
         paths, key=lambda p: int(re.search(r"_r(\d+)\.json$", p).group(1))
     ):
         rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        if max_round is not None and rnd > max_round:
+            continue
         with open(path) as f:
             rows = json.load(f)
         for k, v in rows.items():
