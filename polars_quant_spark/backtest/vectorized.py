@@ -568,11 +568,21 @@ def auto_backtest(
     moves the work, never the answer.
 
     ``partition_by`` must be a single column name (str, or a one-element
-    list which is normalized): the segmented arm's seed and totals joins
-    and its join-back assume one key column, and a multi-key caller would
-    get a working plain arm below ``threshold`` and an opaque crash above it
+    list which is normalized): the segmented arm's join-back and totals
+    join assume one key column, and a multi-key caller would get a
+    working plain arm below ``threshold`` and an opaque crash above it
     (ADVICE r11). Multi-key folds: call ``vectorized_backtest`` directly
-    (it accepts a key list) or pre-concatenate the keys."""
+    (it accepts a key list) or pre-concatenate the keys.
+
+    A NULL key is one more symbol on either arm: both group on the key
+    natively, and the segmented arm's joins and the split are null-safe.
+    A bad ``segment_rows`` raises before the probe job."""
+    from polars_quant_spark.operators.segmented import (
+        _check_segment_rows,
+        backtest_segmented,
+    )
+
+    _check_segment_rows(segment_rows)
     if not isinstance(partition_by, str):
         keys = list(partition_by)
         if len(keys) != 1:
@@ -583,93 +593,38 @@ def auto_backtest(
                 "concatenate the keys into one column."
             )
         partition_by = keys[0]
-    plain_args = (df, price, buy, sell, params, partition_by, order_by)
+    args = (price, buy, sell, params, partition_by, order_by)
     if max_rows_per_key is not None:
         if max_rows_per_key <= threshold:
-            return vectorized_backtest(*plain_args)
-        from polars_quant_spark.operators.segmented import backtest_segmented
-
-        return backtest_segmented(
-            df, price, buy, sell, params, partition_by, order_by,
-            segment_rows=segment_rows,
-        )
+            return vectorized_backtest(df, *args)
+        return backtest_segmented(df, *args, segment_rows)
     # one probe job: the bounded oversized-key list + the key census in a
     # single aggregate (collect_list drops the when()-nulls, so only keys
     # above threshold land on the driver — ≤ total_rows/threshold of them).
-    # The NULL-key group needs its own marker (ADVICE r12): when() yields
-    # null for it even when oversized, collect_list silently drops that
-    # null, and the semi/anti split below routes null-key rows to the
-    # plain arm unconditionally — so an oversized null group would ride
-    # the whole-symbol plain path straight into the OOM regime this
-    # dispatcher exists to prevent. max(when(isNull, _n)) is NULL iff no
-    # null group exists, else that group's exact size.
+    # Each key is collected inside a struct, which is never null, so an
+    # oversized NULL key is listed too.
     counts = df.groupBy(partition_by).agg(F.count(F.lit(1)).alias("_n"))
     stats = counts.select(
         F.collect_list(
-            F.when(F.col("_n") > threshold, F.col(partition_by))
+            F.when(F.col("_n") > threshold, F.struct(partition_by))
         ).alias("big"),
         F.count(F.lit(1)).alias("nkeys"),
-        F.max(
-            F.when(F.col(partition_by).isNull(), F.col("_n"))
-        ).alias("null_n"),
     ).first()
-    big = list(stats["big"]) if stats is not None else []
-    nkeys = int(stats["nkeys"]) if stats is not None else 0
-    null_n = stats["null_n"] if stats is not None else None
-    has_null = null_n is not None
-    null_big = has_null and int(null_n) > threshold
-    from polars_quant_spark.operators.segmented import backtest_segmented
-
-    seg_null: DataFrame | None = None
-    work = df
-    if null_big:
-        # The segmented arm's seed/output joins are equi-joins on the key
-        # (segmented._segmented_passes), which never match a NULL — run the null
-        # group alone under a synthetic constant key of its own, then
-        # restore the null. The filtered frame holds ONLY null-key rows,
-        # so the constant cannot merge two real groups.
-        key_type = df.schema[partition_by].dataType
-        nulls = df.filter(F.col(partition_by).isNull()).withColumn(
-            "_pq_nullgrp", F.lit(0).cast("long")
-        )
-        seg_null = (
-            backtest_segmented(
-                nulls, price, buy, sell, params, "_pq_nullgrp", order_by,
-                segment_rows=segment_rows,
-            )
-            .drop("_pq_nullgrp")
-            .withColumn(partition_by, F.lit(None).cast(key_type))
-        )
-        work = df.filter(F.col(partition_by).isNotNull())
-    nkeys_nonnull = nkeys - (1 if has_null else 0)
-    plain_args = (work, price, buy, sell, params, partition_by, order_by)
+    big = stats["big"]
     if not big:
-        out = vectorized_backtest(*plain_args)
-    elif len(big) == nkeys_nonnull and not (has_null and not null_big):
-        # every key in `work` is oversized (a small null group, which must
-        # stay on the null-safe plain arm, falls through to the split)
-        out = backtest_segmented(
-            work, price, buy, sell, params, partition_by, order_by,
-            segment_rows=segment_rows,
+        return vectorized_backtest(df, *args)
+    if len(big) == stats["nkeys"]:
+        return backtest_segmented(df, *args, segment_rows)
+    # mixed corpus: split by key — oversized symbols pay the sequential
+    # passes, everyone else stays on the one-job fold
+    spark = df.sparkSession
+    big_keys = F.broadcast(
+        spark.createDataFrame(
+            [(row[0],) for row in big],
+            StructType([StructField("_pk", df.schema[partition_by].dataType)]),
         )
-    else:
-        # mixed corpus: split by key — oversized symbols pay the sequential
-        # passes, everyone else (including a small null group, which the
-        # anti join keeps by construction) stays on the one-job fold
-        spark = df.sparkSession
-        big_keys = F.broadcast(
-            spark.createDataFrame(
-                [(k,) for k in big], StructType([df.schema[partition_by]])
-            )
-        )
-        big_df = work.join(big_keys, partition_by, "left_semi")
-        small_df = work.join(big_keys, partition_by, "left_anti")
-        seg = backtest_segmented(
-            big_df, price, buy, sell, params, partition_by, order_by,
-            segment_rows=segment_rows,
-        )
-        plain = vectorized_backtest(
-            small_df, price, buy, sell, params, partition_by, order_by
-        )
-        out = plain.unionByName(seg)
-    return out.unionByName(seg_null) if seg_null is not None else out
+    )
+    on = F.col(partition_by).eqNullSafe(F.col("_pk"))
+    plain = vectorized_backtest(df.join(big_keys, on, "left_anti"), *args)
+    seg = backtest_segmented(df.join(big_keys, on, "left_semi"), *args, segment_rows)
+    return plain.unionByName(seg)

@@ -11,15 +11,14 @@ module doc). The operators here remove that bound while staying
   pipeline already pays);
 * segments run as **sequential Spark passes** (``_segmented_passes``, the
   one pass driver): pass k processes every symbol's k-th segment in
-  parallel (applyInArrow over symbols), then the carried state — a few
+  parallel (applyInArrow over symbols), and the carried state — a few
   doubles per symbol, one ``array<double>`` on one marker row — is
-  JOINED into pass k+1's input as its ``_seed`` column (merge-pinned on
-  the symbol key: the same exchange the next pass's groupBy needs
-  anyway). The carry never round-trips through the driver (a
+  UNIONED into pass k+1's input, where it sorts first in the symbol's
+  group: it rides the exchange the next pass's groupBy pays anyway, with
+  no join. The carry never round-trips through the driver (a
   ``collect()`` of one marker row per symbol per segment would be a
-  10⁶-row driver funnel at 10⁶ symbols);
-  the join keeps it executor-side at any symbol count, and the whole
-  chain is one lazy DAG;
+  10⁶-row driver funnel at 10⁶ symbols); the whole chain is one lazy
+  DAG, executor-side at any symbol count, null keys included;
 * each operator supplies only its numpy scan: segment 0 runs the kernel's
   own seeding, continuation segments resume from the carried state with
   the kernel's own per-step function (``recurrence._ewm_chain``,
@@ -89,6 +88,28 @@ AUTO_SEGMENT_TARGET = 4
 AUTO_SEGMENT_FLOOR = 512
 
 
+def _check_segment_rows(
+    segment_rows: int | str, min_rows: int = 1, min_name: str = "1"
+) -> None:
+    """Reject a bad ``segment_rows`` before any Spark job: it must be
+    ``"auto"`` or an int >= 1 that covers the operator's shortest valid
+    segment (``min_rows``, named ``min_name`` in the error)."""
+    if segment_rows == "auto":
+        return
+    if (
+        not isinstance(segment_rows, int)
+        or isinstance(segment_rows, bool)
+        or segment_rows < 1
+    ):
+        raise ValueError(
+            f"segment_rows must be an int >= 1 or 'auto'; got {segment_rows!r}"
+        )
+    if segment_rows < min_rows:
+        raise ValueError(
+            f"segment_rows ({segment_rows}) must be >= {min_name} ({min_rows})"
+        )
+
+
 def _segmented_base(
     df: DataFrame,
     partition_by: str,
@@ -103,13 +124,14 @@ def _segmented_base(
     (last_seg = 0).
 
     ``min_rows`` is the operator's shortest valid segment (``min_name`` in
-    the error). An int ``segment_rows`` is checked before any Spark job:
-    a bad value must not pay the checkpoint + max(_rn) action first.
-    ``"auto"`` is checked once resolved: one action reads max(_rn) off
-    the checkpointed base (the action the fixed path spends on last_seg)
-    and sets segment_rows = max(AUTO_SEGMENT_FLOOR, ceil(max_rn /
-    AUTO_SEGMENT_TARGET)); last_seg is derived arithmetically either
-    way, so the action count is identical to the fixed path.
+    the error). An int ``segment_rows`` is checked before any Spark job
+    (``_check_segment_rows``): a bad value must not pay the checkpoint +
+    max(_rn) action first. ``"auto"`` is checked once resolved: one
+    action reads max(_rn) off the checkpointed base (the action the fixed
+    path spends on last_seg) and sets segment_rows =
+    max(AUTO_SEGMENT_FLOOR, ceil(max_rn / AUTO_SEGMENT_TARGET)); last_seg
+    is derived arithmetically either way, so the action count is
+    identical to the fixed path.
 
     base is read n_segments + 2 times (the max(_rn) action, one slice per
     pass, the final join); without materialization every read re-executes
@@ -120,32 +142,16 @@ def _segmented_base(
     driver in Catalyst's PlanStringConcat — truncating to a leaf bounds
     plan size per chain. DISK_ONLY blocks for the same write-once/read-few
     reason as the piece cache. AQE-less compilation is safe here: base is
-    one window over the input, and every downstream join in this module is
-    merge-pinned."""
-
-    def check(rows: int) -> None:
-        if rows < min_rows:
-            raise ValueError(
-                f"segment_rows ({rows}) must be >= {min_name} ({min_rows})"
-            )
-
-    if segment_rows != "auto":
-        if (
-            not isinstance(segment_rows, int)
-            or isinstance(segment_rows, bool)
-            or segment_rows < 1
-        ):
-            raise ValueError(
-                f"segment_rows must be an int >= 1 or 'auto'; got {segment_rows!r}"
-            )
-        check(segment_rows)
+    one window over the input, and the passes carry state by union, not
+    by join."""
+    _check_segment_rows(segment_rows, min_rows, min_name)
     w = Window.partitionBy(partition_by).orderBy(order_by)
     base = df.withColumn("_rn", F.row_number().over(w))
     base = base.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     max_rn = base.agg(F.max("_rn")).collect()[0][0] or 0
     if segment_rows == "auto":
         segment_rows = max(AUTO_SEGMENT_FLOOR, -(-max_rn // AUTO_SEGMENT_TARGET))
-        check(segment_rows)
+        _check_segment_rows(segment_rows, min_rows, min_name)
     return base, max(max_rn - 1, 0) // segment_rows, segment_rows
 
 
@@ -155,14 +161,14 @@ def _cache_piece(res: DataFrame, k: int) -> DataFrame:
     O(n_segments)-deep plans — O(n_segments²) total Catalyst work, a
     driver blowup at thousands of segments. A periodic localCheckpoint
     resets plan depth to ≤ the checkpoint interval (the bpe_merges
-    pattern, text.py:863); it compiles WITHOUT AQE, which is exactly why
-    every seed join in this module is merge-pinned at the source rather
-    than left to runtime demotion. Between cuts: DISK_ONLY, not the
-    MEMORY_AND_DISK default — each piece is written once and read at most
-    twice (the seed row for pass k+1, the final union), and ALL pieces
-    stay pinned until that union; at 26 segments × a 25.6 M-row corpus the
-    on-heap copies thrashed the GC (GCLocker retry storms on the 256×
-    replica) where the spill-to-disk level streams cleanly."""
+    pattern, text.py:863); it compiles WITHOUT AQE, which is safe because
+    a pass's plan joins nothing: its state arrives by union. Between
+    cuts: DISK_ONLY, not the MEMORY_AND_DISK default — each piece is
+    written once and read a few times (the marker rows for pass k+1, the
+    final union), and ALL pieces stay pinned until that union; at 26
+    segments × a 25.6 M-row corpus the on-heap copies thrashed the GC
+    (GCLocker retry storms on the 256× replica) where the spill-to-disk
+    level streams cleanly."""
     if (k + 1) % _CHECKPOINT_EVERY_SEGMENTS == 0:
         return res.localCheckpoint(eager=False)
     return res.persist(StorageLevel.DISK_ONLY)
@@ -186,14 +192,14 @@ def _segmented_passes(
     outs: list[str],
     scan,
     halo: int = 0,
-) -> tuple[DataFrame, list[DataFrame]]:
+) -> tuple[DataFrame, DataFrame]:
     """The one sequential-pass driver behind every operator in this module.
 
     Segments ``df`` with ``_segmented_base`` (``min_rows``/``min_name``:
     the operator's shortest valid segment). Pass k slices every symbol's
     k-th segment — plus, when ``halo`` > 0, the previous segment's last
-    ``halo`` rows, flagged by a ``_halo`` column — joins in the state pass
-    k−1 carried out, and runs ``scan`` once per symbol in one
+    ``halo`` rows, flagged by a ``_halo`` column — unions in the state
+    rows pass k−1 carried out, and runs ``scan`` once per symbol in one
     ``applyInArrow`` pass:
 
     ``scan(tbl, seed, halo_n) -> (results, state)``
@@ -205,20 +211,28 @@ def _segmented_passes(
       trailing rows the scan emits (halo rows it drops come first);
     * ``state``: the floats for pass k+1 (None: the symbol carries none).
 
-    The state leaves the executors on ONE marker row per symbol (``_rn``
-    = −1) as an ``array<double>`` ``_st`` column, null on body rows and
-    dropped from the output; pass k+1 reads it back as its ``_seed``. A
-    symbol whose slice is all halo (its history ended inside the halo
-    window) was fully emitted by the previous pass and emits nothing.
-    Output floats map NaN → null.
+    The state leaves the executors on ONE marker row per symbol as an
+    ``array<double>`` ``_st`` column (null on body rows): ``_rn`` = −1
+    when the symbol continues — its slice ends on a full segment before
+    the last one — and −2 when this is its final state. Pass k+1 unions
+    the −1 rows into its input, where each sorts first in its symbol's
+    group, so the state rides the group's own exchange and a null key
+    keeps its state like any other. A group with no body rows (only halo
+    rows: the history ended inside the halo window and was emitted by the
+    previous pass; or only a marker: the history ended on the segment
+    boundary) writes its seed, if it has one, as the −2 row. So an ended
+    symbol's state never reaches a later pass, and every symbol has
+    exactly one −2 row. Output floats map NaN → null.
 
     Returns every row and column of ``df`` plus the ``outs`` columns (the
     pieces left-joined back onto the checkpointed base on (symbol, _rn),
-    so a duplicated (symbol, order) key stays one row per input row), and
-    the per-pass marker frames."""
+    null-safe on the symbol, so a duplicated (symbol, order) key stays
+    one row per input row; no base row has a negative ``_rn``), and the
+    −2 rows (symbol, ``_rn``, ``_st``)."""
     base, last_seg, segment_rows = _segmented_base(
         df, partition_by, order_by, segment_rows, min_rows, min_name
     )
+    last_cut = last_seg * segment_rows
     dbl, lst = pa.float64(), pa.list_(pa.float64())
     schema = StructType(
         [
@@ -231,36 +245,40 @@ def _segmented_passes(
 
     def run_arrow(tbl: pa.Table) -> pa.Table:
         tbl = sort_rows(tbl, ["_rn"])
-        n = tbl.num_rows
         key = tbl.column(partition_by)
         rn = pc.cast(tbl.column("_rn"), pa.int64())
+        seed = None
+        if rn[0].as_py() == -1:  # the state row pass k−1 carried out
+            seed = tbl.column("_st")[0].as_py()
+            tbl, rn = tbl.slice(1), rn.slice(1)
+        n = tbl.num_rows
         halo_n = int(pc.sum(tbl.column("_halo")).as_py() or 0) if halo else 0
 
         def table(keys, rns, vals, sts) -> pa.Table:
             cols = {partition_by: keys, "_rn": rns, **dict(zip(outs, vals))}
             return pa.table({**cols, "_st": sts})
 
-        if halo_n and halo_n == n:
-            none = [pa.nulls(0, dbl)] * len(outs)
-            return table(key.slice(0, 0), rn.slice(0, 0), none, pa.nulls(0, lst))
-        seed = tbl.column("_seed")[0].as_py() if "_seed" in tbl.column_names else None
+        def marker(mark: int, st) -> pa.Table:
+            return table(
+                key.slice(0, 1), pa.array([mark], pa.int64()),
+                [pa.nulls(1, dbl)] * len(outs), pa.array([st], lst),
+            )
+
+        if halo_n == n:  # no body rows: the seed, if any, is final
+            return marker(-2, seed).slice(0, int(seed is not None))
         results, state = scan(tbl, seed, halo_n)
         start = n - len(results[0])
         body = table(
-            key.slice(start), rn.slice(start),
+            tbl.column(partition_by).slice(start), rn.slice(start),
             [pa.array(r, type=dbl, from_pandas=True) for r in results],
             pa.nulls(n - start, lst),
         )
+        last = rn[n - 1].as_py()
+        goes_on = last % segment_rows == 0 and last <= last_cut
         st = None if state is None else [float(v) for v in state]
-        marker = table(
-            key.slice(0, 1), pa.array([-1], pa.int64()),
-            [pa.nulls(1, dbl)] * len(outs), pa.array([st], lst),
-        )
-        return pa.concat_tables([body, marker])
+        return pa.concat_tables([body, marker(-1 if goes_on else -2, st)])
 
     pieces: list[DataFrame] = []
-    marks: list[DataFrame] = []
-    prev: DataFrame | None = None
     row = F.col("_rn")
     for k in range(last_seg + 1):
         lo = k * segment_rows
@@ -268,29 +286,22 @@ def _segmented_passes(
         if halo:
             cols.append((row <= lo).cast("int").alias("_halo"))
         seg = base.where((row > lo - halo) & (row <= lo + segment_rows)).select(*cols)
-        if prev is not None:
-            seeds_df = prev.where(row == -1).select(
-                partition_by, F.col("_st").alias("_seed")
-            )
-            # merge pin: seeds_df is one row per SYMBOL (data-dimension-
-            # scaled, estimate-poisoned behind the Python UDF) and this join
-            # compiles inside the next pass's persisted subtree — i.e.
-            # AQE-less, where a static broadcast would be built for real at
-            # any true size (the r8 landmine class). The shuffle is free in
-            # context: the join's hash partitioning on the symbol key is
-            # exactly the exchange the groupBy.applyInArrow needs next.
-            seg = seg.join(seeds_df.hint("merge"), partition_by, "left")
+        if pieces:
+            carried = pieces[-1].where(row == -1).select(partition_by, "_rn", "_st")
+            seg = seg.unionByName(carried, allowMissingColumns=True)
         res = seg.groupBy(partition_by).applyInArrow(run_arrow, schema=schema)
-        res = _cache_piece(res, k)
-        pieces.append(res.where(row >= 0).drop("_st"))
-        marks.append(res.where(row < 0))
-        prev = res
+        pieces.append(_cache_piece(res, k))
 
     merged = pieces[0]
     for piece in pieces[1:]:
         merged = merged.unionByName(piece)
-    out = base.join(merged, [partition_by, "_rn"], "left").drop("_rn")
-    return out, marks
+    right = merged.select(
+        F.col(partition_by).alias("_pk"), F.col("_rn").alias("_prn"), *outs
+    )
+    on = F.col(partition_by).eqNullSafe(F.col("_pk")) & (row == F.col("_prn"))
+    keep = [c for c in df.columns if c != partition_by]
+    out = base.join(right, on, "left").select(partition_by, *keep, *outs)
+    return out, merged.where(row == -2).select(partition_by, "_rn", "_st")
 
 
 def _fused_ewma_sweep(
@@ -1045,11 +1056,9 @@ def backtest_segmented(
     carry).
 
     One contract wrinkle: the plain op repeats each symbol's FINAL
-    (n_trades, n_wins) on every row. Counters are monotone nondecreasing
-    across segments, so the final value per symbol is the MAX of state
-    elements 6 and 7 over every pass's marker row — one symbol-key
-    aggregate + merge-pinned join, the same exchange the output join pays
-    anyway."""
+    (n_trades, n_wins) on every row. Those are state elements 6 and 7 of
+    the symbol's one final-state row, which rides the output pieces; one
+    merge-pinned join, null-safe on the symbol, puts them on every row."""
     from polars_quant_spark.backtest.vectorized import (
         BacktestParams,
         _fold_state,
@@ -1066,18 +1075,15 @@ def backtest_segmented(
         )
         return [pos, cash, eq, dd], st
 
-    out, marks = _segmented_passes(
+    out, finals = _segmented_passes(
         df, partition_by, order_by, segment_rows, 1, "1", [price, buy, sell],
         ["position", "cash", "equity", "drawdown"], scan,
     )
-    allmarks = marks[0]
-    for m in marks[1:]:
-        allmarks = allmarks.unionByName(m)
-    # final per-symbol totals: trades / wins are monotone nondecreasing
-    # across segments, so max over all markers = final
     st = F.col("_st")
-    totals = allmarks.groupBy(partition_by).agg(
-        F.max(st[6]).cast("long").alias("n_trades"),
-        F.max(st[7]).cast("long").alias("n_wins"),
+    totals = finals.select(
+        F.col(partition_by).alias("_pk"),
+        st[6].cast("long").alias("n_trades"),
+        st[7].cast("long").alias("n_wins"),
     )
-    return out.join(totals.hint("merge"), partition_by, "left")
+    on = F.col(partition_by).eqNullSafe(F.col("_pk"))
+    return out.join(totals.hint("merge"), on, "left").drop("_pk")

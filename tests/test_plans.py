@@ -881,20 +881,20 @@ def test_rp_lsh_topk_plan_hygiene(spark, sf_dir):
     assert "SortMergeJoin" in p  # the merge-pinned corpus↔signature join
 
 
-def test_segmented_seed_joins_are_merge_pinned_at_source():
-    """Every continuation-seed (and totals) join in operators/segmented.py
-    compiles inside a checkpoint-truncated subtree where AQE cannot demote
-    a bad static broadcast, and the joined frame descends from a Python
-    UDF (estimate-poisoned) — so each MUST carry the merge hint at the
-    source (the r8 landmine contract). Plan-level assertion is not
-    possible from outside: the per-pass joins hide behind InMemoryRelation
-    display collapse, so this pins the invariant at the source level, the
-    same net as test_forced_broadcast_ratchet.
+def test_segmented_totals_join_is_merge_pinned_at_source():
+    """backtest_segmented's totals join compiles inside a
+    checkpoint-truncated subtree where AQE cannot demote a bad static
+    broadcast, and its right side descends from a Python UDF
+    (estimate-poisoned) — so it MUST carry the merge hint at the source
+    (the r8 landmine contract). Plan-level assertion is not possible from
+    outside: the pieces hide behind InMemoryRelation display collapse, so
+    this pins the invariant at the source level, the same net as
+    test_forced_broadcast_ratchet.
 
-    Every segmented operator runs through the one pass driver, so "every
-    operator pins its seed join" is: exactly one grouped-kernel call and
-    exactly one seed join in the module, and that join is merge-hinted.
-    None of the grouped-kernel modules keeps an applyInPandas arm."""
+    Every segmented operator runs through the one pass driver, which
+    carries state between passes by union, not by join: exactly one
+    grouped-kernel call in the module. None of the grouped-kernel modules
+    keeps an applyInPandas arm."""
     import os
     import re
 
@@ -906,9 +906,7 @@ def test_segmented_seed_joins_are_merge_pinned_at_source():
 
     src = source("operators", "segmented.py")
     assert src.count(".applyInArrow(") == 1
-    seed_joins = re.findall(r"\.join\(\s*seeds_df[^,]*", src)
-    assert seed_joins == ['.join(seeds_df.hint("merge")'], seed_joins
-    # the totals join must be hint-pinned too
+    # the totals join must be hint-pinned
     # ((?!\.hint) = a bare frame reference with no hint call)
     assert not re.search(r"\.join\(\s*totals(?!\.hint)", src)
     assert 'totals.hint("merge")' in src
@@ -965,9 +963,9 @@ def _executed_node_names(spark, df) -> list[str]:
 
 def test_segmented_state_rides_one_marker_row(spark):
     """Each segmented pass hands its state forward on one marker row per
-    symbol, so no pass pivots marker rows back with an aggregate: at two
-    segments the only HashAggregate nodes in an executed plan are
-    backtest_segmented's totals (partial + final)."""
+    symbol, so no pass pivots marker rows back with an aggregate, and
+    backtest_segmented reads its totals off each symbol's final-state
+    row: at two segments no executed plan has a HashAggregate node."""
     from polars_quant_spark.operators import segmented as seg
 
     b = _two_symbol_bars(spark)
@@ -978,7 +976,7 @@ def test_segmented_state_rides_one_marker_row(spark):
     for op, frame, expect in [
         (seg.indicator_family_segmented, b, 0),
         (seg.sar_segmented, b, 0),
-        (seg.backtest_segmented, sig, 2),
+        (seg.backtest_segmented, sig, 0),
     ]:
         names = _executed_node_names(spark, op(frame, segment_rows=60))
         assert "FlatMapGroupsInArrow" in names, (op.__name__, names)

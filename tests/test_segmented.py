@@ -582,11 +582,13 @@ def test_segment_rows_validated_before_any_job(spark, tall_df):
     action. An int below the operator's minimum segment (p, p + 1, 2) is
     rejected there too, so no case submits a Spark job — the quantized
     MACD operators included, whose slow leg (26) does not fit a 20-row
-    segment though the fast leg (12) does."""
+    segment though the fast leg (12) does. ``auto_backtest`` checks it
+    before its probe job, whichever arm the probe would pick."""
     import uuid
 
     import pytest as _pytest
 
+    from polars_quant_spark.backtest.vectorized import auto_backtest
     from polars_quant_spark.operators.segmented import ewma_segmented as es
     from polars_quant_spark.operators.segmented import (
         kama_segmented,
@@ -608,6 +610,9 @@ def test_segment_rows_validated_before_any_job(spark, tall_df):
         lambda: sar_segmented(hl, segment_rows=1),
         lambda: macd_q_segmented(qb, "_cm", segment_rows=20),
         lambda: macdext_q_segmented(qb, "_cm", segment_rows=20),
+        # FAT is above 1,000 rows (the probe would run) and below 5,000
+        lambda: auto_backtest(qb, threshold=1000, segment_rows=0),
+        lambda: auto_backtest(qb, threshold=5000, segment_rows=0),
     ]
     sc = spark.sparkContext
     group = f"segment-rows-{uuid.uuid4().hex}"
@@ -622,35 +627,68 @@ def test_segment_rows_validated_before_any_job(spark, tall_df):
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
+def _jobs_of(spark, build) -> int:
+    """The Spark jobs ``build()`` submits, counted by a job group of its
+    own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-of-{uuid.uuid4().hex}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_quantized_macd_builds_one_base(spark, tall_df):
     """Building ``macd_q_segmented`` or ``macdext_q_segmented`` submits the
     Spark jobs of ONE ``ewma_segmented`` build on the same frame: every
     leg shares one base checkpoint and one max(_rn) action, and nothing
     else runs before an action on the result."""
-    import uuid
-
     qb = _every_input(tall_df)
-    sc = spark.sparkContext
-
-    def jobs_of(build) -> int:
-        group = f"macd-q-build-{uuid.uuid4().hex}"
-        prev = sc.getLocalProperty("spark.jobGroup.id")
-        sc.setLocalProperty("spark.jobGroup.id", group)
-        try:
-            build()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", prev)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
 
     def ewma():
         return ewma_segmented(qb, "_cm", 12, segment_rows=700)
 
     ewma()  # one-off upstream jobs, if any, are paid outside the counts
-    one = jobs_of(ewma)
+    one = _jobs_of(spark, ewma)
     assert one >= 1
-    assert jobs_of(lambda: seg.macd_q_segmented(qb, segment_rows=700)) == one
-    assert jobs_of(lambda: seg.macdext_q_segmented(qb, segment_rows=700)) == one
+    assert _jobs_of(spark, lambda: seg.macd_q_segmented(qb, segment_rows=700)) == one
+    assert _jobs_of(spark, lambda: seg.macdext_q_segmented(qb, segment_rows=700)) == one
+
+
+def test_added_segment_costs_at_most_one_job(spark):
+    """A pass takes its state through the exchange its own groupBy pays,
+    so building ``indicator_family_segmented`` over 4×1,024 bars and
+    running one noop action on it takes at most one more Spark job per
+    added segment: 256-row segments (4 passes) against 512-row segments
+    (2 passes)."""
+    rng = np.random.default_rng(29)
+    n = 1024
+    close = 100.0 + np.cumsum(rng.normal(0, 1, 4 * n))
+    b = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "symbol": np.repeat(["A", "B", "C", "D"], n),
+                "t": np.tile(np.arange(n), 4),
+                "close": close,
+                "high": close * 1.01,
+                "low": close * 0.99,
+            }
+        )
+    )
+
+    def action(rows):
+        out = seg.indicator_family_segmented(b, segment_rows=rows)
+        out.write.format("noop").mode("overwrite").save()
+
+    action(512)  # one-off jobs, if any, are paid outside the counts
+    jobs = {rows: _jobs_of(spark, lambda: action(rows)) for rows in (512, 256)}
+    assert jobs[256] - jobs[512] <= 2, jobs
 
 
 def test_auto_backtest_mixed_corpus_split(spark, tall_df):
@@ -1126,3 +1164,127 @@ def test_segmented_plan_has_no_order_key_join(spark, tall_df, name):
     keys = re.findall(r"^(?:Left|Right) keys \[\d+\]: \[(.*)\]$", plan, re.M)
     assert any(re.search(r"\b_rn#\d+", k) for k in keys), keys
     assert not [k for k in keys if re.search(r"\bt#\d+", k)], keys
+
+
+def _same_bits(got, want) -> bool:
+    """Bit equality of two float arrays as uint64 views (NaN and NULL
+    both read as the one canonical NaN)."""
+    got = np.array([np.nan if v is None else v for v in got], dtype=np.float64)
+    want = np.array(want, dtype=np.float64)
+    got[np.isnan(got)] = want[np.isnan(want)] = np.nan
+    return np.array_equal(got.view(np.uint64), want.view(np.uint64))
+
+
+def test_segmented_null_key_bit_equal_to_kernels(spark):
+    """A NULL symbol is one more symbol: its state rides the union into
+    the next pass's group and the join-backs are null-safe, so every
+    segmented operator gives the NULL-key symbol exactly its kernel's
+    output, as it does the named symbol next to it."""
+    from polars_quant_spark.backtest.vectorized import BacktestParams, _fold
+    from polars_quant_spark.operators.recurrence import KERNELS
+
+    rng = np.random.default_rng(23)
+    lens = {"N": 300, "A": 170}  # 3 segments; A ends inside the second
+    frames = []
+    for sym, n in lens.items():
+        close = 100.0 + np.cumsum(rng.normal(0, 1, n))
+        frames.append(
+            pd.DataFrame(
+                {
+                    "symbol": sym,
+                    "t": np.arange(n),
+                    "close": close,
+                    "high": close + rng.uniform(0.1, 2.0, n),
+                    "low": close - rng.uniform(0.1, 2.0, n),
+                    "_cm": np.floor(close * 1e6 + 0.5),
+                    "buy": (np.arange(n) % 37) == 3,
+                    "sell": (np.arange(n) % 29) == 7,
+                }
+            )
+        )
+    pdf = pd.concat(frames, ignore_index=True)
+    df = spark.createDataFrame(pdf).withColumn(
+        "symbol", F.when(F.col("symbol") != "N", F.col("symbol"))
+    )
+
+    def k(name, *cols, **params):
+        return lambda g: KERNELS[name][0](*[g[c] for c in cols], **params)
+
+    hlc = ("high", "low", "close")
+    family = {
+        c: k(c, *(hlc[:2] if c.endswith("_dm") else hlc), p=14)
+        for c in ["plus_dm", "minus_dm", "plus_di", "minus_di", "dx", "adx", "adxr"]
+    }
+    family.update(
+        rsi=k("rsi", "close", p=14), atr=k("atr", *hlc, p=14),
+        t3=k("t3", "close", p=5, vfactor=0.7),
+    )
+    trio = ["macd_dif", "macd_dea", "macd_hist"]
+    bt = ["position", "cash", "equity", "drawdown", "n_trades", "n_wins"]
+
+    def fold(g):
+        *arrays, trades, wins = _fold(g["close"], g["buy"], g["sell"], BacktestParams())
+        n = len(g["close"])
+        return dict(zip(bt, [*arrays, np.full(n, trades), np.full(n, wins)]))
+
+    table = [
+        (seg.ewma_segmented(df, "close", 10, segment_rows=100),
+         lambda g: {"ema": k("ema", "close", p=10)(g)}),
+        (seg.kama_segmented(df, "close", 10, segment_rows=100),
+         lambda g: {"kama": k("kama", "close", p=10)(g)}),
+        (seg.sar_segmented(df, segment_rows=100),
+         lambda g: {"sar": k("sar", "high", "low")(g)}),
+        (seg.indicator_family_segmented(df, segment_rows=100),
+         lambda g: {c: f(g) for c, f in family.items()}),
+        (seg.macd_q_segmented(df, segment_rows=100),
+         lambda g: dict(zip(trio, k("macd_q", "_cm")(g)))),
+        (seg.backtest_segmented(df, segment_rows=100), fold),
+    ]
+    for out, spec in table:
+        rows = out.collect()
+        assert len(rows) == sum(lens.values())
+        for sym in (None, "A"):
+            got = sorted((r for r in rows if r["symbol"] == sym), key=lambda r: r["t"])
+            g = pdf[pdf["symbol"] == (sym or "N")]
+            want = spec({c: g[c].to_numpy() for c in g.columns})
+            for c, v in want.items():
+                assert _same_bits([r[c] for r in got], v), (list(want), sym, c)
+
+
+def test_pass_driver_writes_one_final_row_per_symbol(spark):
+    """Every symbol leaves exactly one final-state row (``_rn`` = −2),
+    holding the state after its last row, whatever pass its history ends
+    in: one long symbol (5 passes) and 50 short ones, among them one
+    NULL key, histories ending on a segment boundary (the last one
+    included), just inside a later pass's 2-row halo window and mid
+    segment. The scan counts rows, so every output row reads its row
+    number and every final state the symbol's length."""
+    from collections import Counter
+
+    lens = [100, 200, 300, 400, 99, 199, 98, 1, 2, 101]
+    lens += [3 + 9 * i for i in range(50 - len(lens))]
+    syms = [None] + [f"S{i}" for i in range(1, len(lens))]
+    pdf = pd.concat(
+        [pd.DataFrame({"symbol": s, "t": np.arange(n)}) for s, n in zip(syms, lens)]
+        + [pd.DataFrame({"symbol": "LONG", "t": np.arange(450)})],
+        ignore_index=True,
+    )
+    df = spark.createDataFrame(pdf.fillna({"symbol": "NULL"})).withColumn(
+        "symbol", F.when(F.col("symbol") != "NULL", F.col("symbol"))
+    )
+
+    def scan(tbl, seed, halo_n):
+        seen = seed[0] if seed is not None else 0.0
+        body = np.arange(1, tbl.num_rows - halo_n + 1, dtype=np.float64)
+        return [seen + body], [seen + len(body)]
+
+    out, finals = seg._segmented_passes(
+        df, "symbol", "t", 100, 2, "2", ["t"], ["c"], scan, halo=2
+    )
+    length = dict(zip(syms, lens), LONG=450)
+    rows = finals.collect()
+    assert Counter(r["symbol"] for r in rows) == dict.fromkeys(length, 1)
+    assert {r["symbol"]: r["_st"] for r in rows} == {s: [n] for s, n in length.items()}
+    got = out.select("symbol", "t", "c").collect()
+    assert len(got) == sum(length.values())
+    assert all(r["c"] == r["t"] + 1 for r in got)
